@@ -17,6 +17,7 @@ serves the date filter).
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,19 +34,40 @@ from .charts import (
 from .io import cache_materialized, read_table
 
 
+def _file_listing(path: str) -> tuple:
+    """(path, size, mtime_ns) of every file at or under `path`: a
+    rewrite of the input changes it, so it keys the cached frame."""
+    if os.path.isfile(path):
+        paths = [path]
+    else:
+        paths = sorted(
+            os.path.join(d, f) for d, _, files in os.walk(path)
+            for f in files
+        )
+    stats = [(p, os.stat(p)) for p in paths]
+    return tuple((p, st.st_size, st.st_mtime_ns) for p, st in stats)
+
+
 @dataclass
 class DashboardSession:
-    """Holds the cached base frame; one per served dashboard."""
+    """Holds the cached base frame; one per served dashboard. The cache
+    is rebuilt whenever the events input's file listing changes, so a
+    rewrite of the source (e.g. by the ETL) is never served stale."""
 
     spark: SparkSession
     sf_dir: str
     _base: DataFrame | None = field(default=None, repr=False)
+    _listing: tuple = field(default=(), repr=False)
 
     def base(self) -> DataFrame:
+        listing = _file_listing(os.path.join(self.sf_dir, "events.parquet"))
+        if self._base is not None and listing != self._listing:
+            self.close()
         if self._base is None:
             self._base = cache_materialized(
                 read_table(self.spark, self.sf_dir, "events")
             )
+            self._listing = listing
         return self._base
 
     def render_payload(

@@ -25,6 +25,8 @@ set identical in both engines (SURVEY §7.4 #7/#10).
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -73,15 +75,23 @@ def lit_matrix(rows) -> Column:
     CreateArray tree constant-folds to the same nested Literal, so
     the physical plan keeps the r16 pinned zip_with/transform shape.
     Callers pass finite floats only (seeded matrices / trained
-    centroids); inf/nan have no SQL literal spelling and would fail
-    the parse loudly, not silently.
+    centroids); inf/nan have no SQL literal spelling, so they are
+    rejected up front with a ValueError naming the row and column.
 
     Public per ADVICE r16 #4 (queries_ext._centroid_sim_structs is a
     second consumer); `_lit_mat` stays as a compatibility alias."""
+    rows = [[float(v) for v in row] for row in rows]
+    for i, row in enumerate(rows):
+        for j, v in enumerate(row):
+            if not math.isfinite(v):
+                raise ValueError(
+                    f"lit_matrix element [{i}][{j}] is {v!r}; only "
+                    "finite values have a SQL literal spelling"
+                )
     return F.expr(
         "array("
         + ",".join(
-            "array(" + ",".join(f"{float(v)!r}D" for v in row) + ")"
+            "array(" + ",".join(f"{v!r}D" for v in row) + ")"
             for row in rows
         )
         + ")"

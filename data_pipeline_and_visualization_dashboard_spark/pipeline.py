@@ -2,8 +2,8 @@
 
 The reference notebook's lifecycle — ingest -> validate -> clean (with
 removal accounting) -> derive -> persist -> register for SQL — as ONE
-lazy Spark plan materialized exactly once at the parquet sink, plus a
-single extra pass for the accounting aggregate. The reference's Polars
+lazy Spark plan materialized exactly once at the parquet sink, with the
+accounting aggregate riding that job (df.observe). The reference's Polars
 version eagerly materializes after every step; here Catalyst fuses the
 filter chain and derivations into the scan (see `explain()` on the
 returned frame: one WholeStageCodegen span over the file scan).
@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
-from .clean import clean_events_observed, clean_events_with_report
+from .clean import clean_events_observed
 from .derive import derive_event_columns
 from .io import read_table, write_parquet
 from .schemas import EVENTS
@@ -30,38 +30,33 @@ from .validate import validate_schema
 
 @dataclass
 class PipelineResult:
-    cleaned: DataFrame          # cleaned+derived frame (lazy, re-readable)
+    cleaned: DataFrame          # cleaned+derived frame read back from out_path
     removal_report: dict        # single-pass V5 accounting
-    out_path: str | None
+    out_path: str
 
 
 def run_events_pipeline(
     spark: SparkSession,
     sf_dir: str,
-    out_path: str | None = None,
+    out_path: str,
 ) -> PipelineResult:
-    """Full reference lifecycle on the events table. When `out_path` is
-    given the cleaned data is persisted partitioned by event date and
-    the returned frame reads BACK from parquet (so downstream analytics
-    benefit from partition pruning + fresh statistics, exactly like the
-    reference's clean-parquet handoff, ipynb:212-243)."""
+    """Full reference lifecycle on the events table. The cleaned data is
+    persisted to `out_path` partitioned by event date and the returned
+    frame reads BACK from parquet (so downstream analytics benefit from
+    partition pruning + fresh statistics, exactly like the reference's
+    clean-parquet handoff, ipynb:212-243)."""
     raw = read_table(spark, sf_dir, "events")
     validate_schema(raw, EVENTS, timestamp_columns=["ts"])
 
-    if out_path is not None:
-        # persist path: accounting metrics ride the sink job itself
-        # (df.observe) — ONE full pass total instead of write +
-        # accounting scan; see clean.clean_events_observed
-        cleaned, obs = clean_events_observed(raw)
-        derived = derive_event_columns(cleaned)
-        derived = derived.withColumn("event_date", F.to_date("ts"))
-        write_parquet(derived, out_path, partition_by=["event_date"])
-        report = dict(obs.get)
-        derived = spark.read.parquet(out_path)
-    else:
-        cleaned, report_df = clean_events_with_report(raw)
-        report = report_df.first().asDict()
-        derived = derive_event_columns(cleaned)
+    # accounting metrics ride the sink job itself (df.observe) — ONE
+    # full pass total instead of write + accounting scan; see
+    # clean.clean_events_observed
+    cleaned, obs = clean_events_observed(raw)
+    derived = derive_event_columns(cleaned)
+    derived = derived.withColumn("event_date", F.to_date("ts"))
+    write_parquet(derived, out_path, partition_by=["event_date"])
+    report = dict(obs.get)
+    derived = spark.read.parquet(out_path)
 
     derived.createOrReplaceTempView("events_clean")
     return PipelineResult(derived, report, out_path)

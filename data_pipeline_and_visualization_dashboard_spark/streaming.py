@@ -108,16 +108,72 @@ def _state_commit(merged: DataFrame, state_dir: str, epoch_id: int) -> None:
         _shutil.rmtree(old)
 
 
+def _epoch_is_new(state_dir: str, epoch_id: int) -> bool:
+    """The fenced merge sinks' prologue: recover an interrupted swap,
+    then say whether `epoch_id` is past the state's fence. False means
+    a replayed epoch whose merge is already in the state: skip it."""
+    _state_recover(state_dir)
+    return epoch_id > _state_last_epoch(state_dir)
+
+
+def _read_files(spark: SparkSession, schema: str, path: str,
+                glob: str | None = None,
+                one_file_per_trigger: bool = False) -> DataFrame:
+    """Parquet file-source stream over the directory `path`. `glob`
+    narrows it to matching file names; `one_file_per_trigger` makes
+    every file its own micro-batch, which the stateful callers need
+    because batch boundaries drive their state and watermarks."""
+    reader = spark.readStream.schema(schema)
+    if glob is not None:
+        reader = reader.option("pathGlobFilter", glob)
+    if one_file_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", "1")
+    return reader.parquet(path)
+
+
+def _read_event_files(spark: SparkSession, path: str,
+                      glob: str | None = None,
+                      one_file_per_trigger: bool = False) -> DataFrame:
+    """_read_files over events, with `ts` cast to session-tz TIMESTAMP
+    for watermarks and windows (see _STREAM_SCHEMA)."""
+    raw = _read_files(spark, _STREAM_SCHEMA, path, glob,
+                      one_file_per_trigger)
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _drain(query, readout=None):
+    """Run a started query until its finite input is consumed, then
+    stop it whatever happens. `readout(query)`, if given, runs while
+    the query is still live, and its result is returned."""
+    try:
+        query.processAllAvailable()
+        return readout(query) if readout is not None else None
+    finally:
+        query.stop()
+
+
+def _start_memory_sink(stream: DataFrame, mode: str, query_name: str):
+    return (
+        stream.writeStream.outputMode(mode)
+        .format("memory")
+        .queryName(query_name)
+        .start()
+    )
+
+
+def _drain_to_memory(stream: DataFrame, mode: str,
+                     query_name: str) -> DataFrame:
+    """Drive `stream` over its finite input into the memory sink
+    `query_name` and return the sink's table as a batch DataFrame."""
+    _drain(_start_memory_sink(stream, mode, query_name))
+    return stream.sparkSession.sql(f"SELECT * FROM {query_name}")
+
+
 def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events parquet (one file = one
     micro-batch in tests; kafka in production)."""
     # the file source requires a directory; glob-filter down to events
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return _read_event_files(spark, sf_dir, glob="events.parquet")
 
 
 def windowed_event_counts(events: DataFrame,
@@ -145,18 +201,10 @@ def run_to_completion(spark: SparkSession, sf_dir: str,
                       query_name: str = "windowed_counts") -> DataFrame:
     """Drive the stream over the finite input synchronously (memory sink,
     complete mode) and return the result as a batch DataFrame."""
-    agg = windowed_event_counts(read_event_stream(spark, sf_dir))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    return _drain_to_memory(
+        windowed_event_counts(read_event_stream(spark, sf_dir)),
+        "complete", query_name,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def run_windowed_with_late_metrics(
@@ -213,23 +261,7 @@ def run_windowed_with_late_metrics(
         def onQueryTerminated(self, event) -> None:  # noqa: N802
             pass
 
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    listener = _DropListener()
-    spark.streams.addListener(listener)
-    q = (
-        windowed_event_counts(events, watermark)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
+    def wait_for_listener(q) -> int:
         # the listener bus is ASYNC: drain until it has seen the final
         # batch (events arrive in batch order, so seeing the last
         # batchId means every earlier one is counted)
@@ -237,9 +269,17 @@ def run_windowed_with_late_metrics(
         deadline = _time.time() + 30
         while listener.last_batch < last and _time.time() < deadline:
             _time.sleep(0.1)
-        dropped = listener.dropped
+        return listener.dropped
+
+    events = _read_event_files(spark, in_dir, one_file_per_trigger=True)
+    listener = _DropListener()
+    spark.streams.addListener(listener)
+    try:
+        q = _start_memory_sink(
+            windowed_event_counts(events, watermark), "update", query_name
+        )
+        dropped = _drain(q, wait_for_listener)
     finally:
-        q.stop()
         spark.streams.removeListener(listener)
     return spark.sql(f"SELECT * FROM {query_name}"), dropped
 
@@ -289,24 +329,12 @@ def run_dedup_to_completion(spark: SparkSession, in_dir: str,
     """Drive the streaming dedup over a finite directory of parquet
     files (one micro-batch per file via maxFilesPerTrigger) and return
     the deduplicated rows."""
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    return _drain_to_memory(
+        dedup_event_stream(
+            _read_event_files(spark, in_dir, one_file_per_trigger=True)
+        ),
+        "append", query_name,
     )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        dedup_event_stream(events)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, matches queries.q16
@@ -553,24 +581,12 @@ def sessionize_stream(events: DataFrame,
 
 def run_sessionize_to_completion(spark: SparkSession, in_dir: str,
                                  query_name: str = "sessions_out") -> DataFrame:
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    return _drain_to_memory(
+        sessionize_stream(
+            _read_event_files(spark, in_dir, one_file_per_trigger=True)
+        ),
+        "append", query_name,
     )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        sessionize_stream(events)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 _TRANSITION_OUT_SCHEMA = (
@@ -730,24 +746,12 @@ def transition_stream_bounded(events: DataFrame,
 def run_transitions_to_completion(spark: SparkSession, in_dir: str,
                                   query_name: str = "transitions_out",
                                   ) -> DataFrame:
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    return _drain_to_memory(
+        transition_stream(
+            _read_event_files(spark, in_dir, one_file_per_trigger=True)
+        ),
+        "append", query_name,
     )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        transition_stream(events)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 _LAST_TOUCH_OUT_SCHEMA = "user_id long, channel string, value double"
@@ -1106,24 +1110,12 @@ def linear_attr_rollup(credits: DataFrame) -> DataFrame:
 def run_linear_attr_to_completion(spark: SparkSession, in_dir: str,
                                   query_name: str = "linear_attr_out",
                                   ) -> DataFrame:
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    return _drain_to_memory(
+        linear_attribution_stream(
+            _read_event_files(spark, in_dir, one_file_per_trigger=True)
+        ),
+        "append", query_name,
     )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        linear_attribution_stream(events)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def last_touch_rollup(credits: DataFrame) -> DataFrame:
@@ -1149,24 +1141,12 @@ def last_touch_rollup(credits: DataFrame) -> DataFrame:
 def run_last_touch_to_completion(spark: SparkSession, in_dir: str,
                                  query_name: str = "last_touch_out",
                                  ) -> DataFrame:
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    return _drain_to_memory(
+        last_touch_stream(
+            _read_event_files(spark, in_dir, one_file_per_trigger=True)
+        ),
+        "append", query_name,
     )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        last_touch_stream(events)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def sessionize_stream_native(events: DataFrame,
@@ -1196,24 +1176,12 @@ def run_native_sessions_to_completion(
     spark: SparkSession, in_dir: str,
     query_name: str = "native_sessions_out",
 ) -> DataFrame:
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    return _drain_to_memory(
+        sessionize_stream_native(
+            _read_event_files(spark, in_dir, one_file_per_trigger=True)
+        ),
+        "append", query_name,
     )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        sessionize_stream_native(events)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def view_purchase_join_stream(events: DataFrame,
@@ -1379,48 +1347,24 @@ def run_view_purchase_left_join_to_completion(
     spark: SparkSession, in_dir: str,
     query_name: str = "vp_ljoin_out",
 ) -> DataFrame:
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    return _drain_to_memory(
+        view_purchase_left_join_stream(
+            _read_event_files(spark, in_dir, one_file_per_trigger=True)
+        ),
+        "append", query_name,
     )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        view_purchase_left_join_stream(events)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def run_view_purchase_join_to_completion(
     spark: SparkSession, in_dir: str,
     query_name: str = "vp_join_out",
 ) -> DataFrame:
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
+    return _drain_to_memory(
+        view_purchase_join_stream(
+            _read_event_files(spark, in_dir, one_file_per_trigger=True)
+        ),
+        "append", query_name,
     )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        view_purchase_join_stream(events)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 _DOC_SCHEMA = (
@@ -1432,11 +1376,7 @@ def read_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents parquet — the streaming
     face of the corpus-curation surface (kafka/object-store listing in
     production; documents arrive continuously from crawlers)."""
-    return (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
+    return _read_files(spark, _DOC_SCHEMA, sf_dir, glob="documents.parquet")
 
 
 def curation_stats_stream(docs: DataFrame) -> DataFrame:
@@ -1458,18 +1398,10 @@ def run_curation_to_completion(spark: SparkSession, sf_dir: str,
                                ) -> DataFrame:
     """Drive the curation monitor over the finite corpus; the complete-
     mode result must equal the batch quality histogram (tested)."""
-    agg = curation_stats_stream(read_document_stream(spark, sf_dir))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
+    return _drain_to_memory(
+        curation_stats_stream(read_document_stream(spark, sf_dir)),
+        "complete", query_name,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def upsert_state_stream(spark: SparkSession, in_dir: str, state_dir: str,
@@ -1490,16 +1422,10 @@ def upsert_state_stream(spark: SparkSession, in_dir: str, state_dir: str,
     no-op — exactly-once on top of foreachBatch's at-least-once."""
     import os as _os
 
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    events = _read_event_files(spark, in_dir, one_file_per_trigger=True)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        _state_recover(state_dir)
-        if epoch_id <= _state_last_epoch(state_dir):
+        if not _epoch_is_new(state_dir, epoch_id):
             return  # replayed epoch: already merged, skip
         w = Window.partitionBy("user_id").orderBy(
             F.desc("last_ts"), F.desc("last_event_id")
@@ -1572,20 +1498,10 @@ def run_enriched_counts_to_completion(
     ).select(
         F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation")
     )
-    agg = enriched_nation_counts_stream(
-        read_event_stream(spark, sf_dir), dim
+    return _drain_to_memory(
+        enriched_nation_counts_stream(read_event_stream(spark, sf_dir), dim),
+        "complete", query_name,
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def rollup_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
@@ -1605,16 +1521,10 @@ def rollup_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
     no-gap rename dance — see _state_commit/_state_recover above."""
     import os as _os
 
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    events = raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    events = _read_event_files(spark, in_dir, one_file_per_trigger=True)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        _state_recover(state_dir)
-        if epoch_id <= _state_last_epoch(state_dir):
+        if not _epoch_is_new(state_dir, epoch_id):
             return  # replayed epoch: already merged, skip
         partial = batch_df.groupBy(
             F.to_date("ts").cast("string").alias("event_date"),
@@ -1645,11 +1555,7 @@ def run_rollup_merge_to_completion(spark: SparkSession, in_dir: str,
                                    checkpoint_dir: str) -> DataFrame:
     """Drive the rollup-merge sink over the finite input and return the
     final state shaped exactly like q53_incremental_rollup's output."""
-    q = rollup_merge_stream(spark, in_dir, state_dir, checkpoint_dir)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(rollup_merge_stream(spark, in_dir, state_dir, checkpoint_dir))
     state = spark.read.parquet(state_dir)
     return state.select(
         "event_date",
@@ -1696,15 +1602,10 @@ def shard_manifest_stream(spark: SparkSession, in_dir: str,
 
     if n_shards is None:
         n_shards = N_TRAINING_SHARDS
-    docs = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
+    docs = _read_files(spark, _DOC_SCHEMA, in_dir, one_file_per_trigger=True)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        _state_recover(state_dir)
-        if epoch_id <= _state_last_epoch(state_dir):
+        if not _epoch_is_new(state_dir, epoch_id):
             return  # replayed epoch: already merged, skip
         partial = (
             batch_df.select(*_shard_proj(n_shards))
@@ -1732,21 +1633,6 @@ def shard_manifest_stream(spark: SparkSession, in_dir: str,
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
-
-
-def run_shard_manifest_to_completion(spark: SparkSession, in_dir: str,
-                                     state_dir: str,
-                                     checkpoint_dir: str) -> DataFrame:
-    """Drive the manifest maintainer over the finite input and return
-    the final state shaped exactly like dedup.shard_manifest_of."""
-    q = shard_manifest_stream(spark, in_dir, state_dir, checkpoint_dir)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(state_dir).select(
-        "shard", "n_docs", "n_tokens", "content_hash"
-    ).orderBy("shard")
 
 
 def data_card_stream(spark: SparkSession, in_dir: str, state_dir: str,
@@ -1782,18 +1668,13 @@ def data_card_stream(spark: SparkSession, in_dir: str, state_dir: str,
     length; per-batch cost = batch + |slices|, never history."""
     from .extras.text import quality_score_of
 
-    docs = (
-        spark.readStream.schema(_DOC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
+    docs = _read_files(spark, _DOC_SCHEMA, in_dir, one_file_per_trigger=True)
     dup = F.broadcast(
         groups.select("doc_id", F.lit(True).alias("is_dup"))
     )
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        _state_recover(state_dir)
-        if epoch_id <= _state_last_epoch(state_dir):
+        if not _epoch_is_new(state_dir, epoch_id):
             return  # replayed epoch: already merged, skip
         scored = quality_score_of(batch_df, ("lang", "source"))
         partial = (
@@ -1896,12 +1777,8 @@ def run_data_card_to_completion(spark: SparkSession, in_dir: str,
                                 groups: DataFrame) -> DataFrame:
     """Drive the data-card maintainer over the finite input and return
     the readout shaped exactly like dedup.corpus_data_card."""
-    q = data_card_stream(spark, in_dir, state_dir, checkpoint_dir,
-                         groups)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(data_card_stream(spark, in_dir, state_dir, checkpoint_dir,
+                            groups))
     return read_data_card_state(spark, state_dir)
 
 
@@ -1986,21 +1863,7 @@ def _run_global_sketch_to_completion(spark: SparkSession, in_dir: str,
     state-store row count from the final progress metrics, so callers
     can assert the O(1) claim rather than trust a docstring (the
     round-9 state-honesty rule)."""
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", glob)
-        .parquet(in_dir)
-    )
-    q = (
-        agg_fn(raw)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
+    def state_rows(q) -> int:
         prog = q.lastProgress
         if prog is None:
             # raise HERE rather than return a -1 sentinel (VERDICT r10
@@ -2012,12 +1875,12 @@ def _run_global_sketch_to_completion(spark: SparkSession, in_dir: str,
                 f"{label} stream finished without a progress record; "
                 "state_rows cannot be read from lastProgress"
             )
-        state_rows = sum(
-            op["numRowsTotal"] for op in prog["stateOperators"]
-        )
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}"), state_rows
+        return sum(op["numRowsTotal"] for op in prog["stateOperators"])
+
+    raw = _read_files(spark, schema, in_dir, glob, one_file_per_trigger=True)
+    q = _start_memory_sink(agg_fn(raw), "complete", query_name)
+    rows = _drain(q, state_rows)
+    return spark.sql(f"SELECT * FROM {query_name}"), rows
 
 
 def _global_sketch_merge_stream(spark: SparkSession, in_dir: str,
@@ -2031,12 +1894,8 @@ def _global_sketch_merge_stream(spark: SparkSession, in_dir: str,
     the sink is a plain idempotent overwrite (last-write-wins — no
     epoch fence needed, unlike the ADDITIVE rollup merge where a
     replayed batch would double-count)."""
-    raw = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(in_dir)
-    )
+    raw = _read_files(spark, schema, in_dir, "*.parquet",
+                      one_file_per_trigger=True)
 
     def persist(batch_df: DataFrame, epoch_id: int) -> None:
         batch_df.coalesce(1).write.mode("overwrite").parquet(state_dir)
@@ -2772,24 +2631,13 @@ def bloom_bit_stream(events: DataFrame) -> DataFrame:
 def run_bloom_stream_to_completion(spark: SparkSession, in_dir: str,
                                    query_name: str = "bloom_out",
                                    ) -> DataFrame:
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(in_dir)
+    return _drain_to_memory(
+        bloom_bit_stream(
+            _read_files(spark, _STREAM_SCHEMA, in_dir, "events.parquet",
+                        one_file_per_trigger=True)
+        ),
+        "complete", query_name,
     )
-    q = (
-        bloom_bit_stream(raw)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def stream_to_parquet(spark: SparkSession, sf_dir: str, out_dir: str,
@@ -2834,11 +2682,8 @@ def composed_pipeline_start(spark: SparkSession, in_dir: str,
     test_composed_pipeline_survives_midstream_restart."""
     import os as _os
 
-    raw = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
+    raw = _read_files(spark, _STREAM_SCHEMA, in_dir,
+                      one_file_per_trigger=True)
     monitor = (
         hll_register_stream(raw)
         .writeStream.outputMode("complete")
@@ -2884,26 +2729,10 @@ def scrub_stream(docs: DataFrame) -> DataFrame:
 
 def run_scrub_to_completion(spark: SparkSession, sf_dir: str,
                             query_name: str = "scrub_out") -> DataFrame:
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long"
-        )
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+    return _drain_to_memory(
+        scrub_stream(read_document_stream(spark, sf_dir)),
+        "append", query_name,
     )
-    q = (
-        scrub_stream(docs)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
@@ -2944,11 +2773,8 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
         signatures_from,
     )
 
-    docs = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
+    docs = _read_files(spark, "doc_id long, text string", in_dir,
+                       one_file_per_trigger=True)
 
     sig_arr = F.array(*[F.col(f"sig_{j}") for j in range(NUM_HASHES)])
     band_cols = ", ".join(f"{b}, band_{b}" for b in range(BANDS))
@@ -3061,11 +2887,7 @@ def run_minhash_index_to_completion(spark: SparkSession, in_dir: str,
     index_dir = _os.path.join(work_dir, "index")
     pairs_dir = _os.path.join(work_dir, "pairs")
     ckpt = _os.path.join(work_dir, "ckpt")
-    q = minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt))
     return spark.read.parquet(pairs_dir).drop("epoch")
 
 
@@ -3102,26 +2924,10 @@ def quality_score_stream(docs: DataFrame) -> DataFrame:
 def run_quality_score_to_completion(spark: SparkSession, sf_dir: str,
                                     query_name: str = "qscore_out"
                                     ) -> DataFrame:
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long"
-        )
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+    return _drain_to_memory(
+        quality_score_stream(read_document_stream(spark, sf_dir)),
+        "append", query_name,
     )
-    q = (
-        quality_score_stream(docs)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def tokenize_stream(docs: DataFrame, merges: list) -> DataFrame:
@@ -3172,26 +2978,10 @@ def run_tokenize_to_completion(spark: SparkSession, sf_dir: str,
     from .extras.bpe import _trained_merges
 
     merges = _trained_merges(spark, sf_dir)
-    docs = (
-        spark.readStream.schema(
-            "doc_id long, text string, lang string, source string, "
-            "n_chars long"
-        )
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+    return _drain_to_memory(
+        tokenize_stream(read_document_stream(spark, sf_dir), merges),
+        "append", query_name,
     )
-    q = (
-        tokenize_stream(docs, merges)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.sql(f"SELECT * FROM {query_name}")
 
 
 def postings_index_stream(spark: SparkSession, in_dir: str,
@@ -3212,11 +3002,8 @@ def postings_index_stream(spark: SparkSession, in_dir: str,
 
     from .extras.search import _index_of, _positions_from
 
-    docs = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
+    docs = _read_files(spark, "doc_id long, text string", in_dir,
+                       one_file_per_trigger=True)
 
     def write_segment(batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.filter(F.col("text").isNotNull())
@@ -3257,11 +3044,7 @@ def run_postings_index_to_completion(spark: SparkSession, in_dir: str,
 
     index_dir = _os.path.join(work_dir, "index")
     ckpt = _os.path.join(work_dir, "ckpt")
-    q = postings_index_stream(spark, in_dir, index_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(postings_index_stream(spark, in_dir, index_dir, ckpt))
     return read_postings_index(spark, index_dir)
 
 
@@ -3374,11 +3157,8 @@ def hist_segments_stream(spark: SparkSession, in_dir: str,
 
     from .extras.sketches import HIST_BINS
 
-    ev = (
-        spark.readStream.schema(_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
+    ev = _read_files(spark, _STREAM_SCHEMA, in_dir,
+                     one_file_per_trigger=True)
 
     def write_segment(batch_df: DataFrame, epoch_id: int) -> None:
         cells = (
@@ -3430,11 +3210,8 @@ def contamination_screen_stream(spark: SparkSession, in_dir: str,
 
     from .extras.dedup import CONTAM_THRESHOLD, shingle_sets_from
 
-    docs = (
-        spark.readStream.schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
+    docs = _read_files(spark, "doc_id long, text string", in_dir,
+                       one_file_per_trigger=True)
     # dedup defensively: the batch twin distincts its eval set
     # internally, and a caller passing naturally-exploded benchmark
     # shingles (duplicates) would otherwise fan every matching train
@@ -3496,13 +3273,8 @@ def ivf_assign_stream(spark: SparkSession, in_dir: str, index_dir: str,
 
     from .queries_ext import _centroid_sim_structs
 
-    emb = (
-        spark.readStream.schema(
-            "vec_id long, embedding array<float>, label int"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
+    emb = _read_files(spark, "vec_id long, embedding array<float>, label int",
+                      in_dir, one_file_per_trigger=True)
     sim_structs = _centroid_sim_structs(centroids)
 
     def write_segment(batch_df: DataFrame, epoch_id: int) -> None:
@@ -3532,23 +3304,6 @@ def read_ivf_assign(spark: SparkSession, index_dir: str) -> DataFrame:
     sets are disjoint across epochs), projected to the ann_disk_index
     assignment contract (c_id, centroid_id)."""
     return spark.read.parquet(index_dir).select("c_id", "centroid_id")
-
-
-def run_ivf_assign_to_completion(spark: SparkSession, in_dir: str,
-                                 work_dir: str,
-                                 centroids: list) -> DataFrame:
-    """Drive the vector-index maintenance over the finite embedding
-    set; returns the merged live assignment."""
-    import os as _os
-
-    index_dir = _os.path.join(work_dir, "index")
-    ckpt = _os.path.join(work_dir, "ckpt")
-    q = ivf_assign_stream(spark, in_dir, index_dir, ckpt, centroids)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return read_ivf_assign(spark, index_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -3602,15 +3357,11 @@ def snapshot_diff_stream(spark: SparkSession, in_dir: str,
     batch op's O(|A| + |B|) bound."""
     import os as _os
 
-    raw = (
-        spark.readStream.schema(_DOC_CDC_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
+    raw = _read_files(spark, _DOC_CDC_SCHEMA, in_dir,
+                      one_file_per_trigger=True)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        _state_recover(state_dir)
-        if epoch_id <= _state_last_epoch(state_dir):
+        if not _epoch_is_new(state_dir, epoch_id):
             return  # replayed epoch: deltas + state already applied
         sess = batch_df.sparkSession
         # deterministic max-seq-wins: ties on seq break by op (upsert
@@ -3723,9 +3474,5 @@ def run_snapshot_diff_to_completion(spark: SparkSession, in_dir: str,
     state_dir = _os.path.join(work_dir, "state")
     deltas_dir = _os.path.join(work_dir, "deltas")
     ckpt = _os.path.join(work_dir, "ckpt")
-    q = snapshot_diff_stream(spark, in_dir, state_dir, deltas_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _drain(snapshot_diff_stream(spark, in_dir, state_dir, deltas_dir, ckpt))
     return read_snapshot_deltas(spark, deltas_dir)

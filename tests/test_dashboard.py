@@ -33,3 +33,27 @@ def test_dashboard_payload_shapes(spark):
         )
     finally:
         sess.close()
+
+
+def test_dashboard_cache_follows_rewritten_input(spark, tmp_path):
+    """A rewrite of the events input (the ETL re-running) must not be
+    served from the stale cache: the next render sees the new rows."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    path = os.path.join(tmp_path, "events.parquet")
+    shutil.copy(os.path.join(SF_SMOKE, "events.parquet"), path)
+    table = pq.read_table(path)
+    sess = DashboardSession(spark, str(tmp_path))
+    try:
+        p1 = sess.render_payload()
+        assert p1["metrics"]["total_events"][0] == table.num_rows
+        kept = table.num_rows // 3
+        os.chmod(path, 0o644)
+        pq.write_table(table.slice(0, kept), path)
+        p2 = sess.render_payload()
+        assert p2["metrics"]["total_events"][0] == kept
+    finally:
+        sess.close()

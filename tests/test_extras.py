@@ -220,6 +220,19 @@ def test_pandas_cosine_matches_builtin(spark):
     assert ka == kb
 
 
+@pytest.mark.parametrize(
+    "bad, r, c",
+    [(float("nan"), 1, 0), (float("inf"), 0, 2), (float("-inf"), 1, 2)],
+)
+def test_lit_matrix_rejects_non_finite(bad, r, c):
+    """NaN and ±inf have no SQL literal spelling: lit_matrix must name
+    the offending element instead of failing later inside Spark."""
+    rows = [[0.5, -1.0, 2.0], [3.0, 4.0, 5.0]]
+    rows[r][c] = bad
+    with pytest.raises(ValueError, match=rf"\[{r}\]\[{c}\]"):
+        similarity.lit_matrix(rows)
+
+
 def test_media_feature_plumbing(spark):
     docs = read_table(spark, SF_SMOKE, "documents", ["doc_id", "text"])
     out = multimodal.extract_media_features(

@@ -214,6 +214,24 @@ def test_no_vacuously_green_oracles(duck):
     )
 
 
+def test_check_first_oracles_not_vacuous(duck):
+    """Fast-tier share of test_no_vacuously_green_oracles (which runs
+    every oracle and so sits in the slow tier): the oracle of each
+    entry in the driver's correctness window (_CHECK_FIRST) must
+    return >=1 row at SF_CORRECT, so the default tier keeps a
+    vacuous-green guard."""
+    oracles = entrymod.oracle_sql()
+    names = [
+        n for n in entrymod._CHECK_FIRST
+        if n in oracles and n not in VACUOUS_WHITELIST
+    ]
+    assert names
+    empty = [n for n in names if not duck.execute(oracles[n]).fetchall()]
+    assert not empty, (
+        f"vacuously-green oracle queries (0 rows at {SF_CORRECT}): {empty}"
+    )
+
+
 def test_readme_counts_match_registry():
     """README's headline registry counts must track the actual
     registry — docs that overstate (or understate) coverage are worse
