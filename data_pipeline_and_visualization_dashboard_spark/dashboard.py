@@ -2,17 +2,22 @@
 
 The reference dashboard reruns app.py top-to-bottom per widget change:
 cached load -> sidebar filter -> six chart producers -> plotly. The
-engine-side equivalent: build + cache the cleaned/derived frame ONCE
-(the `@st.cache_data` analogue, S7), then serve each interaction by
-running the six small §2.13 aggregations over the cached frame and
-handing tiny pandas frames to the renderer (S6).
+engine-side equivalent: build + cache the derived frame ONCE (the
+`@st.cache_data` analogue, S7), projected to the six columns the charts
+read (`charts.CHART_COLUMNS`; the `props` regex and the other derived
+columns never reach the cache), then serve each interaction with the
+sidebar filter and ONE grouping-sets aggregate over the cached frame
+(`charts.chart_payload`), collected once and split into the six tiny
+pandas frames on the driver (S6).
 
-Re-render cost = six short Spark jobs over cached data; AQE coalesces
-their tiny shuffles. At cluster scale the cache is MEMORY_AND_DISK
-across executors and interactions are sub-second for any data size the
-cache holds; beyond that, swap the cache for the date-partitioned
-parquet written by pipeline.run_events_pipeline (partition pruning
-serves the date filter).
+Re-render cost = one aggregate over cached data: at most three short
+Spark jobs (its query stages), whatever the number of charts, and at
+most ~260 collected rows, whatever the number of users (the top-10
+user ranking runs inside the plan). At cluster scale the cache is
+MEMORY_AND_DISK across executors and interactions are sub-second for
+any data size the cache holds; beyond that, swap the cache for the
+date-partitioned parquet written by pipeline.run_events_pipeline
+(partition pruning serves the date filter).
 """
 
 from __future__ import annotations
@@ -22,15 +27,21 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .charts import (
+# The Spark-side producers and filtered_events stay importable from here:
+# they are thin selections of the aggregate a render collects.
+from .charts import (  # noqa: F401
+    CHART_COLUMNS,
     avg_value_by_hour,
+    chart_payload,
     day_hour_heatmap,
     filtered_events,
     metrics_summary,
+    sidebar_filter,
     top_users,
     type_donut,
     value_histogram,
 )
+from .derive import derive_event_columns
 from .io import cache_materialized, read_table
 
 
@@ -50,7 +61,7 @@ def _file_listing(path: str) -> tuple:
 
 @dataclass
 class DashboardSession:
-    """Holds the cached base frame; one per served dashboard. The cache
+    """Holds the cached derived frame; one per served dashboard. The cache
     is rebuilt whenever the events input's file listing changes, so a
     rewrite of the source (e.g. by the ETL) is never served stale."""
 
@@ -64,8 +75,9 @@ class DashboardSession:
         if self._base is not None and listing != self._listing:
             self.close()
         if self._base is None:
+            events = read_table(self.spark, self.sf_dir, "events")
             self._base = cache_materialized(
-                read_table(self.spark, self.sf_dir, "events")
+                derive_event_columns(events).select(*CHART_COLUMNS)
             )
             self._listing = listing
         return self._base
@@ -77,17 +89,11 @@ class DashboardSession:
         type_labels: list[str] | None = None,
     ) -> dict:
         """One widget interaction: filter + the six chart contracts,
-        each returned as a small pandas frame (the §2.13 shapes)."""
-        f = filtered_events(self.base(), date_range, hour_range, type_labels)
-        frames = {
-            "metrics": metrics_summary(f),
-            "top_users": top_users(f),
-            "avg_value_by_hour": avg_value_by_hour(f),
-            "value_histogram": value_histogram(f),
-            "type_donut": type_donut(f),
-            "day_hour_heatmap": day_hour_heatmap(f),
-        }
-        return {name: df.toPandas() for name, df in frames.items()}
+        each returned as a small pandas frame (the §2.13 shapes), from
+        one aggregate and one collect."""
+        return chart_payload(
+            sidebar_filter(self.base(), date_range, hour_range, type_labels)
+        )
 
     def close(self) -> None:
         if self._base is not None:

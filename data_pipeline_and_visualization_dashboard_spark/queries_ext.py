@@ -1075,8 +1075,8 @@ def train_centroids(
       E-step  — argmax-cosine assignment with centroids baked into the
                 plan as literals (k×dim doubles — no broadcast var, no
                 shuffle of the corpus)
-      M-step  — dim per-dimension SUM columns + one count in ONE
-                grouped agg keyed by centroid alone (k rows × dim+1
+      M-step  — dim per-dimension (SUM, non-null COUNT) pairs in ONE
+                grouped agg keyed by centroid alone (k rows × 2·dim
                 cells cross the exchange), then mean + re-normalize
                 driver-side
 
@@ -1134,13 +1134,20 @@ def train_centroids(
     bound = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("ev")
     )
-    # ONE parsed expression for the dim per-dim sums (an array of
-    # aggregates), not dim separate Column builds — the same py4j
-    # per-element discipline as lit_matrix, ~0.4 s/iteration of
-    # driver-side construction at dim=64
+    # ONE parsed expression for the dim per-dim (sum, non-null count)
+    # pairs (an array of aggregates), not 2·dim separate Column builds —
+    # the same py4j per-element discipline as lit_matrix, ~0.4
+    # s/iteration of driver-side construction at dim=64. Each mean
+    # divides by its own dimension's non-null count, so a null element
+    # is skipped, not averaged in as zero; with no nulls that count is
+    # the member count and the means are the same doubles.
     sum_arr = F.expr(
         "array("
-        + ",".join(f"sum(element_at(ev, {p + 1}))" for p in range(dim))
+        + ",".join(
+            f"named_struct('s', sum(element_at(ev, {p + 1})),"
+            f" 'n', count(element_at(ev, {p + 1})))"
+            for p in range(dim)
+        )
         + ")"
     ).alias("s")
     for _ in range(iters):
@@ -1148,15 +1155,11 @@ def train_centroids(
         assigned = bound.select(
             "ev", (-best.getField("ncid")).alias("centroid_id")
         )
-        sums = (
-            assigned.groupBy("centroid_id")
-            .agg(F.count(F.lit(1)).alias("c"), sum_arr)
-            .collect()
-        )
+        sums = assigned.groupBy("centroid_id").agg(sum_arr).collect()
         centroids = [
             (
                 int(r["centroid_id"]),
-                _unit([r["s"][p] / r["c"] for p in range(dim)]),
+                _unit([d["s"] / d["n"] if d["n"] else 0.0 for d in r["s"]]),
             )
             for r in sorted(sums, key=lambda r: r["centroid_id"])
         ]

@@ -119,6 +119,40 @@ def test_ivf_recall_against_bruteforce(spark):
     assert total > 0 and hits / total >= 0.3  # recall floor for nprobe=2/k=4
 
 
+def test_kmeans_m_step_skips_null_elements(spark, tmp_path):
+    """A null embedding element is left out of its own dimension's mean
+    (the M-step divides each dimension's sum by that dimension's
+    non-null count), not averaged in as a zero."""
+    import math
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_and_visualization_dashboard_spark.queries_ext import (
+        train_centroids,
+    )
+
+    vecs = [[1.0, 0.0, 2.0], [3.0, None, 1.0], [2.0, 4.0, 0.5],
+            [0.5, 2.0, 3.0]]
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(len(vecs)), pa.int64()),
+            "embedding": pa.array(vecs, pa.list_(pa.float32())),
+            "label": pa.array([0] * len(vecs), pa.int32()),
+        }),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    # one centroid: every vector is its member, so it is their mean
+    [(cid, got)] = train_centroids(spark, str(tmp_path), k=1, iters=1)
+    means = []
+    for p in range(3):
+        xs = [v[p] for v in vecs if v[p] is not None]
+        means.append(sum(xs) / len(xs))
+    norm = math.sqrt(sum(x * x for x in means))
+    assert cid == 0
+    assert got == pytest.approx([x / norm for x in means], rel=1e-12)
+
+
 def test_pq_adc_recall_against_bruteforce(spark):
     """PQ-ADC (4 blocks x 16 sampled codes) vs exact cosine. Recall is
     structurally low here BECAUSE the synthetic embeddings are near-
