@@ -23,6 +23,9 @@ via idempotent epoch overwrite.
 
 from __future__ import annotations
 
+import functools
+from typing import Callable, NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -337,6 +340,99 @@ def run_dedup_to_completion(spark: SparkSession, in_dir: str,
     )
 
 
+class _UserFold(NamedTuple):
+    """One per-user stateful family, as `_per_user_stream` runs it.
+
+    `fold(user_id, pdf_iter, *state) -> (rows, new_state)` is pure: it
+    walks one micro-batch of the user's rows from the stored state (or
+    `init` for a user never seen) and never sees the GroupState.  Rows
+    are tuples in `out_schema` order; `timestamp` columns carry epoch
+    microseconds.  `anchor` is the index of the user's last event time
+    (us) in the state, where a bounded spelling arms its timeout.
+    `flush(user_id, *state)` gives the rows an evicted user emits
+    (none when unset).  `drop_null_users` and `check_watermark` are
+    the family's population policy and its watermark-delay guard."""
+
+    fold: Callable
+    init: tuple
+    out_schema: str
+    state_schema: str
+    anchor: int = 0
+    flush: Callable | None = None
+    drop_null_users: bool = False
+    check_watermark: Callable | None = None
+
+
+def _per_user_handler(key, pdf_iter, state, family, horizon_us, cols,
+                      ts_cols):
+    """The GroupState protocol, once for every per-user family.
+
+    A key whose event-time timeout fired (Spark delivers it only to
+    keys with no data in the batch) has its state removed and emits
+    the family's flush rows.  Otherwise the fold runs from the stored
+    or initial state, and its new state is stored.  With a horizon,
+    the timeout is armed at last event + horizon; setTimeoutTimestamp
+    must exceed the current watermark, so a user whose horizon already
+    elapsed is armed at watermark + 1 ms and fires in the next batch
+    without their data.  Rows leave as one frame with the family's
+    columns."""
+    import pandas as pd
+
+    (user_id,) = key
+    if state.hasTimedOut:
+        rows = family.flush(user_id, *state.get) if family.flush else []
+        state.remove()
+    else:
+        rows, new_state = family.fold(
+            user_id, pdf_iter, *(state.get if state.exists else family.init)
+        )
+        state.update(new_state)
+        if horizon_us is not None:
+            state.setTimeoutTimestamp(
+                max(
+                    (new_state[family.anchor] + horizon_us) // 1000 + 1,
+                    state.getCurrentWatermarkMs() + 1,
+                )
+            )
+    if rows:
+        out = pd.DataFrame(rows, columns=cols)
+        for c in ts_cols:
+            out[c] = pd.to_datetime(out[c], unit="us")
+        yield out
+
+
+def _per_user_stream(events: DataFrame, watermark: str, family: _UserFold,
+                     horizon_us: int | None = None) -> DataFrame:
+    """Build one per-user stateful stream: the family's population and
+    watermark checks, then withWatermark -> groupBy(user_id) ->
+    applyInPandasWithState in append mode.  `horizon_us` None keeps
+    every user's state for ever (NoTimeout); a horizon evicts users
+    idle past it in event time (EventTimeTimeout)."""
+    if family.check_watermark is not None:
+        family.check_watermark(watermark)
+    if family.drop_null_users:
+        events = events.filter(F.col("user_id").isNotNull())
+    fields = [f.split() for f in family.out_schema.split(",")]
+    handler = functools.partial(
+        _per_user_handler,
+        family=family,
+        horizon_us=horizon_us,
+        cols=[name for name, _ in fields],
+        ts_cols=[name for name, kind in fields if kind == "timestamp"],
+    )
+    return (
+        events.withWatermark("ts", watermark)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            handler,
+            family.out_schema,
+            family.state_schema,
+            "append",
+            "NoTimeout" if horizon_us is None else "EventTimeTimeout",
+        )
+    )
+
+
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, matches queries.q16
 
 _WATERMARK_UNITS_US = {
@@ -357,6 +453,10 @@ _WATERMARK_UNITS_US = {
     "month": 31 * 86400 * 1_000_000,
     "year": 372 * 86400 * 1_000_000,
 }
+_WATERMARK_TERM = (
+    r"(\d+)\s*(microsecond|millisecond|second|minute|hour|day"
+    r"|week|month|year)s?"
+)
 
 
 def _check_session_watermark(watermark: str) -> None:
@@ -367,45 +467,40 @@ def _check_session_watermark(watermark: str) -> None:
     open session's start, which the min() fold would merge while batch
     sessionization places them in a separate earlier session. Reject
     such configurations at the entry point instead of silently
-    weakening the parity contract. Unparseable strings are left to
-    Spark's own withWatermark validation."""
+    weakening the parity contract. The delay is the sum of every
+    `<int> <unit>` term, after an optional leading `interval` ("1 hour
+    30 minutes" is 90 minutes), as Spark sums them. Other strings are
+    left to Spark's own withWatermark validation."""
     import re
 
-    m = re.fullmatch(
-        r"\s*(\d+)\s*(microsecond|millisecond|second|minute|hour|day"
-        r"|week|month|year)s?\s*",
-        watermark.lower(),
-    )
-    if m is None:
+    text = re.sub(r"^interval\s+", "", watermark.strip().lower())
+    if re.fullmatch(rf"(?:{_WATERMARK_TERM}\s*)+", text) is None:
         return
-    delay_us = int(m.group(1)) * _WATERMARK_UNITS_US[m.group(2)]
+    delay_us = sum(
+        int(n) * _WATERMARK_UNITS_US[unit]
+        for n, unit in re.findall(_WATERMARK_TERM, text)
+    )
     if delay_us > SESSION_GAP_US:
         raise ValueError(
             f"session watermark delay {watermark!r} exceeds the "
             f"session gap ({SESSION_GAP_US} us): late events older "
             "than the open session's start would break batch parity "
-            "(see _session_func's fold proof)"
+            "(see _session_fold's proof)"
         )
 
 
-_SESSION_OUT_SCHEMA = (
-    "user_id long, session_start timestamp, session_end timestamp, "
-    "n_events long"
-)
-_SESSION_STATE_SCHEMA = "start_us long, last_us long, n long"
+def _session_fold(user_id, pdf_iter, start_us, last_us, n):
+    """Per-user session fold. State = the one open session (start_us,
+    last_us, n); n == 0 means no open session.
 
-
-def _session_func(key, pdf_iter, state):
-    """Per-user stateful session builder (applyInPandasWithState).
-
-    State = the one open session (start_us, last_us, n). Each batch:
-    buffer ALL of the user's chunks, sort the union by time ONCE, fold
-    into the open session, EMIT every session closed by a gap >
-    SESSION_GAP_US, keep the trailing open session in state. The
-    whole-batch sort matters: one user's micro-batch can span multiple
-    Arrow chunks, and a per-chunk sort would compare out-of-order
-    timestamps against last_us, closing/splitting sessions wrongly.
-    Per-key-per-batch volumes are small, so buffering is negligible.
+    Each batch: buffer ALL of the user's chunks, sort the union by
+    time ONCE, fold into the open session, EMIT every session closed
+    by a gap > SESSION_GAP_US, keep the trailing open session in
+    state. The whole-batch sort matters: one user's micro-batch can
+    span multiple Arrow chunks, and a per-chunk sort would compare
+    out-of-order timestamps against last_us, closing/splitting
+    sessions wrongly. Per-key-per-batch volumes are small, so
+    buffering is negligible.
     Late rows older than the open session's last event fold in
     EXACTLY as batch would: any in-gap event t provably satisfies
     t > last_us − gap ≥ start_us − gap, so batch sessionization would
@@ -423,17 +518,10 @@ def _session_func(key, pdf_iter, state):
     """
     import pandas as pd
 
-    (user_id,) = key
-    if state.exists:
-        start_us, last_us, n = state.get
-    else:
-        start_us = last_us = -1
-        n = 0
     closed: list[tuple] = []
     chunks = [pdf["ts"].astype("int64") // 1000 for pdf in pdf_iter]
     if chunks:
-        us = pd.concat(chunks).sort_values()
-        for t in us:
+        for t in pd.concat(chunks).sort_values():
             t = int(t)
             if n == 0:
                 start_us, last_us, n = t, t, 1
@@ -446,71 +534,27 @@ def _session_func(key, pdf_iter, state):
                 start_us = min(start_us, t)
                 last_us = max(last_us, t)
                 n += 1
-    state.update((start_us, last_us, n))
-    if closed:
-        out = pd.DataFrame(
-            closed, columns=["user_id", "session_start", "session_end", "n_events"]
-        )
-        out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-        out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
-        yield out
+    return closed, (start_us, last_us, n)
 
 
-def _session_timeout_func(key, pdf_iter, state):
-    """Timeout-evicting session builder: the fold is _session_func's,
-    plus an EVENT-TIME TIMEOUT armed at last_event + gap. When the
-    watermark passes it, the open session is EMITTED (it provably
-    cannot extend — any later event for this user would start a new
-    session anyway) and the state REMOVED. Session boundaries are
-    identical whichever path closes them: an in-batch gap closes in
-    the fold, a cross-batch gap closes by timeout; a returning user
-    simply starts fresh state. setTimeoutTimestamp must exceed the
-    current watermark — a user whose gap already elapsed is armed at
-    watermark+1ms and fires in the next no-data batch."""
-    import pandas as pd
+def _session_flush(user_id, start_us, last_us, n):
+    """An evicted user's open session is final: any later event of
+    theirs would start a new session anyway."""
+    return [(user_id, start_us, last_us, n)]
 
-    cols = ["user_id", "session_start", "session_end", "n_events"]
-    (user_id,) = key
-    if state.hasTimedOut:
-        start_us, last_us, n = state.get
-        state.remove()
-        out = pd.DataFrame([(user_id, start_us, last_us, n)], columns=cols)
-        out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-        out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
-        yield out
-        return
-    if state.exists:
-        start_us, last_us, n = state.get
-    else:
-        start_us = last_us = -1
-        n = 0
-    closed: list[tuple] = []
-    chunks = [pdf["ts"].astype("int64") // 1000 for pdf in pdf_iter]
-    if chunks:
-        us = pd.concat(chunks).sort_values()
-        for t in us:
-            t = int(t)
-            if n == 0:
-                start_us, last_us, n = t, t, 1
-            elif t - last_us > SESSION_GAP_US:
-                closed.append((user_id, start_us, last_us, n))
-                start_us, last_us, n = t, t, 1
-            else:
-                # in-gap: t > last_us − gap ≥ start_us − gap, so batch
-                # would extend this session backward too — fold min
-                start_us = min(start_us, t)
-                last_us = max(last_us, t)
-                n += 1
-    state.update((start_us, last_us, n))
-    gap_ms = SESSION_GAP_US // 1000
-    state.setTimeoutTimestamp(
-        max(last_us // 1000 + gap_ms + 1, state.getCurrentWatermarkMs() + 1)
-    )
-    if closed:
-        out = pd.DataFrame(closed, columns=cols)
-        out["session_start"] = pd.to_datetime(out["session_start"], unit="us")
-        out["session_end"] = pd.to_datetime(out["session_end"], unit="us")
-        yield out
+
+_SESSIONS = _UserFold(
+    fold=_session_fold,
+    init=(-1, -1, 0),
+    out_schema=(
+        "user_id long, session_start timestamp, session_end timestamp, "
+        "n_events long"
+    ),
+    state_schema="start_us long, last_us long, n long",
+    anchor=1,
+    flush=_session_flush,
+    check_watermark=_check_session_watermark,
+)
 
 
 def sessionize_stream_timeout(events: DataFrame,
@@ -520,32 +564,24 @@ def sessionize_stream_timeout(events: DataFrame,
     each user's open session is emitted AND its state evicted once the
     watermark proves the gap elapsed (last_event + gap), so state is
     O(users active inside one gap+delay horizon), independent of how
-    many users the stream has ever seen. This closes the state-size
+    many users the stream has ever seen. Session boundaries are
+    identical whichever path closes them: an in-batch gap closes in
+    the fold, a cross-batch gap closes by timeout; a returning user
+    simply starts fresh state. This closes the state-size
     gap the round-9 honesty audit documented on the NoTimeout twin,
     and it STRENGTHENS the output contract: once the watermark passes
     every user's last+gap (parity tests land sentinel flush events),
     the emitted set equals FULL batch sessionization — final sessions
     included, not batch-minus-open — for every arrival order that
     never bridges an already-closed gap (the precise envelope is in
-    _session_func's docstring: in-gap reordering now folds exactly,
+    _session_fold's docstring: in-gap reordering now folds exactly,
     start_us included, via the min() fold of ADVICE r9 #4; only an
     event landing within gap of BOTH a fold-closed session's end and
     the next session's start, arriving after the close, breaks parity
     — batch would merge what the stream already emitted apart).
     State eviction is pinned from the query's own progress metrics in
     tests/test_streaming.py."""
-    _check_session_watermark(watermark)
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _session_timeout_func,
-            _SESSION_OUT_SCHEMA,
-            _SESSION_STATE_SCHEMA,
-            "append",
-            "EventTimeTimeout",
-        )
-    )
+    return _per_user_stream(events, watermark, _SESSIONS, SESSION_GAP_US)
 
 
 def sessionize_stream(events: DataFrame,
@@ -560,23 +596,12 @@ def sessionize_stream(events: DataFrame,
     is |users ever seen|, not |active users|; the upstream watermark
     only drops late input. Right for bounded user domains (this
     engine's events model); for an unbounded key domain the production
-    spelling is GroupStateTimeout.EventTimeTimeout with
-    state.setTimeoutTimestamp(last_event + gap) and state.remove() on
-    timeout — which also EMITS each idle user's final session the
-    moment its gap elapses in event time, instead of holding it open
-    forever. Same trade as dedup_event_stream vs _bounded."""
-    _check_session_watermark(watermark)
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _session_func,
-            _SESSION_OUT_SCHEMA,
-            _SESSION_STATE_SCHEMA,
-            "append",
-            "NoTimeout",
-        )
-    )
+    spelling is sessionize_stream_timeout, whose event-time timeout at
+    last_event + gap removes the state — and also EMITS each idle
+    user's final session the moment its gap elapses in event time,
+    instead of holding it open forever. Same trade as
+    dedup_event_stream vs _bounded."""
+    return _per_user_stream(events, watermark, _SESSIONS)
 
 
 def run_sessionize_to_completion(spark: SparkSession, in_dir: str,
@@ -589,27 +614,23 @@ def run_sessionize_to_completion(spark: SparkSession, in_dir: str,
     )
 
 
-_TRANSITION_OUT_SCHEMA = (
-    "user_id long, from_type string, to_type string"
-)
-_TRANSITION_STATE_SCHEMA = "last_us long, last_eid long, last_type string"
-
-
-def _transition_func(key, pdf_iter, state):
-    """Per-user stateful transition emitter: state = the user's LAST
-    event (ts, event_id, type); each batch buffers the user's rows,
-    sorts the union by (ts, event_id) ONCE — the exact tie order the
-    batch q89 window uses, so a micro-batch split can never reorder
-    equal timestamps differently — then emits one (from, to) row per
+def _transition_fold(user_id, pdf_iter, last_us, last_eid, last_type):
+    """Per-user transition fold: state = the user's LAST event (ts,
+    event_id, type); each batch buffers the user's rows, sorts the
+    union by (ts, event_id) ONCE — the exact tie order the batch q89
+    window uses, so a micro-batch split can never reorder equal
+    timestamps differently — then emits one (from, to) row per
     consecutive pair, bridging the batch boundary through the carried
-    state. State is three scalars per active user."""
+    state. State is three scalars per active user.
+
+    NULL event types follow q89, which pairs each event with its
+    lead() and keeps pairs whose to_type IS NOT NULL: a NULL-typed
+    event emits no pair of its own but is still the next pair's
+    from_type. Whether a previous event exists is therefore read from
+    its position — the initial state's (-1, -1) — never from
+    last_type, which may be NULL."""
     import pandas as pd
 
-    (user_id,) = key
-    if state.exists:
-        last_us, last_eid, last_type = state.get
-    else:
-        last_us, last_eid, last_type = -1, -1, None
     frames = [
         pd.DataFrame(
             {
@@ -624,14 +645,18 @@ def _transition_func(key, pdf_iter, state):
     if frames:
         df = pd.concat(frames).sort_values(["us", "eid"])
         for us, eid, et in df.itertuples(index=False):
-            if last_type is not None:
+            if et is not None and (last_us, last_eid) != (-1, -1):
                 rows.append((user_id, last_type, et))
             last_us, last_eid, last_type = int(us), int(eid), et
-    state.update((last_us, last_eid, last_type))
-    if rows:
-        yield pd.DataFrame(
-            rows, columns=["user_id", "from_type", "to_type"]
-        )
+    return rows, (last_us, last_eid, last_type)
+
+
+_TRANSITIONS = _UserFold(
+    fold=_transition_fold,
+    init=(-1, -1, None),
+    out_schema="user_id long, from_type string, to_type string",
+    state_schema="last_us long, last_eid long, last_type string",
+)
 
 
 def transition_stream(events: DataFrame,
@@ -647,74 +672,10 @@ def transition_stream(events: DataFrame,
     state-honesty note; the unbounded-domain spelling is an
     EventTimeTimeout that drops users idle past a horizon, trading
     the first post-return transition of a long-idle user)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _transition_func,
-            _TRANSITION_OUT_SCHEMA,
-            _TRANSITION_STATE_SCHEMA,
-            "append",
-            "NoTimeout",
-        )
-    )
+    return _per_user_stream(events, watermark, _TRANSITIONS)
 
 
 TRANSITION_IDLE_US = 30 * 24 * 3600 * 1_000_000  # 30-day idle horizon
-
-
-def _transition_timeout_func(key, pdf_iter, state):
-    """_transition_func plus an idle-eviction timeout: a user silent
-    past TRANSITION_IDLE_US is dropped from the state store (nothing
-    to emit — the last event is only a transition SOURCE). The traded
-    semantics, stated precisely (the tests/test_streaming.py fixture
-    demonstrates both sides): the bridging (pre-idle → first-new)
-    pair is dropped IF a batch without that user's data ran after the
-    watermark passed their horizon (Spark only delivers hasTimedOut
-    to keys with no data in the batch — an expired key whose return
-    arrives before any such batch is processed with its state intact,
-    i.e. the exact twin's behavior). Output therefore sits between
-    the exact twin and the strict horizon cut; what the timeout
-    GUARANTEES is the state bound — idle entries cannot outlive the
-    horizon by more than one batch interval."""
-    import pandas as pd
-
-    (user_id,) = key
-    if state.hasTimedOut:
-        state.remove()
-        return
-    if state.exists:
-        last_us, last_eid, last_type = state.get
-    else:
-        last_us, last_eid, last_type = -1, -1, None
-    frames = [
-        pd.DataFrame(
-            {
-                "us": pdf["ts"].astype("int64") // 1000,
-                "eid": pdf["event_id"],
-                "et": pdf["event_type"],
-            }
-        )
-        for pdf in pdf_iter
-    ]
-    rows = []
-    if frames:
-        df = pd.concat(frames).sort_values(["us", "eid"])
-        for us, eid, et in df.itertuples(index=False):
-            if last_type is not None:
-                rows.append((user_id, last_type, et))
-            last_us, last_eid, last_type = int(us), int(eid), et
-    state.update((last_us, last_eid, last_type))
-    state.setTimeoutTimestamp(
-        max(
-            (last_us + TRANSITION_IDLE_US) // 1000 + 1,
-            state.getCurrentWatermarkMs() + 1,
-        )
-    )
-    if rows:
-        yield pd.DataFrame(
-            rows, columns=["user_id", "from_type", "to_type"]
-        )
 
 
 def transition_stream_bounded(events: DataFrame,
@@ -722,24 +683,25 @@ def transition_stream_bounded(events: DataFrame,
     """UNBOUNDED-DOMAIN transition emitter: transition_stream with an
     EventTimeTimeout that evicts users idle past TRANSITION_IDLE_US —
     state is O(users active within one horizon), independent of stream
-    lifetime. Semantics trade (documented on the timeout func): a
-    horizon-crossing user's bridging transition is dropped; within the
-    horizon, output is identical to the exact twin (parity-tested —
-    the horizon dominates the test corpus's span, so the matrices are
-    equal; the eviction itself is pinned on a synthetic idle-user
-    fixture via the progress metrics). Restart recovery — state AND
-    armed timeout — is pinned in
+    lifetime. An evicted user emits nothing (the last event is only a
+    transition SOURCE). The traded semantics, stated precisely (the
+    tests/test_streaming.py fixture demonstrates both sides): the
+    bridging (pre-idle → first-new) pair is dropped IF a batch without
+    that user's data ran after the watermark passed their horizon
+    (Spark only delivers the timeout to keys with no data in the
+    batch — an expired key whose return arrives before any such batch
+    is processed with its state intact, i.e. the exact twin's
+    behavior). Output therefore sits between the exact twin and the
+    strict horizon cut; what the timeout GUARANTEES is the state
+    bound — idle entries cannot outlive the horizon by more than one
+    batch interval. Within the horizon, output is identical to the
+    exact twin (parity-tested — the horizon dominates the test
+    corpus's span, so the matrices are equal; the eviction itself is
+    pinned on a synthetic idle-user fixture via the progress metrics).
+    Restart recovery — state AND armed timeout — is pinned in
     test_bounded_transitions_survive_restart."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _transition_timeout_func,
-            _TRANSITION_OUT_SCHEMA,
-            _TRANSITION_STATE_SCHEMA,
-            "append",
-            "EventTimeTimeout",
-        )
+    return _per_user_stream(
+        events, watermark, _TRANSITIONS, TRANSITION_IDLE_US
     )
 
 
@@ -754,31 +716,21 @@ def run_transitions_to_completion(spark: SparkSession, in_dir: str,
     )
 
 
-_LAST_TOUCH_OUT_SCHEMA = "user_id long, channel string, value double"
-# STATE-SCHEMA BREAK (r15 → ADVICE r15 #3): this schema widened from 3
-# to 5 fields (touch_us, touch_eid added for the order-aware carry).
-# applyInPandasWithState state schemas are NOT migration-safe: a
-# checkpoint written under the 3-field schema must be DISCARDED before
-# resuming under this one (recovery would fail or misbind state).
-# Fresh checkpoints — every test and the documented deployment recipe
-# (new checkpoint dir per operator version) — are unaffected.  If a
-# long-lived deployment needs a live migration, drain the old query
-# (stop at a quiet watermark), then start v2 with a NEW checkpoint dir
-# against the same sink: the fold reconverges from the sink's
-# replayable input, which is why the carry is designed to converge
-# under every arrival order.
-_LAST_TOUCH_STATE_SCHEMA = (
-    "last_us long, last_eid long, channel string, "
-    "touch_us long, touch_eid long"
-)
-
-
 def _last_touch_fold(user_id, pdf_iter, last_us, last_eid, channel,
                      touch_us, touch_eid):
-    """Shared per-batch fold for both last-touch funcs: buffer the
-    user's rows, sort the union by (ts, event_id) ONCE — the exact
-    total order the batch q98 window walks, so a micro-batch split can
-    never reorder equal timestamps differently — then walk it: a
+    """Per-user last-touch fold, shared by both last-touch spellings.
+    State = the user's last event position of ANY type (ts, event_id
+    — the idle-timeout anchor for the bounded spelling) plus the
+    carried CHANNEL (last non-purchase type — the LOCF carry-forward
+    q98 computes with a window, kept live) and that touch's own (ts,
+    event_id) position.  Five scalars per user; a user who has only
+    ever purchased carries a NULL channel (the '(none)' direct-traffic
+    bucket downstream).
+
+    Each batch: buffer the user's rows, sort the union by (ts,
+    event_id) ONCE — the exact total order the batch q98 window walks,
+    so a micro-batch split can never reorder equal timestamps
+    differently — then walk it: a
     purchase CREDITS the carried channel (strictly-preceding rows
     only, because the carry updates after the credit check — the
     1-PRECEDING frame), a non-purchase BECOMES the carry.  Rows with a
@@ -812,7 +764,7 @@ def _last_touch_fold(user_id, pdf_iter, last_us, last_eid, channel,
     touch that event-time-precedes it and before every touch that
     event-time-follows it (the test corpora's time-split replays
     satisfy this; a violation mis-credits ONLY that purchase — the
-    carry self-heals for all later ones).  Contrast _session_func,
+    carry self-heals for all later ones).  Contrast _session_fold,
     whose in-gap fold repairs late rows exactly; here exact repair
     would need the full touch path, which is precisely the
     unbounded state this family avoids.  Returns (emit_rows,
@@ -847,32 +799,28 @@ def _last_touch_fold(user_id, pdf_iter, last_us, last_eid, channel,
     return rows, (last_us, last_eid, channel, touch_us, touch_eid)
 
 
-def _last_touch_func(key, pdf_iter, state):
-    """Per-user stateful last-touch attributor: state = the user's
-    last event position of ANY type (ts, event_id — the idle-timeout
-    anchor for the bounded spelling) plus the carried CHANNEL (last
-    non-purchase type — the LOCF carry-forward q98 computes with a
-    window, kept live) and that touch's own (ts, event_id) position
-    (the order-aware guard: a late older touch never overwrites a
-    newer carry — _last_touch_fold's envelope note).  Five scalars
-    per user; a user who has only ever purchased carries a NULL
-    channel (the '(none)' direct-traffic bucket downstream)."""
-    import pandas as pd
-
-    (user_id,) = key
-    if state.exists:
-        last_us, last_eid, channel, touch_us, touch_eid = state.get
-    else:
-        last_us, last_eid, channel, touch_us, touch_eid = (
-            -1, -1, None, -1, -1,
-        )
-    rows, new_state = _last_touch_fold(
-        user_id, pdf_iter, last_us, last_eid, channel,
-        touch_us, touch_eid,
-    )
-    state.update(new_state)
-    if rows:
-        yield pd.DataFrame(rows, columns=["user_id", "channel", "value"])
+_LAST_TOUCH = _UserFold(
+    fold=_last_touch_fold,
+    init=(-1, -1, None, -1, -1),
+    out_schema="user_id long, channel string, value double",
+    # STATE-SCHEMA BREAK (r15 → ADVICE r15 #3): this schema widened
+    # from 3 to 5 fields (touch_us, touch_eid added for the order-aware
+    # carry). applyInPandasWithState state schemas are NOT
+    # migration-safe: a checkpoint written under the 3-field schema
+    # must be DISCARDED before resuming under this one (recovery would
+    # fail or misbind state). Fresh checkpoints — every test and the
+    # documented deployment recipe (new checkpoint dir per operator
+    # version) — are unaffected.  If a long-lived deployment needs a
+    # live migration, drain the old query (stop at a quiet watermark),
+    # then start v2 with a NEW checkpoint dir against the same sink:
+    # the fold reconverges from the sink's replayable input, which is
+    # why the carry is designed to converge under every arrival order.
+    state_schema=(
+        "last_us long, last_eid long, channel string, "
+        "touch_us long, touch_eid long"
+    ),
+    drop_null_users=True,
+)
 
 
 def last_touch_stream(events: DataFrame,
@@ -890,66 +838,10 @@ def last_touch_stream(events: DataFrame,
     EVER SEEN; under "NoTimeout" it is never evicted (see
     sessionize_stream's state-honesty note) — the bounded-domain
     spelling is last_touch_stream_bounded."""
-    return (
-        events.filter(F.col("user_id").isNotNull())
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _last_touch_func,
-            _LAST_TOUCH_OUT_SCHEMA,
-            _LAST_TOUCH_STATE_SCHEMA,
-            "append",
-            "NoTimeout",
-        )
-    )
+    return _per_user_stream(events, watermark, _LAST_TOUCH)
 
 
 LAST_TOUCH_IDLE_US = 30 * 24 * 3600 * 1_000_000  # 30-day idle horizon
-
-
-def _last_touch_timeout_func(key, pdf_iter, state):
-    """_last_touch_func plus idle eviction: a user silent past
-    LAST_TOUCH_IDLE_US is dropped from the state store.  The traded
-    semantics, stated precisely (the eviction test demonstrates both
-    sides): a purchase by a user whose pre-idle touch was evicted
-    credits '(none)' instead of the stale channel — arguably the
-    RIGHT attribution call (a 30-day-old touch has expired in most
-    attribution models), and exactly the transition family's
-    hasTimedOut mechanics: Spark only delivers the timeout to keys
-    with no data in the batch, so an expired key whose purchase
-    arrives before any such batch still credits the intact state.
-    What the timeout GUARANTEES is the state bound — idle entries
-    cannot outlive the horizon by more than one batch interval.
-    The deadline is armed from new_state's (last_us) — which the fold
-    now advances with a MAX (ADVICE r14 #2): a late batch containing
-    only OLDER events leaves it at the user's true latest event, so
-    the eviction deadline can never move backward and a user is never
-    evicted earlier than the horizon past their real last event."""
-    import pandas as pd
-
-    (user_id,) = key
-    if state.hasTimedOut:
-        state.remove()
-        return
-    if state.exists:
-        last_us, last_eid, channel, touch_us, touch_eid = state.get
-    else:
-        last_us, last_eid, channel, touch_us, touch_eid = (
-            -1, -1, None, -1, -1,
-        )
-    rows, new_state = _last_touch_fold(
-        user_id, pdf_iter, last_us, last_eid, channel,
-        touch_us, touch_eid,
-    )
-    state.update(new_state)
-    state.setTimeoutTimestamp(
-        max(
-            (new_state[0] + LAST_TOUCH_IDLE_US) // 1000 + 1,
-            state.getCurrentWatermarkMs() + 1,
-        )
-    )
-    if rows:
-        yield pd.DataFrame(rows, columns=["user_id", "channel", "value"])
 
 
 def last_touch_stream_bounded(events: DataFrame,
@@ -958,31 +850,30 @@ def last_touch_stream_bounded(events: DataFrame,
     an EventTimeTimeout that evicts users idle past
     LAST_TOUCH_IDLE_US — state is O(users active within one horizon),
     independent of stream lifetime (the transition family's
-    bounded-state story, applied to the 22nd family).  Within the
-    horizon, output is identical to the exact twin (the parity corpus
-    spans less than the horizon, so the restart pin compares equal);
-    the eviction semantics themselves are pinned on a synthetic
-    idle-user fixture."""
-    return (
-        events.filter(F.col("user_id").isNotNull())
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _last_touch_timeout_func,
-            _LAST_TOUCH_OUT_SCHEMA,
-            _LAST_TOUCH_STATE_SCHEMA,
-            "append",
-            "EventTimeTimeout",
-        )
+    bounded-state story, applied to the 22nd family).  The traded
+    semantics, stated precisely (the eviction test demonstrates both
+    sides): a purchase by a user whose pre-idle touch was evicted
+    credits '(none)' instead of the stale channel — arguably the
+    RIGHT attribution call (a 30-day-old touch has expired in most
+    attribution models), and exactly the transition family's timeout
+    mechanics: Spark only delivers the timeout to keys with no data
+    in the batch, so an expired key whose purchase arrives before any
+    such batch still credits the intact state.  The deadline is armed
+    from the fold's last_us, which only advances (a MAX fold, ADVICE
+    r14 #2): a late batch containing only OLDER events leaves it at
+    the user's true latest event, so a user is never evicted earlier
+    than the horizon past their real last event.  Within the horizon,
+    output is identical to the exact twin (the parity corpus spans
+    less than the horizon, so the restart pin compares equal); the
+    eviction semantics themselves are pinned on a synthetic idle-user
+    fixture."""
+    return _per_user_stream(
+        events, watermark, _LAST_TOUCH, LAST_TOUCH_IDLE_US
     )
 
 
-_LINEAR_ATTR_OUT_SCHEMA = "user_id long, channel string, credit double"
-_LINEAR_ATTR_STATE_SCHEMA = "channels array<string>, counts array<bigint>"
-
-
-def _linear_attr_func(key, pdf_iter, state):
-    """Per-user stateful LINEAR-attribution crediter: state is the
+def _linear_attr_fold(user_id, pdf_iter, channels, counts):
+    """Per-user LINEAR-attribution fold: state is the
     user's per-channel preceding-touch COUNTS (two parallel arrays,
     ≤|event types| entries — the insight that makes this streamable:
     equal splitting needs only the channel histogram of the path, not
@@ -1014,12 +905,7 @@ def _linear_attr_func(key, pdf_iter, state):
     this family deliberately avoids."""
     import pandas as pd
 
-    (user_id,) = key
-    if state.exists:
-        channels, counts = state.get
-        tally = {c: int(n) for c, n in zip(channels, counts)}
-    else:
-        tally = {}
+    tally = {c: int(n) for c, n in zip(channels, counts)}
     frames = [
         pd.DataFrame(
             {
@@ -1047,11 +933,16 @@ def _linear_attr_func(key, pdf_iter, state):
                     rows.append((user_id, None, val))
             else:
                 tally[et] = tally.get(et, 0) + 1
-    state.update((list(tally.keys()), list(tally.values())))
-    if rows:
-        yield pd.DataFrame(
-            rows, columns=["user_id", "channel", "credit"]
-        )
+    return rows, (list(tally.keys()), list(tally.values()))
+
+
+_LINEAR_ATTR = _UserFold(
+    fold=_linear_attr_fold,
+    init=([], []),
+    out_schema="user_id long, channel string, credit double",
+    state_schema="channels array<string>, counts array<bigint>",
+    drop_null_users=True,
+)
 
 
 def linear_attribution_stream(events: DataFrame,
@@ -1080,18 +971,7 @@ def linear_attribution_stream(events: DataFrame,
     batch query's filter, not in silent state loss; the 22nd family's
     timeout spelling is the template if a deployment accepts the
     trade."""
-    return (
-        events.filter(F.col("user_id").isNotNull())
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _linear_attr_func,
-            _LINEAR_ATTR_OUT_SCHEMA,
-            _LINEAR_ATTR_STATE_SCHEMA,
-            "append",
-            "NoTimeout",
-        )
-    )
+    return _per_user_stream(events, watermark, _LINEAR_ATTR)
 
 
 def linear_attr_rollup(credits: DataFrame) -> DataFrame:

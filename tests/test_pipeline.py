@@ -782,3 +782,40 @@ def test_incremental_shard_write_matches_full_rewrite(spark, tmp_path):
             assert before[s] != after[s], f"dirty shard {s} untouched"
         else:
             assert before[s] == after[s], f"clean shard {s} rewritten"
+
+
+def test_null_counts_matches_duckdb(spark, tmp_path):
+    """V4 (ipynb:167): per-column null counts over a crafted frame
+    with nulls in some columns, none in one, all in another, and a NaN
+    (not a null in either engine), against DuckDB's count(*) -
+    count(col)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_and_visualization_dashboard_spark.validate import (
+        null_counts,
+    )
+
+    path = str(tmp_path / "nulls.parquet")
+    pq.write_table(
+        pa.table({
+            "id": pa.array([1, 2, 3, 4, 5], pa.int64()),
+            "user_id": pa.array([1, None, 3, None, None], pa.int64()),
+            "event_type": pa.array(["a", None, "b", "c", None]),
+            "value": pa.array([1.0, float("nan"), None, 2.0, 3.0]),
+            "props": pa.array([None] * 5, pa.string()),
+        }),
+        path,
+    )
+    got = null_counts(spark.read.parquet(path))
+    cols = ["id", "user_id", "event_type", "value", "props"]
+    row = duckdb.connect().execute(
+        "SELECT " + ", ".join(f"count(*) - count({c})" for c in cols)
+        + f" FROM read_parquet('{path}')"
+    ).fetchone()
+    want = dict(zip(cols, row))
+    assert want == {
+        "id": 0, "user_id": 3, "event_type": 2, "value": 1, "props": 5
+    }
+    assert got == want

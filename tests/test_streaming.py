@@ -1864,6 +1864,199 @@ def test_last_touch_fold_anchor_never_regresses():
     assert st == (200, 3, "click", 100, 1)
 
 
+def _fold_pdf(rows):
+    """One Arrow chunk of (ts_us, event_id, event_type) rows as the
+    GroupState handler hands it to a fold."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "ts": pd.to_datetime([r[0] for r in rows], unit="us"),
+            "event_id": [r[1] for r in rows],
+            "event_type": [r[2] for r in rows],
+        }
+    )
+
+
+def test_transition_fold_pairs_null_types_like_q89():
+    """q89 pairs each event with its lead() and keeps the pairs whose
+    to_type IS NOT NULL: for A, NULL, B it counts (NULL, B) and drops
+    (A, NULL). The fold must do the same, also when the NULL-typed
+    event is the state carried across a batch boundary."""
+    from data_pipeline_and_visualization_dashboard_spark.streaming import (
+        _transition_fold,
+    )
+
+    rows, st = _transition_fold(
+        7, [_fold_pdf([(100, 1, "A"), (200, 2, None)])], -1, -1, None
+    )
+    assert rows == [] and st == (200, 2, None)
+    rows, st = _transition_fold(7, [_fold_pdf([(300, 3, "B")])], *st)
+    assert rows == [(7, None, "B")] and st == (300, 3, "B")
+    # a first event never pairs, whatever its type
+    rows, st = _transition_fold(8, [_fold_pdf([(5, 1, "A")])], -1, -1, None)
+    assert rows == [] and st == (5, 1, "A")
+
+
+def test_session_fold_min_start_and_gap_close():
+    """Spark-free pin of the session fold: a late in-gap event in a
+    later batch moves the open session's start back (min fold), and a
+    gap > SESSION_GAP_US inside one batch, split over two unsorted
+    chunks, closes the session and opens the next."""
+    from data_pipeline_and_visualization_dashboard_spark.streaming import (
+        SESSION_GAP_US,
+        _session_fold,
+    )
+
+    minute = 60 * 1_000_000
+    t0 = 1_700_000_000 * 1_000_000
+    rows, st = _session_fold(
+        7, [_fold_pdf([(t0, 1, "a"), (t0 + 5 * minute, 2, "a")])], -1, -1, 0
+    )
+    assert rows == [] and st == (t0, t0 + 5 * minute, 2)
+    rows, st = _session_fold(7, [_fold_pdf([(t0 - 2 * minute, 3, "a")])], *st)
+    assert rows == [] and st == (t0 - 2 * minute, t0 + 5 * minute, 3)
+    t_in = t0 + 5 * minute + SESSION_GAP_US  # exactly one gap: in-gap
+    t_new = t_in + SESSION_GAP_US + 1
+    rows, st = _session_fold(
+        7, [_fold_pdf([(t_new, 5, "a")]), _fold_pdf([(t_in, 4, "a")])], *st
+    )
+    assert rows == [(7, t0 - 2 * minute, t_in, 4)]
+    assert st == (t_new, t_new, 1)
+
+
+def test_per_user_handler_state_protocol():
+    """The one GroupState handler, driven with a fake state: it stores
+    the fold's new state, arms the timeout at last event + horizon
+    (never at or below the watermark), emits timestamp columns as
+    datetimes, and on timeout removes the state and emits the
+    family's flush rows (the open session; nothing for transitions)."""
+    import functools
+
+    import pandas as pd
+
+    from data_pipeline_and_visualization_dashboard_spark import streaming as s
+
+    class FakeState:
+        def __init__(self, value=None, timed_out=False, watermark_ms=0):
+            self.value, self.hasTimedOut = value, timed_out
+            self.watermark_ms, self.deadline = watermark_ms, None
+
+        exists = property(lambda self: self.value is not None)
+        get = property(lambda self: self.value)
+
+        def update(self, value):
+            self.value = value
+
+        def remove(self):
+            self.value = None
+
+        def setTimeoutTimestamp(self, ms):
+            self.deadline = ms
+
+        def getCurrentWatermarkMs(self):
+            return self.watermark_ms
+
+    def handle(family, horizon_us, state, rows):
+        fields = [f.split() for f in family.out_schema.split(",")]
+        h = functools.partial(
+            s._per_user_handler, family=family, horizon_us=horizon_us,
+            cols=[name for name, _ in fields],
+            ts_cols=[name for name, kind in fields if kind == "timestamp"],
+        )
+        return list(h((7,), iter([_fold_pdf(rows)] if rows else []), state))
+
+    gap_ms = s.SESSION_GAP_US // 1000
+    st = FakeState()
+    rows = [(3_000_123, 1, "a")]
+    assert handle(s._SESSIONS, s.SESSION_GAP_US, st, rows) == []
+    assert st.value == (3_000_123, 3_000_123, 1)
+    assert st.deadline == 3_000_123 // 1000 + gap_ms + 1
+    st = FakeState(st.value, watermark_ms=10 * gap_ms)
+    handle(s._SESSIONS, s.SESSION_GAP_US, st, [(3_000_200, 2, "a")])
+    assert st.deadline == 10 * gap_ms + 1
+    st = FakeState(st.value, timed_out=True)
+    (out,) = handle(s._SESSIONS, s.SESSION_GAP_US, st, [])
+    assert st.value is None
+    assert out.to_dict("records") == [{
+        "user_id": 7,
+        "session_start": pd.Timestamp(3_000_123, unit="us"),
+        "session_end": pd.Timestamp(3_000_200, unit="us"),
+        "n_events": 2,
+    }]
+    st = FakeState((5, 1, "A"), timed_out=True)
+    assert handle(s._TRANSITIONS, s.TRANSITION_IDLE_US, st, []) == []
+    assert st.value is None
+    st = FakeState()
+    (out,) = handle(s._TRANSITIONS, None, st, [(5, 1, "A"), (6, 2, "B")])
+    assert out.to_dict("records") == [
+        {"user_id": 7, "from_type": "A", "to_type": "B"}
+    ]
+    assert st.value == (6, 2, "B") and st.deadline is None
+
+
+def test_transition_stream_null_types_match_q89(spark, tmp_path):
+    """Batch ≡ stream on NULL event types: a crafted two-file events
+    table where NULL-typed events sit inside and at the end of a
+    micro-batch. The stream's pair counts must equal q89's, which
+    count (NULL, x) and drop (x, NULL)."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_and_visualization_dashboard_spark.queries_ext import (
+        q89_session_transitions,
+    )
+
+    minute = 60 * 1_000_000
+    t0 = 1_700_000_000 * 1_000_000
+    waves = [
+        # (minute offset, user_id, event_type)
+        [(0, 1, "view"), (1, 1, None), (0, 2, None), (1, 2, "click"),
+         (2, 2, None), (0, 3, "view"), (1, 3, "click")],
+        [(60, 1, "purchase"), (60, 2, None), (61, 2, "view"),
+         (60, 3, None), (61, 3, None), (62, 3, "view")],
+    ]
+    ev_dir = tmp_path / "sf" / "events.parquet"
+    os.makedirs(ev_dir)
+    eid = 0
+    for i, wave in enumerate(waves):
+        n = len(wave)
+        table = pa.table({
+            "event_id": pa.array(range(eid, eid + n), pa.int64()),
+            "ts": pa.array([t0 + m * minute for m, _, _ in wave],
+                           pa.timestamp("us")),
+            "user_id": pa.array([u for _, u, _ in wave], pa.int64()),
+            "event_type": pa.array([t for _, _, t in wave], pa.string()),
+            "value": pa.array([1.0] * n, pa.float64()),
+            "props": pa.array(["{}"] * n, pa.string()),
+        })
+        eid += n
+        path = str(ev_dir / f"part-{i}.parquet")
+        pq.write_table(table, path)
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    pairs = streaming.run_transitions_to_completion(
+        spark, str(ev_dir), query_name="transitions_null_types"
+    )
+    got = {
+        (r.from_type, r.to_type): r.n
+        for r in pairs.groupBy("from_type", "to_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    want = {
+        (r.from_type, r.to_type): r.n
+        for r in q89_session_transitions(spark, str(tmp_path / "sf")).collect()
+    }
+    assert want == {
+        (None, "purchase"): 1, (None, "click"): 1, (None, "view"): 2,
+        ("view", "click"): 1,
+    }
+    assert got == want
+
+
 def test_transition_stream_survives_restart(spark, tmp_path):
     """applyInPandasWithState recovery: stop the transition stream
     after the first batches, restart on the same checkpoint with more
@@ -2801,12 +2994,14 @@ def test_session_watermark_beyond_gap_rejected(spark):
     # week/month/year are Spark-valid units too (ADVICE r11 #3) —
     # any count >= 1 of them exceeds the 30-min gap.
     for bad in ("31 minutes", "1 hour", "2 days", "1801 seconds",
-                "1 week", "1 month", "1 year"):
+                "1 week", "1 month", "1 year",
+                "1 hour 30 minutes", "interval 2 hours"):
         with pytest.raises(ValueError, match="exceeds the session gap"):
             streaming.sessionize_stream(ev, watermark=bad)
         with pytest.raises(ValueError, match="exceeds the session gap"):
             streaming.sessionize_stream_timeout(ev, watermark=bad)
-    for ok in ("30 minutes", "10 minutes", "1800 seconds"):
+    for ok in ("30 minutes", "10 minutes", "1800 seconds",
+               "20 minutes 30 seconds", "interval 30 minutes"):
         streaming.sessionize_stream(ev, watermark=ok)  # must not raise
 
 
