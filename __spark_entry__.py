@@ -61,7 +61,7 @@ def entry(spark: SparkSession) -> DataFrame:
 # 31st-34th r12-cohort entries, exactly as the r16 comment queued
 # them) — then the first 30 of the r13-latest cohort in
 # CORRECTNESS_r13 order.  No new entries this round (optimization
-# round: the registry is frozen at 219), so no end-displacements.
+# round: the registry is frozen at 215), so no end-displacements.
 # Engine-change re-verify note: every r17 change is proven
 # bit-identical (k-means M-step drift 0.0, BPE merge table equal,
 # literal parse round-trip exact — OPTIMIZATION_r17.md) and the full

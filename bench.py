@@ -37,7 +37,7 @@ def family(name: str) -> str:
             "text": "text", "media": "media"}.get(prefix, "other")
 
 # HEADLINE vs registry — the exclusion policy (VERDICT r6 next #7).
-# The registry holds 216 entries; HEADLINE benches 137.  The 79
+# The registry holds 215 entries; HEADLINE benches 136.  The 79
 # excluded entries fall into six families, each excluded for a reason,
 # not forgotten:
 #   1. display-grain chart twins / plan-shape variants of benched
@@ -527,7 +527,6 @@ HEADLINE = [
     "q60_bucketed_join",  # pre-bucketed fact-fact join (zero exchange)
     "q61_profile_events",  # one-pass dataset profile (expand + stack)
     "q61_profile_events_approx",  # HLL profile mode (constant agg state)
-    "q61_profile_events_approx_xxhash",  # production hash family twin
     "q62_skew_stats",  # heavy-hitter shuffle-key diagnostics
     "q66_late_supplier_blame",  # EXISTS/NOT-EXISTS double self-join
     "q69_concurrent_sessions",  # sweep-line interval concurrency
@@ -571,14 +570,12 @@ HEADLINE = [
     # LLM-data extras
     "dedup_exact_groups",
     "dedup_minhash_pairs",
-    "dedup_minhash_pairs_xxhash",  # production hash family (headline)
     "dedup_incremental_pairs",  # delta-vs-corpus (per-batch ingest cost)
     "dedup_incremental_exact",  # delta-vs-corpus exact tier (hash join)
     "dedup_neardup_groups",  # iterative connected components
     "dedup_neardup_groups_lsss",  # web-scale large-star/small-star CC
     "dedup_canonical_pick",  # best-vs-first keeper policy, priced
     "corpus_funnel",  # end-to-end: quality gate -> exact -> near-dup
-    "corpus_funnel_xxhash",  # same funnel on the production hash family
     "corpus_shard_manifest",  # survivors -> shard manifest (funnel + agg)
     "corpus_data_card",  # per-(source, lang) release accounting
     "corpus_release_diff_card",  # slice-grain composition drift
@@ -607,11 +604,9 @@ HEADLINE = [
     # sim_ivfpq_topk re-train per call, which would misstate both)
     "sim_ivf_topk_pretrained",
     "sim_ivfpq_topk_pretrained",
-    # isolated MinHash base-hash stage: md5 (oracle family) vs native
-    # xxhash64 (production family) priced head-to-head without the LSH
-    # join cost that drowned the delta at funnel grain
+    # isolated MinHash base-hash stage: prices the md5 base hash
+    # without the LSH join cost that drowns it at funnel grain
     "dedup_hash_stage_md5",
-    "dedup_hash_stage_xxhash",
     "sketch_countmin",  # deterministic frequency sketch
     "sketch_hll_estimate",  # deterministic cardinality sketch
     "sketch_ams_f2",  # tug-of-war second-moment (join-size) sketch

@@ -45,18 +45,23 @@ from .derive import derive_event_columns
 from .io import cache_materialized, read_table
 
 
-def _file_listing(path: str) -> tuple:
-    """(path, size, mtime_ns) of every file at or under `path`: a
-    rewrite of the input changes it, so it keys the cached frame."""
-    if os.path.isfile(path):
-        paths = [path]
-    else:
-        paths = sorted(
-            os.path.join(d, f) for d, _, files in os.walk(path)
-            for f in files
+def _file_listing(spark: SparkSession, path: str) -> tuple:
+    """(path, size, mtime_ms) of every file at or under `path`, listed
+    through the session's Hadoop FileSystem so URI inputs (file://,
+    s3a://, hdfs://) are seen as Spark reads them: a rewrite of the
+    input changes it, so it keys the cached frame."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return ()
+    files = fs.listFiles(jpath, True)
+    listing = []
+    while files.hasNext():
+        st = files.next()
+        listing.append(
+            (st.getPath().toString(), st.getLen(), st.getModificationTime())
         )
-    stats = [(p, os.stat(p)) for p in paths]
-    return tuple((p, st.st_size, st.st_mtime_ns) for p, st in stats)
+    return tuple(sorted(listing))
 
 
 @dataclass
@@ -71,7 +76,9 @@ class DashboardSession:
     _listing: tuple = field(default=(), repr=False)
 
     def base(self) -> DataFrame:
-        listing = _file_listing(os.path.join(self.sf_dir, "events.parquet"))
+        listing = _file_listing(
+            self.spark, os.path.join(self.sf_dir, "events.parquet")
+        )
         if self._base is not None and listing != self._listing:
             self.close()
         if self._base is None:

@@ -248,18 +248,16 @@ def shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shingle_sets_from(_read_docs_parallel(spark, sf_dir))
 
 
-def signatures_from(docs: DataFrame,
-                    hash_impl: str = "md5") -> DataFrame:
+def signatures_from(docs: DataFrame) -> DataFrame:
     """minhash_signatures over an ARBITRARY (doc_id, text) frame —
     see minhash_signatures for the plan-shape notes."""
-    return _signatures_of_shingled(shingle_sets_from(docs), hash_impl)
+    return _signatures_of_shingled(shingle_sets_from(docs))
 
 
-def minhash_signatures(spark: SparkSession, sf_dir: str,
-                       hash_impl: str = "md5") -> DataFrame:
-    """Per-doc MinHash signature + band hashes (hash_impl threads all
-    the way to spark_base_hash — 'xxhash64' is the production family,
-    'md5' the DuckDB-reproducible oracle family).
+def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-doc MinHash signature + band hashes over the md5 base hash
+    (extras.hashing.spark_base_hash), which the DuckDB oracle
+    reproduces bit-for-bit.
 
     Idiomatic Spark shape: explode shingles -> ONE base hash per
     shingle row -> 12 cheap modular hashes folded by min() in a single
@@ -267,16 +265,11 @@ def minhash_signatures(spark: SparkSession, sf_dir: str,
     12 longs per doc per partition — not the shingles). An
     expression-only variant (array_min over 12 transforms) type-checks
     but re-evaluates the tokenizer inside every lambda: 50× slower at
-    sf0.1.
-
-    hash_impl: 'md5' = oracle-parity (DuckDB-reproducible, the
-    correctness gate); 'xxhash64' = production path, several times
-    cheaper, no oracle (see extras.hashing)."""
-    return _signatures_of_shingled(shingle_sets(spark, sf_dir), hash_impl)
+    sf0.1."""
+    return _signatures_of_shingled(shingle_sets(spark, sf_dir))
 
 
-def _signatures_of_shingled(shingled: DataFrame,
-                            hash_impl: str = "md5") -> DataFrame:
+def _signatures_of_shingled(shingled: DataFrame) -> DataFrame:
     hashed = shingled.select(
         # explode_outer, NOT explode: see _read_docs_parallel — the
         # inner form's inferred non-empty filter drags the whole
@@ -284,7 +277,7 @@ def _signatures_of_shingled(shingled: DataFrame,
         # re-evaluated). shingles is never null/empty (text filtered
         # non-null), so outer ≡ inner.
         "doc_id", F.explode_outer("shingles").alias("s")
-    ).selectExpr("doc_id", f"{spark_base_hash('s', hash_impl)} AS h")
+    ).selectExpr("doc_id", f"{spark_base_hash('s')} AS h")
     sigs = hashed.groupBy("doc_id").agg(
         *[
             F.min(F.expr(minhash_term(j, "h"))).alias(f"sig_{j}")
@@ -343,8 +336,7 @@ def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     )
 
 
-def dedup_minhash_pairs(spark: SparkSession, sf_dir: str,
-                        hash_impl: str = "md5") -> DataFrame:
+def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs + verification.
 
     signatures -> explode band hashes -> self-join per (band, hash)
@@ -354,17 +346,6 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str,
     Shingle arrays are joined onto CANDIDATE PAIRS only — the full
     corpus never shuffles its shingles, just 12 longs + 4 band hashes
     per doc.
-
-    hash_impl='md5' (default) is the oracle-parity family the driver's
-    DuckDB gate verifies; hash_impl='xxhash64' is the PRODUCTION
-    family — ~5.5x cheaper per hash CALL (measured; see
-    extras.hashing.spark_base_hash), which at pipeline grain buys ~10%
-    because tokenize+explode dominate (dedup_hash_stage_* benches the
-    stage in isolation).
-    Candidate sets differ only where the random hash families disagree
-    on a band collision; the exact-Jaccard verification column is
-    hash-independent, so downstream thresholding behaves identically
-    (property-tested in tests/test_extras.py).
 
     Cache discipline at 100 TB: only the SIGNATURES are cached (12
     longs + 4 band strings per doc — lean); shingle arrays are
@@ -376,7 +357,7 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str,
     scheduling overhead on a 1.6 MB corpus, not plan work), so the
     lean-cache layout wins on memory at scale with no local penalty.
     """
-    sigs = minhash_signatures(spark, sf_dir, hash_impl).cache()
+    sigs = minhash_signatures(spark, sf_dir).cache()
     sigs.count()  # materialize BEFORE fan-out: the signature subtree is
     # referenced 4× below; without this, concurrent subtrees race the
     # cache and each recomputes the hash pass
@@ -413,8 +394,7 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str,
     )
 
 
-def dedup_containment_est(spark: SparkSession, sf_dir: str,
-                          hash_impl: str = "md5") -> DataFrame:
+def dedup_containment_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SKETCH-PATH containment: estimate the directed containment of
     every LSH candidate pair from the MinHash signatures the near-dup
     index already stores — the scale path that containment_topk's
@@ -433,7 +413,7 @@ def dedup_containment_est(spark: SparkSession, sf_dir: str,
     6dp-rounded outputs), so the estimator itself is oracle-checked,
     and its accuracy against exact containment is pinned in
     tests/test_extras.py."""
-    sigs = minhash_signatures(spark, sf_dir, hash_impl).cache()
+    sigs = minhash_signatures(spark, sf_dir).cache()
     sigs.count()  # materialize before the 3-way fan-out (see
     # dedup_minhash_pairs)
     pairs = _lsh_candidate_pairs(sigs)
@@ -523,8 +503,7 @@ def _duck_containment_est_sql() -> str:
     """
 
 
-def dedup_incremental_pairs(spark: SparkSession, sf_dir: str,
-                            hash_impl: str = "md5") -> DataFrame:
+def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL near-dup: verify only the pairs that involve a
     newly-ingested batch (here: doc_id % 10 == 0 stands in for the
     delta), against the full corpus — the production shape for
@@ -543,7 +522,7 @@ def dedup_incremental_pairs(spark: SparkSession, sf_dir: str,
     exactly dedup_minhash_pairs restricted to delta-touching pairs
     (the oracle twin IS that restriction, so the equivalence is
     hash-checked, and pytest asserts it against the full pipeline)."""
-    sigs = minhash_signatures(spark, sf_dir, hash_impl).cache()
+    sigs = minhash_signatures(spark, sf_dir).cache()
     sigs.count()  # materialize before fan-out (see dedup_minhash_pairs)
     is_delta = F.col("doc_id") % 10 == 0
     band_cols = ", ".join(f"{b}, band_{b}" for b in range(BANDS))
@@ -605,8 +584,7 @@ def dedup_incremental_pairs(spark: SparkSession, sf_dir: str,
 NEARDUP_JACCARD = 0.5
 
 
-def _verified_pairs(spark: SparkSession, sf_dir: str,
-                    hash_impl: str = "md5") -> tuple[DataFrame, int]:
+def _verified_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """Verified near-dup edge list (doc_id_a, doc_id_b): LSH candidates
     whose exact shingle Jaccard clears NEARDUP_JACCARD. Shared front end
     of both connected-components variants; returns the cached frame plus
@@ -616,7 +594,7 @@ def _verified_pairs(spark: SparkSession, sf_dir: str,
     # shingle Jaccard — the est_jaccard signature-agreement joins of the
     # full dedup_minhash_pairs output (2 of its 4 enrichment joins and
     # its terminal sort) are dead weight here, so skip them
-    sigs = minhash_signatures(spark, sf_dir, hash_impl).cache()
+    sigs = minhash_signatures(spark, sf_dir).cache()
     sigs.count()  # materialize before fan-out (see dedup_minhash_pairs)
     cand = _lsh_candidate_pairs(sigs)
     sh = shingle_sets(spark, sf_dir).select(
@@ -651,8 +629,7 @@ def _verified_pairs(spark: SparkSession, sf_dir: str,
     return pairs, n_pairs
 
 
-def dedup_neardup_groups(spark: SparkSession, sf_dir: str,
-                         hash_impl: str = "md5") -> DataFrame:
+def dedup_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup GROUPS: connected components over the verified LSH pair
     graph — the step that turns pairwise matches into keep/drop
     decisions (keeper = min doc_id per component, like dedup_exact_*).
@@ -675,7 +652,7 @@ def dedup_neardup_groups(spark: SparkSession, sf_dir: str,
 
     Output: (doc_id, group_id) for every doc in the pair graph
     (singletons carry no dedup decision and are omitted)."""
-    pairs, n_pairs = _verified_pairs(spark, sf_dir, hash_impl)
+    pairs, n_pairs = _verified_pairs(spark, sf_dir)
     pairs = pairs.drop("jaccard")  # CC needs only the edge list
 
     # Loop hygiene — three fixes that took the sf0.1 loop 3.0s -> 0.8s
@@ -762,8 +739,7 @@ def dedup_neardup_groups(spark: SparkSession, sf_dir: str,
     )  # no terminal sort: O(n) output, order-insensitive compare
 
 
-def dedup_neardup_groups_lsss(spark: SparkSession, sf_dir: str,
-                              hash_impl: str = "md5") -> DataFrame:
+def dedup_neardup_groups_lsss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Web-scale connected components: alternating LARGE-STAR /
     SMALL-STAR (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) over the same verified LSH pair graph as
@@ -808,7 +784,7 @@ def dedup_neardup_groups_lsss(spark: SparkSession, sf_dir: str,
     pick this when component diameter is unbounded (web-crawl chains),
     where min-label's round count is the diameter and this stays
     O(log² n)."""
-    pairs, n_pairs = _verified_pairs(spark, sf_dir, hash_impl)
+    pairs, n_pairs = _verified_pairs(spark, sf_dir)
     pairs = pairs.drop("jaccard")  # CC needs only the edge list
     if n_pairs == 0:
         return pairs.selectExpr("doc_id_a AS doc_id",
@@ -1005,21 +981,19 @@ SIMHASH_BANDS = 4  # byte bands: hamming <= SIMHASH_BANDS-1 guarantees a
 HAMMING_MAX = SIMHASH_BANDS - 1  # shared band (pigeonhole)
 
 
-def simhash_fingerprints(spark: SparkSession, sf_dir: str,
-                         hash_impl: str = "md5") -> DataFrame:
+def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per doc: explode tokens -> one base hash per
     token row -> 32 signed bit-sums in ONE grouped aggregation -> pack
     bits. Same explode->agg shape as MinHash (map-side partial agg, so
     the shuffle carries 32 ints per doc per partition). Order-invariant,
-    multiplicity-sensitive. hash_impl as in minhash_signatures:
-    'md5' = oracle family, 'xxhash64' = production family."""
+    multiplicity-sensitive. Base hash as in minhash_signatures."""
     docs = _read_docs_parallel(spark, sf_dir)
     toks = docs.selectExpr(
         # explode_outer: same InferFiltersFromGenerate trap as minhash
         # (see _read_docs_parallel); split() of non-null text is never
         # null/empty, so outer ≡ inner.
         "doc_id", "explode_outer(split(lower(trim(text)), '\\\\s+')) AS t"
-    ).selectExpr("doc_id", f"{spark_base_hash('t', hash_impl)} AS h")
+    ).selectExpr("doc_id", f"{spark_base_hash('t')} AS h")
     bit_sums = toks.groupBy("doc_id").agg(
         *[
             F.expr(
@@ -1040,13 +1014,12 @@ def q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_fingerprints(spark, sf_dir)  # no terminal sort: O(n) output, order-insensitive compare
 
 
-def simhash_pairs(spark: SparkSession, sf_dir: str,
-                  hash_impl: str = "md5") -> DataFrame:
+def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs with hamming(fp_a, fp_b) <= HAMMING_MAX via byte
     banding: docs sharing any of the 4 fingerprint bytes are candidates
     (pigeonhole: <=3 differing bits cannot touch all 4 bands), verified
     by exact popcount. No n² stage at any scale."""
-    fps = simhash_fingerprints(spark, sf_dir, hash_impl).cache()
+    fps = simhash_fingerprints(spark, sf_dir).cache()
     fps.count()  # materialize before the self-join references it twice
     bands = fps.selectExpr(
         "doc_id",
@@ -1460,8 +1433,7 @@ _DUCK_CONTAMINATION_SQL = f"""
 # end-to-end corpus curation funnel
 # ----------------------------------------------------------------------
 
-def _funnel_flags(spark: SparkSession, sf_dir: str,
-                  hash_impl: str = "md5") -> DataFrame:
+def _funnel_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doc-grain stage flags (kept / pe / pn) shared by corpus_funnel
     (accounting) and corpus_survivors (output ids). The flags frame is
     cached: it is consumed twice (keeper derivation + final), and
@@ -1476,7 +1448,7 @@ def _funnel_flags(spark: SparkSession, sf_dir: str,
                               "doc_id")
     w = Window.partitionBy("h").orderBy("doc_id")
     exact_rank = kept_hashed.withColumn("rn", F.row_number().over(w))
-    groups = dedup_neardup_groups(spark, sf_dir, hash_impl)
+    groups = dedup_neardup_groups(spark, sf_dir)
     flags = (
         qv.join(exact_rank.select("doc_id", "rn"), "doc_id", "left")
         .join(groups, "doc_id", "left")
@@ -1498,13 +1470,12 @@ def _funnel_flags(spark: SparkSession, sf_dir: str,
     )
 
 
-def corpus_survivors(spark: SparkSession, sf_dir: str,
-                     hash_impl: str = "md5") -> DataFrame:
+def corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The cleaned corpus itself: doc_ids that pass every funnel stage
     (what a user writes back out as the training corpus — join this on
     documents to materialize surviving rows)."""
     return (
-        _funnel_flags(spark, sf_dir, hash_impl)
+        _funnel_flags(spark, sf_dir)
         .filter(F.col("pn"))
         .select("doc_id")
     )  # no terminal sort: O(n) output, order-insensitive compare
@@ -1545,11 +1516,16 @@ def _corpus_key(sf_dir: str) -> str:
     return f"{os.path.basename(ap)}-{digest}"
 
 
+# Last field of an artifact generation name. md5 is the only hash
+# family; the field is kept so existing generations keep their names
+# and are read back, not rebuilt.
+_GENERATION_SUFFIX = "md5"
+
+
 def _materialize_corpus_artifact(spark: SparkSession, sf_dir: str,
-                                 hash_impl: str, kind: str,
-                                 build) -> DataFrame:
+                                 kind: str, build) -> DataFrame:
     """Shared once-per-corpus artifact materializer: build() runs ONCE
-    per (corpus path, documents mtime, hash family) and lands as
+    per (corpus path, documents mtime) and lands as
     parquet under spark-warehouse/{kind}/{gen}/data.parquet; later
     calls are a plain parquet scan (WITH size stats, so downstream
     doc-grain joins can broadcast a small artifact instead of
@@ -1557,14 +1533,16 @@ def _materialize_corpus_artifact(spark: SparkSession, sf_dir: str,
     cluster_table (near-dup components, r15) and survivors_table
     (curation survivors, r16).
 
-    Generation name = {corpus_key}_{mtime_ns}_{hash_impl} where
+    Generation name = {corpus_key}_{mtime_ns}_md5 where
     corpus_key embeds a path digest (_corpus_key).  Stale-generation
     eviction parses the name EXACTLY — rsplit from the right, since
-    mtime is all digits and the family has no underscore — instead of
+    mtime is all digits and the suffix has no underscore — instead of
     the r15 prefix test, which could sweep generations of any corpus
-    whose key merely started with ours (ADVICE r15 #1).  Legacy r15
-    generations keyed by bare basename are evicted too (one-time
-    migration; they can never be read back under the new keying)."""
+    whose key merely started with ours (ADVICE r15 #1).  Every other
+    generation of this corpus is stale, whatever its suffix (so
+    generations of the retired xxhash64 family go too), and so are
+    legacy r15 generations keyed by bare basename (they can never be
+    read back under the new keying)."""
     import os
     import shutil
 
@@ -1577,15 +1555,13 @@ def _materialize_corpus_artifact(spark: SparkSession, sf_dir: str,
     )
     ckey = _corpus_key(sf_dir)
     legacy = os.path.basename(os.path.abspath(os.path.normpath(sf_dir)))
-    gen = f"{ckey}_{_documents_mtime(sf_dir)}_{hash_impl}"
+    gen = f"{ckey}_{_documents_mtime(sf_dir)}_{_GENERATION_SUFFIX}"
     path = os.path.join(root, gen, "data.parquet")
     if not os.path.exists(path):
         if os.path.isdir(root):
             for stale in os.listdir(root):
                 parts = stale.rsplit("_", 2)
-                if (len(parts) == 3
-                        and parts[0] in (ckey, legacy)
-                        and parts[2] == hash_impl):
+                if len(parts) == 3 and parts[0] in (ckey, legacy):
                     shutil.rmtree(
                         os.path.join(root, stale), ignore_errors=True
                     )
@@ -1593,12 +1569,11 @@ def _materialize_corpus_artifact(spark: SparkSession, sf_dir: str,
     return spark.read.parquet(path)
 
 
-def cluster_table(spark: SparkSession, sf_dir: str,
-                  hash_impl: str = "md5") -> DataFrame:
+def cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup component table as a first-class, once-per-corpus
     MATERIALIZED artifact (VERDICT r14 ask #3): run the full
     LSH-verify + label-propagation build ONCE per (corpus path,
-    documents mtime, hash family) and persist the (doc_id, group_id)
+    documents mtime) and persist the (doc_id, group_id)
     frame as parquet under spark-warehouse/cluster_table/ — exactly
     how production treats dedup components (materialized once per
     corpus build, then consumed by every downstream curation policy),
@@ -1615,17 +1590,16 @@ def cluster_table(spark: SparkSession, sf_dir: str,
     the fresh build so the end-to-end funnel cost remains measured.
     Cached ≡ fresh is identity-tested (tests/test_extras.py)."""
     return _materialize_corpus_artifact(
-        spark, sf_dir, hash_impl, "cluster_table",
-        lambda: dedup_neardup_groups(spark, sf_dir, hash_impl),
+        spark, sf_dir, "cluster_table",
+        lambda: dedup_neardup_groups(spark, sf_dir),
     )
 
 
-def survivors_table(spark: SparkSession, sf_dir: str,
-                    hash_impl: str = "md5") -> DataFrame:
+def survivors_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation-survivor set as a once-per-corpus MATERIALIZED
     artifact (VERDICT r15 ask #4): the full funnel (quality gate →
     exact-dup rank → near-dup components) runs ONCE per (corpus path,
-    documents mtime, hash family) and lands as a (doc_id, n_tokens,
+    documents mtime) and lands as a (doc_id, n_tokens,
     doc_hash) parquet — doc_id for membership, plus the two row-local
     per-doc readouts every release artifact re-derives (the
     whitespace token count shared with quality_score's tokenizer, and
@@ -1646,7 +1620,7 @@ def survivors_table(spark: SparkSession, sf_dir: str,
     decided once, then every publishing step (shard layout, manifest,
     data card, packs) consumes the decision instead of re-deciding."""
     def _build() -> DataFrame:
-        surv = corpus_survivors(spark, sf_dir, hash_impl)
+        surv = corpus_survivors(spark, sf_dir)
         docs = read_table(spark, sf_dir, "documents",
                           ["doc_id", "text"])
         return docs.join(surv, "doc_id").select(
@@ -1654,12 +1628,11 @@ def survivors_table(spark: SparkSession, sf_dir: str,
         )
 
     return _materialize_corpus_artifact(
-        spark, sf_dir, hash_impl, "survivors_table", _build
+        spark, sf_dir, "survivors_table", _build
     )
 
 
-def survivor_policy(spark: SparkSession, sf_dir: str,
-                    hash_impl: str = "md5") -> DataFrame:
+def survivor_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware survivor selection: per near-dup component, keep
     the member with the BEST learned quality score (doc_id tiebreak)
     instead of the min-doc_id default — the curation decision real
@@ -1677,7 +1650,7 @@ def survivor_policy(spark: SparkSession, sf_dir: str,
 
     from .text import quality_score
 
-    groups = cluster_table(spark, sf_dir, hash_impl)
+    groups = cluster_table(spark, sf_dir)
     q = quality_score(spark, sf_dir).select("doc_id", "score_mean")
     j = groups.join(q, "doc_id")
     w = Window.partitionBy("group_id").orderBy(
@@ -1721,8 +1694,7 @@ def _duck_survivor_policy_sql() -> str:
     """
 
 
-def canonical_pick(spark: SparkSession, sf_dir: str,
-                   hash_impl: str = "md5") -> DataFrame:
+def canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware canonical selection, PRICED against the chain's
     default (VERDICT r13 ask #3): the dedup funnel keeps the FIRST doc
     per cluster (min doc_id — dedup_exact_docs' "first doc_id per
@@ -1755,7 +1727,7 @@ def canonical_pick(spark: SparkSession, sf_dir: str,
     6dp at output in both."""
     from .text import quality_score
 
-    groups = cluster_table(spark, sf_dir, hash_impl)
+    groups = cluster_table(spark, sf_dir)
     q = quality_score(spark, sf_dir).select("doc_id", "score_mean")
     j = groups.join(q, "doc_id")
     ordkey = F.struct(
@@ -1829,7 +1801,6 @@ N_TRAINING_SHARDS = 16
 
 
 def shard_assignments(spark: SparkSession, sf_dir: str,
-                      hash_impl: str = "md5",
                       n_shards: int = N_TRAINING_SHARDS,
                       curated: bool = False) -> DataFrame:
     """Per-surviving-doc training-shard assignment: (doc_id, shard,
@@ -1864,7 +1835,7 @@ def shard_assignments(spark: SparkSession, sf_dir: str,
         docs = read_table(spark, sf_dir, "documents",
                           ["doc_id", "text"])
         return docs.select("doc_id", *_shard_proj(n_shards), "text")
-    art = survivors_table(spark, sf_dir, hash_impl)
+    art = survivors_table(spark, sf_dir)
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"])
     return docs.join(art, "doc_id").select(
         "doc_id", _shard_expr(n_shards), "n_tokens", "doc_hash", "text"
@@ -1935,7 +1906,6 @@ def shard_manifest_of(docs: DataFrame,
 
 
 def corpus_shard_manifest(spark: SparkSession, sf_dir: str,
-                          hash_impl: str = "md5",
                           n_shards: int = N_TRAINING_SHARDS,
                           ) -> DataFrame:
     """Per-shard manifest of the curated training corpus: shard →
@@ -1965,7 +1935,7 @@ def corpus_shard_manifest(spark: SparkSession, sf_dir: str,
     artifact build end-to-end.  The file-layout half lives in
     io.write_training_shards (same assignment, partitioned write),
     which recomputes its manifest from the files it just wrote."""
-    art = survivors_table(spark, sf_dir, hash_impl)
+    art = survivors_table(spark, sf_dir)
     return _manifest_agg(
         art.select(_shard_expr(n_shards), "n_tokens", "doc_hash")
     )
@@ -1988,8 +1958,7 @@ def _duck_shard_manifest_sql() -> str:
     """
 
 
-def corpus_data_card(spark: SparkSession, sf_dir: str,
-                     hash_impl: str = "md5") -> DataFrame:
+def corpus_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus DATA CARD — the per-(source, lang) accounting table
     every corpus release publishes (what LLM data papers tabulate as
     "composition"): for each slice, document and token counts, the
@@ -2017,7 +1986,7 @@ def corpus_data_card(spark: SparkSession, sf_dir: str,
     docs = read_table(
         spark, sf_dir, "documents", ["doc_id", "text", "lang", "source"]
     )
-    return data_card_of(docs, cluster_table(spark, sf_dir, hash_impl))
+    return data_card_of(docs, cluster_table(spark, sf_dir))
 
 
 def data_card_of(docs: DataFrame, groups: DataFrame) -> DataFrame:
@@ -2116,7 +2085,6 @@ MIXTURE_TEMPERATURE_ALPHA = 0.3
 
 
 def corpus_mixture_plan(spark: SparkSession, sf_dir: str,
-                        hash_impl: str = "md5",
                         alpha: float = MIXTURE_TEMPERATURE_ALPHA,
                         budget_tokens: float | None = None,
                         ) -> DataFrame:
@@ -2157,7 +2125,7 @@ def corpus_mixture_plan(spark: SparkSession, sf_dir: str,
     output rounds 6dp; target_tokens rounds the UNROUNDED share-times-
     budget product to an integer in both engines (round-half-up on
     positive doubles in Spark and DuckDB alike)."""
-    art = survivors_table(spark, sf_dir, hash_impl).select(
+    art = survivors_table(spark, sf_dir).select(
         "doc_id", "n_tokens"
     )
     meta = read_table(spark, sf_dir, "documents",
@@ -2421,8 +2389,7 @@ def _duck_pair_features_sql() -> str:
     """
 
 
-def corpus_funnel(spark: SparkSession, sf_dir: str,
-                  hash_impl: str = "md5") -> DataFrame:
+def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE END-TO-END LLM-CORPUS STORY in one accounting row: quality
     gate -> exact dedup -> near-dup dedup, each stage applied to the
     previous stage's survivors, with per-stage removal counts (the V5
@@ -2443,7 +2410,7 @@ def corpus_funnel(spark: SparkSession, sf_dir: str,
     adds two hash-key shuffles (md5 rank, component keeper) on top of
     the near-dup pipeline; no stage rescans raw text more than once.
     """
-    return _funnel_flags(spark, sf_dir, hash_impl).agg(
+    return _funnel_flags(spark, sf_dir).agg(
         F.count(F.lit(1)).alias("docs_in"),
         F.sum(F.when(~F.col("kept"), 1).otherwise(0)).alias(
             "removed_quality"
@@ -2736,26 +2703,6 @@ ORACLE_SQL: dict[str, str] = {
     """,
 }
 
-def dedup_minhash_pairs_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION path: same LSH pipeline on the native xxhash64 family
-    (~5.5x cheaper per hash call than md5+conv — measured, see
-    extras.hashing.spark_base_hash; ~10% at pipeline grain). No
-    oracle by design — DuckDB cannot reproduce Spark's xxhash64, so the
-    driver records rows-only; equivalence with the md5 family on
-    high-similarity pairs is property-tested in tests/test_extras.py,
-    and the md5 twin keeps the green hash-checked CORRECTNESS row."""
-    return dedup_minhash_pairs(spark, sf_dir, hash_impl="xxhash64")
-
-
-def corpus_funnel_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION-hash corpus funnel: the full quality->exact->near-dup
-    pipeline on the xxhash64 family (no DuckDB twin, driver records
-    rows-only). The exact-Jaccard verification and every non-LSH stage
-    are hash-independent, so the accounting equals the md5 twin's
-    unless the two families' LSH bands disagree on a true near-dup
-    pair — asserted EQUAL in tests/test_extras.py at both test SFs."""
-    return corpus_funnel(spark, sf_dir, hash_impl="xxhash64")
-
 
 # ----------------------------------------------------------------------
 # Semantic dedup (SemDeDup-shaped): cluster embeddings, then drop
@@ -2979,15 +2926,13 @@ _DUCK_SEMANTIC_SQL = f"""
 """
 
 
-def _hash_stage(spark: SparkSession, sf_dir: str,
-                hash_impl: str) -> DataFrame:
+def dedup_hash_stage_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MinHash BASE-HASH stage in ISOLATION: tokenize -> shingle ->
     one base hash per shingle -> per-doc (count, min, max, sum) of the
-    hash values. No banding, no pairing, no signature family — this is
-    exactly the stage where md5-vs-xxhash64 differ, so benching the two
-    variants side by side prices the hash function itself instead of
-    burying it under LSH joins (VERDICT r2 'What's wrong' #1: at the
-    full-funnel grain the delta was below scheduling noise). The agg
+    hash values. No banding, no pairing, no signature family — this
+    prices the hash function itself instead of burying it under LSH
+    joins (VERDICT r2 'What's wrong' #1: at the full-funnel grain a
+    hash-function change was below scheduling noise). The agg
     folds map-side (4 longs per doc per partition crosses the wire).
     sum stays within BIGINT: base hashes are < 2^31 and per-doc shingle
     counts are document-sized."""
@@ -2995,26 +2940,13 @@ def _hash_stage(spark: SparkSession, sf_dir: str,
     hashed = shingled.select(
         # explode_outer, not explode: see _read_docs_parallel
         "doc_id", F.explode_outer("shingles").alias("s")
-    ).selectExpr("doc_id", f"{spark_base_hash('s', hash_impl)} AS h")
+    ).selectExpr("doc_id", f"{spark_base_hash('s')} AS h")
     return hashed.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_shingles"),
         F.min("h").alias("min_h"),
         F.max("h").alias("max_h"),
         F.sum("h").alias("sum_h"),
     )  # no terminal sort: O(n) output, order-insensitive compare
-
-
-def dedup_hash_stage_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-parity hash stage (DuckDB reproduces md5 bit-for-bit)."""
-    return _hash_stage(spark, sf_dir, "md5")
-
-
-def dedup_hash_stage_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production hash stage on native xxhash64 — rows-only for the
-    driver (no DuckDB twin), benched against the md5 twin to publish
-    the isolated hash-function cost; per-doc shingle counts (the
-    hash-independent column) equal the md5 twin's by construction."""
-    return _hash_stage(spark, sf_dir, "xxhash64")
 
 
 _DUCK_HASH_STAGE_SQL = f"""
@@ -3777,7 +3709,6 @@ QUERIES = {
     "dedup_incremental_exact": dedup_incremental_exact,
     "dedup_minhash_signatures": q_minhash_signatures,
     "dedup_minhash_pairs": dedup_minhash_pairs,
-    "dedup_minhash_pairs_xxhash": dedup_minhash_pairs_xxhash,
     "dedup_incremental_pairs": dedup_incremental_pairs,
     "dedup_neardup_groups": dedup_neardup_groups,
     "dedup_neardup_groups_lsss": dedup_neardup_groups_lsss,
@@ -3790,7 +3721,6 @@ QUERIES = {
     "dedup_embedding_pairs": embedding_neardup_pairs,
     "dedup_embedding_pairs_lsh": embedding_neardup_pairs_lsh,
     "corpus_funnel": corpus_funnel,
-    "corpus_funnel_xxhash": corpus_funnel_xxhash,
     "corpus_survivors": corpus_survivors,
     "corpus_shard_manifest": corpus_shard_manifest,
     "corpus_data_card": corpus_data_card,
@@ -3804,7 +3734,6 @@ QUERIES = {
     "dedup_training_triplets": training_triplets,
     "dedup_pair_features": pair_features,
     "dedup_hash_stage_md5": dedup_hash_stage_md5,
-    "dedup_hash_stage_xxhash": dedup_hash_stage_xxhash,
     "dedup_semantic": dedup_semantic,
     "dedup_semantic_trained": dedup_semantic_trained,
     "dedup_snapshot_diff": dedup_snapshot_diff,

@@ -5,7 +5,10 @@ so the near-dup pipeline can be differentially tested end-to-end. The
 only hash primitive both engines share is md5 over UTF-8 — we derive a
 60-bit integer from its hex prefix (15 nibbles < 2^60, fits BIGINT
 exactly; 16 would overflow sign), then build universal-hash families
-with plain modular arithmetic on top.
+with plain modular arithmetic on top. md5 is the package's one hash
+family: every dedup, curation, shard-layout, streaming and profiling
+path hashes through it, so the DuckDB oracles check the same code the
+runners execute.
 
 Spark expressions are built as SQL strings (F.expr) so the same
 generator also emits the DuckDB oracle fragment — one source of truth
@@ -44,26 +47,10 @@ def duck_h60(expr: str) -> str:
     return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"
 
 
-def spark_base_hash(expr: str, impl: str = "md5") -> str:
-    """Token/shingle base hash in [0, M31).
-
-    impl='md5' (default) is the ORACLE-PARITY path — DuckDB reproduces
-    it bit-for-bit. impl='xxhash64' is the PRODUCTION path: Spark's
-    native 64-bit xxHash is ~5.5x cheaper than md5+conv at the
-    FUNCTION grain (measured: 50M hashes of ~25-byte strings, 1.93s vs
-    0.35s on local[32]) and statistically equivalent for MinHash/
-    SimHash purposes, but has no DuckDB twin, so only
-    correctness-vs-oracle runs need md5. NOTE the stage-grain caveat:
-    in the full shingle pipeline tokenize+explode dominate, so the
-    end-to-end win is ~10% at bench SFs (see dedup_hash_stage_* in
-    bench.py for the isolated stage numbers) — the 5.5x matters when
-    hashing dominates, i.e. short docs / many hash families.
-    `abs(... % M31)` because xxhash64 is signed."""
-    if impl == "md5":
-        return f"({spark_h60(expr)} % {M31})"
-    if impl == "xxhash64":
-        return f"abs(xxhash64({expr}) % {M31})"
-    raise ValueError(f"unknown hash impl: {impl}")
+def spark_base_hash(expr: str) -> str:
+    """Token/shingle base hash in [0, M31), reproduced bit-for-bit by
+    duck_base_hash."""
+    return f"({spark_h60(expr)} % {M31})"
 
 
 def duck_base_hash(expr: str) -> str:

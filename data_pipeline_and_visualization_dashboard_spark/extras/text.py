@@ -2151,8 +2151,7 @@ HASH_DIM = 64  # fixed feature width — the hashing trick's whole point
 # trade; for linear models they act as mild regularization)
 
 
-def hashed_features(spark: SparkSession, sf_dir: str,
-                    hash_impl: str = "md5") -> DataFrame:
+def hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature hashing (the "hashing trick", Weinberger et al. 2009,
     public): fold the bag-of-words into a FIXED HASH_DIM-wide count
     vector per document, bucket = base_hash(token) % HASH_DIM. No
@@ -2173,8 +2172,7 @@ def hashed_features(spark: SparkSession, sf_dir: str,
     64·docs — strictly coarser than the (doc_id, token) grain the
     TF-IDF/vocab/entropy ops already pay — and unlike
     text_vocab_encode there is NO dictionary join at serving time.
-    hash_impl='md5' is the DuckDB-parity path; production swaps
-    xxhash64 (~5.5x cheaper at the hash grain, extras.hashing)."""
+    The md5 base hash (extras.hashing) keeps DuckDB parity."""
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"])
     tok = docs.selectExpr(
         "doc_id",
@@ -2183,7 +2181,7 @@ def hashed_features(spark: SparkSession, sf_dir: str,
     return (
         tok.selectExpr(
             "doc_id",
-            f"CAST({spark_base_hash('t', hash_impl)} % {HASH_DIM} AS INT)"
+            f"CAST({spark_base_hash('t')} % {HASH_DIM} AS INT)"
             " AS bucket",
         )
         .groupBy("doc_id", "bucket")

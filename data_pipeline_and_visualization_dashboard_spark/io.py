@@ -390,7 +390,6 @@ def write_training_shards(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    hash_impl: str = "md5",
     n_shards: int | None = None,
     curated: bool = False,
 ) -> DataFrame:
@@ -436,7 +435,7 @@ def write_training_shards(
 
     if n_shards is None:
         n_shards = N_TRAINING_SHARDS
-    a = shard_assignments(spark, sf_dir, hash_impl, n_shards, curated)
+    a = shard_assignments(spark, sf_dir, n_shards, curated)
     _write_shard_partitions(a, n_shards, out_dir)
     return _manifest_agg(
         spark.read.parquet(out_dir)
@@ -476,7 +475,6 @@ def write_training_shards_incremental(
     spark: SparkSession,
     sf_dir: str,
     out_dir: str,
-    hash_impl: str = "md5",
     n_shards: int | None = None,
     curated: bool = False,
 ) -> DataFrame:
@@ -518,7 +516,7 @@ def write_training_shards_incremental(
 
     if n_shards is None:
         n_shards = N_TRAINING_SHARDS
-    a = shard_assignments(spark, sf_dir, hash_impl, n_shards, curated)
+    a = shard_assignments(spark, sf_dir, n_shards, curated)
     cur_manifest = _manifest_agg(
         a.select("shard", "n_tokens", "doc_hash")
     )

@@ -56,7 +56,9 @@ def run_events_pipeline(
     derived = derived.withColumn("event_date", F.to_date("ts"))
     write_parquet(derived, out_path, partition_by=["event_date"])
     report = dict(obs.get)
-    derived = spark.read.parquet(out_path)
+    # the written schema is derived.schema: reading with it skips
+    # Spark's schema-inference job over the files just written
+    derived = spark.read.schema(derived.schema).parquet(out_path)
 
     derived.createOrReplaceTempView("events_clean")
     return PipelineResult(derived, report, out_path)

@@ -2442,9 +2442,7 @@ _PROFILE_KEY_DUCK = {
 }
 
 
-def _profile_events_hll(
-    spark: SparkSession, sf_dir: str, hash_impl: str = "md5"
-) -> DataFrame:
+def _profile_events_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q61's approx=True body: ONE scan stacks every column into
     (col_name, key, num) rows; nulls ride bucket -1, live keys ride
     their HLL register (bucket = h60 % M, rank = leading-zero count of
@@ -2454,14 +2452,8 @@ def _profile_events_hll(
     profile is one shuffle of constant-size state. The per-column HLL
     readout (alpha·M²/Σ2^-r with linear-counting correction, exactly
     extras.sketches.hll_estimate) then folds 6×257 cells on one
-    reducer.
-
-    hash_impl follows the repo's hash-family contract
-    (extras.hashing.spark_base_hash): 'md5' is the ORACLE-PARITY
-    path; 'xxhash64' is the PRODUCTION path (native 64-bit hash,
-    low-60-bit mask for the same bucket/rest split) — statistically
-    equivalent registers, no DuckDB twin, so its registry entry is
-    rows-only."""
+    reducer. Keys hash through extras.hashing.spark_h60, the md5
+    prefix DuckDB reproduces bit-for-bit (duck_h60)."""
     from .extras.hashing import spark_h60
     from .extras.sketches import HLL_ALPHA, HLL_M, _spark_rank
 
@@ -2478,12 +2470,7 @@ def _profile_events_hll(
         f"stack({len(_PROFILE_COLS)}, {', '.join(parts)}) AS "
         "(col_name, key, num)"
     )
-    if hash_impl == "md5":
-        h = spark_h60("key")
-    elif hash_impl == "xxhash64":
-        h = f"(xxhash64(key) & {(1 << 60) - 1})"
-    else:
-        raise ValueError(f"unknown hash impl: {hash_impl}")
+    h = spark_h60("key")
     hashed = stacked.selectExpr(
         "col_name",
         "num",
@@ -2540,18 +2527,6 @@ def q61_profile_events_approx(
 ) -> DataFrame:
     """Registry wrapper for q61_profile_events(approx=True)."""
     return q61_profile_events(spark, sf_dir, approx=True)
-
-
-def q61_profile_events_approx_xxhash(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """The approx profile on the PRODUCTION hash family (native
-    xxhash64 instead of md5+conv — the per-value hashing is the approx
-    mode's dominant cost at bench SFs, see BENCH_sf1_appendix round4).
-    Rows-only by design: no DuckDB xxhash; register statistics are
-    equivalence-tested against the md5 twin's error envelope in
-    pytest."""
-    return _profile_events_hll(spark, sf_dir, hash_impl="xxhash64")
 
 
 def _duck_profile_approx_sql() -> str:
@@ -6643,7 +6618,6 @@ QUERIES = {
     "q60_bucketed_join": q60_bucketed_join,
     "q61_profile_events": q61_profile_events,
     "q61_profile_events_approx": q61_profile_events_approx,
-    "q61_profile_events_approx_xxhash": q61_profile_events_approx_xxhash,
     "q62_skew_stats": q62_skew_stats,
     "q63_drift_kl": q63_drift_kl,
     "q64_weighted_sample": q64_weighted_sample,

@@ -2616,8 +2616,7 @@ def run_scrub_to_completion(spark: SparkSession, sf_dir: str,
 
 
 def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
-                         pairs_dir: str, checkpoint_dir: str,
-                         hash_impl: str = "md5"):
+                         pairs_dir: str, checkpoint_dir: str):
     """Streaming MinHash/LSH INDEX MAINTENANCE — the ingest-time shape
     of dedup_incremental_pairs, run continuously: each micro-batch of
     new documents (1) computes signatures + band buckets + shingle
@@ -2662,7 +2661,7 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         ss = batch_df.sparkSession
         batch = batch_df.filter(F.col("text").isNotNull())
-        sigs = signatures_from(batch, hash_impl)
+        sigs = signatures_from(batch)
         sh = shingle_sets_from(batch).select(
             "doc_id", F.array_distinct("shingles").alias("sh")
         )

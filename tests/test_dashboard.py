@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import pytest
+
 from data_pipeline_and_visualization_dashboard_spark.dashboard import (
     DashboardSession,
 )
@@ -35,9 +37,12 @@ def test_dashboard_payload_shapes(spark):
         sess.close()
 
 
-def test_dashboard_cache_follows_rewritten_input(spark, tmp_path):
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["path", "uri"])
+def test_dashboard_cache_follows_rewritten_input(spark, tmp_path, scheme):
     """A rewrite of the events input (the ETL re-running) must not be
-    served from the stale cache: the next render sees the new rows."""
+    served from the stale cache: the next render sees the new rows,
+    whether the input is a local path or a URI Spark reads through its
+    Hadoop FileSystem."""
     import os
     import shutil
 
@@ -46,7 +51,7 @@ def test_dashboard_cache_follows_rewritten_input(spark, tmp_path):
     path = os.path.join(tmp_path, "events.parquet")
     shutil.copy(os.path.join(SF_SMOKE, "events.parquet"), path)
     table = pq.read_table(path)
-    sess = DashboardSession(spark, str(tmp_path))
+    sess = DashboardSession(spark, scheme + str(tmp_path))
     try:
         p1 = sess.render_payload()
         assert p1["metrics"]["total_events"][0] == table.num_rows

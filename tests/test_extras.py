@@ -26,49 +26,6 @@ def test_minhash_est_tracks_true_jaccard(spark):
         assert abs(r.est_jaccard - r.jaccard) <= 0.5
 
 
-def test_minhash_xxhash_impl_same_shape(spark):
-    """The production hash path (xxhash64) must produce the same
-    signature SHAPE (doc coverage, value range) as the md5 oracle
-    path — values differ by design."""
-    md5_sigs = dedup.minhash_signatures(spark, SF_SMOKE).collect()
-    xx_sigs = dedup.minhash_signatures(
-        spark, SF_SMOKE, hash_impl="xxhash64"
-    ).collect()
-    assert len(md5_sigs) == len(xx_sigs)
-    from data_pipeline_and_visualization_dashboard_spark.extras.hashing import (
-        P_HASH,
-    )
-
-    for r in xx_sigs[:50]:
-        for j in range(12):
-            assert 0 <= r[f"sig_{j}"] < P_HASH
-
-
-def test_minhash_xxhash_pairs_match_md5_on_near_dups(spark):
-    """Hash-family independence: the exact-Jaccard verification column
-    does not depend on the hash family, so near-identical pairs found
-    by the md5 (oracle) family must also be surfaced by the xxhash64
-    (production) family — P(all 4 bands miss | jaccard j) = (1-j³)⁴,
-    < 2.6e-3 at j=0.8 — and carry bit-identical jaccard values."""
-    md5_pairs = {
-        (r.doc_id_a, r.doc_id_b): r.jaccard
-        for r in dedup.dedup_minhash_pairs(spark, SF_SMOKE).collect()
-    }
-    xx_pairs = {
-        (r.doc_id_a, r.doc_id_b): r.jaccard
-        for r in dedup.dedup_minhash_pairs_xxhash(spark, SF_SMOKE).collect()
-    }
-    assert md5_pairs and xx_pairs
-    high = {p for p, j in md5_pairs.items() if j >= 0.8}
-    assert high, "smoke corpus should contain near-duplicate pairs"
-    for p in high:
-        assert p in xx_pairs, f"xxhash64 family missed near-dup pair {p}"
-        assert abs(xx_pairs[p] - md5_pairs[p]) < 1e-12
-    # exact-jaccard parity on every pair both families surface
-    for p in md5_pairs.keys() & xx_pairs.keys():
-        assert abs(xx_pairs[p] - md5_pairs[p]) < 1e-12
-
-
 def test_exact_dedup_keeps_all_distinct(spark):
     docs = read_table(spark, SF_SMOKE, "documents")
     n_docs = docs.count()
@@ -651,30 +608,27 @@ def test_profile_approx_error_bounds(spark):
     by the canonical hash key, which can only LOWER its count."""
     from data_pipeline_and_visualization_dashboard_spark.queries_ext import (
         q61_profile_events,
-        q61_profile_events_approx_xxhash,
     )
 
     exact = {
         r.col_name: r
         for r in q61_profile_events(spark, SF_SMOKE).collect()
     }
-    variants = {
-        "md5": q61_profile_events(spark, SF_SMOKE, approx=True),
-        "xxhash64": q61_profile_events_approx_xxhash(spark, SF_SMOKE),
+    approx = {
+        r.col_name: r
+        for r in q61_profile_events(spark, SF_SMOKE, approx=True).collect()
     }
     sigma3 = 3 * 1.04 / 256**0.5
-    for impl, df in variants.items():
-        approx = {r.col_name: r for r in df.collect()}
-        assert set(exact) == set(approx)
-        for c, ex in exact.items():
-            ap = approx[c]
-            assert ap.n_nulls == ex.n_nulls, (impl, c)
-            assert ap.min_num == ex.min_num, (impl, c)
-            assert ap.max_num == ex.max_num, (impl, c)
-            true_nd = ex.n_distinct
-            assert abs(ap.n_distinct - true_nd) <= max(
-                2, sigma3 * true_nd
-            ), f"{impl}/{c}: approx {ap.n_distinct} vs exact {true_nd}"
+    assert set(exact) == set(approx)
+    for c, ex in exact.items():
+        ap = approx[c]
+        assert ap.n_nulls == ex.n_nulls, c
+        assert ap.min_num == ex.min_num, c
+        assert ap.max_num == ex.max_num, c
+        true_nd = ex.n_distinct
+        assert abs(ap.n_distinct - true_nd) <= max(
+            2, sigma3 * true_nd
+        ), f"{c}: approx {ap.n_distinct} vs exact {true_nd}"
 
 
 def _reference_bpe(word_freqs, n_merges):
@@ -802,23 +756,6 @@ def test_bpe_compression_curve_properties(spark):
     assert all(a < b for a, b in zip(cpt, cpt[1:]))
 
 
-def test_corpus_funnel_hash_family_invariant(spark):
-    """The funnel accounting must be identical under the md5 (oracle)
-    and xxhash64 (production) hash families: every stage except LSH
-    candidate generation is hash-independent, and the exact-Jaccard
-    verification re-derives the same near-dup pairs as long as the
-    bands surface them — the property that licenses benching the fast
-    family while the md5 twin carries the correctness gate."""
-    from data_pipeline_and_visualization_dashboard_spark.extras.dedup import (
-        corpus_funnel,
-    )
-
-    md5 = corpus_funnel(spark, SF_SMOKE).first().asDict()
-    xx = corpus_funnel(spark, SF_SMOKE, hash_impl="xxhash64").first().asDict()
-    assert md5 == xx
-    assert md5["docs_out"] > 0
-
-
 def test_resize_chains_into_feature_extraction(spark):
     """Resize plumbing: output length honors the stride contract
     (ceil(n/stride) <= target+1), checksums are deterministic across
@@ -913,19 +850,14 @@ def test_pq_codebook_cache_invalidates_on_regenerated_corpus(spark, tmp_path):
         sim._pq_codebook(spark, d)
 
 def test_hash_stage_md5_matches_duck_and_xxhash_counts(spark, duck):
-    """Isolated base-hash stage: the md5 family reproduces in DuckDB
-    value-for-value; the xxhash64 family shares every hash-independent
-    column (per-doc shingle count) with the md5 twin."""
+    """Isolated base-hash stage: the md5 base hash reproduces in DuckDB
+    value-for-value. (The name is kept from when an xxhash64 twin of
+    this stage also existed and was compared here.)"""
     from data_pipeline_and_visualization_dashboard_spark.extras import dedup
 
     s = {tuple(r) for r in dedup.dedup_hash_stage_md5(spark, SF_CORRECT).collect()}
     d = {tuple(r) for r in duck.execute(dedup._DUCK_HASH_STAGE_SQL).fetchall()}
     assert s == d and len(s) > 0
-    x = {
-        (r.doc_id, r.n_shingles)
-        for r in dedup.dedup_hash_stage_xxhash(spark, SF_CORRECT).collect()
-    }
-    assert x == {(a, n) for (a, n, *_rest) in s}
 
 def test_pretrained_ivf_serving_equals_retrained(spark):
     """The cached-index serving paths must return exactly what the

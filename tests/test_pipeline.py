@@ -38,6 +38,24 @@ def test_pipeline_end_to_end(spark, tmp_path):
     assert n == r["rows_kept"]
 
 
+def test_events_pipeline_runs_two_spark_jobs(spark, tmp_path):
+    """One ETL run is two Spark jobs: schema inference over the raw
+    input and the write. The read-back reuses the written schema, so it
+    adds no inference job of its own."""
+    sc = spark.sparkContext
+    group = "test-events-pipeline"
+    sc.setJobGroup(group, "one events pipeline run")
+    try:
+        run_events_pipeline(spark, SF_SMOKE, str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) == 2, f"{len(jobs)} jobs for one pipeline run"
+
+
 def test_observed_accounting_matches_standalone(spark):
     """clean_events_observed must report the same V5 metrics as the
     standalone removal_accounting scan — but collected DURING the job

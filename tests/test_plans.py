@@ -1525,7 +1525,7 @@ CARTESIAN_OK = {
 FACT_FANOUT_OK = {
     # pair/candidate joins — corpus texts rejoined per pair side,
     # plus the signature/candidate build itself:
-    "dedup_minhash_pairs", "dedup_minhash_pairs_xxhash",
+    "dedup_minhash_pairs",
     "dedup_simhash_pairs",
     # (dedup_simhash_hamming_topk is NOT here: its plan reads the
     # documents fingerprint subtree exactly TWICE — once per pair
@@ -1537,7 +1537,7 @@ FACT_FANOUT_OK = {
     # staged curation funnels — one pass per quality/exact/near stage
     # (corpus_shard_manifest left r16: it reads the survivors_table
     # artifact now, zero fact scans in its own plan):
-    "corpus_funnel", "corpus_funnel_xxhash", "corpus_survivors",
+    "corpus_funnel", "corpus_survivors",
     "corpus_forget_impact",
     # ANN index + query + (for guards) brute-force oracle over the
     # same embeddings; MMR re-ranks against the candidate pool:
@@ -1577,7 +1577,7 @@ SELF_CACHE_OK = {
     # minhash signature frame cached, reused by band-bucket join +
     # pair verification (each consumer would otherwise recompute the
     # full shingle->minhash pipeline):
-    "dedup_minhash_pairs", "dedup_minhash_pairs_xxhash",
+    "dedup_minhash_pairs",
     "dedup_incremental_pairs", "dedup_containment_est",
     "dedup_pair_features", "dedup_training_triplets",
     "dedup_split_leakage",
@@ -1587,7 +1587,7 @@ SELF_CACHE_OK = {
     # branches (and the LSH pairs frame inside is count()-pinned);
     # corpus_shard_manifest left r16 — the artifact scan caches
     # nothing:
-    "corpus_funnel", "corpus_funnel_xxhash", "corpus_survivors",
+    "corpus_funnel", "corpus_survivors",
     # normalized edge matrix cached: reused by every unrolled
     # PageRank iteration:
     "q51_nation_pagerank",
