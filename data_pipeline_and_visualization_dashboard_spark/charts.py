@@ -15,40 +15,50 @@ scope; the engine owns the small frames:
 The sidebar filter replicates the reference exactly, including two
 documented traps (SURVEY §7.4 #3/#4): the date upper bound is MIDNIGHT
 of the end day (later rows excluded), and unmapped type codes get a
-null label which an IN-filter silently drops. It has one
-implementation, `sidebar_filter`, applied either to raw events after
-`derive_event_columns` (`filtered_events`) or to the dashboard's
-cached derived frame (`CHART_COLUMNS`).
+null label which an IN-filter silently drops. `sidebar_filter` applies
+it in Spark, to raw events after `derive_event_columns`
+(`filtered_events`) or to the dashboard's cached frame; `_cube_mask`
+spells the same predicate on the cube's keys.
 
-All six frames come from ONE grouping-sets aggregate over the filtered
-frame (`chart_aggregate`): grouping sets (user_id), (event_hour), (bin),
-(event_type_label), (event_dow, event_hour) and (), told apart by
-grouping_id() so a null key is never mistaken for a rolled-up row. One
-scan, one Expand, one partial+final hash aggregate; `chart_payload`
-collects it once and splits the rows into the six pandas frames on the
-driver. The per-chart table `CHARTS` (grouping set, columns, order)
-drives both that split and the Spark-side producers (`top_users`, …,
-registry entries q7-q11), which are thin selections of the same
-aggregate.
+The dashboard serves a render in two tiers (dashboard.DashboardSession):
 
-Every collected row is bounded by the chart domains (24 hours, 50
-bins, 5 labels, 7×24 cells, one total) except the (user_id) set, whose
-size is the number of distinct users — unbounded at 100 TB. That set
-is therefore ranked inside the plan, by a window partitioned by
-grouping id, and only its top k rows (plus its non-null key count,
-`n_users`) leave the cluster: the window runs over aggregate output,
-one row per group, never over events, and the driver receives at most
-~260 rows for any data size. The price is that one task sorts the
-whole (user_id) set, one row per user (Spark's sorter spills past its
-memory); the other sets' partitions hold at most a few hundred rows.
+- Tier 1, once per input version: `chart_cube` sums the derived events
+  into cells keyed by (event_date, at_midnight, event_hour, event_dow,
+  event_type_label, bin), each carrying cnt, sum and count of value,
+  and min/max ts, and the dashboard collects them to the driver. The
+  chart domains bound the cube at any row count: at most
+  days × 25 × 6 × 51 cells (24 hours plus the midnight split of hour
+  0, five labels and null, 50 bins and null). So it grows linearly
+  with the date span, and so does the fold of it that each render
+  runs on the driver (dashboard.py gives measured sizes and costs).
+- Tier 2, per render: `collect_user_ranking`, the one Spark aggregate,
+  over the sidebar-filtered cache. The (user_id) set has about as many
+  groups as the data has users, so it stays in the cluster and is
+  ranked in-plan: only its top k rows reach the driver, with `n_users`
+  observed on the way.
+
+`chart_payload` then folds the cube cells that pass the sidebar into
+the metrics tile, avg-by-hour, histogram, donut and heatmap in pandas,
+with no Spark work, and takes the top users from tier 2. Averages and
+totals round like Spark's `round`: HALF_UP on the double's shortest
+decimal. The cube's sums add in another order than a scan does, so
+they equal Spark's and DuckDB's within rounding noise (the oracle
+tolerance is rel 1e-9, abs 2e-6), not to the bit.
+
+The per-chart table `CHARTS` (keys, columns, order, null-key drop)
+drives both that fold and the Spark-side producers (`metrics_summary`,
+`top_users`, …, registry entries q7-q11), which group a filtered frame
+by the chart's keys directly.
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .derive import (
@@ -62,9 +72,9 @@ from .io import read_table
 HIST_LO, HIST_HI, HIST_BIN = 0.0, 500.0, 10.0
 TOP_K = 10
 
-# what the charts read of the derived events, and nothing else
-CHART_COLUMNS = ["ts", "user_id", "value", "event_hour", "event_dow",
-                 "event_type_label"]
+# what a render reads of the cached frame: the sidebar's columns and
+# the user, nothing else
+USER_COLUMNS = ["ts", "user_id", "event_hour", "event_type_label"]
 
 
 def sidebar_filter(
@@ -106,11 +116,11 @@ def filtered_events(
     )
 
 
-# --- one aggregate, six charts ------------------------------------------
+# --- the per-chart table ------------------------------------------------
 
 @dataclass(frozen=True)
 class Chart:
-    keys: tuple[str, ...]  # its grouping set
+    keys: tuple[str, ...]  # what it groups by
     columns: tuple[tuple[str, str], ...]  # (frame column, aggregate column)
     # (aggregate column, ascending); ascending sorts nulls first, and no
     # descending column can be null, as in Spark's default orderings
@@ -149,16 +159,14 @@ CHARTS: dict[str, Chart] = {
         (("event_dow", True), ("event_hour", True))),
 }
 
-_KEYS = ["user_id", "event_hour", "bin", "event_type_label", "event_dow"]
-# zero, not null, on the metrics row of an empty selection
-_COUNTS = ("cnt", "n_users")
 
-
-def _gid(keys: tuple[str, ...]) -> int:
-    """grouping_id() of a grouping set: one bit per key of `_KEYS`,
-    first key highest, set when the key is rolled up."""
-    return sum(1 << (len(_KEYS) - 1 - i)
-               for i, k in enumerate(_KEYS) if k not in keys)
+def _binned(df: DataFrame) -> DataFrame:
+    in_range = (F.col("value") > HIST_LO) & (F.col("value") < HIST_HI)
+    return df.withColumn(
+        "bin",
+        F.when(in_range, F.floor(F.col("value") / F.lit(HIST_BIN)))
+        .cast("int"),
+    )
 
 
 def _spark_order(chart: Chart) -> list[Column]:
@@ -169,96 +177,173 @@ def _spark_order(chart: Chart) -> list[Column]:
             for c, asc in chart.order]
 
 
-def chart_aggregate(df: DataFrame, k: int = TOP_K) -> DataFrame:
-    """Every chart's rows from one grouping-sets aggregate over a
-    filtered frame: a `gid` column names the set, the (user_id) set
-    keeps its top `k` rows and all of its rows carry `n_users`, its
-    count of non-null keys (= countDistinct(user_id))."""
-    in_range = (F.col("value") > HIST_LO) & (F.col("value") < HIST_HI)
-    binned = df.withColumn(
-        "bin",
-        F.when(in_range, F.floor(F.col("value") / F.lit(HIST_BIN)))
-        .cast("int"),
-    )
-    agg = binned.groupingSets(
-        [list(c.keys) for c in CHARTS.values()], *_KEYS
+# --- Spark side: tier 1, tier 2 and the producers -----------------------
+
+def chart_cube(df: DataFrame) -> DataFrame:
+    """Tier 1: a derived-events frame summed into cube cells, one row
+    per (event_date, at_midnight, event_hour, event_dow,
+    event_type_label, bin), with cnt, sum_value, n_value (the count of
+    non-null values), min_ts and max_ts. event_date is the day's
+    midnight, a timestamp, so it reaches pandas as datetime64 and not as
+    Python objects; at_midnight is false for a null ts."""
+    ts, day = F.col("ts"), F.date_trunc("day", "ts")
+    return _binned(df).groupBy(
+        day.alias("event_date"),
+        F.coalesce(ts == day, F.lit(False)).alias("at_midnight"),
+        "event_hour", "event_dow", "event_type_label", "bin",
     ).agg(
-        F.grouping_id().alias("gid"),
         F.count(F.lit(1)).alias("cnt"),
-        # rounded here, not in pandas: the same values as separate
-        # aggregates would give, to the bit
-        F.round(F.avg("value"), 6).alias("avg_value"),
-        F.round(F.sum("value"), 4).alias("total_value"),
+        F.sum("value").alias("sum_value"),
+        F.count("value").alias("n_value"),
         F.min("ts").alias("min_ts"),
         F.max("ts").alias("max_ts"),
     )
-    users = CHARTS["top_users"]
-    # one partition, one order: both columns come from one sorted Window
-    by_set = Window.partitionBy("gid").orderBy(*_spark_order(users))
-    whole_set = by_set.rowsBetween(Window.unboundedPreceding,
-                                   Window.unboundedFollowing)
-    ranked = agg.withColumns({
-        "n_users": F.count("user_id").over(whole_set),
-        "rank": F.row_number().over(by_set),
-    })
-    keep = (F.col("gid") != _gid(users.keys)) | (F.col("rank") <= k)
-    for c in CHARTS.values():
-        if c.drop_null_key:
-            keep &= ((F.col("gid") != _gid(c.keys))
-                     | F.col(c.keys[0]).isNotNull())
-    return ranked.filter(keep)
 
 
-def _select(df: DataFrame, name: str, k: int = TOP_K) -> DataFrame:
-    """One chart's frame, in Spark: its rows of `chart_aggregate`."""
-    chart = CHARTS[name]
-    return (
-        chart_aggregate(df, k)
-        .filter(F.col("gid") == _gid(chart.keys))
-        .orderBy(*_spark_order(chart))
-        .select(*[F.col(src).alias(col) for col, src in chart.columns])
+def collect_user_ranking(df: DataFrame, k: int = TOP_K) -> pd.DataFrame:
+    """Tier 2: the (user_id) set of a filtered frame, ranked in-plan and
+    collected: its top `k` (user_id, cnt) rows in the top_users order,
+    each carrying `n_users`, the set's count of non-null keys
+    (= countDistinct of user_id). The top k is taken in the cluster
+    (TakeOrderedAndProject: each partition's top k, then one merge of
+    those), so k rows reach the driver at any data size; `n_users` is
+    observed (CollectMetrics) as the set streams into it, with no second
+    pass."""
+    users = Observation()
+    top = (
+        df.groupBy("user_id").agg(F.count(F.lit(1)).alias("cnt"))
+        .observe(users, F.count("user_id").alias("n_users"))
+        .orderBy(*_spark_order(CHARTS["top_users"]))
+        .limit(k)
+        .toPandas()
     )
+    return top.assign(n_users=users.get["n_users"])
+
+
+def _spark_chart(df: DataFrame, name: str, k: int = TOP_K) -> DataFrame:
+    """One chart's frame, in Spark: a filtered frame grouped by the
+    chart's keys, with only the aggregates the chart shows; the top
+    users are the first `k` rows."""
+    chart = CHARTS[name]
+    aggregates = {
+        "cnt": F.count(F.lit(1)),
+        "avg_value": F.round(F.avg("value"), 6),
+        "total_value": F.round(F.sum("value"), 4),
+        "n_users": F.count_distinct("user_id"),
+        "min_ts": F.min("ts"),
+        "max_ts": F.max("ts"),
+    }
+    agg = _binned(df).groupBy(*chart.keys).agg(*[
+        aggregates[src].alias(src)
+        for _, src in chart.columns if src in aggregates
+    ])
+    if chart.drop_null_key:
+        agg = agg.filter(F.col(chart.keys[0]).isNotNull())
+    if chart.order:
+        agg = agg.orderBy(*_spark_order(chart))
+    if name == "top_users":
+        agg = agg.limit(k)
+    return agg.select(*[F.col(src).alias(col) for col, src in chart.columns])
 
 
 def metrics_summary(df: DataFrame) -> DataFrame:
-    """A6 metric tiles: the () row, with n_users from the (user_id) set;
-    one row (zero counts, null aggregates) for an empty selection."""
-    chart = CHARTS["metrics"]
-    agg = chart_aggregate(df)
-    total = F.col("gid") == _gid(chart.keys)
-    users = F.col("gid") == _gid(CHARTS["top_users"].keys)
-    cols = []
-    for col, src in chart.columns:
-        v = F.max(F.when(users if src == "n_users" else total, F.col(src)))
-        if src in _COUNTS:
-            v = F.coalesce(v, F.lit(0))
-        cols.append(v.alias(col))
-    return agg.agg(*cols)
+    """A6 metric tiles: one row (zero counts, null aggregates for an
+    empty selection)."""
+    return _spark_chart(df, "metrics")
 
 
 def top_users(df: DataFrame, k: int = TOP_K) -> DataFrame:
-    return _select(df, "top_users", k)
+    return _spark_chart(df, "top_users", k)
 
 
 def avg_value_by_hour(df: DataFrame) -> DataFrame:
-    return _select(df, "avg_value_by_hour")
+    return _spark_chart(df, "avg_value_by_hour")
 
 
 def value_histogram(df: DataFrame) -> DataFrame:
-    return _select(df, "value_histogram")
+    return _spark_chart(df, "value_histogram")
 
 
 def type_donut(df: DataFrame) -> DataFrame:
-    return _select(df, "type_donut")
+    return _spark_chart(df, "type_donut")
 
 
 def day_hour_heatmap(df: DataFrame) -> DataFrame:
-    return _select(df, "day_hour_heatmap")
+    return _spark_chart(df, "day_hour_heatmap")
 
 
-# --- the same split on the driver ---------------------------------------
+# --- driver side: the six frames from the cube and the user ranking -----
 
-_PANDAS_INTS = {"int": "int32", "bigint": "int64"}
+# the frames' int and string columns, typed as Spark's producers'
+# toPandas() types them: an int column that holds a null is float64, a
+# string column is object with None for null
+_DTYPES = {"cnt": "int64", "n_users": "int64", "user_id": "int64",
+           "event_hour": "int32", "bin": "int32",
+           "event_dow": "object", "event_type_label": "object"}
+_FOLD = {"cnt": "sum", "sum_value": "sum", "n_value": "sum",
+         "min_ts": "min", "max_ts": "max"}
+_WIDE = Context(prec=400)  # room for any double's digits at 6 places
+
+
+def _spark_round(s: pd.Series, places: int) -> pd.Series:
+    """Spark's round() of doubles: HALF_UP on each double's shortest
+    decimal, the digits of Double.toString that Scala's BigDecimal(d)
+    reads (so 0.285 rounds to 0.29 at 2 places, though the double lies
+    below 0.285), not numpy's or Python's half-even."""
+    unit = Decimal(1).scaleb(-places)
+
+    def one(x: float) -> float:
+        if not math.isfinite(x):
+            return x
+        return float(Decimal(repr(float(x))).quantize(
+            unit, ROUND_HALF_UP, context=_WIDE))
+
+    return pd.Series([one(x) for x in s], index=s.index, dtype="float64")
+
+
+def _cube_mask(
+    cube: pd.DataFrame,
+    date_range: tuple[str, str] | None,
+    hour_range: tuple[int, int] | None,
+    type_labels: list[str] | None,
+) -> pd.Series:
+    """`sidebar_filter` on the cube's keys: ts >= lo is event_date >= lo,
+    and ts <= midnight of hi is event_date < hi or hi's midnight cell.
+    Each date_range bound is anything `pd.Timestamp` reads (an ISO
+    string, a date, a datetime) that falls on a midnight: the cube
+    cannot split a day at any other time."""
+    keep = pd.Series(True, index=cube.index)
+    if date_range is not None:
+        lo, hi = (pd.Timestamp(d) for d in date_range)
+        for bound in (lo, hi):
+            if bound.tz is not None or bound != bound.normalize():
+                raise ValueError(
+                    f"date_range bound {bound} is not a naive midnight")
+        day = cube["event_date"]
+        keep &= (day >= lo) & ((day < hi)
+                               | ((day == hi) & cube["at_midnight"]))
+    if hour_range is not None:
+        keep &= cube["event_hour"].between(*hour_range)
+    if type_labels is not None:
+        label = cube["event_type_label"]
+        keep &= label.notna() & label.isin(list(type_labels))
+    return keep
+
+
+def _fold(cells: pd.DataFrame, keys: tuple[str, ...]) -> pd.DataFrame:
+    """Cube cells summed to `keys` (a null key is a group; no keys give
+    one row, even from no cells), with Spark's rounded avg and sum,
+    null where the group has no value."""
+    if keys:
+        agg = (cells.groupby(list(keys), dropna=False, sort=False)
+               .agg(_FOLD).reset_index())
+    else:
+        agg = pd.DataFrame({c: [cells[c].agg(f)] for c, f in _FOLD.items()})
+    has = agg["n_value"] > 0
+    agg["avg_value"] = _spark_round(
+        agg["sum_value"] / agg["n_value"].where(has), 6)
+    agg["total_value"] = _spark_round(agg["sum_value"].where(has), 4)
+    return agg
 
 
 def _pandas_key(s: pd.Series) -> pd.Series:
@@ -267,38 +352,43 @@ def _pandas_key(s: pd.Series) -> pd.Series:
     return s
 
 
-def chart_payload(df: DataFrame) -> dict[str, pd.DataFrame]:
-    """The six chart frames of a filtered frame from one collect of
-    `chart_aggregate`, each with the columns, dtypes and row order its
-    Spark-side producer's toPandas() gives."""
-    agg = chart_aggregate(df)
-    ints = {f.name: _PANDAS_INTS[f.dataType.simpleString()]
-            for f in agg.schema if f.dataType.simpleString() in _PANDAS_INTS}
-    rows = agg.toPandas()
-    # n_users is read off the (user_id) set's rows, as metrics_summary does
-    users = rows.loc[rows["gid"] == _gid(CHARTS["top_users"].keys)]
-    rows["n_users"] = users["n_users"].iloc[0] if len(users) else 0
+def chart_payload(
+    cube: pd.DataFrame,
+    users: pd.DataFrame,
+    date_range: tuple[str, str] | None = None,
+    hour_range: tuple[int, int] | None = None,
+    type_labels: list[str] | None = None,
+) -> dict[str, pd.DataFrame]:
+    """The six chart frames of one sidebar state, each with the columns,
+    dtypes and row order its Spark-side producer's toPandas() gives:
+    the top users and `n_users` from `users` (`collect_user_ranking` of
+    the filtered frame), the other charts folded from the `cube` cells
+    (`chart_cube`, collected) that pass the sidebar."""
+    cells = cube[_cube_mask(cube, date_range, hour_range, type_labels)]
+    n_users = users["n_users"].iloc[0] if len(users) else 0
     out = {}
     for name, chart in CHARTS.items():
-        part = rows[rows["gid"] == _gid(chart.keys)]
+        if name == "top_users":
+            part = users
+        else:
+            part = _fold(cells, chart.keys).assign(n_users=n_users)
+        if chart.drop_null_key:
+            part = part[part[chart.keys[0]].notna()]
         if chart.order:
             part = part.sort_values(
                 [c for c, _ in chart.order],
                 ascending=[asc for _, asc in chart.order],
                 na_position="first", key=_pandas_key, kind="stable",
             )
-        if not chart.keys:
-            # an empty selection has no () row: one row of nulls, zero counts
-            part = part.reset_index(drop=True).reindex([0])
-            part = part.fillna(dict.fromkeys(_COUNTS, 0))
         frame = pd.DataFrame({
             col: part[src].to_numpy() for col, src in chart.columns
         })
         for col, src in chart.columns:
-            # an int key that is null on other sets' rows came back as
-            # float64; cast it back unless this frame itself has a null
-            if src in ints and not frame[col].isna().any():
-                frame[col] = frame[col].astype(ints[src])
+            s, dtype = frame[col], _DTYPES.get(src)
+            if dtype == "object":
+                frame[col] = s.astype(object).where(s.notna(), None)
+            elif dtype:
+                frame[col] = s.astype(dtype if s.notna().all() else "float64")
         out[name] = frame
     return out
 

@@ -44,7 +44,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import read_table
+from ..io import read_table, table_version
 
 N_MERGES = 20
 
@@ -220,21 +220,17 @@ def train_bpe_merges(
 
 
 # trained-merge cache: bpe_apply and repeated bench calls reuse one
-# training run per corpus generation (keyed by documents.parquet
-# mtime so a driver-side testdata refresh invalidates it — the stale
-# PQ-codebook lesson from ADVICE r2)
-_MERGE_CACHE: dict[tuple[str, float], list] = {}
-
-
-def _docs_mtime(sf_dir: str) -> float:
-    return os.path.getmtime(os.path.join(sf_dir, "documents.parquet"))
+# training run per corpus generation (keyed by the documents table's
+# io.table_version so a testdata refresh invalidates it, through a URI
+# too — the stale PQ-codebook lesson from ADVICE r2)
+_MERGE_CACHE: dict[tuple[str, str], list] = {}
 
 
 def _trained_merges(spark: SparkSession, sf_dir: str) -> list:
     # realpath-normalized so two spellings of one corpus dir (trailing
     # slash, symlink, relative path) share a single training run
     real = os.path.realpath(sf_dir)
-    key = (real, _docs_mtime(sf_dir))
+    key = (real, table_version(spark, sf_dir, "documents"))
     if key not in _MERGE_CACHE:
         for k in [k for k in _MERGE_CACHE if k[0] == real]:
             del _MERGE_CACHE[k]  # evict the stale generation

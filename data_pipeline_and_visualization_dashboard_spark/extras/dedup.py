@@ -33,7 +33,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import read_table
+from ..io import read_table, table_version
 from .hashing import (
     BANDS,
     NUM_HASHES,
@@ -1481,24 +1481,6 @@ def corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )  # no terminal sort: O(n) output, order-insensitive compare
 
 
-def _documents_mtime(sf_dir: str) -> float:
-    """mtime key for the documents table (newest part file wins for a
-    multi-file table) — the cache-invalidation contract shared with
-    similarity._embeddings_mtime / bpe._docs_mtime: an in-place corpus
-    regeneration by the driver invalidates every derived artifact."""
-    import os
-
-    p = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(p):
-            return max(
-                (e.stat().st_mtime_ns for e in os.scandir(p)), default=0
-            )
-        return os.stat(p).st_mtime_ns
-    except OSError:
-        return 0
-
-
 def _corpus_key(sf_dir: str) -> str:
     """Collision-safe corpus identity for artifact cache generations
     (ADVICE r15 #1): basename alone collides across distinct corpora
@@ -1517,15 +1499,15 @@ def _corpus_key(sf_dir: str) -> str:
 
 
 # Last field of an artifact generation name. md5 is the only hash
-# family; the field is kept so existing generations keep their names
-# and are read back, not rebuilt.
+# family; the field keeps the names' three-field shape, which stale
+# eviction parses.
 _GENERATION_SUFFIX = "md5"
 
 
 def _materialize_corpus_artifact(spark: SparkSession, sf_dir: str,
                                  kind: str, build) -> DataFrame:
     """Shared once-per-corpus artifact materializer: build() runs ONCE
-    per (corpus path, documents mtime) and lands as
+    per (corpus path, documents version) and lands as
     parquet under spark-warehouse/{kind}/{gen}/data.parquet; later
     calls are a plain parquet scan (WITH size stats, so downstream
     doc-grain joins can broadcast a small artifact instead of
@@ -1533,10 +1515,13 @@ def _materialize_corpus_artifact(spark: SparkSession, sf_dir: str,
     cluster_table (near-dup components, r15) and survivors_table
     (curation survivors, r16).
 
-    Generation name = {corpus_key}_{mtime_ns}_md5 where
-    corpus_key embeds a path digest (_corpus_key).  Stale-generation
-    eviction parses the name EXACTLY — rsplit from the right, since
-    mtime is all digits and the suffix has no underscore — instead of
+    Generation name = {corpus_key}_{version}_md5 where
+    corpus_key embeds a path digest (_corpus_key) and version is
+    io.table_version, a digest of the documents' file listing through
+    Hadoop, so a rewrite read through a URI is caught too.
+    Stale-generation eviction parses the name EXACTLY — rsplit from
+    the right, since the version is hex and the suffix has no
+    underscore — instead of
     the r15 prefix test, which could sweep generations of any corpus
     whose key merely started with ours (ADVICE r15 #1).  Every other
     generation of this corpus is stale, whatever its suffix (so
@@ -1555,7 +1540,8 @@ def _materialize_corpus_artifact(spark: SparkSession, sf_dir: str,
     )
     ckey = _corpus_key(sf_dir)
     legacy = os.path.basename(os.path.abspath(os.path.normpath(sf_dir)))
-    gen = f"{ckey}_{_documents_mtime(sf_dir)}_{_GENERATION_SUFFIX}"
+    version = table_version(spark, sf_dir, "documents")
+    gen = f"{ckey}_{version}_{_GENERATION_SUFFIX}"
     path = os.path.join(root, gen, "data.parquet")
     if not os.path.exists(path):
         if os.path.isdir(root):
@@ -1573,13 +1559,13 @@ def cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup component table as a first-class, once-per-corpus
     MATERIALIZED artifact (VERDICT r14 ask #3): run the full
     LSH-verify + label-propagation build ONCE per (corpus path,
-    documents mtime) and persist the (doc_id, group_id)
+    documents version) and persist the (doc_id, group_id)
     frame as parquet under spark-warehouse/cluster_table/ — exactly
     how production treats dedup components (materialized once per
     corpus build, then consumed by every downstream curation policy),
     and the same contract as queries_ext.ann_disk_index for the ANN
     index artifacts.  Stale generations for the same corpus are
-    removed on rebuild; the mtime key invalidates on in-place corpus
+    removed on rebuild; the version key invalidates on in-place corpus
     regeneration, and the path-digest key disambiguates same-named
     corpora (ADVICE r15 #1 — see _materialize_corpus_artifact).
 
@@ -1599,7 +1585,7 @@ def survivors_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The curation-survivor set as a once-per-corpus MATERIALIZED
     artifact (VERDICT r15 ask #4): the full funnel (quality gate →
     exact-dup rank → near-dup components) runs ONCE per (corpus path,
-    documents mtime) and lands as a (doc_id, n_tokens,
+    documents version) and lands as a (doc_id, n_tokens,
     doc_hash) parquet — doc_id for membership, plus the two row-local
     per-doc readouts every release artifact re-derives (the
     whitespace token count shared with quality_score's tokenizer, and

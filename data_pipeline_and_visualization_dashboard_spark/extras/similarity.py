@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import read_table
+from ..io import read_table, table_version
 
 N_QUERIES = 5
 TOP_K = 10
@@ -1005,14 +1005,15 @@ def _pq_codebook(spark: SparkSession, sf_dir: str):
 
     cents[b][j] = 16-dim python float list for block b, code j.
 
-    Cached per (corpus dir, file mtime): a serving system loads its
-    codebook once, not per query — and in the bench harness the
-    collect would otherwise re-run on every timed sample. The mtime in
-    the key invalidates the entry when the corpus parquet is
+    Cached per (corpus dir, embeddings io.table_version): a serving
+    system loads its codebook once, not per query — and in the bench
+    harness the collect would otherwise re-run on every timed sample.
+    The version in the key (a digest of the file listing, local or
+    through a URI) invalidates the entry when the corpus parquet is
     regenerated in place (the harness does exactly that between
     rounds); a stale codebook would silently diverge from the DuckDB
     oracle, which always re-derives from the current file."""
-    key = (sf_dir, _embeddings_mtime(sf_dir))
+    key = (sf_dir, table_version(spark, sf_dir, "embeddings"))
     if key in _PQ_CODEBOOK_CACHE:
         return _PQ_CODEBOOK_CACHE[key]
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
@@ -1037,20 +1038,6 @@ def _pq_codebook(spark: SparkSession, sf_dir: str):
         del _PQ_CODEBOOK_CACHE[k]  # evict the stale generation
     _PQ_CODEBOOK_CACHE[key] = cents
     return cents
-
-
-def _embeddings_mtime(sf_dir: str) -> float:
-    import os
-
-    p = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        if os.path.isdir(p):  # multi-file table: newest part wins
-            return max(
-                (e.stat().st_mtime_ns for e in os.scandir(p)), default=0
-            )
-        return os.stat(p).st_mtime_ns
-    except OSError:
-        return 0
 
 
 _PQ_CODEBOOK_CACHE: dict[tuple, list] = {}

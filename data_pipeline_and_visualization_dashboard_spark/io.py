@@ -14,6 +14,7 @@ additionally prunes row groups via min/max stats once filters are pushed.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import urllib.request
 
@@ -66,6 +67,33 @@ def read_table(
     if columns:
         df = df.select(*columns)
     return df
+
+
+def file_listing(spark: SparkSession, path: str) -> tuple:
+    """(path, size, mtime_ms) of every file at or under `path`, listed
+    through the session's Hadoop FileSystem so URI inputs (file://,
+    s3a://, hdfs://) are seen as Spark reads them: a rewrite of the
+    input changes it."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return ()
+    files = fs.listFiles(jpath, True)
+    listing = []
+    while files.hasNext():
+        st = files.next()
+        listing.append(
+            (st.getPath().toString(), st.getLen(), st.getModificationTime())
+        )
+    return tuple(sorted(listing))
+
+
+def table_version(spark: SparkSession, sf_dir: str, name: str) -> str:
+    """The version of table `name` under `sf_dir`, as the caches built
+    from it key it: 16 hex digits of a digest of its `file_listing`,
+    so any rewrite, local or through a URI, gives a new version."""
+    listing = file_listing(spark, os.path.join(sf_dir, f"{name}.parquet"))
+    return hashlib.sha256(repr(listing).encode()).hexdigest()[:16]
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:

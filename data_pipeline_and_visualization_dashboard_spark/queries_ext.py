@@ -10,7 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .io import read_table
+from .io import read_table, table_version
 
 
 # ----------------------------------------------------------------------
@@ -1170,15 +1170,13 @@ def ivf_index(spark: SparkSession, sf_dir: str,
               k: int = IVF_K, iters: int = IVF_ITERS):
     """The IVF BUILD step as a first-class, once-per-corpus artifact:
     train the spherical k-means centroids and cache them per (corpus
-    dir, embeddings mtime, k, iters) — exactly how a serving system
-    treats an index (built offline, loaded once, queried many times).
-    The mtime key invalidates on in-place corpus regeneration, same
+    dir, embeddings io.table_version, k, iters) — exactly how a serving
+    system treats an index (built offline, loaded once, queried many
+    times). The version key invalidates on in-place corpus regeneration, same
     contract as similarity._pq_codebook. Cached driver state is k×dim
     doubles — the trained index IS that small; the corpus-sized work
     all happened distributed inside train_centroids."""
-    from .extras.similarity import _embeddings_mtime
-
-    key = (sf_dir, _embeddings_mtime(sf_dir), k, iters)
+    key = (sf_dir, table_version(spark, sf_dir, "embeddings"), k, iters)
     if key not in _IVF_INDEX_CACHE:
         for stale in [s for s in _IVF_INDEX_CACHE if s[0] == sf_dir]:
             del _IVF_INDEX_CACHE[stale]
@@ -1192,8 +1190,8 @@ _IVF_INDEX_CACHE: dict[tuple, list] = {}
 def ann_disk_index(spark: SparkSession, sf_dir: str):
     """The ON-DISK half of the ANN index: the per-vector IVF inverted-
     list assignment and the PQ codes, persisted as parquet under
-    spark-warehouse/ann_index/<corpus>_<mtime>/ (gitignored scratch,
-    rebuilt on corpus regeneration via the mtime key). A serving
+    spark-warehouse/ann_index/<corpus>_<version>/ (gitignored scratch,
+    rebuilt on corpus regeneration via the io.table_version key). A serving
     system NEVER re-derives these at query time — they ARE the index:
     corpus vectors are read once at build, queries then touch only the
     assignment (for probe pruning), the 16x-smaller codes (for ADC),
@@ -1203,10 +1201,7 @@ def ann_disk_index(spark: SparkSession, sf_dir: str):
     import os
     import shutil
 
-    from .extras.similarity import (
-        _embeddings_mtime,
-        pq_codes,
-    )
+    from .extras.similarity import pq_codes
 
     root = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -1214,7 +1209,8 @@ def ann_disk_index(spark: SparkSession, sf_dir: str):
         "ann_index",
     )
     base = os.path.basename(os.path.normpath(sf_dir))
-    d = os.path.join(root, f"{base}_{_embeddings_mtime(sf_dir)}")
+    version = table_version(spark, sf_dir, "embeddings")
+    d = os.path.join(root, f"{base}_{version}")
     assign_path = os.path.join(d, "ivf_assign.parquet")
     codes_path = os.path.join(d, "pq_codes.parquet")
     rp_path = os.path.join(d, "rp_proj.parquet")

@@ -60,6 +60,52 @@ def test_dashboard_cache_follows_rewritten_input(spark, tmp_path, scheme):
         pq.write_table(table.slice(0, kept), path)
         p2 = sess.render_payload()
         assert p2["metrics"]["total_events"][0] == kept
+        # both tiers follow: the tile above comes from the cube, the top
+        # users and n_users from the Spark aggregate over the cache
+        users = table.slice(0, kept).column("user_id").to_pandas()
+        counts = users.value_counts(dropna=False)
+        assert (p2["top_users"]["event_cnt"].tolist()
+                == sorted(counts, reverse=True)[:10])
+        assert p2["metrics"]["n_users"][0] == users.nunique()
+    finally:
+        sess.close()
+
+
+def test_chart_cube_is_bounded(spark):
+    """The collected cube is bounded by the chart domains, not by the
+    row count: at most days × 25 × 6 × 51 cells (hours plus the midnight
+    split of hour 0, labels plus null, bins plus null), fewer than the
+    cached rows, and its counts add up to them."""
+    sess = DashboardSession(spark, SF_SMOKE)
+    try:
+        rows = sess.base().count()
+        cube = sess._cube
+        days = cube["event_date"].nunique(dropna=False)
+        assert len(cube) < rows
+        assert len(cube) <= days * 25 * 6 * 51
+        assert cube["cnt"].sum() == rows
+    finally:
+        sess.close()
+
+
+def test_dashboard_rebuilds_when_input_moves_during_build(spark, monkeypatch):
+    """The cache and the cube are two scans of the input: a build during
+    which the input's listing changes is not kept, so one render never
+    mixes two versions of the input."""
+    from data_pipeline_and_visualization_dashboard_spark import dashboard
+
+    versions = iter(["v1", "v2", "v2", "v2"])
+    monkeypatch.setattr(dashboard, "table_version", lambda *a: next(versions))
+    builds = []
+    cube = dashboard.chart_cube
+    monkeypatch.setattr(dashboard, "chart_cube",
+                        lambda df: builds.append(df) or cube(df))
+    sess = DashboardSession(spark, SF_SMOKE)
+    try:
+        sess.base()
+        assert len(builds) == 2 and sess._version == "v2"
+        sess.base()
+        assert len(builds) == 2
     finally:
         sess.close()
 
@@ -284,3 +330,129 @@ def test_render_runs_at_most_three_spark_jobs(spark):
         assert 1 <= len(jobs) <= 3, f"{len(jobs)} jobs for one render"
     finally:
         sess.close()
+
+
+# --- the driver fold, without Spark ---------------------------------------
+
+def _cube_rows():
+    """Hand-built cube cells: the end day's midnight cell and its 00:30
+    cell, a null-ts cell, a null-label cell, and a cell whose average is
+    exactly 1/128 (a tie at the sixth decimal place)."""
+    import pandas as pd
+
+    nat = pd.NaT
+    cells = [
+        # event_date, at_midnight, hour, dow, label, bin,
+        # cnt, sum_value, n_value, min_ts, max_ts
+        ("2024-01-08", True, 0, "Monday", "Click", 1,
+         1, 12.5, 1, "2024-01-08 00:00", "2024-01-08 00:00"),
+        ("2024-01-08", False, 0, "Monday", "Click", 1,
+         1, 13.0, 1, "2024-01-08 00:30", "2024-01-08 00:30"),
+        (nat, False, None, None, "View", 0, 1, 7.0, 1, nat, nat),
+        ("2024-01-02", False, 7, "Tuesday", None, 4,
+         2, 85.0, 2, "2024-01-02 07:00", "2024-01-02 07:30"),
+        ("2024-01-03", False, 5, "Wednesday", "Purchase", 0,
+         128, 1.0, 128, "2024-01-03 05:00", "2024-01-03 05:59"),
+    ]
+    cube = pd.DataFrame(cells, columns=[
+        "event_date", "at_midnight", "event_hour", "event_dow",
+        "event_type_label", "bin", "cnt", "sum_value", "n_value",
+        "min_ts", "max_ts"])
+    for c in ("event_date", "min_ts", "max_ts"):
+        cube[c] = pd.to_datetime(cube[c]).astype("datetime64[ns]")
+    cube["event_hour"] = cube["event_hour"].astype("float64")
+    return cube
+
+
+def _users(rows=((3, 2, 2), (4, 1, 2))):
+    import pandas as pd
+
+    return pd.DataFrame(list(rows), columns=["user_id", "cnt", "n_users"],
+                        dtype="int64")
+
+
+def test_chart_payload_folds_cube_rows():
+    """The driver fold on hand-built cube cells, no Spark: the midnight
+    trap, the null-ts and null-label cells, an empty selection, and
+    Spark's HALF_UP rounding where numpy and Python round half-even."""
+    from data_pipeline_and_visualization_dashboard_spark.charts import (
+        chart_payload,
+    )
+
+    cube = _cube_rows()
+    labels = ["Click", "View", "Purchase", "Sign Up", "Error"]
+
+    # the end day's midnight cell counts, its 00:30 cell does not
+    p = chart_payload(cube, _users(), ("2024-01-07", "2024-01-08"))
+    m = p["metrics"]
+    assert m["total_events"][0] == 1 and m["avg_value"][0] == 12.5
+    assert m["n_users"][0] == 2
+    assert str(m["min_ts"][0]) == str(m["max_ts"][0]) == "2024-01-08 00:00:00"
+
+    # a bound given as a date, a datetime or a date-time string at
+    # midnight selects the same cells; the cube cannot cut a day at any
+    # other time, so such a bound is refused
+    import datetime as dt
+
+    import pandas as pd
+
+    for bounds in [(dt.date(2024, 1, 7), dt.date(2024, 1, 8)),
+                   ("2024-01-07 00:00:00", pd.Timestamp("2024-01-08")),
+                   (dt.datetime(2024, 1, 7), dt.datetime(2024, 1, 8))]:
+        assert chart_payload(cube, _users(), bounds)["metrics"].equals(m)
+    with pytest.raises(ValueError, match="midnight"):
+        chart_payload(cube, _users(), ("2024-01-07", "2024-01-08 00:30"))
+
+    # the null-ts cell survives only with no date and no hour filter,
+    # and then forms the null-hour row and the (null, null) heatmap cell
+    p = chart_payload(cube, _users(), None, None, ["View"])
+    hours = p["avg_value_by_hour"]
+    assert hours["event_hour"].isna().all() and len(hours) == 1
+    assert str(hours["event_hour"].dtype) == "float64"
+    heat = p["day_hour_heatmap"]
+    assert heat["event_dow"].tolist() == [None]
+    assert heat["event_hour"].isna().all() and heat["event_cnt"][0] == 1
+    for state in [(("2024-01-01", "2024-01-31"), None, ["View"]),
+                  (None, (0, 23), ["View"])]:
+        assert chart_payload(cube, _users(), *state)[
+            "metrics"]["total_events"][0] == 0
+
+    # the null label is dropped by any IN list and by the donut
+    p = chart_payload(cube, _users(), None, None, labels)
+    assert p["metrics"]["total_events"][0] == 131
+    donut = chart_payload(cube, _users())["type_donut"]
+    assert donut["event_type_label"].tolist() == ["Purchase", "Click", "View"]
+    assert donut["cnt"].tolist() == [128, 2, 1]
+
+    # Spark's round(): HALF_UP, where half-even gives 0.007812
+    assert round(1 / 128, 6) == 0.007812
+    p = chart_payload(cube, _users(), None, (5, 5), None)
+    assert p["avg_value_by_hour"]["avg_value"].tolist() == [0.007813]
+    assert p["metrics"]["avg_value"][0] == 0.007813
+    assert p["metrics"]["total_value"][0] == 1.0
+    assert str(p["avg_value_by_hour"]["event_hour"].dtype) == "int32"
+
+    # an empty selection: one metrics row, zero counts, null aggregates,
+    # and the dtypes test_dashboard_empty_selection pins
+    p = chart_payload(cube, _users(()), ("2030-01-01", "2030-01-31"))
+    m = p["metrics"]
+    assert len(m) == 1
+    assert m["total_events"][0] == 0 and m["n_users"][0] == 0
+    assert m[["avg_value", "total_value", "min_ts", "max_ts"]
+             ].isna().all(axis=None)
+    assert {c: str(t) for c, t in m.dtypes.items()} == {
+        "total_events": "int64", "avg_value": "float64",
+        "total_value": "float64", "n_users": "int64",
+        "min_ts": "datetime64[ns]", "max_ts": "datetime64[ns]",
+    }
+    expected = {
+        "top_users": {"user_id": "int64", "event_cnt": "int64"},
+        "avg_value_by_hour": {"event_hour": "int32", "avg_value": "float64"},
+        "value_histogram": {"bin": "int32", "cnt": "int64"},
+        "type_donut": {"event_type_label": "object", "cnt": "int64"},
+        "day_hour_heatmap": {"event_dow": "object", "event_hour": "int32",
+                             "event_cnt": "int64"},
+    }
+    for name, dtypes in expected.items():
+        assert len(p[name]) == 0, name
+        assert {c: str(t) for c, t in p[name].dtypes.items()} == dtypes

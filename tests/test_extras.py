@@ -849,6 +849,60 @@ def test_pq_codebook_cache_invalidates_on_regenerated_corpus(spark, tmp_path):
     with _pytest.raises(ValueError, match="missing"):
         sim._pq_codebook(spark, d)
 
+def test_artifact_caches_follow_rewritten_uri_corpus(spark, tmp_path):
+    """The corpus-keyed artifact caches (dedup's materialized
+    generations, the PQ codebook, the trained BPE merges) must see a
+    rewrite of a corpus read through a file:// URI: each is keyed by
+    io.table_version, the Hadoop file listing Spark reads through, not
+    by a local os.stat of the URI string."""
+    import os
+    import shutil
+
+    from data_pipeline_and_visualization_dashboard_spark.extras import (
+        bpe,
+        dedup,
+    )
+    from data_pipeline_and_visualization_dashboard_spark.extras import (
+        similarity as sim,
+    )
+
+    uri = "file://" + str(tmp_path)
+    kind = "test_uri_rewrite"
+
+    def write_corpus(n_docs, word, scale):
+        docs = [(i, " ".join([word] * (i + 2))) for i in range(n_docs)]
+        spark.createDataFrame(docs, "doc_id long, text string").coalesce(
+            1).write.mode("overwrite").parquet(uri + "/documents.parquet")
+        vecs = [(i, [float((i * 7 + j) % 13) * scale for j in range(64)])
+                for i in range(sim.PQ_CODES + 4)]
+        spark.createDataFrame(
+            vecs, "vec_id long, embedding array<float>"
+        ).coalesce(1).write.mode("overwrite").parquet(
+            uri + "/embeddings.parquet")
+
+    def n_docs():
+        return dedup._materialize_corpus_artifact(
+            spark, uri, kind,
+            lambda: read_table(spark, uri, "documents").select("doc_id"),
+        ).count()
+
+    write_corpus(8, "abab", 1.0)
+    try:
+        assert n_docs() == 8
+        c1 = sim._pq_codebook(spark, uri)
+        m1 = bpe._trained_merges(spark, uri)
+        write_corpus(5, "cdcd", 3.0)
+        assert n_docs() == 5
+        assert sim._pq_codebook(spark, uri) != c1
+        m2 = bpe._trained_merges(spark, uri)
+        assert m2 != m1 and m2 == bpe.train_bpe_merges(spark, uri)
+    finally:
+        shutil.rmtree(os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "spark-warehouse", kind,
+        ), ignore_errors=True)
+
+
 def test_hash_stage_md5_matches_duck_and_xxhash_counts(spark, duck):
     """Isolated base-hash stage: the md5 base hash reproduces in DuckDB
     value-for-value. (The name is kept from when an xxhash64 twin of
@@ -1538,8 +1592,10 @@ def test_cluster_table_artifact_identity_and_rebuild(spark, tmp_path):
     import os
 
     from data_pipeline_and_visualization_dashboard_spark.extras.dedup import (
-        _corpus_key, _documents_mtime, cluster_table,
-        dedup_neardup_groups,
+        _corpus_key, cluster_table, dedup_neardup_groups,
+    )
+    from data_pipeline_and_visualization_dashboard_spark.io import (
+        table_version,
     )
 
     fresh = sorted(
@@ -1554,7 +1610,8 @@ def test_cluster_table_artifact_identity_and_rebuild(spark, tmp_path):
     )
     gen = os.path.join(
         root,
-        f"{_corpus_key(SF_SMOKE)}_{_documents_mtime(SF_SMOKE)}_md5",
+        f"{_corpus_key(SF_SMOKE)}_"
+        f"{table_version(spark, SF_SMOKE, 'documents')}_md5",
         "data.parquet",
     )
     assert os.path.exists(gen)

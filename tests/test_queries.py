@@ -219,13 +219,17 @@ def test_check_first_oracles_not_vacuous(duck):
     every oracle and so sits in the slow tier): the oracle of each
     entry in the driver's correctness window (_CHECK_FIRST) must
     return >=1 row at SF_CORRECT, so the default tier keeps a
-    vacuous-green guard."""
+    vacuous-green guard. The window holds the dashboard's q7-q12."""
+    from data_pipeline_and_visualization_dashboard_spark.charts import (
+        QUERIES as DASHBOARD_QUERIES,
+    )
+
     oracles = entrymod.oracle_sql()
     names = [
         n for n in entrymod._CHECK_FIRST
         if n in oracles and n not in VACUOUS_WHITELIST
     ]
-    assert names
+    assert set(DASHBOARD_QUERIES) <= set(names)
     empty = [n for n in names if not duck.execute(oracles[n]).fetchall()]
     assert not empty, (
         f"vacuously-green oracle queries (0 rows at {SF_CORRECT}): {empty}"
