@@ -45,10 +45,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import read_table, table_version
+from .text import spark_tokens
 
 N_MERGES = 20
 
-_SPARK_WORDS = "explode(split(lower(trim(text)), '\\\\s+'))"
 _DUCK_WORDS = r"unnest(regexp_split_to_array(lower(trim(text)), '\s+'))"
 
 # symbol-array extraction from the |a||b||c| encoding
@@ -70,7 +70,7 @@ def _word_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text").isNotNull()
     )
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    words = docs.selectExpr(f"{_SPARK_WORDS} AS word").filter(
+    words = docs.selectExpr(f"explode({spark_tokens()}) AS word").filter(
         F.col("word").rlike("^[a-z]+$")
     )
     return words.groupBy("word").agg(F.count(F.lit(1)).alias("freq"))
@@ -273,7 +273,7 @@ def bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("text").isNotNull())
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     fact = docs.selectExpr(
-        "doc_id", f"{_SPARK_WORDS} AS word"
+        "doc_id", f"explode({spark_tokens()}) AS word"
     ).filter(F.col("word").rlike("^[a-z]+$"))
     vocab = fact.select("word").distinct()
     s = merge_chain_expr(merges, "word")

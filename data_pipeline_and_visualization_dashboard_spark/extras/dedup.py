@@ -160,7 +160,6 @@ _DUCK_INCREMENTAL_EXACT_SQL = """
 # Engine-neutral SQL fragments (same formula text feeds Spark F.expr and
 # the DuckDB oracle — only tokenize/slice/min spellings differ).
 
-_SPARK_TOKENS = "split(lower(trim(text)), '\\\\s+')"
 _DUCK_TOKENS = r"string_split_regex(lower(trim(text)), '\s+')"
 
 # 3-word shingles; short docs (<3 tokens) fall back to one whole-text
@@ -235,7 +234,9 @@ def shingle_sets_from(docs: DataFrame) -> DataFrame:
     """shingle_sets over an ARBITRARY (doc_id, text) frame (streaming
     micro-batches use this; the batch path wraps it with the parallel
     corpus scan)."""
-    toks = docs.selectExpr("doc_id", f"{_SPARK_TOKENS} AS tokens")
+    from .text import spark_tokens
+
+    toks = docs.selectExpr("doc_id", f"{spark_tokens()} AS tokens")
     return toks.selectExpr("doc_id", f"({_SPARK_SHINGLES_FROM_TOKENS}) AS shingles")
 
 
@@ -987,12 +988,14 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits. Same explode->agg shape as MinHash (map-side partial agg, so
     the shuffle carries 32 ints per doc per partition). Order-invariant,
     multiplicity-sensitive. Base hash as in minhash_signatures."""
+    from .text import spark_tokens
+
     docs = _read_docs_parallel(spark, sf_dir)
     toks = docs.selectExpr(
         # explode_outer: same InferFiltersFromGenerate trap as minhash
         # (see _read_docs_parallel); split() of non-null text is never
         # null/empty, so outer ≡ inner.
-        "doc_id", "explode_outer(split(lower(trim(text)), '\\\\s+')) AS t"
+        "doc_id", f"explode_outer({spark_tokens()}) AS t"
     ).selectExpr("doc_id", f"{spark_base_hash('t')} AS h")
     bit_sums = toks.groupBy("doc_id").agg(
         *[
@@ -1846,10 +1849,10 @@ def _token_hash_proj() -> list:
     survivors_table artifact build and the generic text-frame
     manifest, so all consumers agree column-for-column by
     construction."""
+    from .text import spark_tokens
+
     return [
-        F.expr(
-            "size(split(lower(trim(text)), '\\\\s+'))"
-        ).alias("n_tokens"),
+        F.expr(f"size({spark_tokens()})").alias("n_tokens"),
         F.expr(spark_h60("text")).alias("doc_hash"),
     ]
 
@@ -3247,16 +3250,17 @@ def corpus_release_diff_card(spark: SparkSession,
     token delta rides the revision), and the changed-doc detection is
     the same md5 comparison.  All deterministic → fully
     oracle-backed."""
+    from .text import spark_tokens
+
     docs = read_table(
         spark, sf_dir, "documents", ["doc_id", "source", "lang", "text"]
     ).filter(F.col("text").isNotNull())
-    ntok = "size(split(lower(trim({t})), '\\\\s+'))"
     prev = docs.filter(F.col("doc_id") % 10 != 0).select(
         "doc_id",
         "source",
         "lang",
         F.md5("text").alias("h"),
-        F.expr(ntok.format(t="text")).alias("n_tokens"),
+        F.expr(f"size({spark_tokens('text')})").alias("n_tokens"),
     )
     cur_text = F.when(
         F.col("doc_id") % 7 == 0, F.concat(F.col("text"), F.lit(" rev2"))
@@ -3269,7 +3273,7 @@ def corpus_release_diff_card(spark: SparkSession,
             "source",
             "lang",
             F.md5("cur_text").alias("h"),
-            F.expr(ntok.format(t="cur_text")).alias("n_tokens"),
+            F.expr(f"size({spark_tokens('cur_text')})").alias("n_tokens"),
         )
     )
     return release_diff_card_of(prev, cur)

@@ -50,7 +50,6 @@ PHRASE = ("table", "hash")
 QUERY_RANKED = ("dup", "vector", "line")
 RANKED_K = 10
 
-_SPARK_TOKENS = "split(lower(trim(text)), '\\\\s+')"
 _DUCK_TOKENS = r"regexp_split_to_array(lower(trim(text)), '\s+')"
 
 
@@ -58,8 +57,10 @@ def _positions_from(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, term) over an ARBITRARY (doc_id, text) frame
     (streaming micro-batches use this; the batch path wraps it with
     the parallel corpus scan)."""
+    from .text import spark_tokens
+
     return docs.selectExpr(
-        "doc_id", f"posexplode_outer({_SPARK_TOKENS}) AS (pos, term)"
+        "doc_id", f"posexplode_outer({spark_tokens()}) AS (pos, term)"
     ).filter(F.col("term").rlike("^[a-z]+$"))
 
 

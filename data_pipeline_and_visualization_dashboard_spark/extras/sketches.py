@@ -30,8 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import read_table
-from .dedup import _DUCK_SHINGLES, _SPARK_SHINGLES_FROM_TOKENS, _SPARK_TOKENS
+from .dedup import _DUCK_SHINGLES, _SPARK_SHINGLES_FROM_TOKENS
 from .hashing import duck_h60, minhash_term, spark_h60
+from .text import spark_tokens
 
 # count-min: D independent universal hashes (reusing the MinHash
 # family's (a,b) parameters) into W buckets. eps ~ e/W, delta ~ e^-D.
@@ -42,7 +43,6 @@ CM_TOPK = 10
 # HyperLogLog: M registers addressed by the low bits of h60; the
 # remaining 52 bits feed the leading-zero rank.
 HLL_M = 256  # 2^8 registers
-_HLL_REST_BITS = 52
 # bias correction for m >= 128 (Flajolet et al. 2007, public formula)
 HLL_ALPHA = 0.7213 / (1.0 + 1.079 / HLL_M)
 
@@ -499,7 +499,7 @@ def kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (same rationale as dedup._read_docs_parallel)
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
     toks = docs.selectExpr(
-        "length(source) <= 4 AS grp_a", f"{_SPARK_TOKENS} AS tokens"
+        "length(source) <= 4 AS grp_a", f"{spark_tokens()} AS tokens"
     )
     sh = toks.selectExpr(
         "grp_a",

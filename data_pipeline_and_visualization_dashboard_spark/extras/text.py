@@ -23,6 +23,14 @@ from pyspark.sql import functions as F
 from ..io import read_table
 from .hashing import P_FP, duck_base_hash, spark_base_hash
 
+
+def spark_tokens(col: str = "text") -> str:
+    """Spark SQL of the package's whitespace tokenizer: `col` trimmed,
+    lower-cased and split on runs of whitespace. The DuckDB oracles
+    spell it string_split_regex(lower(trim(text)), '\\s+')."""
+    return f"split(lower(trim({col})), '\\\\s+')"
+
+
 # language -> marker stopwords for the n-gram-free heuristic language ID.
 # (A real pipeline uses fastText/CLD3; the heuristic is the engine
 # operator — counting marker hits at scan speed.)
@@ -113,7 +121,7 @@ def token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = (
         docs.selectExpr(
             "doc_id",
-            "explode(split(lower(trim(text)), '\\\\s+')) AS t",
+            f"explode({spark_tokens()}) AS t",
         )
         .groupBy("doc_id", "t")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -165,7 +173,7 @@ def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     set signature) — detects exact token-sequence reuse under
     whitespace/case normalization."""
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"])
-    tokens = "split(lower(trim(text)), '\\\\s+')"
+    tokens = spark_tokens()
     th = f"transform({tokens}, t -> {spark_base_hash('t')} % {P_FP})"
     return docs.selectExpr(
         "doc_id",
@@ -268,7 +276,7 @@ def repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle; ratio doubles are identical IEEE trees in both engines."""
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"])
     toked = docs.selectExpr(
-        "doc_id", "split(lower(trim(text)), '\\\\s+') AS toks"
+        "doc_id", f"{spark_tokens()} AS toks"
     )
     grammed = toked.selectExpr(
         "doc_id",
@@ -327,9 +335,7 @@ def tfidf_topk(spark: SparkSession, sf_dir: str, k: int = TFIDF_TOPK) -> DataFra
         "doc_id",
         # explode_outer: InferFiltersFromGenerate trap (see dedup) —
         # split() of non-null text is never null/empty, outer ≡ inner
-        F.explode_outer(F.split(F.lower(F.trim("text")), r"\s+")).alias(
-            "term"
-        ),
+        F.explode_outer(F.expr(spark_tokens())).alias("term"),
     )
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -404,7 +410,7 @@ def chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk boundary without also appearing intact inside some chunk."""
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"])
     toked = docs.selectExpr(
-        "doc_id", "split(lower(trim(text)), '\\\\s+') AS toks"
+        "doc_id", f"{spark_tokens()} AS toks"
     )
     counted = toked.selectExpr(
         "doc_id", "toks",
@@ -966,9 +972,7 @@ def vocab_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read_docs_parallel(spark, sf_dir)  # single-file scan spread
     toks = docs.select(
         "doc_id",
-        F.explode_outer(F.split(F.lower(F.trim("text")), r"\s+")).alias(
-            "token"
-        ),
+        F.explode_outer(F.expr(spark_tokens())).alias("token"),
     )
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     stats = tf.groupBy("token").agg(
@@ -1075,9 +1079,7 @@ def vocab_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _read_docs_parallel(spark, sf_dir)  # single-file scan spread
     toks = docs.select(
         "doc_id",
-        F.posexplode_outer(
-            F.split(F.lower(F.trim("text")), r"\s+")
-        ).alias("pos", "token"),
+        F.posexplode_outer(F.expr(spark_tokens())).alias("pos", "token"),
     )
     v = vocab_table(spark, sf_dir).select("token", "token_id")
     enc = toks.join(v, "token", "left").withColumn(
@@ -1235,7 +1237,7 @@ def mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id",
         "source",
-        F.expr(f"size({_SPARK_TOKENS_TXT})").alias("n_tokens"),
+        F.expr(f"size({spark_tokens()})").alias("n_tokens"),
         F.expr(spark_base_hash("CAST(doc_id AS STRING)")).alias("h"),
     )
     per_src = base.groupBy("source").agg(
@@ -1262,11 +1264,6 @@ def mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("cum_tokens") <= F.col("budget"))
         .select("doc_id", "source", "n_tokens")
     )  # no terminal sort: O(n) output, order-insensitive compare
-
-
-# tokens over the RAW text column (mix_sample counts tokens the same
-# way the vocab/tfidf family does)
-_SPARK_TOKENS_TXT = "split(lower(trim(text)), '\\\\s+')"
 
 
 # ----------------------------------------------------------------------
@@ -1300,7 +1297,7 @@ def line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _read_docs_parallel(spark, sf_dir)  # single-file scan spread
     toked = docs.selectExpr(
-        "doc_id", f"{_SPARK_TOKENS_TXT} AS toks"
+        "doc_id", f"{spark_tokens()} AS toks"
     ).selectExpr(
         "doc_id", "toks",
         f"(size(toks) + {LINE_TOKENS} - 1) div {LINE_TOKENS} AS n_lines",
@@ -1421,7 +1418,7 @@ def lm_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole computation oracle-reproducible."""
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"])
     toks = docs.filter(F.col("text").isNotNull()).selectExpr(
-        "doc_id", "split(lower(trim(text)), '\\\\s+') AS tokens"
+        "doc_id", f"{spark_tokens()} AS tokens"
     )
     bi = toks.selectExpr(
         "doc_id",
@@ -1679,7 +1676,7 @@ def quality_score_of(docs: DataFrame, extra_cols: tuple = ()) -> DataFrame:
     return docs.selectExpr(
         "doc_id",
         *extra,
-        "split(lower(trim(text)), '\\\\s+') AS tokens",
+        f"{spark_tokens()} AS tokens",
     ).selectExpr(
         "doc_id",
         *extra,
@@ -1856,7 +1853,7 @@ def dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.filter(F.col("text").isNotNull())
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
         .selectExpr(
-            "doc_id", "lang", "split(lower(trim(text)), '\\\\s+') AS tokens"
+            "doc_id", "lang", f"{spark_tokens()} AS tokens"
         )
         .selectExpr("doc_id", "lang", f"concat({uni}, {bi}) AS bs")
         .select("doc_id", "lang", F.explode_outer("bs").alias("b"))
@@ -1977,7 +1974,7 @@ def dup_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )
     toks = docs.selectExpr(
-        "doc_id", "split(lower(trim(text)), '\\\\s+') AS tokens"
+        "doc_id", f"{spark_tokens()} AS tokens"
     )
     grams = toks.selectExpr(
         "doc_id",
@@ -2047,7 +2044,7 @@ def dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .repartition(spark.sparkContext.defaultParallelism, "doc_id")
     )
     toks = docs.selectExpr(
-        "doc_id", "split(lower(trim(text)), '\\\\s+') AS tokens"
+        "doc_id", f"{spark_tokens()} AS tokens"
     ).filter(F.size("tokens") >= n)
     grams = toks.selectExpr(
         "doc_id",
@@ -2176,7 +2173,7 @@ def hashed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"])
     tok = docs.selectExpr(
         "doc_id",
-        "explode(split(lower(trim(text)), '\\\\s+')) AS t",
+        f"explode({spark_tokens()}) AS t",
     )
     return (
         tok.selectExpr(

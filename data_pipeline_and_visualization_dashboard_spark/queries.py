@@ -269,24 +269,52 @@ def q15_sample_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# q16: sessionization — gap-based session assignment via lag + running
-# sum (the batch spelling of streaming session windows; SURVEY §2.11 /
-# pyspark guide "Sessionization"). Not in the reference surface; core
-# event-pipeline operator at scale.
+# Sessions: a user's events split into a new session wherever the gap
+# to the previous event exceeds SESSION_GAP_US. Two spellings of that
+# one rule: `sessions` (the engine's session_window; q36 and every
+# session stream) and `_number_sessions` (lag + running sum; q16 and
+# q69, which need a null-ts row kept and a session number).
 # ----------------------------------------------------------------------
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min in microseconds
 
 
-def q16_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user session stats: windows partition by user_id (shuffle on
-    user_id once; both window functions and the final groupBy reuse that
-    partitioning, so the plan has a single exchange). Gap comparison in
-    integer microseconds — exact in both engines."""
-    events = read_table(spark, sf_dir, "events", ["user_id", "ts", "event_id"])
+def sessions(events: DataFrame,
+             gap: str = f"{SESSION_GAP_US} microseconds") -> DataFrame:
+    """One row per (user_id, session): session_start (first event),
+    last_event (max ts), window_end (last event + gap) and n_events.
+
+    session_window merges events exactly one gap apart and splits them
+    one microsecond later: the same `> gap` rule as _number_sessions.
+    It drops rows with a null ts. On a stream, append mode emits a
+    session once the watermark passes its window_end, and state holds
+    only the open sessions."""
+    return (
+        events.groupBy(
+            F.session_window(F.col("ts"), gap).alias("w"), "user_id"
+        )
+        .agg(
+            F.max("ts").alias("last_event"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+        .select(
+            "user_id",
+            F.col("w.start").alias("session_start"),
+            "last_event",
+            F.col("w.end").alias("window_end"),
+            "n_events",
+        )
+    )
+
+
+def _number_sessions(events: DataFrame) -> DataFrame:
+    """Adds `us` (ts in unix micros), the `new_sess` flag and `sess_no`
+    (0-based, per user) to events carrying user_id, ts and event_id. Windows partition by
+    user_id in (ts, event_id) order, so a null ts sorts first and joins
+    the user's first session."""
     w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")
     w_run = w_order.rowsBetween(Window.unboundedPreceding, 0)
-    sessions = (
+    return (
         events.withColumn("us", F.unix_micros("ts"))
         .withColumn(
             "new_sess",
@@ -296,7 +324,15 @@ def q16_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("sess_no", F.sum("new_sess").over(w_run))
     )
-    per_session = sessions.groupBy("user_id", "sess_no").agg(
+
+
+def q16_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-user session stats: windows partition by user_id (shuffle on
+    user_id once; both window functions and the final groupBy reuse that
+    partitioning, so the plan has a single exchange). Gap comparison in
+    integer microseconds — exact in both engines."""
+    events = read_table(spark, sf_dir, "events", ["user_id", "ts", "event_id"])
+    per_session = _number_sessions(events).groupBy("user_id", "sess_no").agg(
         F.count(F.lit(1)).alias("n_events")
     )
     return (
@@ -479,14 +515,15 @@ ORACLE_SQL: dict[str, str] = {
         WITH flagged AS (
             SELECT user_id, ts, event_id,
                    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
-                            (PARTITION BY user_id ORDER BY ts, event_id)
+                            (PARTITION BY user_id
+                             ORDER BY ts NULLS FIRST, event_id)
                             > {SESSION_GAP_US}
                         THEN 1 ELSE 0 END AS new_sess
             FROM events
         ), numbered AS (
             SELECT user_id,
                    sum(new_sess) OVER (PARTITION BY user_id
-                                       ORDER BY ts, event_id
+                                       ORDER BY ts NULLS FIRST, event_id
                                        ROWS UNBOUNDED PRECEDING) AS sess_no
             FROM flagged
         ), per_session AS (

@@ -783,12 +783,11 @@ def q32_collect_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------------
-# q36: NATIVE session windows — F.session_window group keys (the
-# engine-owned spelling of q16's manual lag+running-sum sessionization;
-# also the batch twin of streaming session aggregation). Session
-# boundary: a gap >= 30 min starts a new session (session_window's
-# end-exclusive [start, last+gap) semantics); window end = last event
-# + gap.
+# q36: NATIVE session windows — queries.sessions, the engine-owned
+# spelling of q16's manual lag+running-sum sessionization and the batch
+# twin of every session stream. Session boundary: a gap > 30 min starts
+# a new session (session_window merges events exactly 30 min apart);
+# window end = last event + gap; null-ts rows are dropped.
 # ----------------------------------------------------------------------
 
 def q36_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -797,17 +796,14 @@ def q36_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the same single-exchange shape as q16 but with the session
     assignment running inside the aggregation operator instead of two
     window passes."""
+    from .queries import sessions
+
     events = read_table(spark, sf_dir, "events", ["user_id", "ts"])
     return (
-        events.groupBy(
-            F.session_window(F.col("ts"), "30 minutes").alias("w"),
+        sessions(events).select(
             "user_id",
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
+            "session_start",
+            F.col("window_end").alias("session_end"),
             "n_events",
         )
     )  # no terminal sort: O(n) output, order-insensitive compare
@@ -3228,24 +3224,13 @@ def q69_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     for. Closed-interval convention: a session ending exactly when
     another starts still overlaps it (delta DESC puts +1 before -1
     at equal us)."""
-    from .queries import SESSION_GAP_US
+    from .queries import _number_sessions
 
     events = read_table(
         spark, sf_dir, "events", ["user_id", "ts", "event_id"]
     )
-    w_order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    w_run = w_order.rowsBetween(Window.unboundedPreceding, 0)
     sess = (
-        events.withColumn("us", F.unix_micros("ts"))
-        .withColumn(
-            "new_sess",
-            F.when(
-                (F.col("us") - F.lag("us").over(w_order))
-                > SESSION_GAP_US,
-                1,
-            ).otherwise(0),
-        )
-        .withColumn("sess_no", F.sum("new_sess").over(w_run))
+        _number_sessions(events)
         .groupBy("user_id", "sess_no")
         .agg(F.min("us").alias("s_us"), F.max("us").alias("e_us"))
     )
@@ -6378,8 +6363,8 @@ ORACLE_SQL: dict[str, str] = {
             SELECT user_id, ts,
                    CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
                             (PARTITION BY user_id ORDER BY ts)
-                            >= 1800000000 THEN 1 ELSE 0 END AS new_sess
-            FROM events
+                            > 1800000000 THEN 1 ELSE 0 END AS new_sess
+            FROM events WHERE ts IS NOT NULL
         ), numbered AS (
             SELECT user_id, ts,
                    sum(new_sess) OVER (PARTITION BY user_id ORDER BY ts

@@ -19,6 +19,14 @@ swaps `readStream.format("kafka")` with the same downstream plan.
 State store sizing = |windows in flight| × |event types|; the 10-min
 watermark bounds it. foreachBatch gives exactly-once parquet output
 via idempotent epoch overwrite.
+
+Sessions have one definition, queries.sessions (the engine's
+session_window, merged across micro-batches in the state store):
+q36_session_windows and the three session builders call it, so state
+is the open sessions only and a late event that bridges two sessions
+merges them. The per-user applyInPandasWithState handler
+(_per_user_stream) serves the families no engine operator covers:
+transitions, last-touch and linear attribution.
 """
 
 from __future__ import annotations
@@ -28,6 +36,9 @@ from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+
+from .extras.text import spark_tokens
+from .queries import sessions
 
 
 # streaming needs an explicit schema; the driver parquet stores ts as
@@ -346,79 +357,63 @@ class _UserFold(NamedTuple):
     `fold(user_id, pdf_iter, *state) -> (rows, new_state)` is pure: it
     walks one micro-batch of the user's rows from the stored state (or
     `init` for a user never seen) and never sees the GroupState.  Rows
-    are tuples in `out_schema` order; `timestamp` columns carry epoch
-    microseconds.  `anchor` is the index of the user's last event time
-    (us) in the state, where a bounded spelling arms its timeout.
-    `flush(user_id, *state)` gives the rows an evicted user emits
-    (none when unset).  `drop_null_users` and `check_watermark` are
-    the family's population policy and its watermark-delay guard."""
+    are tuples in `out_schema` order.  A bounded spelling arms its
+    timeout from the state's first field, the user's last event time
+    (us).  `drop_null_users` is the family's population policy."""
 
     fold: Callable
     init: tuple
     out_schema: str
     state_schema: str
-    anchor: int = 0
-    flush: Callable | None = None
     drop_null_users: bool = False
-    check_watermark: Callable | None = None
 
 
-def _per_user_handler(key, pdf_iter, state, family, horizon_us, cols,
-                      ts_cols):
+def _per_user_handler(key, pdf_iter, state, family, horizon_us, cols):
     """The GroupState protocol, once for every per-user family.
 
     A key whose event-time timeout fired (Spark delivers it only to
     keys with no data in the batch) has its state removed and emits
-    the family's flush rows.  Otherwise the fold runs from the stored
-    or initial state, and its new state is stored.  With a horizon,
-    the timeout is armed at last event + horizon; setTimeoutTimestamp
-    must exceed the current watermark, so a user whose horizon already
-    elapsed is armed at watermark + 1 ms and fires in the next batch
-    without their data.  Rows leave as one frame with the family's
-    columns."""
+    nothing.  Otherwise the fold runs from the stored or initial
+    state, and its new state is stored.  With a horizon, the timeout
+    is armed at last event + horizon; setTimeoutTimestamp must exceed
+    the current watermark, so a user whose horizon already elapsed is
+    armed at watermark + 1 ms and fires in the next batch without
+    their data.  Rows leave as one frame with the family's columns."""
     import pandas as pd
 
     (user_id,) = key
     if state.hasTimedOut:
-        rows = family.flush(user_id, *state.get) if family.flush else []
         state.remove()
-    else:
-        rows, new_state = family.fold(
-            user_id, pdf_iter, *(state.get if state.exists else family.init)
-        )
-        state.update(new_state)
-        if horizon_us is not None:
-            state.setTimeoutTimestamp(
-                max(
-                    (new_state[family.anchor] + horizon_us) // 1000 + 1,
-                    state.getCurrentWatermarkMs() + 1,
-                )
+        return
+    rows, new_state = family.fold(
+        user_id, pdf_iter, *(state.get if state.exists else family.init)
+    )
+    state.update(new_state)
+    if horizon_us is not None:
+        state.setTimeoutTimestamp(
+            max(
+                (new_state[0] + horizon_us) // 1000 + 1,
+                state.getCurrentWatermarkMs() + 1,
             )
+        )
     if rows:
-        out = pd.DataFrame(rows, columns=cols)
-        for c in ts_cols:
-            out[c] = pd.to_datetime(out[c], unit="us")
-        yield out
+        yield pd.DataFrame(rows, columns=cols)
 
 
 def _per_user_stream(events: DataFrame, watermark: str, family: _UserFold,
                      horizon_us: int | None = None) -> DataFrame:
-    """Build one per-user stateful stream: the family's population and
-    watermark checks, then withWatermark -> groupBy(user_id) ->
+    """Build one per-user stateful stream: the family's population
+    policy, then withWatermark -> groupBy(user_id) ->
     applyInPandasWithState in append mode.  `horizon_us` None keeps
     every user's state for ever (NoTimeout); a horizon evicts users
     idle past it in event time (EventTimeTimeout)."""
-    if family.check_watermark is not None:
-        family.check_watermark(watermark)
     if family.drop_null_users:
         events = events.filter(F.col("user_id").isNotNull())
-    fields = [f.split() for f in family.out_schema.split(",")]
     handler = functools.partial(
         _per_user_handler,
         family=family,
         horizon_us=horizon_us,
-        cols=[name for name, _ in fields],
-        ts_cols=[name for name, kind in fields if kind == "timestamp"],
+        cols=[f.split()[0] for f in family.out_schema.split(",")],
     )
     return (
         events.withWatermark("ts", watermark)
@@ -433,181 +428,62 @@ def _per_user_stream(events: DataFrame, watermark: str, family: _UserFold,
     )
 
 
-SESSION_GAP_US = 30 * 60 * 1_000_000  # 30 min, matches queries.q16
-
-_WATERMARK_UNITS_US = {
-    "microsecond": 1,
-    "millisecond": 1_000,
-    "second": 1_000_000,
-    "minute": 60 * 1_000_000,
-    "hour": 3600 * 1_000_000,
-    "day": 86400 * 1_000_000,
-    # Spark also accepts week/month/year delays (ADVICE r11 #3).
-    # All three are exact mirrors of Spark's own fixed
-    # CalendarInterval-to-delayMs arithmetic (a watermark "1 month"
-    # is always 31 days, "1 year" always 372 days — a fixed
-    # conversion, not an upper bound; ADVICE r12 #4), so the guard
-    # compares the exact delay Spark will apply — no conservatism
-    # needed or taken.
-    "week": 7 * 86400 * 1_000_000,
-    "month": 31 * 86400 * 1_000_000,
-    "year": 372 * 86400 * 1_000_000,
-}
-_WATERMARK_TERM = (
-    r"(\d+)\s*(microsecond|millisecond|second|minute|hour|day"
-    r"|week|month|year)s?"
-)
-
-
-def _check_session_watermark(watermark: str) -> None:
-    """Guard (ADVICE r10 #2): the session folds' batch-parity proof
-    (any admitted in-gap event t satisfies t > last_us − gap ≥
-    start_us − gap) holds only while the watermark delay ≤ the session
-    gap — a longer delay admits events more than a gap older than the
-    open session's start, which the min() fold would merge while batch
-    sessionization places them in a separate earlier session. Reject
-    such configurations at the entry point instead of silently
-    weakening the parity contract. The delay is the sum of every
-    `<int> <unit>` term, after an optional leading `interval` ("1 hour
-    30 minutes" is 90 minutes), as Spark sums them. Other strings are
-    left to Spark's own withWatermark validation."""
-    import re
-
-    text = re.sub(r"^interval\s+", "", watermark.strip().lower())
-    if re.fullmatch(rf"(?:{_WATERMARK_TERM}\s*)+", text) is None:
-        return
-    delay_us = sum(
-        int(n) * _WATERMARK_UNITS_US[unit]
-        for n, unit in re.findall(_WATERMARK_TERM, text)
-    )
-    if delay_us > SESSION_GAP_US:
-        raise ValueError(
-            f"session watermark delay {watermark!r} exceeds the "
-            f"session gap ({SESSION_GAP_US} us): late events older "
-            "than the open session's start would break batch parity "
-            "(see _session_fold's proof)"
-        )
-
-
-def _session_fold(user_id, pdf_iter, start_us, last_us, n):
-    """Per-user session fold. State = the one open session (start_us,
-    last_us, n); n == 0 means no open session.
-
-    Each batch: buffer ALL of the user's chunks, sort the union by
-    time ONCE, fold into the open session, EMIT every session closed
-    by a gap > SESSION_GAP_US, keep the trailing open session in
-    state. The whole-batch sort matters: one user's micro-batch can
-    span multiple Arrow chunks, and a per-chunk sort would compare
-    out-of-order timestamps against last_us, closing/splitting
-    sessions wrongly. Per-key-per-batch volumes are small, so
-    buffering is negligible.
-    Late rows older than the open session's last event fold in
-    EXACTLY as batch would: any in-gap event t provably satisfies
-    t > last_us − gap ≥ start_us − gap, so batch sessionization would
-    merge it into this session and extend its start backward —
-    start_us folds with min() (ADVICE r9 #4). The one case the fold
-    cannot repair is an event that arrives AFTER the fold already
-    closed a session and lands within gap of BOTH that closed
-    session's end and the open session's start — batch would merge
-    the two sessions, but the closed one is already emitted. Parity
-    with full batch sessionization therefore holds for any arrival
-    order that never bridges an already-closed gap; the watermark
-    upstream bounds lateness to the delay, so with delay ≤ gap a
-    bridge additionally requires the user to run ≥ gap − delay ahead
-    of the global max event time.
-    """
-    import pandas as pd
-
-    closed: list[tuple] = []
-    chunks = [pdf["ts"].astype("int64") // 1000 for pdf in pdf_iter]
-    if chunks:
-        for t in pd.concat(chunks).sort_values():
-            t = int(t)
-            if n == 0:
-                start_us, last_us, n = t, t, 1
-            elif t - last_us > SESSION_GAP_US:
-                closed.append((user_id, start_us, last_us, n))
-                start_us, last_us, n = t, t, 1
-            else:
-                # in-gap: t > last_us − gap ≥ start_us − gap, so batch
-                # would extend this session backward too — fold min
-                start_us = min(start_us, t)
-                last_us = max(last_us, t)
-                n += 1
-    return closed, (start_us, last_us, n)
-
-
-def _session_flush(user_id, start_us, last_us, n):
-    """An evicted user's open session is final: any later event of
-    theirs would start a new session anyway."""
-    return [(user_id, start_us, last_us, n)]
-
-
-_SESSIONS = _UserFold(
-    fold=_session_fold,
-    init=(-1, -1, 0),
-    out_schema=(
-        "user_id long, session_start timestamp, session_end timestamp, "
-        "n_events long"
-    ),
-    state_schema="start_us long, last_us long, n long",
-    anchor=1,
-    flush=_session_flush,
-    check_watermark=_check_session_watermark,
-)
-
-
-def sessionize_stream_timeout(events: DataFrame,
-                              watermark: str = "10 minutes") -> DataFrame:
-    """UNBOUNDED-DOMAIN sessionization: same custom operator as
-    sessionize_stream but with GroupStateTimeout.EventTimeTimeout —
-    each user's open session is emitted AND its state evicted once the
-    watermark proves the gap elapsed (last_event + gap), so state is
-    O(users active inside one gap+delay horizon), independent of how
-    many users the stream has ever seen. Session boundaries are
-    identical whichever path closes them: an in-batch gap closes in
-    the fold, a cross-batch gap closes by timeout; a returning user
-    simply starts fresh state. This closes the state-size
-    gap the round-9 honesty audit documented on the NoTimeout twin,
-    and it STRENGTHENS the output contract: once the watermark passes
-    every user's last+gap (parity tests land sentinel flush events),
-    the emitted set equals FULL batch sessionization — final sessions
-    included, not batch-minus-open — for every arrival order that
-    never bridges an already-closed gap (the precise envelope is in
-    _session_fold's docstring: in-gap reordering now folds exactly,
-    start_us included, via the min() fold of ADVICE r9 #4; only an
-    event landing within gap of BOTH a fold-closed session's end and
-    the next session's start, arriving after the close, breaks parity
-    — batch would merge what the stream already emitted apart).
-    State eviction is pinned from the query's own progress metrics in
-    tests/test_streaming.py."""
-    return _per_user_stream(events, watermark, _SESSIONS, SESSION_GAP_US)
-
-
 def sessionize_stream(events: DataFrame,
                       watermark: str = "10 minutes") -> DataFrame:
-    """Custom stateful operator: emits each user session as it CLOSES
-    (gap > 30 min), across micro-batch boundaries. The groupBy
-    partitions state by user_id. This is the streaming twin of
-    queries.q16_sessionization's window spelling.
+    """Streaming twin of queries.q16_sessionization: one row per user
+    session (user_id, session_start, session_end = last event,
+    n_events), built on queries.sessions, so a session splits where
+    the gap to the previous event exceeds 30 min.
 
-    State honesty (corrected round 9, same audit as dedup): under
-    "NoTimeout" the per-user state tuple is NEVER evicted — state size
-    is |users ever seen|, not |active users|; the upstream watermark
-    only drops late input. Right for bounded user domains (this
-    engine's events model); for an unbounded key domain the production
-    spelling is sessionize_stream_timeout, whose event-time timeout at
-    last_event + gap removes the state — and also EMITS each idle
-    user's final session the moment its gap elapses in event time,
-    instead of holding it open forever. Same trade as
-    dedup_event_stream vs _bounded."""
-    return _per_user_stream(events, watermark, _SESSIONS)
+    Append mode emits a session once the watermark passes its last
+    event + gap, the user's final session included, so after the
+    watermark passes every user's last event + gap the output equals
+    full batch sessionization. A late event admitted by the watermark
+    merges every open session it lands within one gap of, including
+    two it bridges; any watermark delay is accepted. State holds only
+    the open sessions and is evicted as they close, whatever the
+    number of users ever seen."""
+    return sessions(events.withWatermark("ts", watermark)).select(
+        "user_id",
+        "session_start",
+        F.col("last_event").alias("session_end"),
+        "n_events",
+    )
+
+
+sessionize_stream_timeout = sessionize_stream
+
+
+def sessionize_stream_native(events: DataFrame,
+                             watermark: str = "10 minutes",
+                             gap: str = "30 minutes") -> DataFrame:
+    """sessionize_stream with the session window's own end as
+    session_end (last event + gap), the column q36_session_windows
+    reports; `gap` sets the session gap."""
+    return sessions(events.withWatermark("ts", watermark), gap).select(
+        "user_id",
+        "session_start",
+        F.col("window_end").alias("session_end"),
+        "n_events",
+    )
 
 
 def run_sessionize_to_completion(spark: SparkSession, in_dir: str,
                                  query_name: str = "sessions_out") -> DataFrame:
     return _drain_to_memory(
         sessionize_stream(
+            _read_event_files(spark, in_dir, one_file_per_trigger=True)
+        ),
+        "append", query_name,
+    )
+
+
+def run_native_sessions_to_completion(
+    spark: SparkSession, in_dir: str,
+    query_name: str = "native_sessions_out",
+) -> DataFrame:
+    return _drain_to_memory(
+        sessionize_stream_native(
             _read_event_files(spark, in_dir, one_file_per_trigger=True)
         ),
         "append", query_name,
@@ -668,9 +544,8 @@ def transition_stream(events: DataFrame,
     consumes. Aggregating the emitted pairs reproduces the batch
     transition matrix exactly on time-split input (parity-tested);
     state is one (ts, event_id, type) triple per user EVER SEEN —
-    under "NoTimeout" it is never evicted (see sessionize_stream's
-    state-honesty note; the unbounded-domain spelling is an
-    EventTimeTimeout that drops users idle past a horizon, trading
+    under "NoTimeout" it is never evicted (the unbounded-domain
+    spelling is an EventTimeTimeout that drops users idle past a horizon, trading
     the first post-return transition of a long-idle user)."""
     return _per_user_stream(events, watermark, _TRANSITIONS)
 
@@ -764,10 +639,9 @@ def _last_touch_fold(user_id, pdf_iter, last_us, last_eid, channel,
     touch that event-time-precedes it and before every touch that
     event-time-follows it (the test corpora's time-split replays
     satisfy this; a violation mis-credits ONLY that purchase — the
-    carry self-heals for all later ones).  Contrast _session_fold,
-    whose in-gap fold repairs late rows exactly; here exact repair
-    would need the full touch path, which is precisely the
-    unbounded state this family avoids.  Returns (emit_rows,
+    carry self-heals for all later ones).  Exact repair would need
+    the full touch path, which is precisely the unbounded state this
+    family avoids.  Returns (emit_rows,
     new_state)."""
     import pandas as pd
 
@@ -835,9 +709,8 @@ def last_touch_stream(events: DataFrame,
     the SAME population policy as the batch twin (its docstring has
     the why: grouping NULL keys would conflate every anonymous
     visitor).  State is one (ts, event_id, channel) triple per user
-    EVER SEEN; under "NoTimeout" it is never evicted (see
-    sessionize_stream's state-honesty note) — the bounded-domain
-    spelling is last_touch_stream_bounded."""
+    EVER SEEN; under "NoTimeout" it is never evicted — the
+    bounded-domain spelling is last_touch_stream_bounded."""
     return _per_user_stream(events, watermark, _LAST_TOUCH)
 
 
@@ -955,8 +828,7 @@ def linear_attribution_stream(events: DataFrame,
     shares); the stream needs neither — equal splitting depends only
     on the per-channel count of preceding touches, so the keyed state
     is a channel HISTOGRAM (≤|event types| counters per user, bounded
-    regardless of path length — contrast sessionization's per-event
-    state).  `linear_attr_rollup` over the emitted credits matches
+    regardless of path length).  `linear_attr_rollup` over the emitted credits matches
     q99's per-channel attributed_revenue on time-split input
     (parity-tested), with the one honest asymmetry documented there:
     a touch channel never credited by any purchase appears in batch
@@ -1023,41 +895,6 @@ def run_last_touch_to_completion(spark: SparkSession, in_dir: str,
                                  ) -> DataFrame:
     return _drain_to_memory(
         last_touch_stream(
-            _read_event_files(spark, in_dir, one_file_per_trigger=True)
-        ),
-        "append", query_name,
-    )
-
-
-def sessionize_stream_native(events: DataFrame,
-                             watermark: str = "10 minutes",
-                             gap: str = "30 minutes") -> DataFrame:
-    """NATIVE streaming session windows (session_window + watermark,
-    append mode) — the engine-owned twin of sessionize_stream's custom
-    applyInPandasWithState operator and of the batch q36. Sessions
-    merge across micro-batches inside the state store; a session is
-    emitted once the watermark passes its end (start + events + gap).
-    State size = |open sessions|, watermark-bounded — same model as
-    the custom operator but with merge logic owned by the engine."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window(F.col("ts"), gap), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def run_native_sessions_to_completion(
-    spark: SparkSession, in_dir: str,
-    query_name: str = "native_sessions_out",
-) -> DataFrame:
-    return _drain_to_memory(
-        sessionize_stream_native(
             _read_event_files(spark, in_dir, one_file_per_trigger=True)
         ),
         "append", query_name,
@@ -2785,7 +2622,7 @@ def quality_score_stream(docs: DataFrame) -> DataFrame:
     w = _qs_weight_exprs("spark")
     return docs.selectExpr(
         "doc_id",
-        "split(lower(trim(text)), '\\\\s+') AS tokens",
+        f"{spark_tokens()} AS tokens",
     ).selectExpr(
         "doc_id",
         "size(tokens) AS token_cnt",
@@ -2829,7 +2666,7 @@ def tokenize_stream(docs: DataFrame, merges: list) -> DataFrame:
     return (
         docs.selectExpr(
             "doc_id",
-            "filter(split(lower(trim(text)), '\\\\s+'),"
+            f"filter({spark_tokens()},"
             " w -> w rlike '^[a-z]+$') AS words",
         )
         .selectExpr(

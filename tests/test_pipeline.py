@@ -837,3 +837,26 @@ def test_null_counts_matches_duckdb(spark, tmp_path):
         "id": 0, "user_id": 3, "event_type": 2, "value": 1, "props": 5
     }
     assert got == want
+
+
+def test_slow_tier_names_only_collected_tests():
+    """Every node id in tests/slow_tests.txt must be one pytest
+    collects: the id of a renamed or deleted test would otherwise sit
+    there unnoticed while the test under its new name runs in the fast
+    tier."""
+    import os
+    import subprocess
+    import sys
+
+    from tests.conftest import _slow_ids
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run(
+        [sys.executable, "-m", "pytest", "--collect-only", "-q",
+         "-p", "no:cacheprovider", "tests/"],
+        cwd=root, capture_output=True, text=True, check=True,
+    ).stdout
+    collected = {ln.strip() for ln in out.splitlines() if "::" in ln}
+    slow = _slow_ids()
+    assert slow and len(collected) > len(slow)
+    assert slow - collected == set()

@@ -35,10 +35,10 @@ def _normalize(rows, columns):
     return sorted(out)
 
 
-def _compare(spark, duck, name):
+def _compare(spark, duck, name, sf_dir=SF_CORRECT):
     qfn = entrymod.queries()[name]
     sql = entrymod.oracle_sql()[name]
-    sdf = qfn(spark, SF_CORRECT)
+    sdf = qfn(spark, sf_dir)
     spark_cols = sdf.columns
     spark_rows = [r.asDict() for r in sdf.collect()]
     ddf = duck.execute(sql).fetchdf()
@@ -53,6 +53,7 @@ def _compare(spark, duck, name):
     sn = _normalize(spark_rows, sorted(spark_cols))
     dn = _normalize(duck_rows, sorted(spark_cols))
     assert sn == dn, f"{name}: value mismatch\nspark={sn[:3]}\nduck={dn[:3]}"
+    return spark_rows
 
 
 ORACLE_BACKED = sorted(entrymod.oracle_sql().keys())
@@ -61,6 +62,55 @@ ORACLE_BACKED = sorted(entrymod.oracle_sql().keys())
 @pytest.mark.parametrize("name", ORACLE_BACKED)
 def test_query_matches_oracle(spark, duck, name):
     _compare(spark, duck, name)
+
+
+def test_session_oracles_match_engine_on_edge_rows(spark, tmp_path):
+    """q16 and q36 against their oracles on crafted events: a gap of
+    exactly 30 min (one session), a gap of 30 min + 1 us (two), and a
+    null-ts row. Spark sorts the null first, so q16 counts it into the
+    user's first session (sizes 3, 1, 1, not 2, 1, 2), and q36's
+    session_window drops it (3 sessions, not 4)."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    minute = 60 * 1_000_000
+    t0 = 1_700_000_000 * 1_000_000
+    t_split = t0 + 60 * minute + 1  # 30 min + 1 us after t0 + 30 min
+    rows = [  # (event_id, ts_us, user_id)
+        (1, t0, 1),
+        (2, t0 + 30 * minute, 1),  # exactly one gap: same session
+        (3, t_split, 1),
+        (4, t_split + 31 * minute, 1),
+        (5, None, 1),
+        (6, t0, 2),
+        (7, t0 + 10 * minute, 2),
+    ]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([r[0] for r in rows], pa.int64()),
+            "ts": pa.array([r[1] for r in rows], pa.timestamp("us")),
+            "user_id": pa.array([r[2] for r in rows], pa.int64()),
+            "event_type": pa.array(["view"] * len(rows), pa.string()),
+            "value": pa.array([1.0] * len(rows), pa.float64()),
+            "props": pa.array(["{}"] * len(rows), pa.string()),
+        }),
+        str(tmp_path / "events.parquet"),
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW events AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'events.parquet'}')"
+    )
+    q16 = _compare(spark, con, "q16_sessionization", str(tmp_path))
+    assert sorted(
+        (r["user_id"], r["n_sessions"], r["max_session_events"])
+        for r in q16
+    ) == [(1, 3, 3), (2, 1, 2)]
+    q36 = _compare(spark, con, "q36_session_windows", str(tmp_path))
+    assert sorted((r["user_id"], r["n_events"]) for r in q36) == [
+        (1, 1), (1, 1), (1, 2), (2, 2)
+    ]
 
 
 def test_entry_smoke(spark):

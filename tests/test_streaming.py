@@ -26,6 +26,74 @@ def _split_by_median_ts(raw, in_dir):
     raw.filter(us > cut).coalesce(1).write.parquet(in_dir, mode="append")
 
 
+def _write_sentinels(spark, raw, in_dir):
+    """Append two sentinel flush files (users -1 and -2, 2 and 4 days
+    past the real max ts): the +4d watermark closes every real session
+    and the +2d sentinel's own, so at most one session stays open."""
+    base = raw.select(
+        F.max(F.col("ts").cast("timestamp")).alias("m")
+    ).first().m
+    for k, off_days in enumerate((2, 4)):
+        spark.createDataFrame(
+            [(-(k + 1), -(100 + k), "view", 0.0)],
+            "user_id long, event_id long, event_type string, value double",
+        ).selectExpr(
+            "event_id", "user_id", "event_type", "value",
+            "CAST(NULL AS STRING) AS props",
+            f"CAST(timestamp'{base}' + (INTERVAL {off_days} DAYS)"
+            " AS TIMESTAMP_NTZ) AS ts",
+        ).coalesce(1).write.parquet(in_dir, mode="append")
+
+
+def _batch_sessions(spark, sf_dir):
+    """Full batch sessionization with q16's lag + running-sum numbering:
+    {(user_id, session_start, session_end = last event, n_events)}."""
+    from data_pipeline_and_visualization_dashboard_spark.io import read_table
+    from data_pipeline_and_visualization_dashboard_spark.queries import (
+        _number_sessions,
+    )
+
+    sess = (
+        _number_sessions(read_table(spark, sf_dir, "events"))
+        .groupBy("user_id", "sess_no")
+        .agg(
+            F.min("ts").alias("session_start"),
+            F.max("ts").alias("session_end"),
+            F.count(F.lit(1)).alias("n_events"),
+        )
+    )
+    return {
+        (r.user_id, r.session_start, r.session_end, r.n_events)
+        for r in sess.collect()
+    }
+
+
+def _write_waves(spark, tmp_path, in_dir, waves):
+    """One single-file micro-batch per wave of (event_id, ts string)
+    rows for user 7, with increasing mtimes so the file source reads
+    the waves in order."""
+    import glob
+    import os
+    import shutil
+    import time
+
+    os.makedirs(in_dir)
+    for i, rows in enumerate(waves, start=1):
+        df = spark.createDataFrame(
+            [(eid, ts, 7, "click", 1.0, "{}") for eid, ts in rows],
+            schema=streaming._STREAM_SCHEMA.replace(
+                "timestamp_ntz", "string"
+            ),
+        ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        path = str(tmp_path / f"w{i}")
+        df.coalesce(1).write.parquet(path)
+        src = glob.glob(path + "/part-*.parquet")[0]
+        dst = os.path.join(in_dir, f"wave_{i}.parquet")
+        shutil.copy(src, dst)
+        bump = time.time() + 10 * i
+        os.utime(dst, (bump, bump))
+
+
 def test_stream_matches_batch(spark):
     stream_out = streaming.run_to_completion(spark, SF_SMOKE)
     batch_out = q13_windowed_counts(spark, SF_SMOKE)
@@ -160,57 +228,38 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
 
 
 def test_stateful_sessionization_matches_batch(spark, tmp_path):
-    """Custom stateful operator (applyInPandasWithState): sessions
-    closed by the stream over two time-split micro-batches must equal
-    the batch window computation minus each user's final (still-open)
-    session."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from data_pipeline_and_visualization_dashboard_spark.io import read_table
-
+    """sessionize_stream over two time-split micro-batches plus two
+    sentinel flushes: once the watermark passes every real user's last
+    event + gap, the emitted sessions equal FULL batch sessionization,
+    each user's final session included, and the state store holds at
+    most the last sentinel's open session, read from the query's own
+    progress metrics. sessionize_stream_timeout is the same builder."""
+    assert streaming.sessionize_stream_timeout is streaming.sessionize_stream
     raw = spark.read.parquet(SF_SMOKE + "/events.parquet")  # ts NTZ µs
     in_dir = str(tmp_path / "sess_in")
     _split_by_median_ts(raw, in_dir)
+    _write_sentinels(spark, raw, in_dir)
 
+    q = streaming._start_memory_sink(
+        streaming.sessionize_stream(
+            streaming._read_event_files(
+                spark, in_dir, one_file_per_trigger=True
+            )
+        ),
+        "append", "sess_out",
+    )
+    state_rows = streaming._drain(
+        q, lambda q: q.lastProgress["stateOperators"][0]["numRowsTotal"]
+    )
     streamed = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in streaming.run_sessionize_to_completion(spark, in_dir).collect()
+        for r in spark.sql("SELECT * FROM sess_out").collect()
+        if r.user_id >= 0  # drop the sentinels' own sessions
     }
-
-    # batch oracle: assign sessions with the q16 window spelling, then
-    # drop each user's last session (open at end-of-stream)
-    events = read_table(spark, SF_SMOKE, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    sess = (
-        events.withColumn("us", F.unix_micros("ts"))
-        .withColumn(
-            "new_sess",
-            F.when(
-                (F.col("us") - F.lag("us").over(w))
-                > streaming.SESSION_GAP_US, 1
-            ).otherwise(0),
-        )
-        .withColumn("sess_no", F.sum("new_sess").over(run))
-        .groupBy("user_id", "sess_no")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .withColumn(
-            "is_last",
-            F.col("sess_no")
-            == F.max("sess_no").over(Window.partitionBy("user_id")),
-        )
-    )
-    batch_closed = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in sess.filter(~F.col("is_last")).collect()
-    }
-    assert streamed == batch_closed
-    assert len(streamed) > 0
+    batch = _batch_sessions(spark, SF_SMOKE)
+    assert streamed == batch
+    assert len({s[0] for s in batch}) > 1  # the state bound is meaningful
+    assert state_rows <= 1, state_rows
 
 
 def test_streaming_curation_equals_batch_histogram(spark):
@@ -1898,42 +1947,12 @@ def test_transition_fold_pairs_null_types_like_q89():
     assert rows == [] and st == (5, 1, "A")
 
 
-def test_session_fold_min_start_and_gap_close():
-    """Spark-free pin of the session fold: a late in-gap event in a
-    later batch moves the open session's start back (min fold), and a
-    gap > SESSION_GAP_US inside one batch, split over two unsorted
-    chunks, closes the session and opens the next."""
-    from data_pipeline_and_visualization_dashboard_spark.streaming import (
-        SESSION_GAP_US,
-        _session_fold,
-    )
-
-    minute = 60 * 1_000_000
-    t0 = 1_700_000_000 * 1_000_000
-    rows, st = _session_fold(
-        7, [_fold_pdf([(t0, 1, "a"), (t0 + 5 * minute, 2, "a")])], -1, -1, 0
-    )
-    assert rows == [] and st == (t0, t0 + 5 * minute, 2)
-    rows, st = _session_fold(7, [_fold_pdf([(t0 - 2 * minute, 3, "a")])], *st)
-    assert rows == [] and st == (t0 - 2 * minute, t0 + 5 * minute, 3)
-    t_in = t0 + 5 * minute + SESSION_GAP_US  # exactly one gap: in-gap
-    t_new = t_in + SESSION_GAP_US + 1
-    rows, st = _session_fold(
-        7, [_fold_pdf([(t_new, 5, "a")]), _fold_pdf([(t_in, 4, "a")])], *st
-    )
-    assert rows == [(7, t0 - 2 * minute, t_in, 4)]
-    assert st == (t_new, t_new, 1)
-
-
 def test_per_user_handler_state_protocol():
     """The one GroupState handler, driven with a fake state: it stores
     the fold's new state, arms the timeout at last event + horizon
-    (never at or below the watermark), emits timestamp columns as
-    datetimes, and on timeout removes the state and emits the
-    family's flush rows (the open session; nothing for transitions)."""
+    (never at or below the watermark), emits the fold's rows as one
+    frame with the family's columns, and on timeout removes the state and emits nothing."""
     import functools
-
-    import pandas as pd
 
     from data_pipeline_and_visualization_dashboard_spark import streaming as s
 
@@ -1958,33 +1977,27 @@ def test_per_user_handler_state_protocol():
             return self.watermark_ms
 
     def handle(family, horizon_us, state, rows):
-        fields = [f.split() for f in family.out_schema.split(",")]
         h = functools.partial(
             s._per_user_handler, family=family, horizon_us=horizon_us,
-            cols=[name for name, _ in fields],
-            ts_cols=[name for name, kind in fields if kind == "timestamp"],
+            cols=[f.split()[0] for f in family.out_schema.split(",")],
         )
         return list(h((7,), iter([_fold_pdf(rows)] if rows else []), state))
 
-    gap_ms = s.SESSION_GAP_US // 1000
+    horizon_ms = s.TRANSITION_IDLE_US // 1000
     st = FakeState()
-    rows = [(3_000_123, 1, "a")]
-    assert handle(s._SESSIONS, s.SESSION_GAP_US, st, rows) == []
-    assert st.value == (3_000_123, 3_000_123, 1)
-    assert st.deadline == 3_000_123 // 1000 + gap_ms + 1
-    st = FakeState(st.value, watermark_ms=10 * gap_ms)
-    handle(s._SESSIONS, s.SESSION_GAP_US, st, [(3_000_200, 2, "a")])
-    assert st.deadline == 10 * gap_ms + 1
+    rows = [(3_000_123, 1, "A")]
+    assert handle(s._TRANSITIONS, s.TRANSITION_IDLE_US, st, rows) == []
+    assert st.value == (3_000_123, 1, "A")
+    assert st.deadline == 3_000_123 // 1000 + horizon_ms + 1
+    st = FakeState(st.value, watermark_ms=10 * horizon_ms)
+    (out,) = handle(
+        s._TRANSITIONS, s.TRANSITION_IDLE_US, st, [(3_000_200, 2, "B")]
+    )
+    assert out.to_dict("records") == [
+        {"user_id": 7, "from_type": "A", "to_type": "B"}
+    ]
+    assert st.deadline == 10 * horizon_ms + 1
     st = FakeState(st.value, timed_out=True)
-    (out,) = handle(s._SESSIONS, s.SESSION_GAP_US, st, [])
-    assert st.value is None
-    assert out.to_dict("records") == [{
-        "user_id": 7,
-        "session_start": pd.Timestamp(3_000_123, unit="us"),
-        "session_end": pd.Timestamp(3_000_200, unit="us"),
-        "n_events": 2,
-    }]
-    st = FakeState((5, 1, "A"), timed_out=True)
     assert handle(s._TRANSITIONS, s.TRANSITION_IDLE_US, st, []) == []
     assert st.value is None
     st = FakeState()
@@ -2217,33 +2230,25 @@ def test_streaming_dedup_survives_restart(spark, tmp_path):
 
 
 def test_stateful_sessionization_survives_restart(spark, tmp_path):
-    """applyInPandasWithState recovery for the session builder
-    (streaming.py sessionize_stream): stop after two waves — every
-    user's trailing session is OPEN in the state store — restart on
-    the same checkpoint with the final wave, and closed sessions must
-    still equal the batch q16-window oracle minus each user's last
-    (never-closed) session. A lost state would restart every user's
-    open session at the first post-restart event, splitting sessions
-    at the stop boundary (wrong n_events AND wrong boundaries)."""
-    from pyspark.sql import Window
-
-    from data_pipeline_and_visualization_dashboard_spark.io import read_table
-
+    """State store recovery for sessionize_stream: stop after two
+    waves, while every user's trailing session is open only in the
+    state store, then restart on the same checkpoint with the final
+    wave plus the sentinel flushes. Output must still equal full batch
+    sessionization: lost state would split sessions at the stop
+    boundary (wrong n_events and boundaries) or never emit them."""
     raw = spark.read.parquet(SF_SMOKE + "/events.parquet")  # ts NTZ µs
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     _, t2 = _split_three_waves(raw, in_dir)
 
-    def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return (
-            streaming.sessionize_stream(ev)
+    def run():
+        streaming._drain(
+            streaming.sessionize_stream(
+                streaming._read_event_files(
+                    spark, in_dir, one_file_per_trigger=True
+                )
+            )
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out_dir)
@@ -2251,55 +2256,17 @@ def test_stateful_sessionization_survives_restart(spark, tmp_path):
             .start()
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    run()
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    _write_sentinels(spark, raw, in_dir)
+    run()
     streamed = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
         for r in spark.read.parquet(out_dir).collect()
+        if r.user_id >= 0
     }
-    # batch oracle: q16 window spelling, minus each user's final
-    # (still-open) session — same oracle as the no-restart parity test
-    events = read_table(spark, SF_SMOKE, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    sess = (
-        events.withColumn("us", F.unix_micros("ts"))
-        .withColumn(
-            "new_sess",
-            F.when(
-                (F.col("us") - F.lag("us").over(w))
-                > streaming.SESSION_GAP_US, 1
-            ).otherwise(0),
-        )
-        .withColumn("sess_no", F.sum("new_sess").over(run))
-        .groupBy("user_id", "sess_no")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .withColumn(
-            "is_last",
-            F.col("sess_no")
-            == F.max("sess_no").over(Window.partitionBy("user_id")),
-        )
-    )
-    batch_closed = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in sess.filter(~F.col("is_last")).collect()
-    }
-    assert streamed == batch_closed
-    assert len(streamed) > 0
+    assert streamed == _batch_sessions(spark, SF_SMOKE)
 
 
 def test_stream_stream_join_survives_restart(spark, tmp_path):
@@ -2524,186 +2491,6 @@ def test_bounded_dedup_matches_batch_and_evicts_state(spark, tmp_path):
     assert state_narrow < n_all / 2
 
 
-def test_timeout_sessionization_full_batch_parity_and_eviction(
-    spark, tmp_path
-):
-    """sessionize_stream_timeout: once sentinel flush events push the
-    final watermark past every real user's last_event + gap, the
-    emitted sessions must equal FULL batch sessionization — each
-    user's final session included, the stronger contract the timeout
-    eviction buys — and the state store must be nearly empty at
-    end-of-stream (only the last sentinel user's session can remain
-    open), read from the query's own progress metrics."""
-    from pyspark.sql import Window
-
-    from data_pipeline_and_visualization_dashboard_spark.io import read_table
-
-    raw = spark.read.parquet(SF_SMOKE + "/events.parquet")  # ts NTZ µs
-    in_dir = str(tmp_path / "in")
-    _split_by_median_ts(raw, in_dir)
-    # two sentinel flush batches (distinct negative users, 2 and 4
-    # days past the real max): the +4d batch's watermark closes the
-    # +2d sentinel's own session too, leaving at most one open state
-    base = raw.select(
-        F.max(F.col("ts").cast("timestamp")).alias("m")
-    ).first().m
-    for k, off_days in enumerate((2, 4)):
-        spark.createDataFrame(
-            [(-(k + 1), -(100 + k), "view", 0.0)],
-            "user_id long, event_id long, event_type string, value double",
-        ).selectExpr(
-            "event_id", "user_id", "event_type", "value",
-            "CAST(NULL AS STRING) AS props",
-            f"CAST(timestamp'{base}' + (INTERVAL {off_days} DAYS)"
-            " AS TIMESTAMP_NTZ) AS ts",
-        ).coalesce(1).write.parquet(in_dir, mode="append")
-
-    raw_s = (
-        spark.readStream.schema(streaming._STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(in_dir)
-    )
-    ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        streaming.sessionize_stream_timeout(ev)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sess_timeout_out")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
-    finally:
-        q.stop()
-    streamed = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.sql("SELECT * FROM sess_timeout_out").collect()
-        if r.user_id >= 0  # drop the sentinels' own sessions
-    }
-    # FULL batch oracle — no open-session subtraction
-    events = read_table(spark, SF_SMOKE, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    sess = (
-        events.withColumn("us", F.unix_micros("ts"))
-        .withColumn(
-            "new_sess",
-            F.when(
-                (F.col("us") - F.lag("us").over(w))
-                > streaming.SESSION_GAP_US, 1
-            ).otherwise(0),
-        )
-        .withColumn("sess_no", F.sum("new_sess").over(run))
-        .groupBy("user_id", "sess_no")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    batch_all = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in sess.collect()
-    }
-    assert streamed == batch_all
-    # eviction: every real user's state timed out and was removed;
-    # only the final sentinel's open session may remain
-    n_users = events.select("user_id").distinct().count()
-    assert state_rows <= 1, state_rows
-    assert n_users > 1  # the bound above is meaningful
-
-
-def test_timeout_sessionization_survives_restart(spark, tmp_path):
-    """Restart pin for the EventTimeTimeout family: stop after two
-    waves (every user's open session + armed timeout live only in the
-    state store), restart on the same checkpoint with the final wave
-    plus the sentinel flushes — output must STILL equal full batch
-    sessionization. A lost timeout would leak the final sessions; a
-    lost fold state would split sessions at the stop boundary."""
-    from pyspark.sql import Window
-
-    from data_pipeline_and_visualization_dashboard_spark.io import read_table
-
-    raw = spark.read.parquet(SF_SMOKE + "/events.parquet")  # ts NTZ µs
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    _, t2 = _split_three_waves(raw, in_dir)
-
-    def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        return (
-            streaming.sessionize_stream_timeout(ev)
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    base = raw.select(
-        F.max(F.col("ts").cast("timestamp")).alias("m")
-    ).first().m
-    for k, off_days in enumerate((2, 4)):
-        spark.createDataFrame(
-            [(-(k + 1), -(100 + k), "view", 0.0)],
-            "user_id long, event_id long, event_type string, value double",
-        ).selectExpr(
-            "event_id", "user_id", "event_type", "value",
-            "CAST(NULL AS STRING) AS props",
-            f"CAST(timestamp'{base}' + (INTERVAL {off_days} DAYS)"
-            " AS TIMESTAMP_NTZ) AS ts",
-        ).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    streamed = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.read.parquet(out_dir).collect()
-        if r.user_id >= 0
-    }
-    events = read_table(spark, SF_SMOKE, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    run = w.rowsBetween(Window.unboundedPreceding, 0)
-    sess = (
-        events.withColumn("us", F.unix_micros("ts"))
-        .withColumn(
-            "new_sess",
-            F.when(
-                (F.col("us") - F.lag("us").over(w))
-                > streaming.SESSION_GAP_US, 1
-            ).otherwise(0),
-        )
-        .withColumn("sess_no", F.sum("new_sess").over(run))
-        .groupBy("user_id", "sess_no")
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_end"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
-    batch_all = {
-        (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in sess.collect()
-    }
-    assert streamed == batch_all
-
-
 def test_bounded_transitions_parity_and_idle_eviction(spark, tmp_path):
     """transition_stream_bounded: (a) with the 30-day idle horizon
     dominating the smoke corpus's span, the aggregated pairs equal the
@@ -2839,39 +2626,19 @@ def test_bounded_transitions_parity_and_idle_eviction(spark, tmp_path):
 
 
 def test_session_fold_extends_start_backward_in_gap(spark, tmp_path):
-    """ADVICE r9 #4 pin: a late-but-within-watermark event OLDER than
-    the open session's stored start, arriving in a LATER micro-batch,
-    must extend the session start backward (start_us folds with min),
-    exactly as full batch sessionization would place it. Before the
-    fix the event was counted but session_start stayed at the first-
-    arrived event. Waves: [10:00, 10:05] -> [09:58 late in-gap] ->
+    """A late-but-within-watermark event OLDER than the open session's
+    start, arriving in a LATER micro-batch, must extend the session
+    start backward, exactly as full batch sessionization would place
+    it. Waves: [10:00, 10:05] -> [09:58 late in-gap] ->
     [11:00 closer]; expected closed session (09:58, 10:05, n=3)."""
-    import os
-    import time
-
     in_dir = str(tmp_path / "backfill_in")
-    os.makedirs(in_dir)
-
-    def wave(rows, mtime_bump):
-        df = spark.createDataFrame(
-            [(eid, ts, 7, "click", 1.0, "{}") for eid, ts in rows],
-            schema=streaming._STREAM_SCHEMA.replace(
-                "timestamp_ntz", "string"
-            ),
-        ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-        path = str(tmp_path / f"w{mtime_bump}")
-        df.coalesce(1).write.parquet(path)
-        import glob
-        import shutil
-        src = glob.glob(path + "/part-*.parquet")[0]
-        dst = os.path.join(in_dir, f"wave_{mtime_bump}.parquet")
-        shutil.copy(src, dst)
-        os.utime(dst, (time.time() + mtime_bump, time.time() + mtime_bump))
-
-    wave([(1, "2024-01-01 10:00:00"), (2, "2024-01-01 10:05:00")], 10)
-    # wave-1 watermark = 10:05 - 10min = 09:55, so 09:58 is admitted
-    wave([(3, "2024-01-01 09:58:00")], 20)
-    wave([(4, "2024-01-01 11:00:00")], 30)  # > last+30min: closes
+    # wave-1 watermark = 10:05 - 10min = 09:55, so 09:58 is admitted;
+    # 11:00 is > last+30min: closes
+    _write_waves(spark, tmp_path, in_dir, [
+        [(1, "2024-01-01 10:00:00"), (2, "2024-01-01 10:05:00")],
+        [(3, "2024-01-01 09:58:00")],
+        [(4, "2024-01-01 11:00:00")],
+    ])
 
     out = streaming.run_sessionize_to_completion(
         spark, in_dir, query_name="backfill_sessions"
@@ -2883,6 +2650,28 @@ def test_session_fold_extends_start_backward_in_gap(spark, tmp_path):
     assert closed == {
         (7, "2024-01-01 09:58:00", "2024-01-01 10:05:00", 3)
     }
+
+
+def test_session_stream_merges_late_bridging_event(spark, tmp_path):
+    """A late event within one gap of two sessions already split merges
+    them, as batch sessionization does. Waves: [10:00] -> [10:35]
+    (35 min later: a second session) -> [10:28 late, admitted by the
+    10:25 watermark] -> [11:30 closer]; expected one session
+    (10:00, 10:35, n=3)."""
+    in_dir = str(tmp_path / "bridge_in")
+    _write_waves(spark, tmp_path, in_dir, [
+        [(1, "2024-01-01 10:00:00")],
+        [(2, "2024-01-01 10:35:00")],
+        [(3, "2024-01-01 10:28:00")],
+        [(4, "2024-01-01 11:30:00")],
+    ])
+    out = streaming.run_sessionize_to_completion(
+        spark, in_dir, query_name="bridge_sessions"
+    )
+    assert {
+        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
+        for r in out.collect()
+    } == {(7, "2024-01-01 10:00:00", "2024-01-01 10:35:00", 3)}
 
 
 def test_bounded_transitions_survive_restart(spark, tmp_path):
@@ -2976,33 +2765,6 @@ def test_streaming_ams_f2_matches_batch_with_one_state_row(spark):
     assert est == batch.ams_est
     # O(1) state: ONE row in the aggregation state store
     assert state_rows == 1
-
-
-def test_session_watermark_beyond_gap_rejected(spark):
-    """ADVICE r10 #2: the session folds' batch-parity proof requires
-    watermark delay ≤ session gap — a longer delay admits events more
-    than a gap older than the open session's start, which the min()
-    fold would merge while batch places them in an earlier session.
-    Both entry points must reject such configurations up front;
-    delays at or under the gap (and unparseable strings, left to
-    Spark) must pass through."""
-    import pytest
-
-    ev = spark.read.parquet(SF_SMOKE + "/events.parquet").withColumn(
-        "ts", F.col("ts").cast("timestamp")
-    )
-    # week/month/year are Spark-valid units too (ADVICE r11 #3) —
-    # any count >= 1 of them exceeds the 30-min gap.
-    for bad in ("31 minutes", "1 hour", "2 days", "1801 seconds",
-                "1 week", "1 month", "1 year",
-                "1 hour 30 minutes", "interval 2 hours"):
-        with pytest.raises(ValueError, match="exceeds the session gap"):
-            streaming.sessionize_stream(ev, watermark=bad)
-        with pytest.raises(ValueError, match="exceeds the session gap"):
-            streaming.sessionize_stream_timeout(ev, watermark=bad)
-    for ok in ("30 minutes", "10 minutes", "1800 seconds",
-               "20 minutes 30 seconds", "interval 30 minutes"):
-        streaming.sessionize_stream(ev, watermark=ok)  # must not raise
 
 
 def test_ams_f2_stream_skips_null_keys_in_n_rows(spark):
