@@ -845,11 +845,12 @@ def main() -> None:
         # the ~2 s / ~4.4 s builds the record claims to price
         import shutil
 
-        wh = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)), "spark-warehouse"
+        from data_pipeline_and_visualization_dashboard_spark.io import (
+            WAREHOUSE,
         )
+
         for kind in ("cluster_table", "survivors_table"):
-            shutil.rmtree(os.path.join(wh, kind), ignore_errors=True)
+            shutil.rmtree(os.path.join(WAREHOUSE, kind), ignore_errors=True)
         # near-dup component artifact (r15): built once per corpus,
         # consumed by canonical_pick / survivor_policy /
         # quality_calibration — their per-query timings price the

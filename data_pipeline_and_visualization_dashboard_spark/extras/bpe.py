@@ -39,12 +39,10 @@ but do not LEARN merges).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import read_table, table_version
+from ..io import memo_artifact, read_table
 from .text import spark_tokens
 
 N_MERGES = 20
@@ -219,23 +217,13 @@ def train_bpe_merges(
     return merges
 
 
-# trained-merge cache: bpe_apply and repeated bench calls reuse one
-# training run per corpus generation (keyed by the documents table's
-# io.table_version so a testdata refresh invalidates it, through a URI
-# too — the stale PQ-codebook lesson from ADVICE r2)
-_MERGE_CACHE: dict[tuple[str, str], list] = {}
-
-
 def _trained_merges(spark: SparkSession, sf_dir: str) -> list:
-    # realpath-normalized so two spellings of one corpus dir (trailing
-    # slash, symlink, relative path) share a single training run
-    real = os.path.realpath(sf_dir)
-    key = (real, table_version(spark, sf_dir, "documents"))
-    if key not in _MERGE_CACHE:
-        for k in [k for k in _MERGE_CACHE if k[0] == real]:
-            del _MERGE_CACHE[k]  # evict the stale generation
-        _MERGE_CACHE[key] = train_bpe_merges(spark, sf_dir)
-    return _MERGE_CACHE[key]
+    """The trained merges, once per corpus version (io.memo_artifact):
+    bpe_apply and repeated calls reuse one training run."""
+    return memo_artifact(
+        spark, sf_dir, "bpe_merges", ("documents",),
+        lambda: train_bpe_merges(spark, sf_dir),
+    )
 
 
 def bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:

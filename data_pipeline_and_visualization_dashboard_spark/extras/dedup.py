@@ -33,7 +33,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import read_table, table_version
+from ..io import materialize_artifact, read_table
 from .hashing import (
     BANDS,
     NUM_HASHES,
@@ -1484,80 +1484,6 @@ def corpus_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )  # no terminal sort: O(n) output, order-insensitive compare
 
 
-def _corpus_key(sf_dir: str) -> str:
-    """Collision-safe corpus identity for artifact cache generations
-    (ADVICE r15 #1): basename alone collides across distinct corpora
-    that share a directory name (tmp_path/'sf0.001' vs the real
-    testdata sf0.001), leaving mtime_ns as the only disambiguator —
-    which fails on coarse-mtime filesystems and mtime-preserving
-    copies.  Fold an 8-hex digest of the ABSOLUTE path into the key
-    so two corpora can never share a generation namespace.  The
-    basename stays in the key purely for human-readable warehouse
-    listings."""
-    import os
-
-    ap = os.path.abspath(os.path.normpath(sf_dir))
-    digest = hashlib.sha256(ap.encode("utf-8")).hexdigest()[:8]
-    return f"{os.path.basename(ap)}-{digest}"
-
-
-# Last field of an artifact generation name. md5 is the only hash
-# family; the field keeps the names' three-field shape, which stale
-# eviction parses.
-_GENERATION_SUFFIX = "md5"
-
-
-def _materialize_corpus_artifact(spark: SparkSession, sf_dir: str,
-                                 kind: str, build) -> DataFrame:
-    """Shared once-per-corpus artifact materializer: build() runs ONCE
-    per (corpus path, documents version) and lands as
-    parquet under spark-warehouse/{kind}/{gen}/data.parquet; later
-    calls are a plain parquet scan (WITH size stats, so downstream
-    doc-grain joins can broadcast a small artifact instead of
-    conservatively SMJ-ing a stats-less frame).  Used by
-    cluster_table (near-dup components, r15) and survivors_table
-    (curation survivors, r16).
-
-    Generation name = {corpus_key}_{version}_md5 where
-    corpus_key embeds a path digest (_corpus_key) and version is
-    io.table_version, a digest of the documents' file listing through
-    Hadoop, so a rewrite read through a URI is caught too.
-    Stale-generation eviction parses the name EXACTLY — rsplit from
-    the right, since the version is hex and the suffix has no
-    underscore — instead of
-    the r15 prefix test, which could sweep generations of any corpus
-    whose key merely started with ours (ADVICE r15 #1).  Every other
-    generation of this corpus is stale, whatever its suffix (so
-    generations of the retired xxhash64 family go too), and so are
-    legacy r15 generations keyed by bare basename (they can never be
-    read back under the new keying)."""
-    import os
-    import shutil
-
-    root = os.path.join(
-        os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        ),
-        "spark-warehouse",
-        kind,
-    )
-    ckey = _corpus_key(sf_dir)
-    legacy = os.path.basename(os.path.abspath(os.path.normpath(sf_dir)))
-    version = table_version(spark, sf_dir, "documents")
-    gen = f"{ckey}_{version}_{_GENERATION_SUFFIX}"
-    path = os.path.join(root, gen, "data.parquet")
-    if not os.path.exists(path):
-        if os.path.isdir(root):
-            for stale in os.listdir(root):
-                parts = stale.rsplit("_", 2)
-                if len(parts) == 3 and parts[0] in (ckey, legacy):
-                    shutil.rmtree(
-                        os.path.join(root, stale), ignore_errors=True
-                    )
-        build().write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
-
-
 def cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The near-dup component table as a first-class, once-per-corpus
     MATERIALIZED artifact (VERDICT r14 ask #3): run the full
@@ -1565,12 +1491,9 @@ def cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents version) and persist the (doc_id, group_id)
     frame as parquet under spark-warehouse/cluster_table/ — exactly
     how production treats dedup components (materialized once per
-    corpus build, then consumed by every downstream curation policy),
-    and the same contract as queries_ext.ann_disk_index for the ANN
-    index artifacts.  Stale generations for the same corpus are
-    removed on rebuild; the version key invalidates on in-place corpus
-    regeneration, and the path-digest key disambiguates same-named
-    corpora (ADVICE r15 #1 — see _materialize_corpus_artifact).
+    corpus build, then consumed by every downstream curation policy).
+    Keying, eviction, placement and completeness are
+    io.materialize_artifact's, as for every on-disk artifact.
 
     Consumers (canonical_pick, survivor_policy,
     text.quality_calibration, corpus_data_card) read the artifact and
@@ -1578,10 +1501,10 @@ def cluster_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     component build per query; corpus_funnel deliberately stays on
     the fresh build so the end-to-end funnel cost remains measured.
     Cached ≡ fresh is identity-tested (tests/test_extras.py)."""
-    return _materialize_corpus_artifact(
-        spark, sf_dir, "cluster_table",
-        lambda: dedup_neardup_groups(spark, sf_dir),
-    )
+    return materialize_artifact(
+        spark, sf_dir, "cluster_table", ("documents",),
+        lambda: {"data": dedup_neardup_groups(spark, sf_dir)},
+    )["data"]
 
 
 def survivors_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1608,17 +1531,17 @@ def survivors_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists between "curate" and "publish": survivor membership is
     decided once, then every publishing step (shard layout, manifest,
     data card, packs) consumes the decision instead of re-deciding."""
-    def _build() -> DataFrame:
+    def _build() -> dict[str, DataFrame]:
         surv = corpus_survivors(spark, sf_dir)
         docs = read_table(spark, sf_dir, "documents",
                           ["doc_id", "text"])
-        return docs.join(surv, "doc_id").select(
+        return {"data": docs.join(surv, "doc_id").select(
             "doc_id", *_token_hash_proj()
-        )
+        )}
 
-    return _materialize_corpus_artifact(
-        spark, sf_dir, "survivors_table", _build
-    )
+    return materialize_artifact(
+        spark, sf_dir, "survivors_table", ("documents",), _build
+    )["data"]
 
 
 def survivor_policy(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -32,7 +32,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..io import read_table, table_version
+from ..io import memo_artifact, read_table
 
 N_QUERIES = 5
 TOP_K = 10
@@ -1005,17 +1005,21 @@ def _pq_codebook(spark: SparkSession, sf_dir: str):
 
     cents[b][j] = 16-dim python float list for block b, code j.
 
-    Cached per (corpus dir, embeddings io.table_version): a serving
+    Built once per corpus version (io.memo_artifact): a serving
     system loads its codebook once, not per query — and in the bench
     harness the collect would otherwise re-run on every timed sample.
-    The version in the key (a digest of the file listing, local or
-    through a URI) invalidates the entry when the corpus parquet is
-    regenerated in place (the harness does exactly that between
-    rounds); a stale codebook would silently diverge from the DuckDB
-    oracle, which always re-derives from the current file."""
-    key = (sf_dir, table_version(spark, sf_dir, "embeddings"))
-    if key in _PQ_CODEBOOK_CACHE:
-        return _PQ_CODEBOOK_CACHE[key]
+    The version (a digest of the file listing, local or through a URI)
+    changes when the corpus parquet is regenerated in place (the
+    harness does exactly that between rounds); a stale codebook would
+    silently diverge from the DuckDB oracle, which always re-derives
+    from the current file."""
+    return memo_artifact(
+        spark, sf_dir, "pq_codebook", ("embeddings",),
+        lambda: _sample_pq_codebook(spark, sf_dir),
+    )
+
+
+def _sample_pq_codebook(spark: SparkSession, sf_dir: str) -> list:
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
     rows = _pq_unit_vectors(emb.filter(F.col("vec_id") < PQ_CODES)).collect()
     by_id = {r.vec_id: list(r.u) for r in rows}
@@ -1027,20 +1031,13 @@ def _pq_codebook(spark: SparkSession, sf_dir: str):
             f"missing: {missing}. Re-sample the codebook (e.g. lowest "
             f"{PQ_CODES} available vec_ids) for this corpus."
         )
-    cents = [
+    return [
         [
             by_id[j][b * PQ_BLOCK_DIM:(b + 1) * PQ_BLOCK_DIM]
             for j in range(PQ_CODES)
         ]
         for b in range(PQ_BLOCKS)
     ]
-    for k in [k for k in _PQ_CODEBOOK_CACHE if k[0] == sf_dir]:
-        del _PQ_CODEBOOK_CACHE[k]  # evict the stale generation
-    _PQ_CODEBOOK_CACHE[key] = cents
-    return cents
-
-
-_PQ_CODEBOOK_CACHE: dict[tuple, list] = {}
 
 
 def _pq_cnorm(cent: list) -> float:

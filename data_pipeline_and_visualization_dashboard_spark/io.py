@@ -3,7 +3,12 @@
 The reference's I/O surface: idempotent HTTP download (app.py:7-15),
 parquet scan with column projection (ipynb:68), CSV dim scan (ipynb:239),
 parquet sink (ipynb:223), SQL view registration (ipynb:242-243),
-to-pandas export (ipynb:261-271), result cache (app.py:82).
+to-pandas export (ipynb:261-271), result cache (app.py:82). The
+once-per-corpus artifacts of the LLM-pipeline extension (BPE merges,
+the PQ codebook, IVF centroids, the ANN disk index, the near-dup
+cluster and survivor tables, the bucketed join tables) are keyed,
+evicted, placed and completed here, by one rule (`memo_artifact`,
+`materialize_artifact`).
 
 Spark-first mapping: scans are lazy `spark.read` plans; projection is a
 `.select` that Catalyst pushes into the vectorized parquet reader
@@ -16,7 +21,10 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
+import shutil
 import urllib.request
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -94,6 +102,118 @@ def table_version(spark: SparkSession, sf_dir: str, name: str) -> str:
     so any rewrite, local or through a URI, gives a new version."""
     listing = file_listing(spark, os.path.join(sf_dir, f"{name}.parquet"))
     return hashlib.sha256(repr(listing).encode()).hexdigest()[:16]
+
+
+# ----------------------------------------------------------------------
+# Once-per-corpus artifacts: built once per corpus version, read many
+# times (the reference's write-clean-parquet-then-read-back, ipynb:
+# 212-243, and its cached load, app.py:82). One rule keys, evicts,
+# places and completes every one of them.
+# ----------------------------------------------------------------------
+
+# The one storage root of on-disk artifacts, one directory per kind
+# (spark-warehouse/<kind>/<generation>/). Repo-local and explicit: the
+# session's own warehouse dir is CWD-relative.
+WAREHOUSE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "spark-warehouse",
+)
+
+# Marks a generation directory complete, as Hadoop's committer marks a
+# finished job; it is written into the staging copy before the rename.
+_COMPLETE = "_SUCCESS"
+
+# Driver-side artifacts: kind -> {generation: value}.
+_MEMO: dict[str, dict[str, object]] = {}
+
+
+def corpus_key(sf_dir: str) -> str:
+    """The identity of a corpus directory: its realpath's basename
+    (non-alphanumerics as `_`, for human-readable listings and valid
+    table names) and 8 hex digits of a digest of the realpath, so
+    spellings of one directory (`d`, `d/`, a symlink) share a key and
+    two corpora that share a basename never do."""
+    real = os.path.realpath(sf_dir)
+    digest = hashlib.sha256(real.encode()).hexdigest()[:8]
+    return f"{re.sub('[^0-9A-Za-z]', '_', os.path.basename(real))}_{digest}"
+
+
+def artifact_generation(spark: SparkSession, sf_dir: str, tables: tuple,
+                        params: tuple = ()) -> str:
+    """`{corpus_key}_{version}`: the version is 16 hex digits of a
+    digest of the `table_version` of every table the artifact reads
+    and of the builder's own parameters, so a rewrite of any input
+    gives a new generation."""
+    versions = [table_version(spark, sf_dir, t) for t in tables]
+    version = hashlib.sha256(repr((versions, params)).encode()).hexdigest()
+    return f"{corpus_key(sf_dir)}_{version[:16]}"
+
+
+def evict_stale(names, gen: str, drop) -> None:
+    """Call `drop(name)` for every name in `names` that is another
+    generation of `gen`'s corpus, or a staging copy (`{gen}.{tag}`) of
+    one. Names are parsed exactly, from the right (the version is hex
+    and has no `_`), so corpora whose keys merely share a prefix are
+    left alone; staging copies of `gen` itself may belong to a
+    concurrent build and are left alone too."""
+    key, _, version = gen.rpartition("_")
+    for name in list(names):
+        k, _, v = name.rpartition("_")
+        if k == key and v.split(".")[0] != version:
+            drop(name)
+
+
+def memo_artifact(spark: SparkSession, sf_dir: str, kind: str,
+                  tables: tuple, build, params: tuple = ()):
+    """A driver-side artifact (trained merges, a codebook, centroids):
+    `build()` runs once per `artifact_generation` and its value is
+    kept in process; a new generation evicts the others of its corpus."""
+    gens = _MEMO.setdefault(kind, {})
+    gen = artifact_generation(spark, sf_dir, tables, params)
+    if gen not in gens:
+        value = build()
+        evict_stale(gens, gen, gens.pop)
+        gens[gen] = value
+    return gens[gen]
+
+
+def materialize_artifact(spark: SparkSession, sf_dir: str, kind: str,
+                         tables: tuple, build) -> dict[str, DataFrame]:
+    """An on-disk artifact: the frames `build()` returns by name are
+    written once per `artifact_generation` as `{name}.parquet` into a
+    staging directory under `WAREHOUSE/<kind>/`, which is marked
+    complete and then renamed into place, so a generation is complete
+    or absent; a killed build leaves only a staging copy, and the next
+    call rebuilds. Returns the frames read back by name (a parquet
+    scan with size stats, so a small artifact can be broadcast)."""
+    root = os.path.join(WAREHOUSE, kind)
+    gen = artifact_generation(spark, sf_dir, tables)
+    path = os.path.join(root, gen)
+    if not os.path.exists(os.path.join(path, _COMPLETE)):
+        os.makedirs(root, exist_ok=True)
+        evict_stale(os.listdir(root), gen, lambda name: shutil.rmtree(
+            os.path.join(root, name), ignore_errors=True))
+        staging = f"{path}.{uuid.uuid4().hex}"
+        try:
+            for name, df in build().items():
+                df.write.parquet(os.path.join(staging, f"{name}.parquet"))
+        except BaseException:
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        open(os.path.join(staging, _COMPLETE), "w").close()
+        try:
+            os.replace(staging, path)
+        except OSError:
+            if os.path.exists(os.path.join(path, _COMPLETE)):
+                # lost the race to a concurrent build: keep its generation
+                shutil.rmtree(staging, ignore_errors=True)
+            else:  # an incomplete generation is in the way
+                shutil.rmtree(path)
+                os.replace(staging, path)
+    return {
+        f[:-len(".parquet")]: spark.read.parquet(os.path.join(path, f))
+        for f in os.listdir(path) if f.endswith(".parquet")
+    }
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -347,7 +467,6 @@ def compact_files(spark: SparkSession, path: str,
     never sees a half-compacted directory (rename is atomic on POSIX
     and HDFS; on object stores use a manifest/table format instead)."""
     import math
-    import shutil
 
     size = sum(
         os.path.getsize(os.path.join(dp, f))
@@ -532,9 +651,6 @@ def write_training_shards_incremental(
     CHANGED fraction, the two manifest passes are reads (and the
     previous side can come straight from the persisted
     shard_manifest.parquet artifact, dropping one of them)."""
-    import os
-    import shutil
-
     from .extras.dedup import (
         N_TRAINING_SHARDS,
         _manifest_agg,

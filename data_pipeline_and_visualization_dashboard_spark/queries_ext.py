@@ -7,10 +7,20 @@ shapes for breadth. Every query has a DuckDB oracle twin.
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .io import read_table, table_version
+from .io import (
+    WAREHOUSE,
+    artifact_generation,
+    evict_stale,
+    materialize_artifact,
+    memo_artifact,
+    read_table,
+)
 
 
 # ----------------------------------------------------------------------
@@ -1106,8 +1116,6 @@ def train_centroids(
     bit-exact either way), same sort — trained centroids unchanged
     (bit-compared).  The corpus-sized E/M work stays fully
     distributed."""
-    import os
-
     import pyarrow.dataset as _pads
     import pyarrow.parquet as _pq
 
@@ -1165,57 +1173,30 @@ def train_centroids(
 def ivf_index(spark: SparkSession, sf_dir: str,
               k: int = IVF_K, iters: int = IVF_ITERS):
     """The IVF BUILD step as a first-class, once-per-corpus artifact:
-    train the spherical k-means centroids and cache them per (corpus
-    dir, embeddings io.table_version, k, iters) — exactly how a serving
-    system treats an index (built offline, loaded once, queried many
-    times). The version key invalidates on in-place corpus regeneration, same
-    contract as similarity._pq_codebook. Cached driver state is k×dim
-    doubles — the trained index IS that small; the corpus-sized work
-    all happened distributed inside train_centroids."""
-    key = (sf_dir, table_version(spark, sf_dir, "embeddings"), k, iters)
-    if key not in _IVF_INDEX_CACHE:
-        for stale in [s for s in _IVF_INDEX_CACHE if s[0] == sf_dir]:
-            del _IVF_INDEX_CACHE[stale]
-        _IVF_INDEX_CACHE[key] = train_centroids(spark, sf_dir, k, iters)
-    return _IVF_INDEX_CACHE[key]
-
-
-_IVF_INDEX_CACHE: dict[tuple, list] = {}
+    train the spherical k-means centroids once per (corpus version,
+    k, iters) (io.memo_artifact) — exactly how a serving system treats
+    an index (built offline, loaded once, queried many times). Cached
+    driver state is k×dim doubles — the trained index IS that small;
+    the corpus-sized work all happened distributed inside
+    train_centroids."""
+    return memo_artifact(
+        spark, sf_dir, "ivf_index", ("embeddings",),
+        lambda: train_centroids(spark, sf_dir, k, iters), (k, iters),
+    )
 
 
 def ann_disk_index(spark: SparkSession, sf_dir: str):
     """The ON-DISK half of the ANN index: the per-vector IVF inverted-
-    list assignment and the PQ codes, persisted as parquet under
-    spark-warehouse/ann_index/<corpus>_<version>/ (gitignored scratch,
-    rebuilt on corpus regeneration via the io.table_version key). A serving
-    system NEVER re-derives these at query time — they ARE the index:
-    corpus vectors are read once at build, queries then touch only the
-    assignment (for probe pruning), the 16x-smaller codes (for ADC),
-    and the handful of query vectors. Returns (assign_df, codes_df).
+    list assignment, the PQ codes and the random projections, persisted
+    as parquet under spark-warehouse/ann_index/ once per embeddings
+    version (io.materialize_artifact). A serving system NEVER re-derives
+    these at query time — they ARE the index: corpus vectors are read
+    once at build, queries then touch only the assignment (for probe
+    pruning), the 16x-smaller codes (for ADC), and the handful of query
+    vectors. Returns (assign_df, codes_df, proj_df)."""
+    from .extras.similarity import pq_codes, rp_project
 
-    Stale generations for the same corpus dir are removed on build."""
-    import os
-    import shutil
-
-    from .extras.similarity import pq_codes
-
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "spark-warehouse",
-        "ann_index",
-    )
-    base = os.path.basename(os.path.normpath(sf_dir))
-    version = table_version(spark, sf_dir, "embeddings")
-    d = os.path.join(root, f"{base}_{version}")
-    assign_path = os.path.join(d, "ivf_assign.parquet")
-    codes_path = os.path.join(d, "pq_codes.parquet")
-    rp_path = os.path.join(d, "rp_proj.parquet")
-    if not (os.path.exists(assign_path) and os.path.exists(codes_path)
-            and os.path.exists(rp_path)):
-        if os.path.isdir(root):
-            for stale in os.listdir(root):
-                if stale.startswith(base + "_"):
-                    shutil.rmtree(os.path.join(root, stale))
+    def build() -> dict[str, DataFrame]:
         centroids = ivf_index(spark, sf_dir)
         emb = read_table(
             spark, sf_dir, "embeddings", ["vec_id", "embedding"]
@@ -1231,18 +1212,14 @@ def ann_disk_index(spark: SparkSession, sf_dir: str):
                 ).getField("ncid")
             ).alias("centroid_id"),
         )
-        assign.write.mode("overwrite").parquet(assign_path)
-        pq_codes(spark, sf_dir).withColumnRenamed(
-            "vec_id", "c_id"
-        ).write.mode("overwrite").parquet(codes_path)
-        from .extras.similarity import rp_project
+        codes = pq_codes(spark, sf_dir).withColumnRenamed("vec_id", "c_id")
+        return {"ivf_assign": assign, "pq_codes": codes,
+                "rp_proj": rp_project(emb)}
 
-        rp_project(emb).write.mode("overwrite").parquet(rp_path)
-    return (
-        spark.read.parquet(assign_path),
-        spark.read.parquet(codes_path),
-        spark.read.parquet(rp_path),
+    index = materialize_artifact(
+        spark, sf_dir, "ann_index", ("embeddings",), build
     )
+    return index["ivf_assign"], index["pq_codes"], index["rp_proj"]
 
 
 def sim_ivf_topk(spark: SparkSession, sf_dir: str,
@@ -2194,39 +2171,28 @@ N_BUCKETS = 8
 
 
 def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Bucketed twins of lineitem/orders for this corpus generation,
-    created once per (corpus, mtime) and reused: both tables written
-    with bucketBy(N_BUCKETS, join_key) + sortBy, repartitioned to one
-    file per bucket so the sorted-bucket metadata survives. Stale
-    generations (prior testdata regens) are dropped first."""
-    import os
-    import shutil
-
-    base = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
-    mt = int(os.path.getmtime(os.path.join(sf_dir, "lineitem.parquet")))
-    t_li = f"b_lineitem_{base}_{mt}"
-    t_or = f"b_orders_{base}_{mt}"
-    # explicit repo-local storage root (NOT the session warehouse dir,
-    # which is CWD-relative and may point anywhere in a harness
-    # process) — same placement contract as ann_disk_index
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "spark-warehouse",
-        "bucketed",
-    )
+    """Bucketed twins of lineitem/orders, created once per session and
+    corpus generation (io.artifact_generation over both tables) and
+    reused: both tables written with bucketBy(N_BUCKETS, join_key) +
+    sortBy, repartitioned to one file per bucket so the sorted-bucket
+    metadata survives. The bucket spec lives in the session catalog,
+    so the tables are saveAsTable'd under spark-warehouse/bucketed/
+    rather than renamed into place; other generations of the corpus,
+    and this one's files from an earlier session, are dropped first."""
+    gen = artifact_generation(spark, sf_dir, ("lineitem", "orders"))
+    t_li, t_or = f"b_lineitem_{gen}", f"b_orders_{gen}"
+    root = os.path.join(WAREHOUSE, "bucketed")
     if not (spark.catalog.tableExists(t_li)
             and spark.catalog.tableExists(t_or)):
+
+        def drop(name: str) -> None:
+            spark.sql(f"DROP TABLE IF EXISTS b_lineitem_{name}")
+            spark.sql(f"DROP TABLE IF EXISTS b_orders_{name}")
+            shutil.rmtree(os.path.join(root, name), ignore_errors=True)
+
         if os.path.isdir(root):
-            for stale in os.listdir(root):
-                # drop stale generations AND current-name orphan dirs
-                # left by a previous session (the bucketing spec lives
-                # in the session catalog, so files alone are unusable)
-                if stale.startswith(
-                    (f"b_lineitem_{base}_", f"b_orders_{base}_")
-                ):
-                    spark.sql(f"DROP TABLE IF EXISTS {stale}")
-                    shutil.rmtree(os.path.join(root, stale),
-                                  ignore_errors=True)
+            evict_stale(os.listdir(root), gen, drop)
+        drop(gen)
         li = read_table(spark, sf_dir, "lineitem",
                         ["l_orderkey", "l_extendedprice", "l_discount"])
         orders = read_table(spark, sf_dir, "orders",
@@ -2236,11 +2202,11 @@ def _bucketed_pair(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         # bucket and the sorted-run-per-bucket guarantee is lost
         (li.repartition(N_BUCKETS, "l_orderkey").write
            .bucketBy(N_BUCKETS, "l_orderkey").sortBy("l_orderkey")
-           .option("path", os.path.join(root, t_li))
+           .option("path", os.path.join(root, gen, "lineitem"))
            .mode("overwrite").saveAsTable(t_li))
         (orders.repartition(N_BUCKETS, "o_orderkey").write
            .bucketBy(N_BUCKETS, "o_orderkey").sortBy("o_orderkey")
-           .option("path", os.path.join(root, t_or))
+           .option("path", os.path.join(root, gen, "orders"))
            .mode("overwrite").saveAsTable(t_or))
     return t_li, t_or
 

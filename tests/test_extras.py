@@ -808,6 +808,32 @@ def test_incremental_pairs_equal_full_restricted(spark):
     }
     assert inc == full and len(inc) > 0
 
+def _memo_generations(kind, sf_dir):
+    """The generations of `sf_dir`'s corpus held in io's driver-side
+    artifact memo for `kind`."""
+    from data_pipeline_and_visualization_dashboard_spark import io
+
+    key = io.corpus_key(sf_dir)
+    return [g for g in io._MEMO.get(kind, {}) if g.rpartition("_")[0] == key]
+
+
+def _drop_generations(sf_dir, *kinds):
+    """Remove a test corpus's on-disk artifact generations: eviction
+    matches corpus keys exactly, so no other corpus ever sweeps them,
+    and every pytest run would leak one (tmp_path digests never
+    repeat)."""
+    import os
+    import shutil
+
+    from data_pipeline_and_visualization_dashboard_spark import io
+
+    for kind in kinds:
+        root = os.path.join(io.WAREHOUSE, kind)
+        for g in os.listdir(root) if os.path.isdir(root) else ():
+            if g.rpartition("_")[0] == io.corpus_key(sf_dir):
+                shutil.rmtree(os.path.join(root, g), ignore_errors=True)
+
+
 def test_pq_codebook_cache_invalidates_on_regenerated_corpus(spark, tmp_path):
     """The codebook cache keys on the embeddings file mtime: when the
     corpus parquet is regenerated in place (the harness does this
@@ -837,7 +863,10 @@ def test_pq_codebook_cache_invalidates_on_regenerated_corpus(spark, tmp_path):
     write_corpus(3.0)  # regenerate in place -> new mtime, new values
     c2 = sim._pq_codebook(spark, d)
     assert c2 is not c1 and c2 != c1
-    assert len([k for k in sim._PQ_CODEBOOK_CACHE if k[0] == d]) == 1
+    assert len(_memo_generations("pq_codebook", d)) == 1
+    # a second spelling of the directory shares the entry
+    assert sim._pq_codebook(spark, d + "/") is c2
+    assert len(_memo_generations("pq_codebook", d)) == 1
 
     # corpus whose first PQ_CODES vec_ids are not all present
     spark.createDataFrame(
@@ -850,18 +879,20 @@ def test_pq_codebook_cache_invalidates_on_regenerated_corpus(spark, tmp_path):
         sim._pq_codebook(spark, d)
 
 def test_artifact_caches_follow_rewritten_uri_corpus(spark, tmp_path):
-    """The corpus-keyed artifact caches (dedup's materialized
-    generations, the PQ codebook, the trained BPE merges) must see a
-    rewrite of a corpus read through a file:// URI: each is keyed by
-    io.table_version, the Hadoop file listing Spark reads through, not
-    by a local os.stat of the URI string."""
+    """The corpus-keyed artifact caches (materialized generations, the
+    ANN disk index, the bucketed join tables, the PQ codebook, the IVF
+    centroids, the trained BPE merges) must see a rewrite of a corpus
+    read through a file:// URI: each is keyed by io.table_version, the
+    Hadoop file listing Spark reads through, not by a local os.stat of
+    the URI string."""
     import os
     import shutil
 
-    from data_pipeline_and_visualization_dashboard_spark.extras import (
-        bpe,
-        dedup,
+    from data_pipeline_and_visualization_dashboard_spark import io
+    from data_pipeline_and_visualization_dashboard_spark import (
+        queries_ext as qx,
     )
+    from data_pipeline_and_visualization_dashboard_spark.extras import bpe
     from data_pipeline_and_visualization_dashboard_spark.extras import (
         similarity as sim,
     )
@@ -869,38 +900,59 @@ def test_artifact_caches_follow_rewritten_uri_corpus(spark, tmp_path):
     uri = "file://" + str(tmp_path)
     kind = "test_uri_rewrite"
 
+    def write(name, rows, schema):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "overwrite").parquet(f"{uri}/{name}.parquet")
+
     def write_corpus(n_docs, word, scale):
-        docs = [(i, " ".join([word] * (i + 2))) for i in range(n_docs)]
-        spark.createDataFrame(docs, "doc_id long, text string").coalesce(
-            1).write.mode("overwrite").parquet(uri + "/documents.parquet")
-        vecs = [(i, [float((i * 7 + j) % 13) * scale for j in range(64)])
-                for i in range(sim.PQ_CODES + 4)]
-        spark.createDataFrame(
-            vecs, "vec_id long, embedding array<float>"
-        ).coalesce(1).write.mode("overwrite").parquet(
-            uri + "/embeddings.parquet")
+        write("documents", [(i, " ".join([word] * (i + 2)))
+                            for i in range(n_docs)],
+              "doc_id long, text string")
+        write("embeddings",
+              [(i, [float((i * 7 + j) % 13) * scale for j in range(64)])
+               for i in range(sim.PQ_CODES + n_docs)],
+              "vec_id long, embedding array<float>")
+        write("orders", [(i, word) for i in range(n_docs)],
+              "o_orderkey long, o_orderpriority string")
+        write("lineitem", [(i % n_docs, float(i), 0.0) for i in range(20)],
+              "l_orderkey long, l_extendedprice double, l_discount double")
 
     def n_docs():
-        return dedup._materialize_corpus_artifact(
-            spark, uri, kind,
-            lambda: read_table(spark, uri, "documents").select("doc_id"),
-        ).count()
+        return io.materialize_artifact(
+            spark, uri, kind, ("documents",),
+            lambda: {"data": read_table(spark, uri, "documents")
+                     .select("doc_id")},
+        )["data"].count()
+
+    def q60():
+        return [tuple(r) for r in qx.q60_bucketed_join(spark, uri).collect()]
 
     write_corpus(8, "abab", 1.0)
+    tables = []
     try:
         assert n_docs() == 8
         c1 = sim._pq_codebook(spark, uri)
         m1 = bpe._trained_merges(spark, uri)
+        v1 = qx.ivf_index(spark, uri)
+        assert qx.ann_disk_index(spark, uri)[0].count() == sim.PQ_CODES + 8
+        assert q60() == [("abab", 20, 190.0)]
+        tables += qx._bucketed_pair(spark, uri)
         write_corpus(5, "cdcd", 3.0)
         assert n_docs() == 5
         assert sim._pq_codebook(spark, uri) != c1
         m2 = bpe._trained_merges(spark, uri)
         assert m2 != m1 and m2 == bpe.train_bpe_merges(spark, uri)
+        v2 = qx.ivf_index(spark, uri)
+        assert v2 != v1 and v2 == qx.train_centroids(
+            spark, uri, qx.IVF_K, qx.IVF_ITERS)
+        assert qx.ann_disk_index(spark, uri)[0].count() == sim.PQ_CODES + 5
+        assert q60() == [("cdcd", 20, 190.0)]
+        tables += qx._bucketed_pair(spark, uri)
     finally:
-        shutil.rmtree(os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "spark-warehouse", kind,
-        ), ignore_errors=True)
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        shutil.rmtree(os.path.join(io.WAREHOUSE, kind), ignore_errors=True)
+        _drop_generations(uri, "ann_index", "bucketed")
 
 
 def test_hash_stage_md5_matches_duck_and_xxhash_counts(spark, duck):
@@ -920,6 +972,9 @@ def test_pretrained_ivf_serving_equals_retrained(spark):
     from data_pipeline_and_visualization_dashboard_spark import queries_ext as qx
 
     assert qx.ivf_index(spark, SF_SMOKE) is qx.ivf_index(spark, SF_SMOKE)
+    # a second spelling of the directory shares the entry
+    assert qx.ivf_index(spark, SF_SMOKE + "/") is qx.ivf_index(spark, SF_SMOKE)
+    assert len(_memo_generations("ivf_index", SF_SMOKE)) == 1
     a = sorted(tuple(r) for r in qx.sim_ivf_topk(spark, SF_SMOKE).collect())
     b = sorted(
         tuple(r)
@@ -1585,17 +1640,19 @@ def test_cluster_table_artifact_identity_and_rebuild(spark, tmp_path):
     generation without rebuilding (pinned via the artifact's mtime),
     and a corpus-mtime bump invalidates the generation (stale dir
     removed, new one built) — while generations of a DIFFERENT corpus
-    that happens to share a basename are left alone (ADVICE r15 #1:
-    the generation key folds a digest of the absolute path, and
-    eviction parses the key exactly instead of prefix-matching)."""
+    that happens to share a basename are left alone, for the cluster
+    table and the ANN disk index alike (ADVICE r15 #1: the generation
+    key folds a digest of the path, and eviction parses the key
+    exactly instead of prefix-matching)."""
     import glob
     import os
 
+    from data_pipeline_and_visualization_dashboard_spark import io
     from data_pipeline_and_visualization_dashboard_spark.extras.dedup import (
-        _corpus_key, cluster_table, dedup_neardup_groups,
+        cluster_table, dedup_neardup_groups,
     )
-    from data_pipeline_and_visualization_dashboard_spark.io import (
-        table_version,
+    from data_pipeline_and_visualization_dashboard_spark.queries_ext import (
+        ann_disk_index,
     )
 
     fresh = sorted(
@@ -1604,14 +1661,10 @@ def test_cluster_table_artifact_identity_and_rebuild(spark, tmp_path):
     cached = sorted(map(tuple, cluster_table(spark, SF_SMOKE).collect()))
     assert cached == fresh and len(cached) > 0
 
-    root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "spark-warehouse", "cluster_table",
-    )
+    root = os.path.join(io.WAREHOUSE, "cluster_table")
     gen = os.path.join(
         root,
-        f"{_corpus_key(SF_SMOKE)}_"
-        f"{table_version(spark, SF_SMOKE, 'documents')}_md5",
+        io.artifact_generation(spark, SF_SMOKE, ("documents",)),
         "data.parquet",
     )
     assert os.path.exists(gen)
@@ -1621,6 +1674,12 @@ def test_cluster_table_artifact_identity_and_rebuild(spark, tmp_path):
     assert stamp == max(
         os.path.getmtime(p) for p in glob.glob(gen + "/*")
     )  # served, not rebuilt
+    ann_disk_index(spark, SF_SMOKE)
+    ann_gen = os.path.join(
+        io.WAREHOUSE, "ann_index",
+        io.artifact_generation(spark, SF_SMOKE, ("embeddings",)),
+    )
+    assert os.path.exists(ann_gen)
 
     # stale-generation eviction: plant a fake older generation of the
     # SAME corpus-to-be (a copy under tmp_path, so its key digest
@@ -1632,7 +1691,7 @@ def test_cluster_table_artifact_identity_and_rebuild(spark, tmp_path):
     shutil.copytree(SF_SMOKE, corpus2)
     os.utime(corpus2 / "documents.parquet")  # copytree kept the mtime
     fake = os.path.join(
-        root, f"{_corpus_key(str(corpus2))}_0_md5", "data.parquet"
+        root, f"{io.corpus_key(str(corpus2))}_0", "data.parquet"
     )
     os.makedirs(fake, exist_ok=True)
     try:
@@ -1643,18 +1702,110 @@ def test_cluster_table_artifact_identity_and_rebuild(spark, tmp_path):
         assert not os.path.exists(fake)  # stale generation removed
         # the same-basename-but-different-path corpus did NOT evict
         # the real corpus's generation (the ADVICE r15 #1 collision
-        # fix)
+        # fix), of the cluster table or of the ANN index
         assert os.path.exists(gen)
+        ann_disk_index(spark, str(corpus2))
+        assert os.path.exists(ann_gen)
     finally:
-        # exact-match eviction means OTHER corpora never sweep this
-        # tmp corpus's generations — remove them here or every pytest
-        # run leaks one (tmp_path digests never repeat)
-        import shutil as _sh
+        _drop_generations(str(corpus2), "cluster_table", "ann_index")
 
-        ckey2 = _corpus_key(str(corpus2))
-        for d in os.listdir(root):
-            if d.rsplit("_", 2)[0] == ckey2:
-                _sh.rmtree(os.path.join(root, d), ignore_errors=True)
+
+def test_killed_artifact_build_is_rebuilt(spark, tmp_path):
+    """A write job that is killed leaves `<path>/_temporary/0` and no
+    data. Planted at a generation's place, for a materialized table
+    and for the ANN disk index, it must not be served: the next call
+    rebuilds and returns the fresh rows."""
+    import os
+    import shutil
+
+    from data_pipeline_and_visualization_dashboard_spark import io
+    from data_pipeline_and_visualization_dashboard_spark.queries_ext import (
+        ann_disk_index,
+    )
+
+    d = str(tmp_path / "corpus")
+    spark.createDataFrame(
+        [(i, f"doc {i}") for i in range(6)], "doc_id long, text string"
+    ).coalesce(1).write.parquet(d + "/documents.parquet")
+    shutil.copy(SF_SMOKE + "/embeddings.parquet", d)
+    kind = "test_killed_build"
+    killed = [
+        os.path.join(io.WAREHOUSE, kind,
+                     io.artifact_generation(spark, d, ("documents",)),
+                     "data.parquet"),
+        os.path.join(io.WAREHOUSE, "ann_index",
+                     io.artifact_generation(spark, d, ("embeddings",)),
+                     "ivf_assign.parquet"),
+    ]
+    for path in killed:
+        os.makedirs(os.path.join(path, "_temporary", "0"))
+    try:
+        table = io.materialize_artifact(
+            spark, d, kind, ("documents",),
+            lambda: {"data": read_table(spark, d, "documents")},
+        )["data"]
+        assert sorted(r.doc_id for r in table.collect()) == list(range(6))
+        rows = [sorted(map(tuple, f.collect())) for f in ann_disk_index(spark, d)]
+        assert rows == [
+            sorted(map(tuple, f.collect()))
+            for f in ann_disk_index(spark, SF_SMOKE)
+        ] and all(rows)
+    finally:
+        shutil.rmtree(os.path.join(io.WAREHOUSE, kind), ignore_errors=True)
+        _drop_generations(d, "ann_index")
+
+
+def test_q60_follows_rewritten_orders(spark, tmp_path):
+    """The bucketed join tables are keyed on the version of both
+    inputs: after rewriting only orders.parquet of a copied corpus,
+    q60 in the same session equals its un-bucketed DuckDB oracle over
+    the rewritten files, not the old priority groups."""
+    import os
+    import shutil
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_and_visualization_dashboard_spark import io
+    from data_pipeline_and_visualization_dashboard_spark import (
+        queries_ext as qx,
+    )
+
+    d = str(tmp_path / "sf0.001")
+    os.makedirs(d)
+    for name in ("lineitem", "orders"):
+        shutil.copy(f"{SF_SMOKE}/{name}.parquet", d)
+
+    def check():
+        con = duckdb.connect()
+        for name in ("lineitem", "orders"):
+            con.execute(f"CREATE VIEW {name} AS SELECT * FROM "
+                        f"read_parquet('{d}/{name}.parquet')")
+        want = con.execute(qx.ORACLE_SQL["q60_bucketed_join"]).fetchall()
+        con.close()
+        got = [tuple(r) for r in qx.q60_bucketed_join(spark, d).collect()]
+        assert [g[:2] for g in got] == [w[:2] for w in want]
+        assert [g[2] for g in got] == pytest.approx([w[2] for w in want])
+        return got
+
+    tables = []
+    try:
+        assert len(check()) == 5
+        tables += qx._bucketed_pair(spark, d)
+        orders = pq.read_table(f"{d}/orders.parquet")
+        orders = orders.set_column(
+            orders.schema.get_field_index("o_orderpriority"),
+            "o_orderpriority", pa.array(["X"] * orders.num_rows),
+        )
+        os.remove(f"{d}/orders.parquet")
+        pq.write_table(orders, f"{d}/orders.parquet")
+        assert [r[0] for r in check()] == ["X"]
+        tables += qx._bucketed_pair(spark, d)
+    finally:
+        for t in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        _drop_generations(d, "bucketed")
 
 
 def test_survivors_table_artifact_identity(spark):
