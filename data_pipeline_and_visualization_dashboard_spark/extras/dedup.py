@@ -28,8 +28,6 @@ Every stage is differential-tested: the hash family is md5-derived
 
 from __future__ import annotations
 
-import hashlib
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -3523,66 +3521,64 @@ def dedup_snapshot_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(
         spark, sf_dir, "documents", ["doc_id", "text"]
     ).filter(F.col("text").isNotNull())
-    # per-INVOCATION work dir (mkdtemp), not a path keyed on sf_dir:
-    # two concurrent processes running this query at the same SF (the
-    # driver's verify + a judge-run pytest) must not rmtree each
-    # other's in-flight stream state. Prior same-keyed dirs from this
-    # process tree are reaped opportunistically to bound /tmp growth.
-    base = _os.path.join(
-        _tempfile.gettempdir(),
-        "sgraft_snapshot_ledger_"
-        + hashlib.md5(sf_dir.encode()).hexdigest()[:8],
-    )
-    _shutil.rmtree(base, ignore_errors=True)  # legacy fixed-key dir
-    work = _tempfile.mkdtemp(prefix=_os.path.basename(base) + "_")
-    in_dir = _os.path.join(work, "cdc_in")
-    sd = _os.path.join(work, "sd")
-    batch1 = docs.filter(F.col("doc_id") % 3 != 0).selectExpr(
-        "doc_id AS seq", "doc_id", "text", "'upsert' AS op"
-    )
-    batch1.coalesce(1).write.parquet(in_dir, mode="append")
-    _streaming.run_snapshot_diff_to_completion(spark, in_dir, sd)
-    batch2 = (
-        docs.filter(F.col("doc_id") % 3 == 0)
-        .selectExpr("doc_id AS seq", "doc_id", "text", "'upsert' AS op")
-        .unionByName(
-            docs.filter(
-                (F.col("doc_id") % 3 != 0) & (F.col("doc_id") % 5 == 0)
-            ).selectExpr(
-                "doc_id AS seq", "doc_id",
-                "text || ' v2' AS text", "'upsert' AS op",
+    # per-INVOCATION work dir (CDC input, stream state, checkpoint):
+    # two concurrent runs at the same SF must not share stream state.
+    # The ledger (<= 5 rows) is collected, so the dir goes on return.
+    work = _tempfile.mkdtemp(prefix="sgraft_snapshot_ledger_")
+    try:
+        in_dir = _os.path.join(work, "cdc_in")
+        sd = _os.path.join(work, "sd")
+        batch1 = docs.filter(F.col("doc_id") % 3 != 0).selectExpr(
+            "doc_id AS seq", "doc_id", "text", "'upsert' AS op"
+        )
+        batch1.coalesce(1).write.parquet(in_dir, mode="append")
+        _streaming.run_snapshot_diff_to_completion(spark, in_dir, sd)
+        batch2 = (
+            docs.filter(F.col("doc_id") % 3 == 0)
+            .selectExpr("doc_id AS seq", "doc_id", "text", "'upsert' AS op")
+            .unionByName(
+                docs.filter(
+                    (F.col("doc_id") % 3 != 0) & (F.col("doc_id") % 5 == 0)
+                ).selectExpr(
+                    "doc_id AS seq", "doc_id",
+                    "text || ' v2' AS text", "'upsert' AS op",
+                )
+            )
+            .unionByName(
+                docs.filter(
+                    (F.col("doc_id") % 3 != 0)
+                    & (F.col("doc_id") % 5 != 0)
+                    & (F.col("doc_id") % 7 == 0)
+                ).selectExpr(
+                    "doc_id AS seq", "doc_id", "text", "'upsert' AS op"
+                )
+            )
+            .unionByName(
+                docs.filter(
+                    (F.col("doc_id") % 3 != 0)
+                    & (F.col("doc_id") % 5 != 0)
+                    & (F.col("doc_id") % 7 != 0)
+                    & (F.col("doc_id") % 11 == 0)
+                ).selectExpr(
+                    "doc_id AS seq", "doc_id",
+                    "CAST(NULL AS STRING) AS text", "'delete' AS op",
+                )
             )
         )
-        .unionByName(
-            docs.filter(
-                (F.col("doc_id") % 3 != 0)
-                & (F.col("doc_id") % 5 != 0)
-                & (F.col("doc_id") % 7 == 0)
-            ).selectExpr(
-                "doc_id AS seq", "doc_id", "text", "'upsert' AS op"
-            )
+        batch2.coalesce(1).write.parquet(in_dir, mode="append")
+        ledger = _streaming.run_snapshot_diff_to_completion(
+            spark, in_dir, sd
+        ).select(
+            "epoch", "status",
+            F.col("n_docs").cast("bigint").alias("n_docs"),
+            F.col("n_chars").cast("bigint").alias("n_chars"),
         )
-        .unionByName(
-            docs.filter(
-                (F.col("doc_id") % 3 != 0)
-                & (F.col("doc_id") % 5 != 0)
-                & (F.col("doc_id") % 7 != 0)
-                & (F.col("doc_id") % 11 == 0)
-            ).selectExpr(
-                "doc_id AS seq", "doc_id",
-                "CAST(NULL AS STRING) AS text", "'delete' AS op",
-            )
-        )
+        rows = ledger.collect()
+    finally:
+        _shutil.rmtree(work, ignore_errors=True)
+    return spark.createDataFrame(rows, ledger.schema).orderBy(
+        "epoch", "status"
     )
-    batch2.coalesce(1).write.parquet(in_dir, mode="append")
-    ledger = _streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, sd
-    )
-    return ledger.select(
-        "epoch", "status",
-        F.col("n_docs").cast("bigint").alias("n_docs"),
-        F.col("n_chars").cast("bigint").alias("n_chars"),
-    ).orderBy("epoch", "status")
 
 
 _DUCK_SNAPSHOT_LEDGER_SQL = """

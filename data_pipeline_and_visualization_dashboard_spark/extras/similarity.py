@@ -13,9 +13,10 @@ Two paths, per the standard ANN playbook:
       standard recall knob, noted but not enabled by default.
 
 Dot products use built-in higher-order functions (zip_with + aggregate)
-— JVM-side, no Python. A Pandas-UDF/numpy variant exists for
-wide-vector workloads (matrix multiply beats per-row folds when dim is
-large); benchmarked in bench.py, selectable via `impl=`.
+— JVM-side, no Python. A Pandas-UDF/numpy variant, `cosine_topk_pandas`,
+exists for wide-vector workloads (matrix multiply beats per-row folds
+when dim is large); it is its own registry entry,
+`sim_cosine_topk_pandas`.
 
 Cosine values: Spark folds left-to-right; DuckDB's list_dot_product may
 sum in another order — results differ at ~1 ulp, so ranking uses

@@ -8,7 +8,8 @@ once-per-corpus artifacts of the LLM-pipeline extension (BPE merges,
 the PQ codebook, IVF centroids, the ANN disk index, the near-dup
 cluster and survivor tables, the bucketed join tables) are keyed,
 evicted, placed and completed here, by one rule (`memo_artifact`,
-`materialize_artifact`).
+`materialize_artifact`); every directory the package replaces is
+staged, marked and swapped into place by one rule, `publish_dir`.
 
 Spark-first mapping: scans are lazy `spark.read` plans; projection is a
 `.select` that Catalyst pushes into the vectorized parquet reader
@@ -23,6 +24,7 @@ import hashlib
 import os
 import re
 import shutil
+import urllib.parse
 import urllib.request
 import uuid
 
@@ -119,10 +121,6 @@ WAREHOUSE = os.path.join(
     "spark-warehouse",
 )
 
-# Marks a generation directory complete, as Hadoop's committer marks a
-# finished job; it is written into the staging copy before the rename.
-_COMPLETE = "_SUCCESS"
-
 # Driver-side artifacts: kind -> {generation: value}.
 _MEMO: dict[str, dict[str, object]] = {}
 
@@ -180,40 +178,108 @@ def memo_artifact(spark: SparkSession, sf_dir: str, kind: str,
 def materialize_artifact(spark: SparkSession, sf_dir: str, kind: str,
                          tables: tuple, build) -> dict[str, DataFrame]:
     """An on-disk artifact: the frames `build()` returns by name are
-    written once per `artifact_generation` as `{name}.parquet` into a
-    staging directory under `WAREHOUSE/<kind>/`, which is marked
-    complete and then renamed into place, so a generation is complete
-    or absent; a killed build leaves only a staging copy, and the next
-    call rebuilds. Returns the frames read back by name (a parquet
-    scan with size stats, so a small artifact can be broadcast)."""
+    published once per `artifact_generation` as `{name}.parquet` into
+    `WAREHOUSE/<kind>/<generation>` by `publish_dir`, after dropping
+    an incomplete generation in the way; a concurrent build's complete
+    generation that lands first is kept. Returns the frames read back
+    by name (a parquet scan with size stats, so a small artifact can
+    be broadcast)."""
     root = os.path.join(WAREHOUSE, kind)
     gen = artifact_generation(spark, sf_dir, tables)
     path = os.path.join(root, gen)
-    if not os.path.exists(os.path.join(path, _COMPLETE)):
+    if not _complete(path):
         os.makedirs(root, exist_ok=True)
         evict_stale(os.listdir(root), gen, lambda name: shutil.rmtree(
             os.path.join(root, name), ignore_errors=True))
-        staging = f"{path}.{uuid.uuid4().hex}"
-        try:
+        shutil.rmtree(path, ignore_errors=True)
+
+        def write(staging: str) -> None:
             for name, df in build().items():
                 df.write.parquet(os.path.join(staging, f"{name}.parquet"))
-        except BaseException:
-            shutil.rmtree(staging, ignore_errors=True)
-            raise
-        open(os.path.join(staging, _COMPLETE), "w").close()
         try:
-            os.replace(staging, path)
-        except OSError:
-            if os.path.exists(os.path.join(path, _COMPLETE)):
-                # lost the race to a concurrent build: keep its generation
-                shutil.rmtree(staging, ignore_errors=True)
-            else:  # an incomplete generation is in the way
-                shutil.rmtree(path)
-                os.replace(staging, path)
+            publish_dir(path, write)
+        except OSError:  # the rename in failed: keep a complete winner
+            if not _complete(path):
+                raise
     return {
         f[:-len(".parquet")]: spark.read.parquet(os.path.join(path, f))
         for f in os.listdir(path) if f.endswith(".parquet")
     }
+
+
+# Marks a published directory complete, as Hadoop's committer marks a
+# finished job.
+_COMPLETE = "_SUCCESS"
+
+
+def _complete(path: str) -> bool:
+    return os.path.exists(os.path.join(path, _COMPLETE))
+
+
+def local_path(path: str) -> str:
+    """`path` as an absolute local path, for the directories
+    `publish_dir` renames: a file:// URI is one; another scheme raises
+    ValueError rather than name a directory under the working one."""
+    url = urllib.parse.urlsplit(path)
+    if url.scheme not in ("", "file"):
+        raise ValueError(f"not a local path: {path}")
+    return os.path.abspath(url.path if url.scheme else path)
+
+
+def recover_dir(path: str) -> None:
+    """Step 1 of `publish_dir`: put back, or drop, the old contents a
+    killed swap left aside, and drop staging copies whose writer is
+    gone (a live one's may be a concurrent build of one generation).
+    Only the exact names a publish makes match, so a user's
+    `{path}.old` or `{path}.20240101` is never taken for debris."""
+    path = local_path(path)
+    parent, base = os.path.split(path)
+    debris = re.compile(re.escape(base) + r"\.(\d+)-[0-9a-f]{12}(\.old)?")
+    for name in os.listdir(parent) if os.path.isdir(parent) else ():
+        m = debris.fullmatch(name)
+        name = os.path.join(parent, name)
+        if m and m[2]:  # the old contents, moved aside
+            if os.path.exists(path):
+                shutil.rmtree(name)
+            else:
+                os.replace(name, path)
+        elif m:
+            try:
+                os.kill(int(m[1]), 0)  # signal 0: is the writer alive?
+            except ProcessLookupError:
+                shutil.rmtree(name, ignore_errors=True)
+            except PermissionError:  # alive, another user's
+                pass
+
+
+def publish_dir(path: str, write) -> None:
+    """The one rule by which the package replaces a directory readers
+    trust (merge and monitor state, stream outputs, compacted tables,
+    artifact generations): (1) `recover_dir(path)`; (2) `write` fills
+    a sibling staging directory `{path}.{pid}-{tag}`; (3) `_SUCCESS`
+    marks it complete (underscore files are invisible to parquet
+    readers, so a fence can ride along); (4) the contents in place
+    when the publish began go aside to `{staging}.old`, the staging
+    copy is renamed in, and `recover_dir` drops the aside, or puts it
+    back if the rename in failed. A path absent at the start is
+    created, never replaced: if another publish got there first, the
+    rename in fails (OSError) and that copy stays. Each rename is
+    atomic on POSIX, so after a kill at any step recovery leaves the
+    old complete contents or the new ones, never none or a part.
+    `path` is local or a file:// URI (`local_path`)."""
+    recover_dir(path)
+    path = local_path(path)
+    existed = os.path.exists(path)
+    staging = f"{path}.{os.getpid()}-{uuid.uuid4().hex[:12]}"
+    try:
+        write(staging)
+        open(os.path.join(staging, _COMPLETE), "w").close()
+        if existed:
+            os.replace(path, staging + ".old")
+        os.replace(staging, path)
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+        recover_dir(path)
 
 
 def _ensure_session_confs(spark: SparkSession) -> None:
@@ -463,23 +529,23 @@ def compact_files(spark: SparkSession, path: str,
     writing, unlike coalesce(n) which would collapse the WRITE stage's
     upstream parallelism too). Returns the new file count.
 
-    Atomicity: writes to a sibling temp dir then renames, so a reader
-    never sees a half-compacted directory (rename is atomic on POSIX
-    and HDFS; on object stores use a manifest/table format instead)."""
+    The rewrite replaces the directory by `publish_dir`, so a kill at
+    any point leaves every row in place, in either the old or the
+    compacted files, once recovered (a local filesystem; on object
+    stores use a manifest/table format instead)."""
     import math
 
+    recover_dir(path)
     size = sum(
         os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path) for f in fs
+        for dp, _, fs in os.walk(local_path(path)) for f in fs
         if f.endswith(".parquet")
     )
     n_files = max(1, math.ceil(size / target_file_bytes))
-    tmp = path.rstrip("/") + ".compacting"
-    spark.read.parquet(path).repartition(n_files).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    shutil.rmtree(path)
-    os.replace(tmp, path)
+    publish_dir(
+        path,
+        spark.read.parquet(path).repartition(n_files).write.parquet,
+    )
     return n_files
 
 

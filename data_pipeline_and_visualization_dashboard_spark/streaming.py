@@ -17,8 +17,8 @@ tests/test_streaming.py by driving the file source to completion.
 At scale: the parquet file source is the smoke harness; production
 swaps `readStream.format("kafka")` with the same downstream plan.
 State store sizing = |windows in flight| × |event types|; the 10-min
-watermark bounds it. foreachBatch gives exactly-once parquet output
-via idempotent epoch overwrite.
+watermark bounds it. foreachBatch gives exactly-once parquet output:
+each epoch's complete result is published whole by io.publish_dir.
 
 Sessions have one definition, queries.sessions (the engine's
 session_window, merged across micro-batches in the state store):
@@ -32,12 +32,15 @@ transitions, last-touch and linear attribution.
 from __future__ import annotations
 
 import functools
+import os
+import shutil
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .extras.text import spark_tokens
+from .io import local_path, publish_dir, recover_dir
 from .queries import sessions
 
 
@@ -51,82 +54,49 @@ _STREAM_SCHEMA = (
 )
 
 
-# ---------------------------------------------------------------------------
-# Epoch-guarded atomic state commit for foreachBatch merge sinks.
-#
-# foreachBatch is AT-LEAST-ONCE: if the process dies after the state
-# swap but before the streaming checkpoint records the batch, restart
-# replays the same epoch. A last-write-wins merge is naturally
-# idempotent under that replay; an ADDITIVE merge (counts, sums) is
-# not — replaying double-counts. The fix is the standard batch-id
-# fence: persist the last-applied epoch_id WITH the state (a
-# `_LAST_EPOCH` sidecar inside the state dir — underscore-prefixed
-# files are ignored by parquet readers, same convention as _SUCCESS)
-# and make the merge a no-op for epoch_id <= last applied. The sidecar
-# rides the same atomic rename as the data, so state and fence can
-# never disagree.
-#
-# The swap itself never leaves a window with NO state dir (the old
-# rmtree-then-replace recipe did): the current dir is renamed ASIDE
-# (state -> state.old), the new dir renamed in (tmp -> state), then
-# the old removed. A crash between the two renames is recovered on the
-# next batch by restoring state.old; its fence epoch is < the replayed
-# epoch, so the replay re-merges exactly once.
-# ---------------------------------------------------------------------------
-
+# Epoch fence for the foreachBatch merge sinks. foreachBatch is
+# AT-LEAST-ONCE: if the process dies after the state is published but
+# before the streaming checkpoint records the batch, restart replays
+# the same epoch. A last-write-wins merge is naturally idempotent
+# under that replay; an ADDITIVE merge (counts, sums) is not. So the
+# state carries its last-applied epoch_id in a `_LAST_EPOCH` file
+# written into the staging copy of io.publish_dir, which swaps state
+# and fence in together, and the merge is a no-op for
+# epoch_id <= last applied.
 _EPOCH_SIDECAR = "_LAST_EPOCH"
 
 
-def _state_recover(state_dir: str) -> None:
-    """Restore a swap interrupted between rename-aside and rename-in."""
-    import os as _os
-    import shutil as _shutil
-
-    old = state_dir.rstrip("/") + ".old"
-    if _os.path.exists(state_dir):
-        # state dir is whole (the .old, if present, is pre-swap debris
-        # from a crash after rename-in but before cleanup)
-        if _os.path.exists(old):
-            _shutil.rmtree(old)
-    elif _os.path.exists(old):
-        _os.replace(old, state_dir)
-
-
 def _state_last_epoch(state_dir: str) -> int:
-    import os as _os
-
-    p = _os.path.join(state_dir, _EPOCH_SIDECAR)
-    if _os.path.exists(p):
+    p = os.path.join(local_path(state_dir), _EPOCH_SIDECAR)
+    if os.path.exists(p):
         with open(p) as f:
             return int(f.read().strip())
     return -1
 
 
-def _state_commit(merged: DataFrame, state_dir: str, epoch_id: int) -> None:
-    """Write merged state to a tmp dir (with the epoch fence inside),
-    then swap it in without a no-state window."""
-    import os as _os
-    import shutil as _shutil
+def _fenced(merged: DataFrame, epoch_id: int):
+    """io.publish_dir's `write` for a fenced sink: the merged state
+    parquet plus the `epoch_id` fence beside it."""
+    def write(staging: str) -> None:
+        merged.write.parquet(staging)
+        with open(os.path.join(staging, _EPOCH_SIDECAR), "w") as f:
+            f.write(str(epoch_id))
+    return write
 
-    tmp = state_dir.rstrip("/") + f".epoch{epoch_id}"
-    old = state_dir.rstrip("/") + ".old"
-    merged.write.mode("overwrite").parquet(tmp)
-    with open(_os.path.join(tmp, _EPOCH_SIDECAR), "w") as f:
-        f.write(str(epoch_id))
-    if _os.path.exists(old):
-        _shutil.rmtree(old)
-    if _os.path.exists(state_dir):
-        _os.replace(state_dir, old)
-    _os.replace(tmp, state_dir)
-    if _os.path.exists(old):
-        _shutil.rmtree(old)
+
+def _with_state(partial: DataFrame, state_dir: str) -> DataFrame:
+    """A fenced sink's batch partials plus its published state, if any."""
+    if not os.path.exists(local_path(state_dir)):
+        return partial
+    return partial.unionByName(partial.sparkSession.read.parquet(state_dir))
 
 
 def _epoch_is_new(state_dir: str, epoch_id: int) -> bool:
-    """The fenced merge sinks' prologue: recover an interrupted swap,
-    then say whether `epoch_id` is past the state's fence. False means
-    a replayed epoch whose merge is already in the state: skip it."""
-    _state_recover(state_dir)
+    """The fenced merge sinks' prologue: recover an interrupted
+    publish, then say whether `epoch_id` is past the state's fence.
+    False means a replayed epoch whose merge is already in the state:
+    skip it."""
+    recover_dir(state_dir)
     return epoch_id > _state_last_epoch(state_dir)
 
 
@@ -1129,16 +1099,14 @@ def upsert_state_stream(spark: SparkSession, in_dir: str, state_dir: str,
 
     foreachBatch merge: each micro-batch is reduced to per-user
     partials (latest row + count — both decomposable), merged with the
-    current state parquet, and the state is atomically replaced
-    (write-new + rename, same recipe as io.compact_files). State size
+    current state parquet, and the state is replaced by
+    io.publish_dir (staged, marked, swapped). State size
     = |distinct users|, independent of stream length; the merge cost
     per batch is state-size + batch-size, not history-size.
     Idempotence: the latest-row part is last-write-wins (naturally
     replay-safe) but n_changes is additive, so the state carries the
-    `_LAST_EPOCH` fence (see _state_commit) and a replayed epoch is a
+    `_LAST_EPOCH` fence (see _fenced) and a replayed epoch is a
     no-op — exactly-once on top of foreachBatch's at-least-once."""
-    import os as _os
-
     events = _read_event_files(spark, in_dir, one_file_per_trigger=True)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1157,10 +1125,7 @@ def upsert_state_stream(spark: SparkSession, in_dir: str, state_dir: str,
             )
             .withColumn("n_changes", F.lit(1).cast("long"))
         )
-        if _os.path.exists(state_dir):
-            partial = partial.unionByName(
-                batch_df.sparkSession.read.parquet(state_dir)
-            )
+        partial = _with_state(partial, state_dir)
         merged = (
             partial.withColumn("rn", F.row_number().over(w))
             .withColumn(
@@ -1171,7 +1136,7 @@ def upsert_state_stream(spark: SparkSession, in_dir: str, state_dir: str,
             .drop("rn", "n_changes")
             .withColumnRenamed("total_changes", "n_changes")
         )
-        _state_commit(merged, state_dir, epoch_id)
+        publish_dir(state_dir, _fenced(merged, epoch_id))
 
     return (
         events.writeStream.outputMode("append")
@@ -1234,10 +1199,8 @@ def rollup_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
     State size = |days × types| (rollup-sized, independent of stream
     length); per-batch cost = state + batch, never history. The merge
     is ADDITIVE, so replay safety cannot come from last-write-wins:
-    the state carries the `_LAST_EPOCH` fence and the swap is the
-    no-gap rename dance — see _state_commit/_state_recover above."""
-    import os as _os
-
+    the state carries the `_LAST_EPOCH` fence and is published by
+    io.publish_dir — see _fenced and _epoch_is_new above."""
     events = _read_event_files(spark, in_dir, one_file_per_trigger=True)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1250,14 +1213,11 @@ def rollup_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
             F.count(F.lit(1)).alias("n_events"),
             F.sum("value").alias("sv"),
         )
-        if _os.path.exists(state_dir):
-            partial = partial.unionByName(
-                batch_df.sparkSession.read.parquet(state_dir)
-            )
+        partial = _with_state(partial, state_dir)
         merged = partial.groupBy("event_date", "event_type").agg(
             F.sum("n_events").alias("n_events"), F.sum("sv").alias("sv")
         )
-        _state_commit(merged, state_dir, epoch_id)
+        publish_dir(state_dir, _fenced(merged, epoch_id))
 
     return (
         events.writeStream.outputMode("append")
@@ -1311,10 +1271,8 @@ def shard_manifest_stream(spark: SparkSession, in_dir: str,
 
     State size = n_shards rows, independent of stream length;
     per-batch cost = batch + n_shards, never history.  The merge is
-    additive, so replay safety is the `_LAST_EPOCH` fence + atomic
-    swap (_state_commit) — the rollup_merge_stream discipline."""
-    import os as _os
-
+    additive, so replay safety is the `_LAST_EPOCH` fence published
+    with the state (_fenced) — the rollup_merge_stream discipline."""
     from .extras.dedup import N_TRAINING_SHARDS, _shard_proj
 
     if n_shards is None:
@@ -1333,16 +1291,13 @@ def shard_manifest_stream(spark: SparkSession, in_dir: str,
                 F.expr("bit_xor(doc_hash)").alias("content_hash"),
             )
         )
-        if _os.path.exists(state_dir):
-            partial = partial.unionByName(
-                batch_df.sparkSession.read.parquet(state_dir)
-            )
+        partial = _with_state(partial, state_dir)
         merged = partial.groupBy("shard").agg(
             F.sum("n_docs").alias("n_docs"),
             F.sum("n_tokens").alias("n_tokens"),
             F.expr("bit_xor(content_hash)").alias("content_hash"),
         )
-        _state_commit(merged, state_dir, epoch_id)
+        publish_dir(state_dir, _fenced(merged, epoch_id))
 
     return (
         docs.writeStream.outputMode("append")
@@ -1413,19 +1368,14 @@ def data_card_stream(spark: SparkSession, in_dir: str, state_dir: str,
                 F.sum("dup_l").alias("n_dup"),
             )
         )
-        import os as _os
-
-        if _os.path.exists(state_dir):
-            partial = partial.unionByName(
-                batch_df.sparkSession.read.parquet(state_dir)
-            )
+        partial = _with_state(partial, state_dir)
         merged = partial.groupBy("source", "lang").agg(
             F.sum("n_docs").alias("n_docs"),
             F.sum("n_tokens").alias("n_tokens"),
             F.sum("n_kept").alias("n_kept"),
             F.sum("n_dup").alias("n_dup"),
         )
-        _state_commit(merged, state_dir, epoch_id)
+        publish_dir(state_dir, _fenced(merged, epoch_id))
 
     return (
         docs.writeStream.outputMode("append")
@@ -1607,15 +1557,17 @@ def _global_sketch_merge_stream(spark: SparkSession, in_dir: str,
     the same one-state-row aggregation persisted through foreachBatch
     with a checkpoint, so a crash/restart resumes the sums from the
     aggregation state store instead of restarting the sketch.
-    Complete-mode output is the WHOLE 1-row sketch every trigger, so
-    the sink is a plain idempotent overwrite (last-write-wins — no
-    epoch fence needed, unlike the ADDITIVE rollup merge where a
-    replayed batch would double-count)."""
+    Complete-mode output is the WHOLE sketch every trigger, so the
+    sink publishes it whole over the state dir by io.publish_dir
+    (last-write-wins — no epoch fence needed, unlike the ADDITIVE
+    rollup merge where a replayed batch would double-count); a failed
+    or killed publish leaves the previous state readable. `state_dir`
+    is local or a file:// URI (io.local_path)."""
     raw = _read_files(spark, schema, in_dir, "*.parquet",
                       one_file_per_trigger=True)
 
     def persist(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.coalesce(1).write.mode("overwrite").parquet(state_dir)
+        publish_dir(state_dir, batch_df.coalesce(1).write.parquet)
 
     return (
         agg_fn(raw)
@@ -1694,12 +1646,25 @@ def countmin_merge_stream(spark: SparkSession, in_dir: str,
                           state_dir: str, checkpoint_dir: str):
     """Restartable count-min cell monitor (_global_sketch_merge_stream
     over countmin_cell_stream): complete-mode output is the WHOLE cell
-    table every trigger, so the overwrite sink is idempotent and
+    table every trigger, so the published state is idempotent and
     restart recovery lives in the aggregation state store."""
     return _global_sketch_merge_stream(
         spark, in_dir, _STREAM_SCHEMA, countmin_cell_stream,
         state_dir, checkpoint_dir,
     )
+
+
+def _hist_domain(lo: float, hi: float) -> tuple[float, float]:
+    """A fixed histogram domain as floats. A degenerate domain would
+    not error but pile EVERY arrival into the top bin (a NULL bin
+    division), and an inverted one scatters arrivals into the edge
+    bins, so both are rejected at the entry point."""
+    lo, hi = float(lo), float(hi)
+    if not hi > lo:
+        raise ValueError(
+            f"histogram domain must satisfy hi > lo, got [{lo}, {hi})"
+        )
+    return lo, hi
 
 
 def hist_cell_stream(events: DataFrame, lo: float, hi: float) -> DataFrame:
@@ -1733,17 +1698,7 @@ def hist_cell_stream(events: DataFrame, lo: float, hi: float) -> DataFrame:
     fact-derived."""
     from .extras.sketches import hist_bin_expr
 
-    lo, hi = float(lo), float(hi)
-    # guard (r13 self-review): a degenerate domain would not error —
-    # (hi-lo)==0 makes the bin division NULL, least() skips NULLs and
-    # greatest(0, NULL->127) silently piles EVERY arrival into the top
-    # bin; an inverted domain scatters everything into the edge bins.
-    # Reject at the entry point instead of corrupting cells quietly.
-    if not hi > lo:
-        raise ValueError(
-            f"hist_cell_stream domain must satisfy hi > lo, got "
-            f"[{lo}, {hi})"
-        )
+    lo, hi = _hist_domain(lo, hi)
     return (
         events.filter(F.col("value").isNotNull())
         .selectExpr(
@@ -1806,19 +1761,19 @@ def _read_state_stamp(spark: SparkSession, state_dir: str,
                       cols: tuple, label: str):
     """The geometry-stamp tuple (`cols`) under which an existing
     geometry-stamped monitor state parquet was built, or None ONLY
-    for a genuinely absent state dir (first start). The guard fails
-    CLOSED (r13 second review): any other read problem — an
-    empty/mid-overwrite-corrupted dir (UNABLE_TO_INFER_SCHEMA: the
-    non-atomic overwrite sink can crash between delete and commit
-    while the checkpoint still holds the old-geometry counts) or a
-    pre-stamp state parquet without the geometry columns — raises
-    instead of silently disabling the same-geometry enforcement.
-    Read through Spark so the guard works on any filesystem the sink
-    writes to.  Shared by every geometry-stamped monitor
-    (hist_merge_stream's lo/hi domain, bloom_merge_stream's mb
-    width), so the fail-closed semantics can't drift per monitor."""
+    for a genuinely absent state dir (first start). It recovers an
+    interrupted publish first (io.recover_dir), so a killed swap
+    reads as the state it left (so `state_dir` is local or a file://
+    URI). The guard fails CLOSED (r13 second review): any other read
+    problem — a dir that exists but holds no readable parquet
+    (UNABLE_TO_INFER_SCHEMA) or a pre-stamp state parquet without the
+    geometry columns — raises instead of silently disabling the
+    same-geometry enforcement. Shared by every geometry-stamped
+    monitor (hist_merge_stream's lo/hi domain, bloom_merge_stream's
+    mb width), so the fail-closed semantics can't drift per monitor."""
     from pyspark.errors import AnalysisException
 
+    recover_dir(state_dir)
     try:
         df = spark.read.parquet(state_dir)
     except AnalysisException as e:
@@ -1828,13 +1783,7 @@ def _read_state_stamp(spark: SparkSession, state_dir: str,
         raise ValueError(
             f"{label} state at {state_dir} exists but is "
             f"unreadable ({cond}); cannot validate the geometry the "
-            "recovered checkpoint counts were built under. If the "
-            "overwrite sink crashed mid-write, the CHECKPOINT is "
-            "still intact and complete mode regenerates the full "
-            "cell table on the next trigger — delete ONLY the state "
-            "dir and resume with the ORIGINAL geometry to keep the "
-            "accumulated counts; start a fresh state/checkpoint "
-            "pair only if the original geometry is unknown"
+            "recovered checkpoint counts were built under"
         ) from e
     missing = [c for c in cols if c not in df.columns]
     if missing:
@@ -1931,7 +1880,7 @@ def hll_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
                      checkpoint_dir: str):
     """Restartable HLL register monitor (_global_sketch_merge_stream
     over hll_register_stream): complete-mode output is the WHOLE
-    register table every trigger, so the overwrite sink is idempotent
+    register table every trigger, so the published state is idempotent
     and restart recovery lives in the aggregation state store. One
     honesty note for the restart pin: max() is IDEMPOTENT, so a
     replayed batch could never inflate a register — what the pin
@@ -2024,7 +1973,7 @@ def bloom_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
                        checkpoint_dir: str, mb: int):
     """Restartable counting-Bloom monitor (_global_sketch_merge_stream
     over bloom_cell_stream): complete-mode output is the WHOLE cell
-    table every trigger, so the overwrite sink is idempotent and
+    table every trigger, so the published state is idempotent and
     restart recovery lives in the aggregation state store.  The width
     `mb` is the filter's GEOMETRY — recovered cells are only
     meaningful under the modulus that built them — and like the
@@ -2114,7 +2063,7 @@ def cm_join_merge_stream(spark: SparkSession, in_dir: str,
                          state_dir: str, checkpoint_dir: str):
     """Restartable join-cardinality monitor (_global_sketch_merge_stream
     over cm_join_cell_stream): complete-mode output is the WHOLE cell
-    table every trigger, so the overwrite sink is idempotent and
+    table every trigger, so the published state is idempotent and
     restart recovery lives in the aggregation state store.  The
     geometry is the module-constant CM_D/CM_W, exactly like the
     count-min monitor — no per-start stamp needed."""
@@ -2359,13 +2308,19 @@ def run_bloom_stream_to_completion(spark: SparkSession, in_dir: str,
 
 def stream_to_parquet(spark: SparkSession, sf_dir: str, out_dir: str,
                       checkpoint_dir: str):
-    """Production-shaped sink: foreachBatch + idempotent epoch overwrite
-    (exactly-once on top of the at-least-once micro-batch contract)."""
+    """Production-shaped sink: foreachBatch publishes each epoch's
+    complete result over `out_dir` by io.publish_dir — a replayed
+    epoch republishes the same rows, and a failed or killed write
+    leaves the previous epoch's output readable (exactly-once on top
+    of the at-least-once micro-batch contract). `out_dir` is local or
+    a file:// URI (io.local_path)."""
     agg = windowed_event_counts(read_event_stream(spark, sf_dir))
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        (batch_df.withColumn("epoch", F.lit(epoch_id))
-         .write.mode("overwrite").parquet(out_dir))
+        publish_dir(
+            out_dir,
+            batch_df.withColumn("epoch", F.lit(epoch_id)).write.parquet,
+        )
 
     return (
         agg.writeStream.outputMode("complete")
@@ -2397,8 +2352,6 @@ def composed_pipeline_start(spark: SparkSession, in_dir: str,
     through the crash window. Batch parity for all three after a
     mid-stream restart is tests/test_streaming.py::
     test_composed_pipeline_survives_midstream_restart."""
-    import os as _os
-
     raw = _read_files(spark, _STREAM_SCHEMA, in_dir,
                       one_file_per_trigger=True)
     monitor = (
@@ -2407,17 +2360,17 @@ def composed_pipeline_start(spark: SparkSession, in_dir: str,
         .format("memory")
         .queryName("composed_hll")
         .option(
-            "checkpointLocation", _os.path.join(root, "ckpt", "monitor")
+            "checkpointLocation", os.path.join(root, "ckpt", "monitor")
         )
         .start()
     )
     cdc = upsert_state_stream(
-        spark, in_dir, _os.path.join(root, "cdc_state"),
-        _os.path.join(root, "ckpt", "cdc"),
+        spark, in_dir, os.path.join(root, "cdc_state"),
+        os.path.join(root, "ckpt", "cdc"),
     )
     rollup = rollup_merge_stream(
-        spark, in_dir, _os.path.join(root, "rollup_state"),
-        _os.path.join(root, "ckpt", "rollup"),
+        spark, in_dir, os.path.join(root, "rollup_state"),
+        os.path.join(root, "ckpt", "rollup"),
     )
     return [monitor, cdc, rollup]
 
@@ -2468,7 +2421,7 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
     epoch-keyed subdirectory (index/epoch=N, pairs/epoch=N), so a
     replayed epoch rewrites its own output byte-for-byte instead of
     appending twice — idempotence by path layout, the simplest of the
-    replay-safety recipes in this module (cf. _state_commit's fence
+    replay-safety recipes in this module (cf. _fenced's epoch fence
     for merges that must rewrite shared state). The epoch dirs double
     as the append log: a real deployment writes them to an
     LSM/lakehouse table (Delta/Iceberg append), which is byte-layout
@@ -2479,8 +2432,6 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
     union of all epochs' pairs equals the batch pipeline's output on
     the same corpus (asserted in tests against dedup_minhash_pairs,
     bucket-cap permitting)."""
-    import os as _os
-
     from .extras.dedup import (
         BANDS,
         MAX_BUCKET,
@@ -2513,7 +2464,7 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
         )
         if not delta_meta.take(1):
             return
-        have_index = _os.path.isdir(index_dir)
+        have_index = os.path.isdir(index_dir)
         if have_index:
             all_meta = ss.read.parquet(index_dir).drop("epoch").unionByName(
                 delta_meta
@@ -2579,10 +2530,10 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
             )
         )
         pairs.write.mode("overwrite").parquet(
-            _os.path.join(pairs_dir, f"epoch={epoch_id}")
+            os.path.join(pairs_dir, f"epoch={epoch_id}")
         )
         delta_meta.write.mode("overwrite").parquet(
-            _os.path.join(index_dir, f"epoch={epoch_id}")
+            os.path.join(index_dir, f"epoch={epoch_id}")
         )
 
     return (
@@ -2598,11 +2549,9 @@ def run_minhash_index_to_completion(spark: SparkSession, in_dir: str,
     """Drive the index maintenance over the finite doc set; returns the
     union of all epochs' emitted pairs (epoch partition column
     dropped)."""
-    import os as _os
-
-    index_dir = _os.path.join(work_dir, "index")
-    pairs_dir = _os.path.join(work_dir, "pairs")
-    ckpt = _os.path.join(work_dir, "ckpt")
+    index_dir = os.path.join(work_dir, "index")
+    pairs_dir = os.path.join(work_dir, "pairs")
+    ckpt = os.path.join(work_dir, "ckpt")
     _drain(minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt))
     return spark.read.parquet(pairs_dir).drop("epoch")
 
@@ -2714,8 +2663,6 @@ def postings_index_stream(spark: SparkSession, in_dir: str,
     Replay safety: same epoch-keyed overwrite recipe as
     minhash_index_stream — a replayed epoch rewrites its own segment
     byte-for-byte instead of double-counting."""
-    import os as _os
-
     from .extras.search import _index_of, _positions_from
 
     docs = _read_files(spark, "doc_id long, text string", in_dir,
@@ -2725,7 +2672,7 @@ def postings_index_stream(spark: SparkSession, in_dir: str,
         batch = batch_df.filter(F.col("text").isNotNull())
         seg = _index_of(_positions_from(batch))
         seg.write.mode("overwrite").parquet(
-            _os.path.join(index_dir, f"epoch={epoch_id}")
+            os.path.join(index_dir, f"epoch={epoch_id}")
         )
 
     return (
@@ -2756,10 +2703,8 @@ def run_postings_index_to_completion(spark: SparkSession, in_dir: str,
                                      work_dir: str) -> DataFrame:
     """Drive the index maintenance over the finite doc set; returns
     the merged (merge-on-read) index."""
-    import os as _os
-
-    index_dir = _os.path.join(work_dir, "index")
-    ckpt = _os.path.join(work_dir, "ckpt")
+    index_dir = os.path.join(work_dir, "index")
+    ckpt = os.path.join(work_dir, "ckpt")
     _drain(postings_index_stream(spark, in_dir, index_dir, ckpt))
     return read_postings_index(spark, index_dir)
 
@@ -2780,22 +2725,19 @@ def _compact_recover(index_dir: str) -> None:
       OVER the installed fold would lose the other victims' data
       outright. Just finish deleting the aside dir.
     """
-    import os as _os
-    import shutil as _shutil
-
     aside = index_dir.rstrip("/") + ".aside"
     tmp = index_dir.rstrip("/") + ".compact_tmp"
-    if _os.path.isdir(tmp):
-        if _os.path.isdir(aside):  # roll back: restore victims
-            for d in _os.listdir(aside):
-                dst = _os.path.join(index_dir, d)
-                if _os.path.exists(dst):
-                    _shutil.rmtree(dst)
-                _os.replace(_os.path.join(aside, d), dst)
-            _os.rmdir(aside)
-        _shutil.rmtree(tmp)
-    elif _os.path.isdir(aside):  # roll forward: fold is installed
-        _shutil.rmtree(aside)
+    if os.path.isdir(tmp):
+        if os.path.isdir(aside):  # roll back: restore victims
+            for d in os.listdir(aside):
+                dst = os.path.join(index_dir, d)
+                if os.path.exists(dst):
+                    shutil.rmtree(dst)
+                os.replace(os.path.join(aside, d), dst)
+            os.rmdir(aside)
+        shutil.rmtree(tmp)
+    elif os.path.isdir(aside):  # roll forward: fold is installed
+        shutil.rmtree(aside)
 
 
 def compact_postings_segments(spark: SparkSession, index_dir: str,
@@ -2817,9 +2759,6 @@ def compact_postings_segments(spark: SparkSession, index_dir: str,
     the asides dropped; _compact_recover restores any interrupted
     state before each run. Returns the number of segments folded (0 =
     nothing to do)."""
-    import os as _os
-    import shutil as _shutil
-
     if keep_latest < 1:
         # folding the newest epoch away would break the documented
         # at-least-once invariant: a replayed last batch must find its
@@ -2828,14 +2767,14 @@ def compact_postings_segments(spark: SparkSession, index_dir: str,
     _compact_recover(index_dir)
     epochs = sorted(
         int(d.split("=", 1)[1])
-        for d in _os.listdir(index_dir)
+        for d in os.listdir(index_dir)
         if d.startswith("epoch=")
     )
     victims = epochs[: len(epochs) - keep_latest]
     if len(victims) <= 1:
         return 0
     segs = spark.read.parquet(
-        *[_os.path.join(index_dir, f"epoch={e}") for e in victims]
+        *[os.path.join(index_dir, f"epoch={e}") for e in victims]
     )
     folded = segs.groupBy("term").agg(
         F.sum("df").alias("df"),
@@ -2845,14 +2784,14 @@ def compact_postings_segments(spark: SparkSession, index_dir: str,
     tmp = index_dir.rstrip("/") + ".compact_tmp"
     aside = index_dir.rstrip("/") + ".aside"
     folded.write.mode("overwrite").parquet(tmp)
-    _os.makedirs(aside)
+    os.makedirs(aside)
     for e in victims:
-        _os.replace(
-            _os.path.join(index_dir, f"epoch={e}"),
-            _os.path.join(aside, f"epoch={e}"),
+        os.replace(
+            os.path.join(index_dir, f"epoch={e}"),
+            os.path.join(aside, f"epoch={e}"),
         )
-    _os.replace(tmp, _os.path.join(index_dir, f"epoch={victims[0]}"))
-    _shutil.rmtree(aside)
+    os.replace(tmp, os.path.join(index_dir, f"epoch={victims[0]}"))
+    shutil.rmtree(aside)
     return len(victims)
 
 
@@ -2862,34 +2801,21 @@ def hist_segments_stream(spark: SparkSession, in_dir: str,
     """Streaming histogram-sketch maintenance — the LIVE demonstration
     of the sketch's defining property (extras.sketches.hist_quantiles:
     'bin counts add across partitions, days, and corpora'): each
-    micro-batch folds its events into a (type, bin, cnt) cell frame
-    over the FIXED [lo, hi] bin grid (fixed bins are what make
+    micro-batch folds its events into hist_cell_stream's (type, bin,
+    cnt) cell frame over the FIXED [lo, hi] bin grid (the one bin
+    geometry, sketches.hist_bin_expr; fixed bins are what make
     segments mergeable — the grid is the corpus-level contract, passed
     in, never re-derived per batch) and writes it as an epoch segment;
     readers sum cells across segments and get EXACTLY the batch
     histogram (asserted in tests). Same epoch-overwrite replay safety
     as the other index streams."""
-    import os as _os
-
-    from .extras.sketches import HIST_BINS
-
+    lo, hi = _hist_domain(lo, hi)
     ev = _read_files(spark, _STREAM_SCHEMA, in_dir,
                      one_file_per_trigger=True)
 
     def write_segment(batch_df: DataFrame, epoch_id: int) -> None:
-        cells = (
-            batch_df.filter(F.col("value").isNotNull())
-            .selectExpr(
-                "event_type",
-                f"CAST(least(floor((value - {lo!r}) * {HIST_BINS}"
-                f" / ({hi!r} - {lo!r})), {HIST_BINS - 1}) AS INT)"
-                " AS bin",
-            )
-            .groupBy("event_type", "bin")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-        cells.write.mode("overwrite").parquet(
-            _os.path.join(seg_dir, f"epoch={epoch_id}")
+        hist_cell_stream(batch_df, lo, hi).write.mode("overwrite").parquet(
+            os.path.join(seg_dir, f"epoch={epoch_id}")
         )
 
     return (
@@ -2922,8 +2848,6 @@ def contamination_screen_stream(spark: SparkSession, in_dir: str,
     state — with the epoch-overwrite replay safety of the other
     ingest streams. Row-for-row ≡ the batch extras.dedup.contamination
     on the same corpus (asserted in tests)."""
-    import os as _os
-
     from .extras.dedup import CONTAM_THRESHOLD, shingle_sets_from
 
     docs = _read_files(spark, "doc_id long, text string", in_dir,
@@ -2957,7 +2881,7 @@ def contamination_screen_stream(spark: SparkSession, in_dir: str,
             (ratio >= CONTAM_THRESHOLD).alias("is_contaminated"),
         )
         out.write.mode("overwrite").parquet(
-            _os.path.join(out_dir, f"epoch={epoch_id}")
+            os.path.join(out_dir, f"epoch={epoch_id}")
         )
 
     return (
@@ -2985,8 +2909,6 @@ def ivf_assign_stream(spark: SparkSession, in_dir: str, index_dir: str,
     Per-batch cost is O(batch × k·dim literals): centroids ride the
     plan, nothing joins the base corpus. Replay safety: epoch-keyed
     overwrite, same recipe as minhash/postings index streams."""
-    import os as _os
-
     from .queries_ext import _centroid_sim_structs
 
     emb = _read_files(spark, "vec_id long, embedding array<float>, label int",
@@ -3004,7 +2926,7 @@ def ivf_assign_stream(spark: SparkSession, in_dir: str, index_dir: str,
             ),
         )
         assign.write.mode("overwrite").parquet(
-            _os.path.join(index_dir, f"epoch={epoch_id}")
+            os.path.join(index_dir, f"epoch={epoch_id}")
         )
 
     return (
@@ -3062,8 +2984,8 @@ def snapshot_diff_stream(spark: SparkSession, in_dir: str,
     delta ledger, then upsert the (doc_id, h, n_chars) state.
 
     Exactly-once on at-least-once foreachBatch: deltas are written by
-    epoch-dir OVERWRITE **before** the fenced state swap
-    (_state_commit). A replay after a crash between the two
+    epoch-dir OVERWRITE **before** the fenced state is published
+    (_fenced). A replay after a crash between the two
     recomputes from the UNCHANGED state, produces byte-identical
     deltas, overwrites the same epoch dir, and re-commits; a replay
     after the state committed hits the epoch fence and is a no-op
@@ -3071,8 +2993,6 @@ def snapshot_diff_stream(spark: SparkSession, in_dir: str,
     O(state + batch) hash-grain rows — one key-partitioned join,
     independent of stream history, the streaming analogue of the
     batch op's O(|A| + |B|) bound."""
-    import os as _os
-
     raw = _read_files(spark, _DOC_CDC_SCHEMA, in_dir,
                       one_file_per_trigger=True)
 
@@ -3099,7 +3019,7 @@ def snapshot_diff_stream(spark: SparkSession, in_dir: str,
                 .alias("len_new"),
             )
         )
-        if _os.path.exists(state_dir):
+        if os.path.exists(local_path(state_dir)):
             state = sess.read.parquet(state_dir).select(
                 "doc_id", "h", "n_chars"
             )
@@ -3146,7 +3066,7 @@ def snapshot_diff_stream(spark: SparkSession, in_dir: str,
             )
             # ledger BEFORE state swap (see docstring replay proof)
             deltas.coalesce(1).write.mode("overwrite").parquet(
-                _os.path.join(deltas_dir, f"epoch={epoch_id}")
+                os.path.join(deltas_dir, f"epoch={epoch_id}")
             )
             upserts = classified.filter(
                 F.col("op") == "upsert"
@@ -3159,7 +3079,7 @@ def snapshot_diff_stream(spark: SparkSession, in_dir: str,
             merged = state.join(
                 touched, "doc_id", "left_anti"
             ).unionByName(upserts)
-            _state_commit(merged, state_dir, epoch_id)
+            publish_dir(state_dir, _fenced(merged, epoch_id))
         finally:
             classified.unpersist()
 
@@ -3185,10 +3105,8 @@ def run_snapshot_diff_to_completion(spark: SparkSession, in_dir: str,
                                     work_dir: str) -> DataFrame:
     """Drive the snapshot-diff maintenance over the finite CDC input;
     returns the accumulated ledger."""
-    import os as _os
-
-    state_dir = _os.path.join(work_dir, "state")
-    deltas_dir = _os.path.join(work_dir, "deltas")
-    ckpt = _os.path.join(work_dir, "ckpt")
+    state_dir = os.path.join(work_dir, "state")
+    deltas_dir = os.path.join(work_dir, "deltas")
+    ckpt = os.path.join(work_dir, "ckpt")
     _drain(snapshot_diff_stream(spark, in_dir, state_dir, deltas_dir, ckpt))
     return read_snapshot_deltas(spark, deltas_dir)

@@ -2271,6 +2271,27 @@ def test_corpus_data_card_invariants(spark):
     got = {(r.source, r.lang): (r.n_docs, r.n_tokens, r.n_dup) for r in rows}
     assert got == want
 
+def test_snapshot_ledger_removes_its_work_dir(spark, tmp_path,
+                                             monkeypatch):
+    """dedup_snapshot_ledger drives a CDC stream under a per-call temp
+    work dir; the returned ledger is collected, so the call leaves no
+    work dir behind."""
+    import os
+    import tempfile
+
+    from data_pipeline_and_visualization_dashboard_spark.extras.dedup import (
+        dedup_snapshot_ledger,
+    )
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    ledger = dedup_snapshot_ledger(spark, SF_SMOKE).collect()
+    assert {r.epoch for r in ledger} == {0, 1} and len(ledger) <= 5
+    assert not [
+        n for n in os.listdir(tmp_path)
+        if n.startswith("sgraft_snapshot_ledger_")
+    ]
+
+
 def test_release_diff_card_cross_checks_snapshot_diff(spark):
     """corpus_release_diff_card (r16): the slice-grain diff card must
     roll up to dedup_snapshot_diff's per-status doc counts exactly

@@ -280,7 +280,11 @@ def test_jsonl_round_trip_with_schema(spark, tmp_path):
 
 def test_compact_files_reduces_file_count_losslessly(spark, tmp_path):
     """S9: a 64-small-file directory compacts to the computed file
-    count; row content identical before/after."""
+    count; row content identical before/after. Named by a file://
+    URI, it compacts again to the count its size and the target
+    give."""
+    import os
+
     from data_pipeline_and_visualization_dashboard_spark.io import (
         compact_files,
     )
@@ -299,6 +303,85 @@ def test_compact_files_reduces_file_count_losslessly(spark, tmp_path):
     assert len(after_files) == n < 64
     after_rows = sorted(tuple(r) for r in spark.read.parquet(d).collect())
     assert before_rows == after_rows
+    size = sum(os.path.getsize(f) for f in after_files)
+    n = compact_files(spark, "file://" + d, target_file_bytes=size // 3 + 1)
+    assert len(glob.glob(d + "/*.parquet")) == n == 3
+    assert sorted(tuple(r) for r in spark.read.parquet(d).collect()) == (
+        before_rows)
+
+
+def test_compact_files_survives_a_failed_swap(spark, tmp_path,
+                                             monkeypatch):
+    """S9: a compaction whose swap into place fails leaves every row
+    readable, and the next call compacts. Siblings that merely share
+    the directory's name (a dated snapshot, a `.old` backup) are not
+    debris of a publish and survive both calls."""
+    import glob
+    import os
+
+    import pytest
+
+    from data_pipeline_and_visualization_dashboard_spark.io import (
+        compact_files,
+    )
+
+    d = str(tmp_path / "shattered")
+    read_table(spark, SF_SMOKE, "events", ["event_id", "value"]).repartition(
+        8
+    ).write.parquet(d)
+    before = sorted(tuple(r) for r in spark.read.parquet(d).collect())
+    siblings = [d + ".20240101", d + ".2", d + ".old"]
+    for s in siblings:
+        os.makedirs(s)
+        open(os.path.join(s, "keep"), "w").close()
+    replace, failed = os.replace, []
+
+    def fail_once_onto(src, dst):
+        if dst == d and not failed:
+            failed.append(src)
+            raise OSError("swap into place failed")
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "replace", fail_once_onto)
+    with pytest.raises(OSError, match="swap into place failed"):
+        compact_files(spark, d)
+    assert failed
+    assert sorted(tuple(r) for r in spark.read.parquet(d).collect()) == before
+    n = compact_files(spark, d)
+    assert len(glob.glob(d + "/*.parquet")) == n == 1
+    assert sorted(tuple(r) for r in spark.read.parquet(d).collect()) == before
+    assert sorted(os.listdir(tmp_path)) == sorted(
+        os.path.basename(p) for p in [d, *siblings])
+    assert all(os.listdir(s) == ["keep"] for s in siblings)
+
+
+def test_publish_dir_never_replaces_a_concurrent_create(tmp_path):
+    """A publish of a path that was absent when it began creates it:
+    if another publish put the path in place meanwhile (a concurrent
+    build of one artifact generation), the rename in fails and the
+    other copy stays, never moved aside; no debris is left."""
+    import os
+
+    import pytest
+
+    from data_pipeline_and_visualization_dashboard_spark.io import (
+        publish_dir,
+    )
+
+    path = str(tmp_path / "gen")
+
+    def winner(staging):
+        os.makedirs(staging)
+        open(os.path.join(staging, "winner"), "w").close()
+
+    def loser(staging):
+        os.makedirs(staging)
+        publish_dir(path, winner)  # completes while this one writes
+
+    with pytest.raises(OSError):
+        publish_dir(path, loser)
+    assert sorted(os.listdir(path)) == ["_SUCCESS", "winner"]
+    assert os.listdir(tmp_path) == ["gen"]
 
 
 def test_incremental_ingest_processes_each_file_once(spark, tmp_path):

@@ -4,6 +4,7 @@ aggregates), per the Structured Streaming model."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from data_pipeline_and_visualization_dashboard_spark import streaming
@@ -573,38 +574,96 @@ def test_rollup_epoch_replay_is_noop(spark, tmp_path):
     assert after == before and len(before) > 0
 
 
-def test_state_commit_swap_has_no_gap_and_recovers(spark, tmp_path):
-    """_state_commit/_state_recover unit contract: the fence epoch is
-    persisted with the data, and each intermediate crash point (old
-    renamed aside / new renamed in / debris left) recovers to a whole
-    state dir with a consistent fence."""
+# io.publish_dir(path, ...) in a child process killed (os._exit) at
+# `crash`: after filling its staging copy with `src` and the fence 2
+# ("staging"), between the rename aside and the rename in ("aside"),
+# or after the rename in, before the aside is dropped ("swapped").
+_KILLED_PUBLISH = """
+import os, shutil, sys
+from data_pipeline_and_visualization_dashboard_spark import io
+path, src, fence, crash = sys.argv[1:]
+replace, rmtree = os.replace, shutil.rmtree
+
+def write(staging):
+    shutil.copytree(src, staging)
+    with open(os.path.join(staging, fence), "w") as f:
+        f.write("2")
+    if crash == "staging":
+        os._exit(9)
+
+def kill_on_rename_in(a, b):
+    if not b.endswith(".old"):
+        os._exit(9)
+    replace(a, b)
+
+def kill_on_drop_aside(p, *args, **kwargs):
+    if p.endswith(".old"):
+        os._exit(9)
+    rmtree(p, *args, **kwargs)
+
+if crash == "aside":
+    os.replace = kill_on_rename_in
+if crash == "swapped":
+    shutil.rmtree = kill_on_drop_aside
+io.publish_dir(path, write)
+"""
+
+
+@pytest.mark.parametrize("crash", ["staging", "aside", "swapped"])
+def test_publish_dir_recovers_every_crash_point(spark, tmp_path, crash):
+    """io.publish_dir's contract for the fenced sinks: the fence epoch
+    is published with the data, and a publish killed at each crash
+    point (staging copy written / old contents moved aside / new
+    contents renamed in) recovers, on the next fence check, to a whole
+    state dir with a consistent fence — the old state unless the new
+    one was already in — and leaves no debris beside it. A file://
+    URI is a local path; another scheme is refused."""
+    import glob
     import os
-    import shutil
+    import subprocess
+    import sys
+
+    from data_pipeline_and_visualization_dashboard_spark.io import (
+        publish_dir,
+    )
 
     state = str(tmp_path / "s")
     df = spark.range(3).selectExpr("id", "id * 2 AS v")
-    streaming._state_commit(df, state, 0)
+    publish_dir(state, streaming._fenced(df, 0))
     assert streaming._state_last_epoch(state) == 0
     assert spark.read.parquet(state).count() == 3
-    # commit a second epoch on top (exercises the rename-aside path)
-    streaming._state_commit(df.limit(2), state, 1)
+    # publish a second epoch on top (exercises the rename-aside path)
+    publish_dir(state, streaming._fenced(df.limit(2), 1))
     assert streaming._state_last_epoch(state) == 1
     assert spark.read.parquet(state).count() == 2
 
-    # crash between rename-aside and rename-in: only .old exists
-    os.replace(state, state + ".old")
-    streaming._state_recover(state)
-    assert streaming._state_last_epoch(state) == 1
-    assert spark.read.parquet(state).count() == 2
+    src = str(tmp_path / "src")
+    df.write.parquet(src)
+    killed = subprocess.run(
+        [sys.executable, "-c", _KILLED_PUBLISH, state, src,
+         streaming._EPOCH_SIDECAR, crash],
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        timeout=120,
+    )
+    assert killed.returncode == 9
+    assert len(os.listdir(tmp_path)) == 3  # src + what the kill left
+    assert bool(glob.glob(state + ".*.old")) == (crash != "staging")
+    new_in = crash == "swapped"
+    assert streaming._epoch_is_new(state, 2) != new_in
+    assert not glob.glob(state + ".*.old")
+    assert streaming._state_last_epoch(state) == (2 if new_in else 1)
+    assert spark.read.parquet(state).count() == (3 if new_in else 2)
+    assert sorted(os.listdir(tmp_path)) == ["s", "src"]
+    # the renames are local: a file:// URI names a local path, any
+    # other scheme is refused, not written under CWD
+    publish_dir("file://" + state, streaming._fenced(df, 3))
+    assert streaming._state_last_epoch(state) == 3
+    assert not streaming._epoch_is_new("file://" + state, 3)
+    assert streaming._with_state(df.limit(0), "file://" + state).count() == 3
+    assert sorted(os.listdir(tmp_path)) == ["s", "src"]
+    with pytest.raises(ValueError, match="not a local path"):
+        publish_dir("hdfs://" + state, streaming._fenced(df, 4))
 
-    # crash after rename-in but before .old cleanup: both exist —
-    # recover must keep the NEW state and drop the debris
-    shutil.copytree(state, state + ".old")
-    with open(os.path.join(state, streaming._EPOCH_SIDECAR), "w") as f:
-        f.write("2")
-    streaming._state_recover(state)
-    assert not os.path.exists(state + ".old")
-    assert streaming._state_last_epoch(state) == 2
 
 def test_composed_pipeline_survives_midstream_restart(spark, tmp_path):
     """The composed deployment (HLL monitor + CDC upsert + IVM rollup
@@ -872,11 +931,11 @@ def test_streaming_histogram_segments_merge_to_batch(spark, tmp_path):
     one-pass batch histogram cell-for-cell — and total counts must
     conserve the corpus."""
     from data_pipeline_and_visualization_dashboard_spark.extras.sketches import (
-        HIST_BINS,
+        HIST_BINS, hist_bin_expr,
     )
     from data_pipeline_and_visualization_dashboard_spark.io import read_table
     from data_pipeline_and_visualization_dashboard_spark.streaming import (
-        hist_segments_stream, read_hist_segments,
+        hist_cell_stream, hist_segments_stream, read_hist_segments,
     )
     from tests.conftest import SF_SMOKE
 
@@ -884,11 +943,16 @@ def test_streaming_histogram_segments_merge_to_batch(spark, tmp_path):
         F.col("value").isNotNull()
     )
     lo, hi = ev.agg(F.min("value"), F.max("value")).first()
+    # a fourth file holds an arrival below the grid: it clamps into
+    # bin 0, as in every other histogram cell build
+    below = ev.limit(1).withColumn("value", F.lit(lo - 1.0))
     in_dir = str(tmp_path / "in")
     for i in range(3):
         ev.filter(F.col("event_id") % 3 == i).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
+    below.coalesce(1).write.mode("append").parquet(in_dir)
+    ev = ev.unionByName(below)
     q = hist_segments_stream(
         spark, in_dir, str(tmp_path / "seg"), str(tmp_path / "ckpt"),
         lo, hi,
@@ -904,9 +968,7 @@ def test_streaming_histogram_segments_merge_to_batch(spark, tmp_path):
     batch = {
         (r.event_type, r.bin): r.cnt
         for r in ev.selectExpr(
-            "event_type",
-            f"CAST(least(floor((value - {lo!r}) * {HIST_BINS}"
-            f" / ({hi!r} - {lo!r})), {HIST_BINS - 1}) AS INT) AS bin",
+            "event_type", f"{hist_bin_expr(repr(lo), repr(hi))} AS bin",
         )
         .groupBy("event_type", "bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -914,6 +976,13 @@ def test_streaming_histogram_segments_merge_to_batch(spark, tmp_path):
     }
     assert merged == batch and len(merged) > 0
     assert sum(merged.values()) == ev.count()
+    assert merged == {
+        (r.event_type, r.bin): r.cnt
+        for r in hist_cell_stream(ev, lo, hi).collect()
+    }
+    assert min(b for _, b in merged) == 0 and max(
+        b for _, b in merged
+    ) == HIST_BINS - 1
 
 
 def test_streaming_contamination_screen_equals_batch(spark, tmp_path):
@@ -3131,6 +3200,62 @@ def test_streaming_hist_survives_restart(spark, tmp_path):
     want = {(r.event_type, r.bin): r.cnt for r in batch_cells}
     assert got == want
     assert wave1 != want  # or the recovery assertion is vacuous
+
+
+def test_hist_monitor_restarts_after_failed_persist(spark, tmp_path,
+                                                   monkeypatch):
+    """A monitor persist whose Spark job fails after it starts (a
+    task-side assert_true) must leave the previous state readable, and
+    a same-geometry restart must resume and land on the batch cells:
+    the state dir is replaced only by a complete publish."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+
+    from data_pipeline_and_visualization_dashboard_spark.extras.sketches import (
+        hist_cells,
+    )
+
+    batch_cells = hist_cells(spark, SF_SMOKE).collect()
+    lo, hi = batch_cells[0].lo, batch_cells[0].hi
+    raw = spark.read.parquet(SF_SMOKE + "/events.parquet")
+    in_dir = str(tmp_path / "hist_in")
+    state = str(tmp_path / "hist_state")
+    ckpt = str(tmp_path / "hist_ckpt")
+
+    def cells():
+        return {
+            (r.event_type, r.bin): r.cnt
+            for r in spark.read.parquet(state).collect()
+        }
+
+    raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
+        in_dir, mode="append"
+    )
+    streaming._drain(
+        streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
+    )
+    wave1 = cells()
+    raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
+        in_dir, mode="append"
+    )
+    coalesce = ClassicDF.coalesce
+    monkeypatch.setattr(
+        ClassicDF, "coalesce",
+        lambda df, n: coalesce(df, n).filter(
+            F.assert_true(F.col("cnt") < 0).isNull()
+        ),
+    )
+    with pytest.raises(StreamingQueryException, match="assert_true|cnt"):
+        streaming._drain(
+            streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
+        )
+    monkeypatch.undo()
+    assert cells() == wave1
+    streaming._drain(
+        streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
+    )
+    assert cells() == {(r.event_type, r.bin): r.cnt for r in batch_cells}
+    assert wave1 != cells()  # or the recovery assertion is vacuous
 
 
 def test_streaming_hll_matches_batch_with_bounded_state(spark):
