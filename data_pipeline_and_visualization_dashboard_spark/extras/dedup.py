@@ -41,6 +41,21 @@ from .hashing import (
     spark_base_hash,
     spark_h60,
 )
+from .text import (
+    _DUCK_SPLIT_SQL,
+    _VERDICT_CASE,
+    QCAL_BINS,
+    QCAL_LO,
+    QCAL_W,
+    _duck_quality_score_sql,
+    _lang_score_exprs,
+    _qs_weight_exprs,
+    quality_score,
+    quality_score_of,
+    quality_verdicts,
+    spark_tokens,
+    split_assign,
+)
 
 # Cap on LSH bucket size: buckets larger than this are near-certainly
 # boilerplate/degenerate text; expanding them quadratically is the
@@ -232,8 +247,6 @@ def shingle_sets_from(docs: DataFrame) -> DataFrame:
     """shingle_sets over an ARBITRARY (doc_id, text) frame (streaming
     micro-batches use this; the batch path wraps it with the parallel
     corpus scan)."""
-    from .text import spark_tokens
-
     toks = docs.selectExpr("doc_id", f"{spark_tokens()} AS tokens")
     return toks.selectExpr("doc_id", f"({_SPARK_SHINGLES_FROM_TOKENS}) AS shingles")
 
@@ -986,8 +999,6 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits. Same explode->agg shape as MinHash (map-side partial agg, so
     the shuffle carries 32 ints per doc per partition). Order-invariant,
     multiplicity-sensitive. Base hash as in minhash_signatures."""
-    from .text import spark_tokens
-
     docs = _read_docs_parallel(spark, sf_dir)
     toks = docs.selectExpr(
         # explode_outer: same InferFiltersFromGenerate trap as minhash
@@ -1440,8 +1451,6 @@ def _funnel_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached: it is consumed twice (keeper derivation + final), and
     without the cache the quality-gate text scan and md5 rank would
     run twice — at 100 TB that is a second full-corpus pass."""
-    from .text import quality_verdicts
-
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"])
     qv = quality_verdicts(docs).select("doc_id", "kept")
     hashed = docs.select("doc_id", F.md5("text").alias("h"))
@@ -1558,8 +1567,6 @@ def survivor_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical doubles in both engines (row-level float policy)."""
     from pyspark.sql import Window
 
-    from .text import quality_score
-
     groups = cluster_table(spark, sf_dir)
     q = quality_score(spark, sf_dir).select("doc_id", "score_mean")
     j = groups.join(q, "doc_id")
@@ -1584,11 +1591,9 @@ def survivor_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _duck_survivor_policy_sql() -> str:
-    from .text import ORACLE_SQL as _TEXT_ORACLES
-
     return f"""
         WITH groups AS ({_duck_neardup_groups_sql()}),
-        q AS ({_TEXT_ORACLES["text_quality_score"]}),
+        q AS ({_duck_quality_score_sql()}),
         ranked AS (
             SELECT g.group_id, g.doc_id, q.score_mean,
                    row_number() OVER (PARTITION BY g.group_id
@@ -1635,8 +1640,6 @@ def canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
     trees produce identical doubles in both engines (row-level float
     policy); score_delta is a difference of two such doubles, rounded
     6dp at output in both."""
-    from .text import quality_score
-
     groups = cluster_table(spark, sf_dir)
     q = quality_score(spark, sf_dir).select("doc_id", "score_mean")
     j = groups.join(q, "doc_id")
@@ -1666,11 +1669,9 @@ def canonical_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _duck_canonical_pick_sql() -> str:
-    from .text import ORACLE_SQL as _TEXT_ORACLES
-
     return f"""
         WITH groups AS ({_duck_neardup_groups_sql()}),
-        q AS ({_TEXT_ORACLES["text_quality_score"]}),
+        q AS ({_duck_quality_score_sql()}),
         m AS (
             SELECT g.group_id, g.doc_id, q.score_mean
             FROM groups g JOIN q ON g.doc_id = q.doc_id
@@ -1770,8 +1771,6 @@ def _token_hash_proj() -> list:
     survivors_table artifact build and the generic text-frame
     manifest, so all consumers agree column-for-column by
     construction."""
-    from .text import spark_tokens
-
     return [
         F.expr(f"size({spark_tokens()})").alias("n_tokens"),
         F.expr(spark_h60("text")).alias("doc_hash"),
@@ -1906,8 +1905,6 @@ def data_card_of(docs: DataFrame, groups: DataFrame) -> DataFrame:
     (the shard_manifest_of pattern; r16: the streaming maintainer's
     prefix-parity tests compare against this on arbitrary doc
     subsets)."""
-    from .text import quality_score_of
-
     q = quality_score_of(docs, ("lang", "source"))
     groups = groups.select("doc_id", F.lit(True).alias("is_dup"))
     j = q.join(groups, "doc_id", "left").select(
@@ -1944,8 +1941,6 @@ def data_card_of(docs: DataFrame, groups: DataFrame) -> DataFrame:
 
 
 def _duck_data_card_sql() -> str:
-    from .text import _qs_weight_exprs
-
     w = _qs_weight_exprs("duck")
     return rf"""
         WITH toked AS (
@@ -2336,8 +2331,6 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _duck_funnel_sql() -> str:
-    from .text import _VERDICT_CASE, _lang_score_exprs
-
     return f"""
         WITH feats AS (
             SELECT doc_id,
@@ -3171,8 +3164,6 @@ def corpus_release_diff_card(spark: SparkSession,
     token delta rides the revision), and the changed-doc detection is
     the same md5 comparison.  All deterministic → fully
     oracle-backed."""
-    from .text import spark_tokens
-
     docs = read_table(
         spark, sf_dir, "documents", ["doc_id", "source", "lang", "text"]
     ).filter(F.col("text").isNotNull())
@@ -3430,8 +3421,6 @@ def dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept because production reads splits from a persisted assignment
     table, and the verified pair set is the small (broadcastable)
     side of it."""
-    from .text import split_assign
-
     pairs = dedup_minhash_pairs(spark, sf_dir).filter(
         F.col("jaccard") >= NEARDUP_JACCARD
     )
@@ -3464,8 +3453,6 @@ def dedup_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _duck_split_leakage_sql() -> str:
-    from .text import _DUCK_SPLIT_SQL
-
     return f"""
     WITH pairs_full AS (
         SELECT * FROM ({_duck_pairs_sql()})
@@ -3525,14 +3512,17 @@ def dedup_snapshot_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two concurrent runs at the same SF must not share stream state.
     # The ledger (<= 5 rows) is collected, so the dir goes on return.
     work = _tempfile.mkdtemp(prefix="sgraft_snapshot_ledger_")
+    in_dir, state, deltas, ckpt = (
+        _os.path.join(work, d) for d in ("cdc_in", "state", "deltas", "ckpt")
+    )
     try:
-        in_dir = _os.path.join(work, "cdc_in")
-        sd = _os.path.join(work, "sd")
         batch1 = docs.filter(F.col("doc_id") % 3 != 0).selectExpr(
             "doc_id AS seq", "doc_id", "text", "'upsert' AS op"
         )
         batch1.coalesce(1).write.parquet(in_dir, mode="append")
-        _streaming.run_snapshot_diff_to_completion(spark, in_dir, sd)
+        _streaming.drain(_streaming.snapshot_diff_stream(
+            spark, in_dir, state, deltas, ckpt
+        ))
         batch2 = (
             docs.filter(F.col("doc_id") % 3 == 0)
             .selectExpr("doc_id AS seq", "doc_id", "text", "'upsert' AS op")
@@ -3566,9 +3556,10 @@ def dedup_snapshot_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         batch2.coalesce(1).write.parquet(in_dir, mode="append")
-        ledger = _streaming.run_snapshot_diff_to_completion(
-            spark, in_dir, sd
-        ).select(
+        _streaming.drain(_streaming.snapshot_diff_stream(
+            spark, in_dir, state, deltas, ckpt
+        ))
+        ledger = _streaming.read_snapshot_deltas(spark, deltas).select(
             "epoch", "status",
             F.col("n_docs").cast("bigint").alias("n_docs"),
             F.col("n_chars").cast("bigint").alias("n_chars"),
@@ -3612,6 +3603,36 @@ _DUCK_SNAPSHOT_LEDGER_SQL = """
 """
 
 
+def _duck_quality_calibration_sql() -> str:
+    """text_quality_calibration's oracle. It joins the near-dup groups,
+    so it is built and registered here: extras.text then imports
+    without dedup, and dedup imports text at the top."""
+    return f"""
+        WITH q AS ({_duck_quality_score_sql()}),
+        groups AS ({_duck_neardup_groups_sql()}),
+        binned AS (
+            SELECT CAST(least(greatest(
+                       floor((q.score_mean - ({QCAL_LO}))
+                             / {QCAL_W}), 0), {QCAL_BINS - 1})
+                   AS INT) AS bin_id,
+                   q.token_cnt, q.kept,
+                   g.doc_id IS NOT NULL AS is_dup
+            FROM q LEFT JOIN groups g ON q.doc_id = g.doc_id
+        )
+        SELECT bin_id,
+               round(CAST({QCAL_LO} + bin_id * {QCAL_W} AS DOUBLE), 2)
+                   AS bin_lo,
+               count(*) AS n_docs,
+               round(avg(token_cnt), 6) AS avg_tokens,
+               round(avg(CAST(kept AS DOUBLE)), 6) AS kept_frac,
+               CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT)
+                   AS n_dup,
+               round(avg(CASE WHEN is_dup THEN 1.0 ELSE 0.0 END), 6)
+                   AS dup_rate
+        FROM binned GROUP BY bin_id ORDER BY bin_id
+    """
+
+
 QUERIES = {
     "dedup_exact_groups": dedup_exact_groups,
     "dedup_exact_docs": dedup_exact_docs,
@@ -3652,6 +3673,7 @@ QUERIES = {
 }
 
 ORACLE_SQL["dedup_canonical_pick"] = _duck_canonical_pick_sql()
+ORACLE_SQL["text_quality_calibration"] = _duck_quality_calibration_sql()
 ORACLE_SQL["corpus_shard_manifest"] = _duck_shard_manifest_sql()
 ORACLE_SQL["corpus_data_card"] = _duck_data_card_sql()
 ORACLE_SQL["corpus_mixture_plan"] = _duck_mixture_plan_sql()

@@ -1784,35 +1784,6 @@ def quality_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _duck_quality_calibration_sql() -> str:
-    from .dedup import _duck_neardup_groups_sql
-
-    return f"""
-        WITH q AS ({_duck_quality_score_sql()}),
-        groups AS ({_duck_neardup_groups_sql()}),
-        binned AS (
-            SELECT CAST(least(greatest(
-                       floor((q.score_mean - ({QCAL_LO}))
-                             / {QCAL_W}), 0), {QCAL_BINS - 1})
-                   AS INT) AS bin_id,
-                   q.token_cnt, q.kept,
-                   g.doc_id IS NOT NULL AS is_dup
-            FROM q LEFT JOIN groups g ON q.doc_id = g.doc_id
-        )
-        SELECT bin_id,
-               round(CAST({QCAL_LO} + bin_id * {QCAL_W} AS DOUBLE), 2)
-                   AS bin_lo,
-               count(*) AS n_docs,
-               round(avg(token_cnt), 6) AS avg_tokens,
-               round(avg(CAST(kept AS DOUBLE)), 6) AS kept_frac,
-               CAST(sum(CASE WHEN is_dup THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_dup,
-               round(avg(CASE WHEN is_dup THEN 1.0 ELSE 0.0 END), 6)
-                   AS dup_rate
-        FROM binned GROUP BY bin_id ORDER BY bin_id
-    """
-
-
 # DSIR feature space: hashed unigram+bigram buckets. 2^10 buckets is
 # the sandbox-sized stand-in for DSIR's 10^4; the plan (D-row profile
 # table broadcast onto the token stream) is dimension-independent.
@@ -2354,7 +2325,6 @@ QUERIES = {
     "text_lm_logprob": lm_logprob,
 }
 
-ORACLE_SQL["text_quality_calibration"] = _duck_quality_calibration_sql()
 ORACLE_SQL["text_pack_sequences"] = _DUCK_PACK_SEQUENCES_SQL
 ORACLE_SQL["text_token_entropy"] = _DUCK_TOKEN_ENTROPY_SQL
 ORACLE_SQL["text_hashed_features"] = _DUCK_HASHED_FEATURES_SQL

@@ -187,6 +187,18 @@ _DUCK_RANK_FAMILY_SQL = """
 # stream-static broadcast enrichment (streaming.enriched_nation_counts)
 # ----------------------------------------------------------------------
 
+def customer_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The customer -> nation dimension (user_id, nation) that q58 and
+    its stream twin, streaming.enriched_nation_counts_stream, join."""
+    cust = read_table(spark, sf_dir, "customer", ["c_custkey", "c_nationkey"])
+    nation = read_table(spark, sf_dir, "nation", ["n_nationkey", "n_name"])
+    return cust.join(
+        F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
+    ).select(
+        F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation")
+    )
+
+
 def q58_event_nation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly event counts per customer nation: the fact stream
     enriched through a two-dim join (customer -> nation, both
@@ -196,15 +208,8 @@ def q58_event_nation_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly (stream-static joins are stateless, so the parity is
     row-exact, not watermark-approximate)."""
     ev = read_table(spark, sf_dir, "events", ["user_id", "ts"])
-    cust = read_table(spark, sf_dir, "customer", ["c_custkey", "c_nationkey"])
-    nation = read_table(spark, sf_dir, "nation", ["n_nationkey", "n_name"])
-    dim = cust.join(
-        F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
-    ).select(
-        F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation")
-    )
     return (
-        ev.join(F.broadcast(dim), "user_id")
+        ev.join(F.broadcast(customer_nation(spark, sf_dir)), "user_id")
         .groupBy(
             F.date_trunc("hour", "ts").alias("hour"), F.col("nation")
         )

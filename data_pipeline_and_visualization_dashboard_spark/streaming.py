@@ -13,6 +13,10 @@ Batch/stream parity: by the Dataflow/Structured-Streaming model the
 complete output of the windowed streaming agg over a finite input
 equals the batch groupBy over the same input — tested in
 tests/test_streaming.py by driving the file source to completion.
+Every finite run is one call: `drain(query)` processes all input
+and stops the query, and `to_memory(stream, mode)` drains a stream
+into a memory sink and returns its table with the stopped query,
+whose progress (`state_rows`) stays readable.
 
 At scale: the parquet file source is the smoke harness; production
 swaps `readStream.format("kafka")` with the same downstream plan.
@@ -31,9 +35,11 @@ transitions, last-touch and linear attribution.
 
 from __future__ import annotations
 
+import collections
 import functools
 import os
 import shutil
+import uuid
 from typing import Callable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -101,63 +107,71 @@ def _epoch_is_new(state_dir: str, epoch_id: int) -> bool:
 
 
 def _read_files(spark: SparkSession, schema: str, path: str,
-                glob: str | None = None,
-                one_file_per_trigger: bool = False) -> DataFrame:
-    """Parquet file-source stream over the directory `path`. `glob`
-    narrows it to matching file names; `one_file_per_trigger` makes
-    every file its own micro-batch, which the stateful callers need
-    because batch boundaries drive their state and watermarks."""
-    reader = spark.readStream.schema(schema)
+                glob: str | None = None) -> DataFrame:
+    """Parquet file-source stream over the directory `path`, every file
+    its own micro-batch: the stateful builders need that, because batch
+    boundaries drive their state and watermarks, and a one-file input
+    reads the same either way. `glob` narrows it to matching file
+    names (one table of a testdata directory)."""
+    reader = spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
     if glob is not None:
         reader = reader.option("pathGlobFilter", glob)
-    if one_file_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", "1")
     return reader.parquet(path)
 
 
-def _read_event_files(spark: SparkSession, path: str,
-                      glob: str | None = None,
-                      one_file_per_trigger: bool = False) -> DataFrame:
-    """_read_files over events, with `ts` cast to session-tz TIMESTAMP
-    for watermarks and windows (see _STREAM_SCHEMA)."""
-    raw = _read_files(spark, _STREAM_SCHEMA, path, glob,
-                      one_file_per_trigger)
+def read_event_stream(spark: SparkSession, path: str,
+                      glob: str | None = None) -> DataFrame:
+    """Events file-source stream (kafka in production), with `ts` cast
+    to session-tz TIMESTAMP for watermarks and windows (see
+    _STREAM_SCHEMA). Over a testdata directory, pass
+    glob="events.parquet"."""
+    raw = _read_files(spark, _STREAM_SCHEMA, path, glob)
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def _drain(query, readout=None):
-    """Run a started query until its finite input is consumed, then
-    stop it whatever happens. `readout(query)`, if given, runs while
-    the query is still live, and its result is returned."""
+def drain(*queries):
+    """Run started queries until their finite input is consumed, then
+    stop every one whatever happens. Returns the stopped query (or the
+    tuple of them); its lastProgress and a memory sink's table stay
+    readable after the stop."""
     try:
-        query.processAllAvailable()
-        return readout(query) if readout is not None else None
+        for q in queries:
+            q.processAllAvailable()
     finally:
-        query.stop()
+        for q in queries:
+            q.stop()
+    return queries[0] if len(queries) == 1 else queries
 
 
-def _start_memory_sink(stream: DataFrame, mode: str, query_name: str):
-    return (
+def to_memory(stream: DataFrame, mode: str):
+    """Drain `stream` in output `mode` into a memory sink under a fresh
+    name; returns (the sink's table as a batch DataFrame, the stopped
+    query). Like any memory sink's, the table holds its rows on the
+    driver until the session ends: for finite, small outputs."""
+    name = f"drained_{uuid.uuid4().hex}"
+    q = drain(
         stream.writeStream.outputMode(mode)
         .format("memory")
-        .queryName(query_name)
+        .queryName(name)
         .start()
     )
+    return stream.sparkSession.table(name), q
 
 
-def _drain_to_memory(stream: DataFrame, mode: str,
-                     query_name: str) -> DataFrame:
-    """Drive `stream` over its finite input into the memory sink
-    `query_name` and return the sink's table as a batch DataFrame."""
-    _drain(_start_memory_sink(stream, mode, query_name))
-    return stream.sparkSession.sql(f"SELECT * FROM {query_name}")
-
-
-def read_event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet (one file = one
-    micro-batch in tests; kafka in production)."""
-    # the file source requires a directory; glob-filter down to events
-    return _read_event_files(spark, sf_dir, glob="events.parquet")
+def state_rows(query) -> int:
+    """State-store rows summed over the stateful operators of a
+    (stopped) query's last progress, so callers can assert a bounded-
+    state claim rather than trust a docstring. Raises rather than
+    return a sentinel when there is no progress record: the readout
+    cannot be computed at all, and the caller's assertion should fail
+    with that cause."""
+    prog = query.lastProgress
+    if prog is None:
+        raise RuntimeError(
+            f"stream {query.name or query.id} finished without a "
+            "progress record; state rows cannot be read from lastProgress"
+        )
+    return sum(op["numRowsTotal"] for op in prog["stateOperators"])
 
 
 def windowed_event_counts(events: DataFrame,
@@ -181,22 +195,8 @@ def windowed_event_counts(events: DataFrame,
     )
 
 
-def run_to_completion(spark: SparkSession, sf_dir: str,
-                      query_name: str = "windowed_counts") -> DataFrame:
-    """Drive the stream over the finite input synchronously (memory sink,
-    complete mode) and return the result as a batch DataFrame."""
-    return _drain_to_memory(
-        windowed_event_counts(read_event_stream(spark, sf_dir)),
-        "complete", query_name,
-    )
-
-
-def run_windowed_with_late_metrics(
-    spark: SparkSession,
-    in_dir: str,
-    watermark: str = "10 minutes",
-    query_name: str = "late_metrics_out",
-):
+def run_windowed_with_late_metrics(spark: SparkSession, in_dir: str,
+                                   watermark: str = "10 minutes"):
     """Drive the windowed rollup in UPDATE mode (watermarks only drop
     rows in update/append — complete mode keeps everything) and
     return (result_df, n_dropped_by_watermark): the per-deployment
@@ -225,19 +225,18 @@ def run_windowed_with_late_metrics(
         have."""
 
         def __init__(self) -> None:
-            self.dropped = 0
-            self.last_batch = -1
+            self.dropped = collections.Counter()
+            self.last_batch = {}
 
         def onQueryStarted(self, event) -> None:  # noqa: N802
             pass
 
         def onQueryProgress(self, event) -> None:  # noqa: N802
-            p = event.progress
-            if p.name != query_name:
-                return
+            p, qid = event.progress, str(event.progress.id)
             for op in p.stateOperators:
-                self.dropped += op.numRowsDroppedByWatermark or 0
-            self.last_batch = max(self.last_batch, p.batchId)
+                self.dropped[qid] += op.numRowsDroppedByWatermark or 0
+            self.last_batch[qid] = max(self.last_batch.get(qid, -1),
+                                       p.batchId)
 
         def onQueryIdle(self, event) -> None:  # noqa: N802
             pass
@@ -245,27 +244,24 @@ def run_windowed_with_late_metrics(
         def onQueryTerminated(self, event) -> None:  # noqa: N802
             pass
 
-    def wait_for_listener(q) -> int:
-        # the listener bus is ASYNC: drain until it has seen the final
-        # batch (events arrive in batch order, so seeing the last
-        # batchId means every earlier one is counted)
-        last = (q.lastProgress or {}).get("batchId", -1)
-        deadline = _time.time() + 30
-        while listener.last_batch < last and _time.time() < deadline:
-            _time.sleep(0.1)
-        return listener.dropped
-
-    events = _read_event_files(spark, in_dir, one_file_per_trigger=True)
     listener = _DropListener()
     spark.streams.addListener(listener)
     try:
-        q = _start_memory_sink(
-            windowed_event_counts(events, watermark), "update", query_name
+        out, q = to_memory(
+            windowed_event_counts(read_event_stream(spark, in_dir), watermark),
+            "update",
         )
-        dropped = _drain(q, wait_for_listener)
+        # the listener bus is ASYNC: wait until it has seen the stopped
+        # query's final batch (events arrive in batch order, so seeing
+        # the last batchId means every earlier one is counted)
+        last = (q.lastProgress or {}).get("batchId", -1)
+        deadline = _time.time() + 30
+        while (listener.last_batch.get(q.id, -1) < last
+               and _time.time() < deadline):
+            _time.sleep(0.1)
     finally:
         spark.streams.removeListener(listener)
-    return spark.sql(f"SELECT * FROM {query_name}"), dropped
+    return out, listener.dropped[q.id]
 
 
 def dedup_event_stream(events: DataFrame,
@@ -305,19 +301,6 @@ def dedup_event_stream_bounded(events: DataFrame,
     the query's own progress metrics."""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
-    )
-
-
-def run_dedup_to_completion(spark: SparkSession, in_dir: str,
-                            query_name: str = "dedup_out") -> DataFrame:
-    """Drive the streaming dedup over a finite directory of parquet
-    files (one micro-batch per file via maxFilesPerTrigger) and return
-    the deduplicated rows."""
-    return _drain_to_memory(
-        dedup_event_stream(
-            _read_event_files(spark, in_dir, one_file_per_trigger=True)
-        ),
-        "append", query_name,
     )
 
 
@@ -438,28 +421,6 @@ def sessionize_stream_native(events: DataFrame,
     )
 
 
-def run_sessionize_to_completion(spark: SparkSession, in_dir: str,
-                                 query_name: str = "sessions_out") -> DataFrame:
-    return _drain_to_memory(
-        sessionize_stream(
-            _read_event_files(spark, in_dir, one_file_per_trigger=True)
-        ),
-        "append", query_name,
-    )
-
-
-def run_native_sessions_to_completion(
-    spark: SparkSession, in_dir: str,
-    query_name: str = "native_sessions_out",
-) -> DataFrame:
-    return _drain_to_memory(
-        sessionize_stream_native(
-            _read_event_files(spark, in_dir, one_file_per_trigger=True)
-        ),
-        "append", query_name,
-    )
-
-
 def _transition_fold(user_id, pdf_iter, last_us, last_eid, last_type):
     """Per-user transition fold: state = the user's LAST event (ts,
     event_id, type); each batch buffers the user's rows, sorts the
@@ -547,17 +508,6 @@ def transition_stream_bounded(events: DataFrame,
     test_bounded_transitions_survive_restart."""
     return _per_user_stream(
         events, watermark, _TRANSITIONS, TRANSITION_IDLE_US
-    )
-
-
-def run_transitions_to_completion(spark: SparkSession, in_dir: str,
-                                  query_name: str = "transitions_out",
-                                  ) -> DataFrame:
-    return _drain_to_memory(
-        transition_stream(
-            _read_event_files(spark, in_dir, one_file_per_trigger=True)
-        ),
-        "append", query_name,
     )
 
 
@@ -829,17 +779,6 @@ def linear_attr_rollup(credits: DataFrame) -> DataFrame:
     )
 
 
-def run_linear_attr_to_completion(spark: SparkSession, in_dir: str,
-                                  query_name: str = "linear_attr_out",
-                                  ) -> DataFrame:
-    return _drain_to_memory(
-        linear_attribution_stream(
-            _read_event_files(spark, in_dir, one_file_per_trigger=True)
-        ),
-        "append", query_name,
-    )
-
-
 def last_touch_rollup(credits: DataFrame) -> DataFrame:
     """Stateless channel rollup over emitted credits — column-for-
     column the batch q98 epilogue (coalesce NULL carry to '(none)',
@@ -857,17 +796,6 @@ def last_touch_rollup(credits: DataFrame) -> DataFrame:
             F.round(F.avg("value"), 6).alias("avg_order_value"),
         )
         .orderBy("channel")
-    )
-
-
-def run_last_touch_to_completion(spark: SparkSession, in_dir: str,
-                                 query_name: str = "last_touch_out",
-                                 ) -> DataFrame:
-    return _drain_to_memory(
-        last_touch_stream(
-            _read_event_files(spark, in_dir, one_file_per_trigger=True)
-        ),
-        "append", query_name,
     )
 
 
@@ -1030,40 +958,18 @@ def view_purchase_left_join_batch(events: DataFrame,
     )
 
 
-def run_view_purchase_left_join_to_completion(
-    spark: SparkSession, in_dir: str,
-    query_name: str = "vp_ljoin_out",
-) -> DataFrame:
-    return _drain_to_memory(
-        view_purchase_left_join_stream(
-            _read_event_files(spark, in_dir, one_file_per_trigger=True)
-        ),
-        "append", query_name,
-    )
-
-
-def run_view_purchase_join_to_completion(
-    spark: SparkSession, in_dir: str,
-    query_name: str = "vp_join_out",
-) -> DataFrame:
-    return _drain_to_memory(
-        view_purchase_join_stream(
-            _read_event_files(spark, in_dir, one_file_per_trigger=True)
-        ),
-        "append", query_name,
-    )
-
-
 _DOC_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
 )
 
 
-def read_document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents parquet — the streaming
-    face of the corpus-curation surface (kafka/object-store listing in
-    production; documents arrive continuously from crawlers)."""
-    return _read_files(spark, _DOC_SCHEMA, sf_dir, glob="documents.parquet")
+def read_document_stream(spark: SparkSession, path: str,
+                         glob: str | None = None) -> DataFrame:
+    """Documents file-source stream — the streaming face of the
+    corpus-curation surface (kafka/object-store listing in production;
+    documents arrive continuously from crawlers). Over a testdata
+    directory, pass glob="documents.parquet"."""
+    return _read_files(spark, _DOC_SCHEMA, path, glob)
 
 
 def curation_stats_stream(docs: DataFrame) -> DataFrame:
@@ -1077,17 +983,6 @@ def curation_stats_stream(docs: DataFrame) -> DataFrame:
 
     return quality_verdicts(docs).groupBy("verdict").agg(
         F.count(F.lit(1)).alias("doc_cnt")
-    )
-
-
-def run_curation_to_completion(spark: SparkSession, sf_dir: str,
-                               query_name: str = "curation_stats"
-                               ) -> DataFrame:
-    """Drive the curation monitor over the finite corpus; the complete-
-    mode result must equal the batch quality histogram (tested)."""
-    return _drain_to_memory(
-        curation_stats_stream(read_document_stream(spark, sf_dir)),
-        "complete", query_name,
     )
 
 
@@ -1107,7 +1002,7 @@ def upsert_state_stream(spark: SparkSession, in_dir: str, state_dir: str,
     replay-safe) but n_changes is additive, so the state carries the
     `_LAST_EPOCH` fence (see _fenced) and a replayed epoch is a
     no-op — exactly-once on top of foreachBatch's at-least-once."""
-    events = _read_event_files(spark, in_dir, one_file_per_trigger=True)
+    events = read_event_stream(spark, in_dir)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if not _epoch_is_new(state_dir, epoch_id):
@@ -1147,15 +1042,19 @@ def upsert_state_stream(spark: SparkSession, in_dir: str, state_dir: str,
 
 
 def enriched_nation_counts_stream(events: DataFrame,
-                                  dim: DataFrame) -> DataFrame:
+                                  sf_dir: str) -> DataFrame:
     """Stream-static broadcast enrichment — the canonical streaming
     join pattern this module was missing: each micro-batch joins the
-    live events against a STATIC dimension (customer nation), then
-    rolls up per (1h window, nation). Stream-static inner joins are
-    STATELESS (the static side is re-resolved per micro-batch and
-    broadcast; nothing is buffered across batches), so unlike the
-    stream-stream join there is no watermark-bounded state and the
-    batch twin (q58_event_nation_counts) must match row-exactly."""
+    live events against a STATIC dimension (customer nation, read
+    from `sf_dir` by queries_ext.customer_nation), then rolls up per
+    (1h window, nation). Stream-static inner joins are STATELESS (the
+    static side is re-resolved per micro-batch and broadcast; nothing
+    is buffered across batches), so unlike the stream-stream join
+    there is no watermark-bounded state and the batch twin
+    (q58_event_nation_counts) must match row-exactly."""
+    from .queries_ext import customer_nation
+
+    dim = customer_nation(events.sparkSession, sf_dir)
     return (
         events.withWatermark("ts", "1 hour")
         .join(F.broadcast(dim), "user_id")
@@ -1164,25 +1063,6 @@ def enriched_nation_counts_stream(events: DataFrame,
         .select(
             F.col("w.start").alias("hour"), "nation", "n_events"
         )
-    )
-
-
-def run_enriched_counts_to_completion(
-    spark: SparkSession, sf_dir: str,
-    query_name: str = "enriched_out",
-) -> DataFrame:
-    from .io import read_table
-
-    cust = read_table(spark, sf_dir, "customer", ["c_custkey", "c_nationkey"])
-    nation = read_table(spark, sf_dir, "nation", ["n_nationkey", "n_name"])
-    dim = cust.join(
-        F.broadcast(nation), cust.c_nationkey == nation.n_nationkey
-    ).select(
-        F.col("c_custkey").alias("user_id"), F.col("n_name").alias("nation")
-    )
-    return _drain_to_memory(
-        enriched_nation_counts_stream(read_event_stream(spark, sf_dir), dim),
-        "complete", query_name,
     )
 
 
@@ -1200,8 +1080,9 @@ def rollup_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
     length); per-batch cost = state + batch, never history. The merge
     is ADDITIVE, so replay safety cannot come from last-write-wins:
     the state carries the `_LAST_EPOCH` fence and is published by
-    io.publish_dir — see _fenced and _epoch_is_new above."""
-    events = _read_event_files(spark, in_dir, one_file_per_trigger=True)
+    io.publish_dir — see _fenced and _epoch_is_new above. The final
+    state reads out as q53's frame through read_rollup_state."""
+    events = read_event_stream(spark, in_dir)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if not _epoch_is_new(state_dir, epoch_id):
@@ -1227,12 +1108,9 @@ def rollup_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
     )
 
 
-def run_rollup_merge_to_completion(spark: SparkSession, in_dir: str,
-                                   state_dir: str,
-                                   checkpoint_dir: str) -> DataFrame:
-    """Drive the rollup-merge sink over the finite input and return the
-    final state shaped exactly like q53_incremental_rollup's output."""
-    _drain(rollup_merge_stream(spark, in_dir, state_dir, checkpoint_dir))
+def read_rollup_state(spark: SparkSession, state_dir: str) -> DataFrame:
+    """Readout: rollup_merge_stream's state shaped exactly like
+    q53_incremental_rollup's output (avg derived after merging)."""
     state = spark.read.parquet(state_dir)
     return state.select(
         "event_date",
@@ -1277,7 +1155,7 @@ def shard_manifest_stream(spark: SparkSession, in_dir: str,
 
     if n_shards is None:
         n_shards = N_TRAINING_SHARDS
-    docs = _read_files(spark, _DOC_SCHEMA, in_dir, one_file_per_trigger=True)
+    docs = read_document_stream(spark, in_dir)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if not _epoch_is_new(state_dir, epoch_id):
@@ -1340,7 +1218,7 @@ def data_card_stream(spark: SparkSession, in_dir: str, state_dir: str,
     length; per-batch cost = batch + |slices|, never history."""
     from .extras.text import quality_score_of
 
-    docs = _read_files(spark, _DOC_SCHEMA, in_dir, one_file_per_trigger=True)
+    docs = read_document_stream(spark, in_dir)
     dup = F.broadcast(
         groups.select("doc_id", F.lit(True).alias("is_dup"))
     )
@@ -1439,16 +1317,6 @@ def read_mixture_plan_state(spark: SparkSession, state_dir: str,
     return mixture_plan_of(agg, alpha)
 
 
-def run_data_card_to_completion(spark: SparkSession, in_dir: str,
-                                state_dir: str, checkpoint_dir: str,
-                                groups: DataFrame) -> DataFrame:
-    """Drive the data-card maintainer over the finite input and return
-    the readout shaped exactly like dedup.corpus_data_card."""
-    _drain(data_card_stream(spark, in_dir, state_dir, checkpoint_dir,
-                            groups))
-    return read_data_card_state(spark, state_dir)
-
-
 def publish_lag_readout(spark: SparkSession, state_dir: str,
                         published_manifest: DataFrame) -> DataFrame:
     """Publish-lag readout (r16): the live shard-manifest state (what
@@ -1521,83 +1389,96 @@ def ams_f2_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def _run_global_sketch_to_completion(spark: SparkSession, in_dir: str,
-                                     schema: str, glob: str, agg_fn,
-                                     query_name: str, label: str):
-    """Shared driver for the one-state-row global-sketch monitors
-    (AMS F2, HHI): complete-mode memory sink over a finite fixture.
-    Returns (result_df, state_rows_total) — the second element is the
-    state-store row count from the final progress metrics, so callers
-    can assert the O(1) claim rather than trust a docstring (the
-    round-9 state-honesty rule)."""
-    def state_rows(q) -> int:
-        prog = q.lastProgress
-        if prog is None:
-            # raise HERE rather than return a -1 sentinel (VERDICT r10
-            # wrong #2): a completed run with no progress record means
-            # the state-honesty readout cannot be computed at all, and
-            # the caller's O(1)-state assertion should fail with the
-            # cause, not with a confusing negative row count
-            raise RuntimeError(
-                f"{label} stream finished without a progress record; "
-                "state_rows cannot be read from lastProgress"
-            )
-        return sum(op["numRowsTotal"] for op in prog["stateOperators"])
+def _global_sketch_merge_stream(monitor: DataFrame, state_dir: str,
+                                checkpoint_dir: str,
+                                stamp: dict | None = None):
+    """Shared restartable variant for the sketch monitors: `monitor`
+    (a monitor's aggregation over its file-source stream) persisted
+    through foreachBatch with a checkpoint, so a crash/restart resumes
+    the sums from the aggregation state store instead of restarting
+    the sketch. Complete-mode output is the WHOLE sketch every
+    trigger, so the sink publishes it whole over the state dir by
+    io.publish_dir (last-write-wins — no epoch fence needed, unlike
+    the ADDITIVE rollup merge where a replayed batch would
+    double-count); a failed or killed publish leaves the previous
+    state readable. `state_dir` is local or a file:// URI
+    (io.local_path).
 
-    raw = _read_files(spark, schema, in_dir, glob, one_file_per_trigger=True)
-    q = _start_memory_sink(agg_fn(raw), "complete", query_name)
-    rows = _drain(q, state_rows)
-    return spark.sql(f"SELECT * FROM {query_name}"), rows
-
-
-def _global_sketch_merge_stream(spark: SparkSession, in_dir: str,
-                                schema: str, agg_fn, state_dir: str,
-                                checkpoint_dir: str):
-    """Shared restartable variant for the global-sketch monitors:
-    the same one-state-row aggregation persisted through foreachBatch
-    with a checkpoint, so a crash/restart resumes the sums from the
-    aggregation state store instead of restarting the sketch.
-    Complete-mode output is the WHOLE sketch every trigger, so the
-    sink publishes it whole over the state dir by io.publish_dir
-    (last-write-wins — no epoch fence needed, unlike the ADDITIVE
-    rollup merge where a replayed batch would double-count); a failed
-    or killed publish leaves the previous state readable. `state_dir`
-    is local or a file:// URI (io.local_path)."""
-    raw = _read_files(spark, schema, in_dir, "*.parquet",
-                      one_file_per_trigger=True)
+    `stamp` is the geometry a caller supplies per start, as
+    {column: value} (the histogram domain, the Bloom width): recovered
+    cells are only meaningful under the geometry that built them, so
+    the persisted table carries it as literal columns and a restart
+    under another geometry raises before any state is touched
+    (_check_state_stamp)."""
+    if stamp:
+        _check_state_stamp(monitor.sparkSession, state_dir, stamp)
+        monitor = monitor.withColumns(
+            {c: F.lit(v) for c, v in stamp.items()}
+        )
 
     def persist(batch_df: DataFrame, epoch_id: int) -> None:
         publish_dir(state_dir, batch_df.coalesce(1).write.parquet)
 
     return (
-        agg_fn(raw)
-        .writeStream.outputMode("complete")
+        monitor.writeStream.outputMode("complete")
         .foreachBatch(persist)
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )
 
 
-def run_ams_stream_to_completion(spark: SparkSession, in_dir: str,
-                                 query_name: str = "ams_out"):
-    """Drive the AMS F2 monitor over a finite fixture; see
-    _run_global_sketch_to_completion for the contract."""
-    return _run_global_sketch_to_completion(
-        spark, in_dir, _STREAM_SCHEMA, "events.parquet",
-        ams_f2_stream, query_name, "AMS",
-    )
+def _check_state_stamp(spark: SparkSession, state_dir: str,
+                       stamp: dict) -> None:
+    """Fail unless the monitor state at `state_dir` is absent (first
+    start), holds no cells yet, or was built under `stamp`. It
+    recovers an interrupted publish first (io.recover_dir), so a
+    killed swap reads as the state it left. The guard fails CLOSED: a
+    dir that exists but holds no readable parquet
+    (UNABLE_TO_INFER_SCHEMA) or a pre-stamp state parquet without the
+    geometry columns raises instead of silently disabling the
+    same-geometry enforcement."""
+    from pyspark.errors import AnalysisException
+
+    recover_dir(state_dir)
+    try:
+        df = spark.read.parquet(state_dir)
+    except AnalysisException as e:
+        cond = (getattr(e, "getCondition", None) or e.getErrorClass)()
+        if cond == "PATH_NOT_FOUND":
+            return  # first start: nothing to validate
+        raise ValueError(
+            f"monitor state at {state_dir} exists but is unreadable "
+            f"({cond}); cannot validate the geometry the recovered "
+            "checkpoint counts were built under"
+        ) from e
+    missing = [c for c in stamp if c not in df.columns]
+    if missing:
+        raise ValueError(
+            f"monitor state at {state_dir} predates the "
+            f"geometry-stamped format (no {'/'.join(missing)} "
+            "columns); cannot validate its geometry — start a fresh "
+            "state/checkpoint pair"
+        )
+    row = df.select(*stamp).first()
+    if row is not None and tuple(row) != tuple(stamp.values()):
+        raise ValueError(
+            f"monitor restarted with geometry {stamp} but the state at "
+            f"{state_dir} was built under {row.asDict()}; recovered "
+            "cells are only meaningful under the geometry that built "
+            "them — resume with the original geometry, or start a "
+            "fresh state/checkpoint pair"
+        )
 
 
 def ams_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
                      checkpoint_dir: str):
     """Restartable AMS F2 monitor (_global_sketch_merge_stream over
     ams_f2_stream). Restart recovery lives in the aggregation state
-    store inside the checkpoint: the memory-sink driver
-    (run_ams_stream_to_completion) never re-reads a checkpoint, so
-    THIS variant is what the restart pin exercises (VERDICT r10 ask
-    #4 — the 15th stateful family to carry one)."""
+    store inside the checkpoint: a memory-sink run (to_memory) never
+    re-reads a checkpoint, so THIS variant is what the restart pin
+    exercises (the 15th stateful family to carry one)."""
     return _global_sketch_merge_stream(
-        spark, in_dir, _STREAM_SCHEMA, ams_f2_stream, state_dir,
+        ams_f2_stream(read_event_stream(spark, in_dir)), state_dir,
         checkpoint_dir,
     )
 
@@ -1630,18 +1511,6 @@ def countmin_cell_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def run_countmin_stream_to_completion(spark: SparkSession, in_dir: str,
-                                      query_name: str = "cm_out"):
-    """Drive the count-min cell monitor over a finite fixture; see
-    _run_global_sketch_to_completion for the contract (here the
-    O(geometry)-state claim: state rows == live cells ≤ CM_D·CM_W
-    + CM_D)."""
-    return _run_global_sketch_to_completion(
-        spark, in_dir, _STREAM_SCHEMA, "events.parquet",
-        countmin_cell_stream, query_name, "count-min",
-    )
-
-
 def countmin_merge_stream(spark: SparkSession, in_dir: str,
                           state_dir: str, checkpoint_dir: str):
     """Restartable count-min cell monitor (_global_sketch_merge_stream
@@ -1649,7 +1518,7 @@ def countmin_merge_stream(spark: SparkSession, in_dir: str,
     table every trigger, so the published state is idempotent and
     restart recovery lives in the aggregation state store."""
     return _global_sketch_merge_stream(
-        spark, in_dir, _STREAM_SCHEMA, countmin_cell_stream,
+        countmin_cell_stream(read_event_stream(spark, in_dir)),
         state_dir, checkpoint_dir,
     )
 
@@ -1710,19 +1579,6 @@ def hist_cell_stream(events: DataFrame, lo: float, hi: float) -> DataFrame:
     )
 
 
-def run_hist_stream_to_completion(spark: SparkSession, in_dir: str,
-                                  lo: float, hi: float,
-                                  query_name: str = "hist_out"):
-    """Drive the histogram-quantile monitor over a finite fixture; see
-    _run_global_sketch_to_completion for the contract (here the
-    bounded-state claim: state rows == live cells ≤ |types|·HIST_BINS)."""
-    return _run_global_sketch_to_completion(
-        spark, in_dir, _STREAM_SCHEMA, "events.parquet",
-        lambda df: hist_cell_stream(df, lo, hi), query_name,
-        "hist-quantile",
-    )
-
-
 def hist_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
                       checkpoint_dir: str, lo: float, hi: float):
     """Restartable histogram-quantile monitor
@@ -1737,74 +1593,10 @@ def hist_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
     documented (r13 self-review): the emitted cell table carries the
     domain as two literal columns, and a restart whose domain differs
     from the persisted state's raises before any state is touched."""
-    lo, hi = float(lo), float(hi)
-    prev = _read_hist_domain(spark, state_dir)
-    if prev is not None and prev != (lo, hi):
-        raise ValueError(
-            f"hist_merge_stream restarted with domain [{lo}, {hi}) "
-            f"but {state_dir} holds cells built under "
-            f"[{prev[0]}, {prev[1]}); recovered additive counts are "
-            "only meaningful under the edges that built them — "
-            "resume with the original domain or start a fresh "
-            "state/checkpoint pair"
-        )
+    lo, hi = _hist_domain(lo, hi)
     return _global_sketch_merge_stream(
-        spark, in_dir, _STREAM_SCHEMA,
-        lambda df: hist_cell_stream(df, lo, hi)
-        .withColumn("lo", F.lit(lo))
-        .withColumn("hi", F.lit(hi)),
-        state_dir, checkpoint_dir,
-    )
-
-
-def _read_state_stamp(spark: SparkSession, state_dir: str,
-                      cols: tuple, label: str):
-    """The geometry-stamp tuple (`cols`) under which an existing
-    geometry-stamped monitor state parquet was built, or None ONLY
-    for a genuinely absent state dir (first start). It recovers an
-    interrupted publish first (io.recover_dir), so a killed swap
-    reads as the state it left (so `state_dir` is local or a file://
-    URI). The guard fails CLOSED (r13 second review): any other read
-    problem — a dir that exists but holds no readable parquet
-    (UNABLE_TO_INFER_SCHEMA) or a pre-stamp state parquet without the
-    geometry columns — raises instead of silently disabling the
-    same-geometry enforcement. Shared by every geometry-stamped
-    monitor (hist_merge_stream's lo/hi domain, bloom_merge_stream's
-    mb width), so the fail-closed semantics can't drift per monitor."""
-    from pyspark.errors import AnalysisException
-
-    recover_dir(state_dir)
-    try:
-        df = spark.read.parquet(state_dir)
-    except AnalysisException as e:
-        cond = (getattr(e, "getCondition", None) or e.getErrorClass)()
-        if cond == "PATH_NOT_FOUND":
-            return None  # first start: nothing to validate
-        raise ValueError(
-            f"{label} state at {state_dir} exists but is "
-            f"unreadable ({cond}); cannot validate the geometry the "
-            "recovered checkpoint counts were built under"
-        ) from e
-    missing = [c for c in cols if c not in df.columns]
-    if missing:
-        raise ValueError(
-            f"{label} state at {state_dir} predates the "
-            f"geometry-stamped format (no {'/'.join(missing)} "
-            "columns); cannot validate its geometry — start a fresh "
-            "state/checkpoint pair"
-        )
-    row = df.select(*cols).first()
-    if row is None:
-        return None  # zero-row stamp: no cells built yet
-    return tuple(row)
-
-
-def _read_hist_domain(spark: SparkSession, state_dir: str):
-    """The (lo, hi) domain stamp of an existing hist_merge_stream
-    state parquet — _read_state_stamp with the histogram's geometry
-    columns."""
-    return _read_state_stamp(
-        spark, state_dir, ("lo", "hi"), "hist_merge_stream"
+        hist_cell_stream(read_event_stream(spark, in_dir), lo, hi),
+        state_dir, checkpoint_dir, {"lo": lo, "hi": hi},
     )
 
 
@@ -1865,17 +1657,6 @@ def hll_register_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def run_hll_stream_to_completion(spark: SparkSession, in_dir: str,
-                                 query_name: str = "hll_out"):
-    """Drive the HLL register monitor over a finite fixture; see
-    _run_global_sketch_to_completion for the contract (here the
-    bounded-state claim: state rows == live registers ≤ HLL_M + 1)."""
-    return _run_global_sketch_to_completion(
-        spark, in_dir, _STREAM_SCHEMA, "events.parquet",
-        hll_register_stream, query_name, "HLL",
-    )
-
-
 def hll_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
                      checkpoint_dir: str):
     """Restartable HLL register monitor (_global_sketch_merge_stream
@@ -1888,7 +1669,7 @@ def hll_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
     before the stop must survive the restart), asserted against the
     second wave's own registers, not just A∪B."""
     return _global_sketch_merge_stream(
-        spark, in_dir, _STREAM_SCHEMA, hll_register_stream,
+        hll_register_stream(read_event_stream(spark, in_dir)),
         state_dir, checkpoint_dir,
     )
 
@@ -1942,31 +1723,25 @@ def bloom_cell_stream(events: DataFrame, mb: int) -> DataFrame:
     bloom_merge_stream's stamp guard."""
     from .extras.sketches import bloom_bit_rows
 
-    if int(mb) < 1:
-        raise ValueError(f"bloom_cell_stream width must be >= 1, got {mb}")
+    mb = _bloom_width(mb)
     keyed = events.select(F.col("user_id").alias("k")).withColumn(
-        "mb", F.lit(int(mb))
+        "mb", F.lit(mb)
     )
     return (
         bloom_bit_rows(keyed, "CAST(k AS STRING)")
         .groupBy("bit")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .select("bit", "cnt", F.lit(int(mb)).alias("mb"))
+        .select("bit", "cnt", F.lit(mb).alias("mb"))
     )
 
 
-def run_bloom_cells_to_completion(spark: SparkSession, in_dir: str,
-                                  mb: int,
-                                  query_name: str = "bloom_cells_out"):
-    """Drive the counting-Bloom monitor over a finite fixture; see
-    _run_global_sketch_to_completion for the contract (here the
-    bounded-state claim: state rows == live cells ≤ mb + 1).
-    (run_bloom_stream_to_completion, below, drives the legacy
-    purchase-filtered instance without the state readout.)"""
-    return _run_global_sketch_to_completion(
-        spark, in_dir, _STREAM_SCHEMA, "events.parquet",
-        lambda df: bloom_cell_stream(df, mb), query_name, "bloom",
-    )
+def _bloom_width(mb: int) -> int:
+    """A fixed Bloom width as an int; below 1 there is no modulus, so
+    it is rejected at the entry point."""
+    mb = int(mb)
+    if mb < 1:
+        raise ValueError(f"bloom width must be >= 1, got {mb}")
+    return mb
 
 
 def bloom_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
@@ -1980,25 +1755,12 @@ def bloom_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
     histogram monitor's domain it is caller-supplied per start, so
     the same-width-across-restarts contract is ENFORCED via the
     stamped `mb` column and the shared fail-closed stamp guard
-    (_read_state_stamp): a restart whose width differs from the
+    (_check_state_stamp): a restart whose width differs from the
     persisted state's raises before any state is touched."""
-    mb = int(mb)
-    if mb < 1:
-        raise ValueError(f"bloom_merge_stream width must be >= 1, got {mb}")
-    prev = _read_state_stamp(spark, state_dir, ("mb",),
-                             "bloom_merge_stream")
-    if prev is not None and prev != (mb,):
-        raise ValueError(
-            f"bloom_merge_stream restarted with width {mb} but the "
-            f"persisted state at {state_dir} was built under width "
-            f"{prev[0]}; recovered cells are only meaningful under "
-            "the modulus that built them — resume with the original "
-            "width, or start a fresh state/checkpoint pair"
-        )
+    mb = _bloom_width(mb)
     return _global_sketch_merge_stream(
-        spark, in_dir, _STREAM_SCHEMA,
-        lambda df: bloom_cell_stream(df, mb),
-        state_dir, checkpoint_dir,
+        bloom_cell_stream(read_event_stream(spark, in_dir), mb),
+        state_dir, checkpoint_dir, {"mb": mb},
     )
 
 
@@ -2048,17 +1810,6 @@ def cm_join_cell_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def run_cm_join_stream_to_completion(spark: SparkSession, in_dir: str,
-                                     query_name: str = "cmj_out"):
-    """Drive the join-cardinality monitor over a finite fixture; see
-    _run_global_sketch_to_completion for the contract (here the
-    bounded-state claim: state rows == live cells ≤ CM_D·CM_W)."""
-    return _run_global_sketch_to_completion(
-        spark, in_dir, _STREAM_SCHEMA, "events.parquet",
-        cm_join_cell_stream, query_name, "cm-join",
-    )
-
-
 def cm_join_merge_stream(spark: SparkSession, in_dir: str,
                          state_dir: str, checkpoint_dir: str):
     """Restartable join-cardinality monitor (_global_sketch_merge_stream
@@ -2068,7 +1819,7 @@ def cm_join_merge_stream(spark: SparkSession, in_dir: str,
     geometry is the module-constant CM_D/CM_W, exactly like the
     count-min monitor — no per-start stamp needed."""
     return _global_sketch_merge_stream(
-        spark, in_dir, _STREAM_SCHEMA, cm_join_cell_stream,
+        cm_join_cell_stream(read_event_stream(spark, in_dir)),
         state_dir, checkpoint_dir,
     )
 
@@ -2157,6 +1908,13 @@ _ORDERS_STREAM_SCHEMA = (
 )
 
 
+def read_order_stream(spark: SparkSession, path: str,
+                      glob: str | None = None) -> DataFrame:
+    """Orders file-source stream for the market-concentration monitor.
+    Over a testdata directory, pass glob="orders.parquet"."""
+    return _read_files(spark, _ORDERS_STREAM_SCHEMA, path, glob)
+
+
 def hhi_ams_stream(orders: DataFrame) -> DataFrame:
     """Live market-concentration (HHI) monitor — the streaming twin of
     extras.sketches.ams_hhi (VERDICT r11 next #7): HHI = Σspend²/F1²
@@ -2241,23 +1999,13 @@ def hhi_from_row(row) -> dict:
     }
 
 
-def run_hhi_stream_to_completion(spark: SparkSession, in_dir: str,
-                                 query_name: str = "hhi_out"):
-    """Drive the HHI monitor over a finite orders fixture; see
-    _run_global_sketch_to_completion for the contract."""
-    return _run_global_sketch_to_completion(
-        spark, in_dir, _ORDERS_STREAM_SCHEMA, "orders.parquet",
-        hhi_ams_stream, query_name, "HHI",
-    )
-
-
 def hhi_merge_stream(spark: SparkSession, in_dir: str, state_dir: str,
                      checkpoint_dir: str):
     """Restartable HHI monitor (_global_sketch_merge_stream over
     hhi_ams_stream) — the 16th stateful family's restart pin drives
     this variant."""
     return _global_sketch_merge_stream(
-        spark, in_dir, _ORDERS_STREAM_SCHEMA, hhi_ams_stream,
+        hhi_ams_stream(read_order_stream(spark, in_dir)),
         state_dir, checkpoint_dir,
     )
 
@@ -2294,18 +2042,6 @@ def bloom_bit_stream(events: DataFrame) -> DataFrame:
     ).select("bit", F.col("cnt").alias("n_inserts"))
 
 
-def run_bloom_stream_to_completion(spark: SparkSession, in_dir: str,
-                                   query_name: str = "bloom_out",
-                                   ) -> DataFrame:
-    return _drain_to_memory(
-        bloom_bit_stream(
-            _read_files(spark, _STREAM_SCHEMA, in_dir, "events.parquet",
-                        one_file_per_trigger=True)
-        ),
-        "complete", query_name,
-    )
-
-
 def stream_to_parquet(spark: SparkSession, sf_dir: str, out_dir: str,
                       checkpoint_dir: str):
     """Production-shaped sink: foreachBatch publishes each epoch's
@@ -2314,7 +2050,9 @@ def stream_to_parquet(spark: SparkSession, sf_dir: str, out_dir: str,
     leaves the previous epoch's output readable (exactly-once on top
     of the at-least-once micro-batch contract). `out_dir` is local or
     a file:// URI (io.local_path)."""
-    agg = windowed_event_counts(read_event_stream(spark, sf_dir))
+    agg = windowed_event_counts(
+        read_event_stream(spark, sf_dir, "events.parquet")
+    )
 
     def write_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         publish_dir(
@@ -2352,8 +2090,7 @@ def composed_pipeline_start(spark: SparkSession, in_dir: str,
     through the crash window. Batch parity for all three after a
     mid-stream restart is tests/test_streaming.py::
     test_composed_pipeline_survives_midstream_restart."""
-    raw = _read_files(spark, _STREAM_SCHEMA, in_dir,
-                      one_file_per_trigger=True)
+    raw = read_event_stream(spark, in_dir)
     monitor = (
         hll_register_stream(raw)
         .writeStream.outputMode("complete")
@@ -2397,14 +2134,6 @@ def scrub_stream(docs: DataFrame) -> DataFrame:
     )
 
 
-def run_scrub_to_completion(spark: SparkSession, sf_dir: str,
-                            query_name: str = "scrub_out") -> DataFrame:
-    return _drain_to_memory(
-        scrub_stream(read_document_stream(spark, sf_dir)),
-        "append", query_name,
-    )
-
-
 def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
                          pairs_dir: str, checkpoint_dir: str):
     """Streaming MinHash/LSH INDEX MAINTENANCE — the ingest-time shape
@@ -2440,8 +2169,7 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
         signatures_from,
     )
 
-    docs = _read_files(spark, "doc_id long, text string", in_dir,
-                       one_file_per_trigger=True)
+    docs = read_document_stream(spark, in_dir)
 
     sig_arr = F.array(*[F.col(f"sig_{j}") for j in range(NUM_HASHES)])
     band_cols = ", ".join(f"{b}, band_{b}" for b in range(BANDS))
@@ -2544,18 +2272,6 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
     )
 
 
-def run_minhash_index_to_completion(spark: SparkSession, in_dir: str,
-                                    work_dir: str) -> DataFrame:
-    """Drive the index maintenance over the finite doc set; returns the
-    union of all epochs' emitted pairs (epoch partition column
-    dropped)."""
-    index_dir = os.path.join(work_dir, "index")
-    pairs_dir = os.path.join(work_dir, "pairs")
-    ckpt = os.path.join(work_dir, "ckpt")
-    _drain(minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt))
-    return spark.read.parquet(pairs_dir).drop("epoch")
-
-
 def quality_score_stream(docs: DataFrame) -> DataFrame:
     """Streaming LEARNED quality gate: the hashing-trick linear
     classifier (extras.text.quality_score) applied at ingest time.
@@ -2583,15 +2299,6 @@ def quality_score_stream(docs: DataFrame) -> DataFrame:
         "score_sum",
         "score_sum / token_cnt AS score_mean",
         "(score_sum / token_cnt) > 0 AS kept",
-    )
-
-
-def run_quality_score_to_completion(spark: SparkSession, sf_dir: str,
-                                    query_name: str = "qscore_out"
-                                    ) -> DataFrame:
-    return _drain_to_memory(
-        quality_score_stream(read_document_stream(spark, sf_dir)),
-        "append", query_name,
     )
 
 
@@ -2635,20 +2342,6 @@ def tokenize_stream(docs: DataFrame, merges: list) -> DataFrame:
     )
 
 
-def run_tokenize_to_completion(spark: SparkSession, sf_dir: str,
-                               query_name: str = "bpe_out") -> DataFrame:
-    """Train on the batch corpus, then tokenize the same corpus AS A
-    STREAM with the trained merges — the deploy shape: offline
-    training artifact, online application."""
-    from .extras.bpe import _trained_merges
-
-    merges = _trained_merges(spark, sf_dir)
-    return _drain_to_memory(
-        tokenize_stream(read_document_stream(spark, sf_dir), merges),
-        "append", query_name,
-    )
-
-
 def postings_index_stream(spark: SparkSession, in_dir: str,
                           index_dir: str, checkpoint_dir: str):
     """Streaming inverted-index maintenance, LSM-style: each
@@ -2665,8 +2358,7 @@ def postings_index_stream(spark: SparkSession, in_dir: str,
     byte-for-byte instead of double-counting."""
     from .extras.search import _index_of, _positions_from
 
-    docs = _read_files(spark, "doc_id long, text string", in_dir,
-                       one_file_per_trigger=True)
+    docs = read_document_stream(spark, in_dir)
 
     def write_segment(batch_df: DataFrame, epoch_id: int) -> None:
         batch = batch_df.filter(F.col("text").isNotNull())
@@ -2697,16 +2389,6 @@ def read_postings_index(spark: SparkSession, index_dir: str) -> DataFrame:
             ",", F.sort_array(F.flatten(F.collect_list("docs")))
         ).alias("doc_list"),
     )
-
-
-def run_postings_index_to_completion(spark: SparkSession, in_dir: str,
-                                     work_dir: str) -> DataFrame:
-    """Drive the index maintenance over the finite doc set; returns
-    the merged (merge-on-read) index."""
-    index_dir = os.path.join(work_dir, "index")
-    ckpt = os.path.join(work_dir, "ckpt")
-    _drain(postings_index_stream(spark, in_dir, index_dir, ckpt))
-    return read_postings_index(spark, index_dir)
 
 
 def _compact_recover(index_dir: str) -> None:
@@ -2810,8 +2492,7 @@ def hist_segments_stream(spark: SparkSession, in_dir: str,
     histogram (asserted in tests). Same epoch-overwrite replay safety
     as the other index streams."""
     lo, hi = _hist_domain(lo, hi)
-    ev = _read_files(spark, _STREAM_SCHEMA, in_dir,
-                     one_file_per_trigger=True)
+    ev = read_event_stream(spark, in_dir)
 
     def write_segment(batch_df: DataFrame, epoch_id: int) -> None:
         hist_cell_stream(batch_df, lo, hi).write.mode("overwrite").parquet(
@@ -2850,8 +2531,7 @@ def contamination_screen_stream(spark: SparkSession, in_dir: str,
     on the same corpus (asserted in tests)."""
     from .extras.dedup import CONTAM_THRESHOLD, shingle_sets_from
 
-    docs = _read_files(spark, "doc_id long, text string", in_dir,
-                       one_file_per_trigger=True)
+    docs = read_document_stream(spark, in_dir)
     # dedup defensively: the batch twin distincts its eval set
     # internally, and a caller passing naturally-exploded benchmark
     # shingles (duplicates) would otherwise fan every matching train
@@ -2912,7 +2592,7 @@ def ivf_assign_stream(spark: SparkSession, in_dir: str, index_dir: str,
     from .queries_ext import _centroid_sim_structs
 
     emb = _read_files(spark, "vec_id long, embedding array<float>, label int",
-                      in_dir, one_file_per_trigger=True)
+                      in_dir)
     sim_structs = _centroid_sim_structs(centroids)
 
     def write_segment(batch_df: DataFrame, epoch_id: int) -> None:
@@ -2993,8 +2673,7 @@ def snapshot_diff_stream(spark: SparkSession, in_dir: str,
     O(state + batch) hash-grain rows — one key-partitioned join,
     independent of stream history, the streaming analogue of the
     batch op's O(|A| + |B|) bound."""
-    raw = _read_files(spark, _DOC_CDC_SCHEMA, in_dir,
-                      one_file_per_trigger=True)
+    raw = _read_files(spark, _DOC_CDC_SCHEMA, in_dir)
 
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if not _epoch_is_new(state_dir, epoch_id):
@@ -3099,14 +2778,3 @@ def read_snapshot_deltas(spark: SparkSession,
         F.col("epoch").cast("long").alias("epoch"),
         "status", "n_docs", "n_chars",
     )
-
-
-def run_snapshot_diff_to_completion(spark: SparkSession, in_dir: str,
-                                    work_dir: str) -> DataFrame:
-    """Drive the snapshot-diff maintenance over the finite CDC input;
-    returns the accumulated ledger."""
-    state_dir = os.path.join(work_dir, "state")
-    deltas_dir = os.path.join(work_dir, "deltas")
-    ckpt = os.path.join(work_dir, "ckpt")
-    _drain(snapshot_diff_stream(spark, in_dir, state_dir, deltas_dir, ckpt))
-    return read_snapshot_deltas(spark, deltas_dir)

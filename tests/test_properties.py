@@ -294,9 +294,12 @@ def test_snapshot_diff_matches_model(spark, batches, tmp_path_factory):
             p = os.path.join(in_dir, f)
             if f.endswith(".parquet") and os.path.getmtime(p) > base + k:
                 os.utime(p, (base + k, base + k))
-    ledger = streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, work
-    )
+    deltas = os.path.join(work, "deltas")
+    streaming.drain(streaming.snapshot_diff_stream(
+        spark, in_dir, os.path.join(work, "state"), deltas,
+        os.path.join(work, "ckpt"),
+    ))
+    ledger = streaming.read_snapshot_deltas(spark, deltas)
     got = {
         (r.epoch, r.status): (r.n_docs, r.n_chars)
         for r in ledger.collect()

@@ -96,7 +96,12 @@ def _write_waves(spark, tmp_path, in_dir, waves):
 
 
 def test_stream_matches_batch(spark):
-    stream_out = streaming.run_to_completion(spark, SF_SMOKE)
+    stream_out, _ = streaming.to_memory(
+        streaming.windowed_event_counts(
+            streaming.read_event_stream(spark, SF_SMOKE, "events.parquet")
+        ),
+        "complete",
+    )
     batch_out = q13_windowed_counts(spark, SF_SMOKE)
     s = {
         (r.window_start, r.event_type): (r.event_cnt, r.value_sum)
@@ -131,9 +136,12 @@ def test_native_session_windows_match_batch(spark, tmp_path):
 
     streamed = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in streaming.run_native_sessions_to_completion(
-            spark, in_dir
-        ).collect()
+        for r in streaming.to_memory(
+            streaming.sessionize_stream_native(
+                streaming.read_event_stream(spark, in_dir)
+            ),
+            "append",
+        )[0].collect()
     }
     batch = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
@@ -167,9 +175,12 @@ def test_stream_stream_join_matches_batch(spark, tmp_path):
 
     streamed = {
         (r.user_id, r.purchase_id, r.view_id)
-        for r in streaming.run_view_purchase_join_to_completion(
-            spark, in_dir
-        ).collect()
+        for r in streaming.to_memory(
+            streaming.view_purchase_join_stream(
+                streaming.read_event_stream(spark, in_dir)
+            ),
+            "append",
+        )[0].collect()
     }
     events = read_table(spark, SF_SMOKE, "events")
     batch = {
@@ -187,13 +198,16 @@ def test_stream_to_parquet_roundtrip(spark, tmp_path):
     complete-mode output IS the answer)."""
     out_dir = str(tmp_path / "sink_out")
     ckpt = str(tmp_path / "sink_ckpt")
-    q = streaming.stream_to_parquet(spark, SF_SMOKE, out_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.stream_to_parquet(spark, SF_SMOKE, out_dir, ckpt)
+    )
     sunk = spark.read.parquet(out_dir)
-    mem = streaming.run_to_completion(spark, SF_SMOKE, "sink_parity")
+    mem, _ = streaming.to_memory(
+        streaming.windowed_event_counts(
+            streaming.read_event_stream(spark, SF_SMOKE, "events.parquet")
+        ),
+        "complete",
+    )
     s = {
         (r.window_start, r.event_type): (r.event_cnt, r.value_sum)
         for r in sunk.collect()
@@ -223,7 +237,12 @@ def test_streaming_dedup_across_batches(spark, tmp_path):
     raw.filter("event_id >= 300").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    out = streaming.run_dedup_to_completion(spark, in_dir)
+    out, _ = streaming.to_memory(
+        streaming.dedup_event_stream(
+            streaming.read_event_stream(spark, in_dir)
+        ),
+        "append",
+    )
     assert out.count() == events.count()  # every id exactly once
     assert out.select("event_id").distinct().count() == events.count()
 
@@ -241,20 +260,16 @@ def test_stateful_sessionization_matches_batch(spark, tmp_path):
     _split_by_median_ts(raw, in_dir)
     _write_sentinels(spark, raw, in_dir)
 
-    q = streaming._start_memory_sink(
+    out, q = streaming.to_memory(
         streaming.sessionize_stream(
-            streaming._read_event_files(
-                spark, in_dir, one_file_per_trigger=True
-            )
+            streaming.read_event_stream(spark, in_dir)
         ),
-        "append", "sess_out",
+        "append",
     )
-    state_rows = streaming._drain(
-        q, lambda q: q.lastProgress["stateOperators"][0]["numRowsTotal"]
-    )
+    state_rows = streaming.state_rows(q)
     streamed = {
         (r.user_id, r.session_start, r.session_end, r.n_events)
-        for r in spark.sql("SELECT * FROM sess_out").collect()
+        for r in out.collect()
         if r.user_id >= 0  # drop the sentinels' own sessions
     }
     batch = _batch_sessions(spark, SF_SMOKE)
@@ -270,13 +285,15 @@ def test_streaming_curation_equals_batch_histogram(spark):
     from data_pipeline_and_visualization_dashboard_spark.extras.text import (
         quality_filter,
     )
-    from data_pipeline_and_visualization_dashboard_spark.streaming import (
-        run_curation_to_completion,
-    )
 
+    docs = streaming.read_document_stream(
+        spark, SF_SMOKE, "documents.parquet"
+    )
     stream = {
         (r.verdict, r.doc_cnt)
-        for r in run_curation_to_completion(spark, SF_SMOKE).collect()
+        for r in streaming.to_memory(
+            streaming.curation_stats_stream(docs), "complete"
+        )[0].collect()
     }
     batch = {
         (r.verdict, r.doc_cnt)
@@ -306,13 +323,9 @@ def test_streaming_upsert_state_matches_batch_cdc(spark, tmp_path):
         in_dir, mode="append"
     )
     state_dir = str(tmp_path / "state")
-    q = streaming.upsert_state_stream(
+    streaming.drain(streaming.upsert_state_stream(
         spark, in_dir, state_dir, str(tmp_path / "ckpt")
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
     got = sorted(
         tuple(r) for r in spark.read.parquet(state_dir)
         .select("user_id", "last_event_id", "last_ts",
@@ -338,13 +351,14 @@ def test_streaming_rollup_merge_matches_batch(spark, tmp_path):
 
     raw = spark.read.parquet(SF_SMOKE + "/events.parquet")  # ts NTZ µs
     in_dir = str(tmp_path / "rollup_in")
+    state = str(tmp_path / "rollup_state")
     _split_by_median_ts(raw, in_dir)
+    streaming.drain(streaming.rollup_merge_stream(
+        spark, in_dir, state, str(tmp_path / "rollup_ckpt")
+    ))
     got = {
         (r.event_date, r.event_type): r
-        for r in streaming.run_rollup_merge_to_completion(
-            spark, in_dir, str(tmp_path / "rollup_state"),
-            str(tmp_path / "rollup_ckpt")
-        ).collect()
+        for r in streaming.read_rollup_state(spark, state).collect()
     }
     want = {
         (r.event_date, r.event_type): r
@@ -368,9 +382,15 @@ def test_stream_static_enrichment_matches_batch(spark):
 
     got = sorted(
         (r.hour, r.nation, r.n_events)
-        for r in streaming.run_enriched_counts_to_completion(
-            spark, SF_SMOKE
-        ).collect()
+        for r in streaming.to_memory(
+            streaming.enriched_nation_counts_stream(
+                streaming.read_event_stream(
+                    spark, SF_SMOKE, "events.parquet"
+                ),
+                SF_SMOKE,
+            ),
+            "complete",
+        )[0].collect()
     )
     want = sorted(
         (r.hour, r.nation, r.n_events)
@@ -398,19 +418,11 @@ def test_streaming_rollup_survives_restart_without_double_merge(
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.rollup_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(streaming.rollup_merge_stream(spark, in_dir, state, ckpt))
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.rollup_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(streaming.rollup_merge_stream(spark, in_dir, state, ckpt))
     got = {
         (r.event_date, r.event_type): r.n_events
         for r in spark.read.parquet(state).collect()
@@ -507,9 +519,14 @@ def test_streaming_bloom_bits_match_batch(spark):
 
     got = sorted(
         (r.bit, r.n_inserts)
-        for r in streaming.run_bloom_stream_to_completion(
-            spark, SF_SMOKE
-        ).collect()
+        for r in streaming.to_memory(
+            streaming.bloom_bit_stream(
+                streaming.read_event_stream(
+                    spark, SF_SMOKE, "events.parquet"
+                )
+            ),
+            "complete",
+        )[0].collect()
     )
     batch = spark.read.parquet(SF_SMOKE + "/events.parquet").select(
         "user_id", "event_type"
@@ -547,26 +564,18 @@ def test_rollup_epoch_replay_is_noop(spark, tmp_path):
     in_dir = str(tmp_path / "replay_in")
     state = str(tmp_path / "replay_state")
     _split_by_median_ts(raw, in_dir)
-    q = streaming.rollup_merge_stream(
+    streaming.drain(streaming.rollup_merge_stream(
         spark, in_dir, state, str(tmp_path / "ckpt1")
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
     before = {
         (r.event_date, r.event_type): (r.n_events, r.sv)
         for r in spark.read.parquet(state).collect()
     }
     # fresh checkpoint => the file source re-delivers everything with
     # epoch ids starting at 0 again: the worst-case replay storm
-    q2 = streaming.rollup_merge_stream(
+    streaming.drain(streaming.rollup_merge_stream(
         spark, in_dir, state, str(tmp_path / "ckpt2")
-    )
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    ))
     after = {
         (r.event_date, r.event_type): (r.n_events, r.sv)
         for r in spark.read.parquet(state).collect()
@@ -687,23 +696,11 @@ def test_composed_pipeline_survives_midstream_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    qs = streaming.composed_pipeline_start(spark, in_dir, root)
-    try:
-        for q in qs:
-            q.processAllAvailable()
-    finally:
-        for q in qs:
-            q.stop()
+    streaming.drain(*streaming.composed_pipeline_start(spark, in_dir, root))
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    qs = streaming.composed_pipeline_start(spark, in_dir, root)
-    try:
-        for q in qs:
-            q.processAllAvailable()
-    finally:
-        for q in qs:
-            q.stop()
+    streaming.drain(*streaming.composed_pipeline_start(spark, in_dir, root))
 
     got_cdc = sorted(
         tuple(r)
@@ -752,7 +749,14 @@ def test_streaming_scrub_matches_batch(spark):
 
     got = sorted(
         tuple(r)
-        for r in streaming.run_scrub_to_completion(spark, SF_SMOKE).collect()
+        for r in streaming.to_memory(
+            streaming.scrub_stream(
+                streaming.read_document_stream(
+                    spark, SF_SMOKE, "documents.parquet"
+                )
+            ),
+            "append",
+        )[0].collect()
     )
     want = sorted(
         tuple(r) for r in scrub_pii(spark, SF_SMOKE).collect()
@@ -769,24 +773,24 @@ def test_streaming_minhash_index_equals_batch_pairs(spark, tmp_path):
         dedup_minhash_pairs,
     )
     from data_pipeline_and_visualization_dashboard_spark.io import read_table
-    from data_pipeline_and_visualization_dashboard_spark.streaming import (
-        run_minhash_index_to_completion,
-    )
     from tests.conftest import SF_SMOKE
 
     docs = read_table(spark, SF_SMOKE, "documents", ["doc_id", "text"])
     in_dir = str(tmp_path / "in")
+    pairs_dir = str(tmp_path / "pairs")
     # four arrival waves interleaved by doc_id so cross-wave pairs
     # exercise the delta-vs-index join in both directions
     for i in range(4):
         docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
+    streaming.drain(streaming.minhash_index_stream(
+        spark, in_dir, str(tmp_path / "index"), pairs_dir,
+        str(tmp_path / "ckpt"),
+    ))
     got = {
         (r.doc_id_a, r.doc_id_b, round(r.est_jaccard, 9), round(r.jaccard, 9))
-        for r in run_minhash_index_to_completion(
-            spark, in_dir, str(tmp_path / "work")
-        ).collect()
+        for r in spark.read.parquet(pairs_dir).collect()
     }
     want = {
         (r.doc_id_a, r.doc_id_b, round(r.est_jaccard, 9), round(r.jaccard, 9))
@@ -823,20 +827,17 @@ def test_streaming_minhash_index_survives_restart(spark, tmp_path):
     docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q = minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()  # "crash" between waves
+    # "crash" between waves
+    streaming.drain(
+        minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt)
+    )
     time.sleep(0.1)
     docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q2 = minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        minhash_index_stream(spark, in_dir, index_dir, pairs_dir, ckpt)
+    )
     got = {
         (r.doc_id_a, r.doc_id_b, round(r.jaccard, 9))
         for r in spark.read.parquet(pairs_dir).drop("epoch").collect()
@@ -859,9 +860,14 @@ def test_streaming_quality_score_equals_batch(spark):
 
     got = {
         r.doc_id: (r.token_cnt, r.score_sum, r.kept)
-        for r in streaming.run_quality_score_to_completion(
-            spark, SF_SMOKE
-        ).collect()
+        for r in streaming.to_memory(
+            streaming.quality_score_stream(
+                streaming.read_document_stream(
+                    spark, SF_SMOKE, "documents.parquet"
+                )
+            ),
+            "append",
+        )[0].collect()
     }
     want = {
         r.doc_id: (r.token_cnt, r.score_sum, r.kept)
@@ -875,15 +881,22 @@ def test_streaming_bpe_tokenize_equals_batch(spark):
     equal the batch bpe_apply row-for-row — the artifact-deploy shape:
     train offline, apply as a stateless ingest projection."""
     from data_pipeline_and_visualization_dashboard_spark.extras.bpe import (
+        _trained_merges,
         bpe_apply,
     )
     from tests.conftest import SF_SMOKE
 
     got = {
         r.doc_id: (r.n_words, r.n_tokens)
-        for r in streaming.run_tokenize_to_completion(
-            spark, SF_SMOKE
-        ).collect()
+        for r in streaming.to_memory(
+            streaming.tokenize_stream(
+                streaming.read_document_stream(
+                    spark, SF_SMOKE, "documents.parquet"
+                ),
+                _trained_merges(spark, SF_SMOKE),
+            ),
+            "append",
+        )[0].collect()
     }
     want = {
         r.doc_id: (r.n_words, r.n_tokens)
@@ -902,7 +915,8 @@ def test_streaming_postings_index_equals_batch(spark, tmp_path):
     )
     from data_pipeline_and_visualization_dashboard_spark.io import read_table
     from data_pipeline_and_visualization_dashboard_spark.streaming import (
-        run_postings_index_to_completion,
+        postings_index_stream,
+        read_postings_index,
     )
     from tests.conftest import SF_SMOKE
 
@@ -912,11 +926,13 @@ def test_streaming_postings_index_equals_batch(spark, tmp_path):
         docs.filter(F.col("doc_id") % 4 == i).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
+    seg_dir = str(tmp_path / "index")
+    streaming.drain(
+        postings_index_stream(spark, in_dir, seg_dir, str(tmp_path / "ckpt"))
+    )
     got = {
         r.term: (r.df, r.cf, r.doc_list)
-        for r in run_postings_index_to_completion(
-            spark, in_dir, str(tmp_path / "work")
-        ).collect()
+        for r in read_postings_index(spark, seg_dir).collect()
     }
     want = {
         r.term: (r.df, r.cf, r.doc_list)
@@ -953,14 +969,10 @@ def test_streaming_histogram_segments_merge_to_batch(spark, tmp_path):
         ).parquet(in_dir)
     below.coalesce(1).write.mode("append").parquet(in_dir)
     ev = ev.unionByName(below)
-    q = hist_segments_stream(
+    streaming.drain(hist_segments_stream(
         spark, in_dir, str(tmp_path / "seg"), str(tmp_path / "ckpt"),
         lo, hi,
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
     merged = {
         (r.event_type, r.bin): r.cnt
         for r in read_hist_segments(spark, str(tmp_path / "seg")).collect()
@@ -1013,13 +1025,9 @@ def test_streaming_contamination_screen_equals_batch(spark, tmp_path):
         train.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-    q = contamination_screen_stream(
+    streaming.drain(contamination_screen_stream(
         spark, in_dir, eval_sh, str(tmp_path / "out"), str(tmp_path / "ckpt")
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ))
     got = {
         r.doc_id: (r.n_shingles, r.n_overlap, r.is_contaminated)
         for r in spark.read.parquet(str(tmp_path / "out")).collect()
@@ -1056,20 +1064,15 @@ def test_streaming_postings_index_survives_restart(spark, tmp_path):
     docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()  # "crash" between waves
+    # "crash" between waves
+    streaming.drain(
+        postings_index_stream(spark, in_dir, seg_dir, ckpt)
+    )
     time.sleep(0.1)
     docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q2 = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(postings_index_stream(spark, in_dir, seg_dir, ckpt))
     got = {
         r.term: (r.df, r.cf, r.doc_list)
         for r in read_postings_index(spark, seg_dir).collect()
@@ -1114,20 +1117,17 @@ def test_streaming_ivf_assign_survives_restart(spark, tmp_path):
     emb.filter(F.col("vec_id") % 2 == 0).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q = ivf_assign_stream(spark, in_dir, index_dir, ckpt, centroids)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()  # "crash" between waves
+    # "crash" between waves
+    streaming.drain(
+        ivf_assign_stream(spark, in_dir, index_dir, ckpt, centroids)
+    )
     time.sleep(0.1)
     emb.filter(F.col("vec_id") % 2 == 1).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q2 = ivf_assign_stream(spark, in_dir, index_dir, ckpt, centroids)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        ivf_assign_stream(spark, in_dir, index_dir, ckpt, centroids)
+    )
     got = {
         (r.c_id, r.centroid_id)
         for r in read_ivf_assign(spark, index_dir).collect()
@@ -1166,11 +1166,7 @@ def test_postings_compaction_preserves_index_and_ingest(spark, tmp_path):
         docs.filter(F.col("doc_id") % 4 == wave).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-    q = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(postings_index_stream(spark, in_dir, seg_dir, ckpt))
     before = {
         r.term: (r.df, r.cf, r.doc_list)
         for r in read_postings_index(spark, seg_dir).collect()
@@ -1193,11 +1189,7 @@ def test_postings_compaction_preserves_index_and_ingest(spark, tmp_path):
     docs.filter(F.col("doc_id") % 4 == 3).coalesce(1).write.mode(
         "append"
     ).parquet(in_dir)
-    q2 = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(postings_index_stream(spark, in_dir, seg_dir, ckpt))
     got = {
         r.term: (r.df, r.cf, r.doc_list)
         for r in read_postings_index(spark, seg_dir).collect()
@@ -1234,11 +1226,7 @@ def test_postings_compaction_recovers_interrupted_run(spark, tmp_path):
         docs.filter(F.col("doc_id") % 3 == wave).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-    q = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(postings_index_stream(spark, in_dir, seg_dir, ckpt))
     before = {
         r.term: (r.df, r.cf, r.doc_list)
         for r in read_postings_index(spark, seg_dir).collect()
@@ -1294,11 +1282,7 @@ def test_postings_compaction_rolls_forward_after_install(spark, tmp_path):
         docs.filter(F.col("doc_id") % 3 == wave).coalesce(1).write.mode(
             "append"
         ).parquet(in_dir)
-    q = postings_index_stream(spark, in_dir, seg_dir, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(postings_index_stream(spark, in_dir, seg_dir, ckpt))
     # keep a pre-fold copy of the base victim to stage the crash state
     stale = str(tmp_path / "stale_epoch0")
     shutil.copytree(os.path.join(seg_dir, "epoch=0"), stale)
@@ -1342,14 +1326,19 @@ def test_streaming_snapshot_diff_matches_batch(spark, tmp_path):
         "ELSE text END AS text",
     )
     in_dir = str(tmp_path / "cdc_in")
-    work = str(tmp_path / "sd")
+    state, deltas = str(tmp_path / "state"), str(tmp_path / "deltas")
+
+    def drain_ledger():
+        streaming.drain(streaming.snapshot_diff_stream(
+            spark, in_dir, state, deltas, str(tmp_path / "ckpt")
+        ))
+        return streaming.read_snapshot_deltas(spark, deltas)
+
     # phase 1: snapshot A seeds the state (one epoch, all 'added')
     prev.selectExpr(
         "0L AS seq", "doc_id", "text", "'upsert' AS op"
     ).coalesce(1).write.parquet(in_dir, mode="append")
-    seeded = streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, work
-    )
+    seeded = drain_ledger()
     m0 = seeded.agg(F.max("epoch")).first()[0]
     assert seeded.filter(
         (F.col("epoch") <= m0) & (F.col("status") != "added")
@@ -1366,9 +1355,7 @@ def test_streaming_snapshot_diff_matches_batch(spark, tmp_path):
         "2L AS seq", "doc_id", "CAST(NULL AS STRING) AS text",
         "'delete' AS op",
     ).coalesce(1).write.parquet(in_dir, mode="append")
-    ledger = streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, work
-    )
+    ledger = drain_ledger()
     got = {
         r.status: (r.n_docs, r.n_chars)
         for r in ledger.filter(F.col("epoch") > m0)
@@ -1387,7 +1374,7 @@ def test_streaming_snapshot_diff_matches_batch(spark, tmp_path):
     # final state == snapshot B's content-hash table
     state = sorted(
         tuple(r)
-        for r in spark.read.parquet(work + "/state")
+        for r in spark.read.parquet(state)
         .select("doc_id", "h", "n_chars")
         .collect()
     )
@@ -1400,9 +1387,7 @@ def test_streaming_snapshot_diff_matches_batch(spark, tmp_path):
     )
     assert state == want_state
     # idempotence: draining again with no new input changes nothing
-    again = streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, work
-    )
+    again = drain_ledger()
     assert sorted(map(tuple, again.collect())) == sorted(
         map(tuple, ledger.collect())
     )
@@ -1415,10 +1400,14 @@ def test_snapshot_diff_null_text_and_seq_ties(spark, tmp_path):
     stores h = md5(NULL) = NULL, so presence must not be inferred
     from the hash); (b) equal-seq ops on one doc break ties
     deterministically (upsert over delete, then desc content hash)."""
-    import os
-
     in_dir = str(tmp_path / "cdc_in")
-    work = str(tmp_path / "sd")
+    state, deltas = str(tmp_path / "state"), str(tmp_path / "deltas")
+
+    def drain():
+        streaming.drain(streaming.snapshot_diff_stream(
+            spark, in_dir, state, deltas, str(tmp_path / "ckpt")
+        ))
+
     b1 = spark.createDataFrame(
         [
             (0, 1, None, "upsert"),   # NULL text -> NULL hash state
@@ -1429,7 +1418,7 @@ def test_snapshot_diff_null_text_and_seq_ties(spark, tmp_path):
         "seq long, doc_id long, text string, op string",
     )
     b1.coalesce(1).write.parquet(in_dir, mode="append")
-    streaming.run_snapshot_diff_to_completion(spark, in_dir, work)
+    drain()
     b2 = spark.createDataFrame(
         [
             (1, 1, "xx", "upsert"),   # NULL -> text   => changed
@@ -1446,9 +1435,8 @@ def test_snapshot_diff_null_text_and_seq_ties(spark, tmp_path):
         "seq long, doc_id long, text string, op string",
     )
     b2.coalesce(1).write.parquet(in_dir, mode="append")
-    ledger = streaming.run_snapshot_diff_to_completion(
-        spark, in_dir, work
-    )
+    drain()
+    ledger = streaming.read_snapshot_deltas(spark, deltas)
     m = {
         (r.epoch, r.status): (r.n_docs, r.n_chars)
         for r in ledger.collect()
@@ -1460,8 +1448,7 @@ def test_snapshot_diff_null_text_and_seq_ties(spark, tmp_path):
     assert m[(1, "removed")] == (1, None)  # doc 4, NULL prev chars
     state = {
         r.doc_id: r.h
-        for r in spark.read.parquet(os.path.join(work, "state"))
-        .collect()
+        for r in spark.read.parquet(state).collect()
     }
     import hashlib as _hl
 
@@ -1511,8 +1498,11 @@ def test_stream_stream_left_join_matches_batch(spark, tmp_path):
             "    THEN INTERVAL 1 HOURS ELSE INTERVAL 0 HOURS END)"
             " AS TIMESTAMP_NTZ) AS ts",
         ).coalesce(1).write.parquet(in_dir, mode="append")
-    out = streaming.run_view_purchase_left_join_to_completion(
-        spark, in_dir
+    out, _ = streaming.to_memory(
+        streaming.view_purchase_left_join_stream(
+            streaming.read_event_stream(spark, in_dir)
+        ),
+        "append",
     )
     streamed = {
         (r.user_id, r.view_id, r.purchase_id)
@@ -1552,7 +1542,12 @@ def test_transition_stream_matches_batch(spark, tmp_path):
     raw = spark.read.parquet(_SF + "/events.parquet")
     in_dir = str(tmp_path / "tr_in")
     _split_by_median_ts(raw, in_dir)
-    pairs = streaming.run_transitions_to_completion(spark, in_dir)
+    pairs, _ = streaming.to_memory(
+        streaming.transition_stream(
+            streaming.read_event_stream(spark, in_dir)
+        ),
+        "append",
+    )
     got = {
         (r.from_type, r.to_type): r.n
         for r in pairs.groupBy("from_type", "to_type")
@@ -1583,7 +1578,12 @@ def test_last_touch_stream_matches_batch(spark, tmp_path):
     raw = spark.read.parquet(_SF + "/events.parquet")
     in_dir = str(tmp_path / "lt_in")
     _split_by_median_ts(raw, in_dir)
-    credits = streaming.run_last_touch_to_completion(spark, in_dir)
+    credits, _ = streaming.to_memory(
+        streaming.last_touch_stream(
+            streaming.read_event_stream(spark, in_dir)
+        ),
+        "append",
+    )
     got = sorted(
         map(tuple, streaming.last_touch_rollup(credits).collect())
     )
@@ -1636,7 +1636,12 @@ def test_linear_attribution_stream_matches_batch(spark, tmp_path):
     raw = spark.read.parquet(_SF + "/events.parquet")
     in_dir = str(tmp_path / "la_in")
     _split_by_median_ts(raw, in_dir)
-    credits = streaming.run_linear_attr_to_completion(spark, in_dir)
+    credits, _ = streaming.to_memory(
+        streaming.linear_attribution_stream(
+            streaming.read_event_stream(spark, in_dir)
+        ),
+        "append",
+    )
     rows = streaming.linear_attr_rollup(credits).collect()
     _assert_linear_attr_parity(spark, rows, _SF)
 
@@ -1660,12 +1665,7 @@ def test_linear_attribution_stream_survives_restart(spark, tmp_path):
     t1, t2 = _split_three_waves(raw, in_dir)
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
+        ev = streaming.read_event_stream(spark, in_dir)
         return (
             streaming.linear_attribution_stream(ev)
             .writeStream.outputMode("append")
@@ -1675,17 +1675,9 @@ def test_linear_attribution_stream_survives_restart(spark, tmp_path):
             .start()
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     rows = streaming.linear_attr_rollup(
         spark.read.parquet(out_dir)
     ).collect()
@@ -1717,12 +1709,7 @@ def test_bounded_last_touch_survives_restart(spark, tmp_path):
     t1, t2 = _split_three_waves(raw, in_dir)
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
+        ev = streaming.read_event_stream(spark, in_dir)
         return (
             streaming.last_touch_stream_bounded(ev)
             .writeStream.outputMode("append")
@@ -1732,17 +1719,9 @@ def test_bounded_last_touch_survives_restart(spark, tmp_path):
             .start()
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     got = sorted(
         map(
             tuple,
@@ -1806,31 +1785,14 @@ def test_bounded_last_touch_evicts_idle_user(spark, tmp_path):
             "event_type", "value", "CAST(NULL AS string) AS props",
         ).coalesce(1).write.parquet(in_dir, mode="append")
 
-    def run(builder, name):
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
+    def run(builder):
+        out, _ = streaming.to_memory(
+            builder(streaming.read_event_stream(spark, in_dir)), "append"
         )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        q = (
-            builder(ev)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return sorted(
-            (r.user_id, r.channel)
-            for r in spark.sql(f"SELECT * FROM {name}").collect()
-        )
+        return sorted((r.user_id, r.channel) for r in out.collect())
 
-    bounded = run(streaming.last_touch_stream_bounded, "lt_evict_b")
-    exact = run(streaming.last_touch_stream, "lt_evict_e")
+    bounded = run(streaming.last_touch_stream_bounded)
+    exact = run(streaming.last_touch_stream)
     # exact twin: no eviction ever — both users keep their touch
     assert exact == [(100, "click"), (300, "click"), (300, "click")]
     # bounded: idle A evicted -> '(none)'; actively-purchasing C's
@@ -1898,31 +1860,17 @@ def test_attribution_null_type_and_late_touch(spark, tmp_path):
         "event_type", "value", "CAST(NULL AS string) AS props",
     ).coalesce(1).write.parquet(batch_dir + "/events.parquet")
 
-    def run(builder, name):
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
+    def run(builder):
+        ev = streaming.read_event_stream(spark, in_dir)
         # huge watermark delay: the late wave must reach the fold
         # (this test pins FOLD semantics, not watermark dropping)
-        q = (
-            builder(ev, watermark="3650 days")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return spark.sql(f"SELECT * FROM {name}")
+        return streaming.to_memory(
+            builder(ev, watermark="3650 days"), "append"
+        )[0]
 
     # --- last-touch: stream rollup == batch q98, and A credits click
     lt = streaming.last_touch_rollup(
-        run(streaming.last_touch_stream, "attr_lt")
+        run(streaming.last_touch_stream)
     ).collect()
     q98 = q98_last_touch_attribution(spark, batch_dir).collect()
     assert sorted(map(tuple, lt)) == sorted(map(tuple, q98))
@@ -1933,7 +1881,7 @@ def test_attribution_null_type_and_late_touch(spark, tmp_path):
     # --- linear: stream rollup == batch q99 (0-credit channels may
     # appear batch-side only — none here), NULL row in no bucket
     la = streaming.linear_attr_rollup(
-        run(streaming.linear_attribution_stream, "attr_la")
+        run(streaming.linear_attribution_stream)
     ).collect()
     q99 = q99_linear_attribution(spark, batch_dir).collect()
     assert sorted((r.channel, r.attributed_revenue) for r in la) == sorted(
@@ -2014,6 +1962,32 @@ def test_transition_fold_pairs_null_types_like_q89():
     # a first event never pairs, whatever its type
     rows, st = _transition_fold(8, [_fold_pdf([(5, 1, "A")])], -1, -1, None)
     assert rows == [] and st == (5, 1, "A")
+
+
+def test_drain_stops_every_query_and_state_rows_needs_progress():
+    """drain stops every query it was given, even when one fails, and
+    re-raises the failure; state_rows sums the state rows of a stopped
+    query's last progress and raises, not returns a sentinel, when
+    there is none."""
+    from unittest import mock
+
+    ok = mock.Mock(lastProgress={
+        "stateOperators": [{"numRowsTotal": 2}, {"numRowsTotal": 3}]
+    })
+    assert streaming.drain(ok) is ok
+    ok.processAllAvailable.assert_called_once_with()
+    ok.stop.assert_called_once_with()
+    assert streaming.state_rows(ok) == 5
+    bad = mock.Mock(**{
+        "processAllAvailable.side_effect": RuntimeError("query failed")
+    })
+    other = mock.Mock(lastProgress=None)
+    with pytest.raises(RuntimeError, match="query failed"):
+        streaming.drain(bad, other)
+    bad.stop.assert_called_once_with()
+    other.stop.assert_called_once_with()
+    with pytest.raises(RuntimeError, match="progress record"):
+        streaming.state_rows(other)
 
 
 def test_per_user_handler_state_protocol():
@@ -2119,8 +2093,11 @@ def test_transition_stream_null_types_match_q89(spark, tmp_path):
         pq.write_table(table, path)
         os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
 
-    pairs = streaming.run_transitions_to_completion(
-        spark, str(ev_dir), query_name="transitions_null_types"
+    pairs, _ = streaming.to_memory(
+        streaming.transition_stream(
+            streaming.read_event_stream(spark, str(ev_dir))
+        ),
+        "append",
     )
     got = {
         (r.from_type, r.to_type): r.n
@@ -2176,12 +2153,7 @@ def test_transition_stream_survives_restart(spark, tmp_path):
     )
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
+        ev = streaming.read_event_stream(spark, in_dir)
         return (
             streaming.transition_stream(ev)
             .writeStream.outputMode("append")
@@ -2191,17 +2163,9 @@ def test_transition_stream_survives_restart(spark, tmp_path):
             .start()
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     got = {
         (r.from_type, r.to_type): r.n
         for r in spark.read.parquet(out_dir)
@@ -2262,12 +2226,7 @@ def test_streaming_dedup_survives_restart(spark, tmp_path):
     )
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
+        ev = streaming.read_event_stream(spark, in_dir)
         return (
             streaming.dedup_event_stream(ev, watermark="3650 days")
             .writeStream.outputMode("append")
@@ -2277,21 +2236,13 @@ def test_streaming_dedup_survives_restart(spark, tmp_path):
             .start()
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     # wave 3 (post-restart): the remaining ids PLUS re-copies of ids
     # the stream deduped BEFORE the stop
     raw.filter("event_id >= 700 OR event_id < 300").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     out = spark.read.parquet(out_dir)
     n_all = read_table(spark, SF_SMOKE, "events").count()
     assert out.count() == n_all  # every id exactly once, dupes dropped
@@ -2312,11 +2263,9 @@ def test_stateful_sessionization_survives_restart(spark, tmp_path):
     _, t2 = _split_three_waves(raw, in_dir)
 
     def run():
-        streaming._drain(
+        streaming.drain(
             streaming.sessionize_stream(
-                streaming._read_event_files(
-                    spark, in_dir, one_file_per_trigger=True
-                )
+                streaming.read_event_stream(spark, in_dir)
             )
             .writeStream.outputMode("append")
             .format("parquet")
@@ -2375,12 +2324,7 @@ def test_stream_stream_join_survives_restart(spark, tmp_path):
     raw.filter(us <= t2).coalesce(1).write.parquet(in_dir, mode="append")
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
+        ev = streaming.read_event_stream(spark, in_dir)
         return (
             streaming.view_purchase_join_stream(ev)
             .writeStream.outputMode("append")
@@ -2390,17 +2334,9 @@ def test_stream_stream_join_survives_restart(spark, tmp_path):
             .start()
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     streamed = {
         (r.user_id, r.purchase_id, r.view_id)
         for r in spark.read.parquet(out_dir).collect()
@@ -2439,12 +2375,7 @@ def test_stream_stream_left_join_survives_restart(spark, tmp_path):
     _, t2 = _split_three_waves(raw, in_dir)
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
+        ev = streaming.read_event_stream(spark, in_dir)
         return (
             streaming.view_purchase_left_join_stream(ev)
             .writeStream.outputMode("append")
@@ -2454,11 +2385,7 @@ def test_stream_stream_left_join_survives_restart(spark, tmp_path):
             .start()
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     # post-restart input: the final wave + the sentinel flush batches
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
@@ -2481,11 +2408,7 @@ def test_stream_stream_left_join_survives_restart(spark, tmp_path):
             "    THEN INTERVAL 1 HOURS ELSE INTERVAL 0 HOURS END)"
             " AS TIMESTAMP_NTZ) AS ts",
         ).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     streamed = {
         (r.user_id, r.view_id, r.purchase_id)
         for r in spark.read.parquet(out_dir).collect()
@@ -2524,30 +2447,17 @@ def test_bounded_dedup_matches_batch_and_evicts_state(spark, tmp_path):
         in_dir, mode="append"
     )
 
-    def run(watermark, query_name):
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
+    def run(watermark):
+        ev = streaming.read_event_stream(spark, in_dir)
+        out, q = streaming.to_memory(
+            streaming.dedup_event_stream_bounded(ev, watermark=watermark),
+            "append",
         )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        q = (
-            streaming.dedup_event_stream_bounded(ev, watermark=watermark)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
-        finally:
-            q.stop()
-        return spark.sql(f"SELECT * FROM {query_name}"), state_rows
+        return out, streaming.state_rows(q)
 
     # (a) watermark >> input span: exact-distinct parity, every id
     # still in state (nothing evictable yet)
-    out, state_wide = run("3650 days", "bdedup_wide")
+    out, state_wide = run("3650 days")
     assert out.count() == n_all
     assert out.select("event_id").distinct().count() == n_all
     assert state_wide == n_all
@@ -2555,7 +2465,7 @@ def test_bounded_dedup_matches_batch_and_evicts_state(spark, tmp_path):
     # THIS input (the redelivered batch shares the original event
     # times, so dupes are either in-horizon-deduped or late-dropped),
     # and end-of-stream state is a fraction of the id domain
-    out2, state_narrow = run("10 minutes", "bdedup_narrow")
+    out2, state_narrow = run("10 minutes")
     assert out2.select("event_id").distinct().count() == out2.count()
     assert state_narrow < n_all / 2
 
@@ -2575,28 +2485,12 @@ def test_bounded_transitions_parity_and_idle_eviction(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     _split_by_median_ts(raw, in_dir)
 
-    def run(d, query_name):
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(d)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-        q = (
-            streaming.transition_stream_bounded(ev)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(query_name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            state_rows = q.lastProgress["stateOperators"][0]["numRowsTotal"]
-        finally:
-            q.stop()
-        return spark.sql(f"SELECT * FROM {query_name}"), state_rows
-
-    out, _ = run(in_dir, "btrans_real")
+    out, _ = streaming.to_memory(
+        streaming.transition_stream_bounded(
+            streaming.read_event_stream(spark, in_dir)
+        ),
+        "append",
+    )
     got = {
         (r.from_type, r.to_type): r.n
         for r in out.groupBy("from_type", "to_type")
@@ -2614,7 +2508,8 @@ def test_bounded_transitions_parity_and_idle_eviction(spark, tmp_path):
     # only observable if the no-data batch runs BEFORE the user's
     # return lands — phase 1 drains files 1-2 (watermark passes
     # user 1's +30d1h horizon; the trailing no-data batch evicts
-    # them), THEN file 3 is written and drained in the same query run:
+    # them), THEN file 3 is written and drained by a restart on the
+    # same checkpoint:
     #   file1: user1 at t0/+1h, user2 at t0 (timeouts armed at +30d)
     #   file2: user2 at +40d/+45d (their own state was still live at
     #          +40d — the watermark never proved THEM idle — so their
@@ -2650,32 +2545,27 @@ def test_bounded_transitions_parity_and_idle_eviction(spark, tmp_path):
             " 0, 0, 0, 0, off) AS TIMESTAMP_NTZ) AS ts",
         ).coalesce(1).write.parquet(syn, mode="append")
 
+    def start():
+        return (
+            streaming.transition_stream_bounded(
+                streaming.read_event_stream(spark, syn)
+            )
+            .writeStream.outputMode("append")
+            .format("parquet")
+            .option("path", str(tmp_path / "syn_out"))
+            .option("checkpointLocation", str(tmp_path / "syn_ckpt"))
+            .start()
+        )
+
     for batch in waves:
         land(batch)
-    raw_s = (
-        spark.readStream.schema(streaming._STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(syn)
-    )
-    ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
-    q = (
-        streaming.transition_stream_bounded(ev)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("btrans_syn")
-        .start()
-    )
-    try:
-        q.processAllAvailable()  # drains files 1-2 + the no-data
-        # batch that evicts user 1 at +30d1h
-        land(wave3)
-        q.processAllAvailable()
-        state2 = q.lastProgress["stateOperators"][0]["numRowsTotal"]
-    finally:
-        q.stop()
+    # drains files 1-2 + the no-data batch that evicts user 1 at +30d1h
+    streaming.drain(start())
+    land(wave3)
+    state2 = streaming.state_rows(streaming.drain(start()))
     pairs = {
         (r.user_id, r.from_type, r.to_type)
-        for r in spark.sql("SELECT * FROM btrans_syn").collect()
+        for r in spark.read.parquet(str(tmp_path / "syn_out")).collect()
     }
     # user 1: in-horizon pair emitted; the bridging pair across the
     # 60-day silence is NOT (state evicted once the watermark passed
@@ -2709,8 +2599,11 @@ def test_session_fold_extends_start_backward_in_gap(spark, tmp_path):
         [(4, "2024-01-01 11:00:00")],
     ])
 
-    out = streaming.run_sessionize_to_completion(
-        spark, in_dir, query_name="backfill_sessions"
+    out, _ = streaming.to_memory(
+        streaming.sessionize_stream(
+            streaming.read_event_stream(spark, in_dir)
+        ),
+        "append",
     )
     closed = {
         (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
@@ -2734,8 +2627,11 @@ def test_session_stream_merges_late_bridging_event(spark, tmp_path):
         [(3, "2024-01-01 10:28:00")],
         [(4, "2024-01-01 11:30:00")],
     ])
-    out = streaming.run_sessionize_to_completion(
-        spark, in_dir, query_name="bridge_sessions"
+    out, _ = streaming.to_memory(
+        streaming.sessionize_stream(
+            streaming.read_event_stream(spark, in_dir)
+        ),
+        "append",
     )
     assert {
         (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
@@ -2769,12 +2665,7 @@ def test_bounded_transitions_survive_restart(spark, tmp_path):
     t1, t2 = _split_three_waves(raw, in_dir)
 
     def start():
-        raw_s = (
-            spark.readStream.schema(streaming._STREAM_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
-        ev = raw_s.withColumn("ts", F.col("ts").cast("timestamp"))
+        ev = streaming.read_event_stream(spark, in_dir)
         return (
             streaming.transition_stream_bounded(ev)
             .writeStream.outputMode("append")
@@ -2784,17 +2675,9 @@ def test_bounded_transitions_survive_restart(spark, tmp_path):
             .start()
         )
 
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     raw.filter(us > t2).coalesce(1).write.parquet(in_dir, mode="append")
-    q = start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(start())
     got = {
         (r.from_type, r.to_type): r.n
         for r in spark.read.parquet(out_dir)
@@ -2818,9 +2701,13 @@ def test_streaming_ams_f2_matches_batch_with_one_state_row(spark):
     state row regardless of key cardinality (state honesty rule)."""
     from data_pipeline_and_visualization_dashboard_spark.extras.sketches import AMS_R, ams_f2
 
-    out, state_rows = streaming.run_ams_stream_to_completion(
-        spark, SF_SMOKE
+    out, q = streaming.to_memory(
+        streaming.ams_f2_stream(
+            streaming.read_event_stream(spark, SF_SMOKE, "events.parquet")
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(q)
     row = out.collect()
     assert len(row) == 1
     row = row[0]
@@ -2876,22 +2763,14 @@ def test_streaming_ams_f2_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.ams_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(streaming.ams_merge_stream(spark, in_dir, state, ckpt))
     # the first wave alone must differ from the full answer, or the
     # recovery assertion below would be vacuous
     wave1 = spark.read.parquet(state).first()
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.ams_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(streaming.ams_merge_stream(spark, in_dir, state, ckpt))
     got = spark.read.parquet(state).first()
     # batch parity oracle: the SAME plan fragment over a batch read of
     # the full fixture (the established stream-twin convention)
@@ -2925,9 +2804,13 @@ def test_streaming_hhi_matches_batch_with_one_state_row(spark):
         ams_hhi,
     )
 
-    out, state_rows = streaming.run_hhi_stream_to_completion(
-        spark, SF_SMOKE
+    out, q = streaming.to_memory(
+        streaming.hhi_ams_stream(
+            streaming.read_order_stream(spark, SF_SMOKE, "orders.parquet")
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(q)
     rows = out.collect()
     assert len(rows) == 1
     row = rows[0]
@@ -2997,20 +2880,12 @@ def test_streaming_hhi_survives_restart(spark, tmp_path):
     raw.filter("o_orderkey % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.hhi_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(streaming.hhi_merge_stream(spark, in_dir, state, ckpt))
     wave1 = spark.read.parquet(state).first()
     raw.filter("o_orderkey % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.hhi_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(streaming.hhi_merge_stream(spark, in_dir, state, ckpt))
     got = spark.read.parquet(state).first()
     want = streaming.hhi_ams_stream(raw).first()
     assert [got[f"S_{r}"] for r in range(AMS_R)] == [
@@ -3056,9 +2931,13 @@ def test_streaming_countmin_matches_batch_with_bounded_state(spark):
         countmin_sketch,
     )
 
-    out, state_rows = streaming.run_countmin_stream_to_completion(
-        spark, SF_SMOKE
+    out, q = streaming.to_memory(
+        streaming.countmin_cell_stream(
+            streaming.read_event_stream(spark, SF_SMOKE, "events.parquet")
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(q)
     got = {(r.d, r.w): r.cnt for r in out.collect()}
     want = {
         (r.d, r.w): r.cnt
@@ -3087,22 +2966,18 @@ def test_streaming_countmin_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.countmin_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.countmin_merge_stream(spark, in_dir, state, ckpt)
+    )
     wave1 = {
         (r.d, r.w): r.cnt for r in spark.read.parquet(state).collect()
     }
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.countmin_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.countmin_merge_stream(spark, in_dir, state, ckpt)
+    )
     got = {
         (r.d, r.w): r.cnt for r in spark.read.parquet(state).collect()
     }
@@ -3133,9 +3008,14 @@ def test_streaming_hist_matches_batch_with_bounded_state(spark):
 
     batch_cells = hist_cells(spark, SF_SMOKE).collect()
     lo, hi = batch_cells[0].lo, batch_cells[0].hi
-    out, state_rows = streaming.run_hist_stream_to_completion(
-        spark, SF_SMOKE, lo, hi
+    out, q = streaming.to_memory(
+        streaming.hist_cell_stream(
+            streaming.read_event_stream(spark, SF_SMOKE, "events.parquet"),
+            lo, hi,
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(q)
     got = {(r.event_type, r.bin): r.cnt for r in out.collect()}
     want = {(r.event_type, r.bin): r.cnt for r in batch_cells}
     assert got == want and len(got) > 0
@@ -3176,11 +3056,9 @@ def test_streaming_hist_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
+    )
     wave1 = {
         (r.event_type, r.bin): r.cnt
         for r in spark.read.parquet(state).collect()
@@ -3188,11 +3066,9 @@ def test_streaming_hist_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
+    )
     got = {
         (r.event_type, r.bin): r.cnt
         for r in spark.read.parquet(state).collect()
@@ -3231,7 +3107,7 @@ def test_hist_monitor_restarts_after_failed_persist(spark, tmp_path,
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    streaming._drain(
+    streaming.drain(
         streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
     )
     wave1 = cells()
@@ -3246,12 +3122,12 @@ def test_hist_monitor_restarts_after_failed_persist(spark, tmp_path,
         ),
     )
     with pytest.raises(StreamingQueryException, match="assert_true|cnt"):
-        streaming._drain(
+        streaming.drain(
             streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
         )
     monkeypatch.undo()
     assert cells() == wave1
-    streaming._drain(
+    streaming.drain(
         streaming.hist_merge_stream(spark, in_dir, state, ckpt, lo, hi)
     )
     assert cells() == {(r.event_type, r.bin): r.cnt for r in batch_cells}
@@ -3275,9 +3151,13 @@ def test_streaming_hll_matches_batch_with_bounded_state(spark):
         hll_registers,
     )
 
-    out, state_rows = streaming.run_hll_stream_to_completion(
-        spark, SF_SMOKE
+    out, q = streaming.to_memory(
+        streaming.hll_register_stream(
+            streaming.read_event_stream(spark, SF_SMOKE, "events.parquet")
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(q)
     got = {r.bucket: r.max_rank for r in out.collect()}
     want = {
         r.bucket: r.max_rank
@@ -3352,20 +3232,12 @@ def test_streaming_hll_survives_restart(spark, tmp_path):
         F.col("user_id").isNull() | (F.col("user_id") != champion)
     )
     a.coalesce(1).write.parquet(in_dir, mode="append")
-    q = streaming.hll_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(streaming.hll_merge_stream(spark, in_dir, state, ckpt))
     wave1 = {
         r.bucket: r.max_rank for r in spark.read.parquet(state).collect()
     }
     b.coalesce(1).write.parquet(in_dir, mode="append")
-    q2 = streaming.hll_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(streaming.hll_merge_stream(spark, in_dir, state, ckpt))
     got = {
         r.bucket: r.max_rank for r in spark.read.parquet(state).collect()
     }
@@ -3398,17 +3270,13 @@ def test_streaming_hist_domain_guards(spark, tmp_path):
     state = str(tmp_path / "hd_state")
     ckpt = str(tmp_path / "hd_ckpt")
     events.limit(50).coalesce(1).write.parquet(in_dir, mode="append")
-    q = streaming.hist_merge_stream(spark, in_dir, state, ckpt, 0.0, 10.0)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.hist_merge_stream(spark, in_dir, state, ckpt, 0.0, 10.0)
+    )
     # same domain resumes fine
-    q2 = streaming.hist_merge_stream(spark, in_dir, state, ckpt, 0.0, 10.0)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.hist_merge_stream(spark, in_dir, state, ckpt, 0.0, 10.0)
+    )
     # different domain refused BEFORE any state is touched
     with pytest.raises(ValueError, match="only meaningful under"):
         streaming.hist_merge_stream(spark, in_dir, state, ckpt, 0.0, 20.0)
@@ -3453,9 +3321,14 @@ def test_streaming_bloom_matches_batch_with_bounded_state(spark):
     from pyspark.sql import functions as F
 
     MB = 256
-    out, state_rows = streaming.run_bloom_cells_to_completion(
-        spark, SF_SMOKE, MB
+    out, q = streaming.to_memory(
+        streaming.bloom_cell_stream(
+            streaming.read_event_stream(spark, SF_SMOKE, "events.parquet"),
+            MB,
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(q)
     events = spark.read.parquet(SF_SMOKE + "/events.parquet")
     want = {
         r.bit: r.cnt
@@ -3503,20 +3376,16 @@ def test_streaming_bloom_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.bloom_merge_stream(spark, in_dir, state, ckpt, MB)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.bloom_merge_stream(spark, in_dir, state, ckpt, MB)
+    )
     wave1 = {r.bit: r.cnt for r in spark.read.parquet(state).collect()}
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.bloom_merge_stream(spark, in_dir, state, ckpt, MB)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.bloom_merge_stream(spark, in_dir, state, ckpt, MB)
+    )
     got = {r.bit: r.cnt for r in spark.read.parquet(state).collect()}
     want = {
         r.bit: r.cnt
@@ -3550,17 +3419,13 @@ def test_streaming_bloom_width_guard(spark, tmp_path):
     state = str(tmp_path / "bw_state")
     ckpt = str(tmp_path / "bw_ckpt")
     events.limit(50).coalesce(1).write.parquet(in_dir, mode="append")
-    q = streaming.bloom_merge_stream(spark, in_dir, state, ckpt, 256)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.bloom_merge_stream(spark, in_dir, state, ckpt, 256)
+    )
     # same width resumes fine
-    q2 = streaming.bloom_merge_stream(spark, in_dir, state, ckpt, 256)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.bloom_merge_stream(spark, in_dir, state, ckpt, 256)
+    )
     # different width refused BEFORE any state is touched
     with pytest.raises(ValueError, match="only meaningful under"):
         streaming.bloom_merge_stream(spark, in_dir, state, ckpt, 512)
@@ -3584,9 +3449,13 @@ def test_streaming_cm_join_matches_batch_with_bounded_state(spark):
         cm_join_card,
     )
 
-    out, state_rows = streaming.run_cm_join_stream_to_completion(
-        spark, SF_SMOKE
+    out, q = streaming.to_memory(
+        streaming.cm_join_cell_stream(
+            streaming.read_event_stream(spark, SF_SMOKE, "events.parquet")
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(q)
     got = streaming.cm_join_est_from_cells(out).collect()[0]
     want = cm_join_card(spark, SF_SMOKE).collect()[0]
     assert (got.rows_a, got.rows_b, got.est_join_rows) == (
@@ -3618,22 +3487,14 @@ def test_streaming_cm_join_survives_restart(spark, tmp_path):
     raw.filter("event_id % 2 = 0").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q = streaming.cm_join_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(streaming.cm_join_merge_stream(spark, in_dir, state, ckpt))
     wave1 = streaming.cm_join_est_from_cells(
         spark.read.parquet(state)
     ).collect()[0]
     raw.filter("event_id % 2 = 1").coalesce(1).write.parquet(
         in_dir, mode="append"
     )
-    q2 = streaming.cm_join_merge_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(streaming.cm_join_merge_stream(spark, in_dir, state, ckpt))
     got = streaming.cm_join_est_from_cells(
         spark.read.parquet(state)
     ).collect()[0]
@@ -3659,9 +3520,9 @@ def test_streaming_bloom_null_key_no_false_negative(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    # the run-to-completion harness globs literal events.parquet FILES
-    # (the driver testdata layout), so write the fixture as one file
-    # via pyarrow rather than a Spark part-file directory
+    # the fixture is one literal events.parquet FILE (the testdata
+    # layout), read through the testdata's glob, so pyarrow writes it
+    # rather than Spark's part-file directory writer
     t = pa.table({
         "event_id": pa.array([1, 2], pa.int64()),
         "ts": pa.array(
@@ -3677,9 +3538,13 @@ def test_streaming_bloom_null_key_no_false_negative(spark, tmp_path):
     in_dir = str(tmp_path / "bn_in")
     os.makedirs(in_dir)
     pq.write_table(t, in_dir + "/events.parquet")
-    out, state_rows = streaming.run_bloom_cells_to_completion(
-        spark, in_dir, 256
+    out, q = streaming.to_memory(
+        streaming.bloom_cell_stream(
+            streaming.read_event_stream(spark, in_dir, "events.parquet"), 256
+        ),
+        "complete",
     )
+    state_rows = streaming.state_rows(q)
     # the NULL key lands exactly one (bit NULL) cell
     assert sum(1 for r in out.collect() if r.bit is None) == 1
     assert state_rows <= 256 + 1
@@ -3707,7 +3572,7 @@ def test_shard_manifest_stream_matches_batch_and_merges(spark, tmp_path):
     incremental-maintenance claim made concrete (state after any
     prefix == manifest of that prefix).  A restart on the same
     checkpoint must not double-merge (epoch fence) — covered by
-    draining the same query object twice."""
+    draining wave 2 and then an input-less run on that checkpoint."""
     from data_pipeline_and_visualization_dashboard_spark.extras.dedup import (
         shard_manifest_of,
     )
@@ -3727,25 +3592,23 @@ def test_shard_manifest_stream_matches_batch_and_merges(spark, tmp_path):
             ).collect())
         )
 
-    q = streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-        assert snap() == sorted(
-            map(tuple, shard_manifest_of(half).collect())
-        )  # prefix state == prefix manifest
-        rest.coalesce(1).write.parquet(in_dir, mode="append")
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
+    )
+    assert snap() == sorted(
+        map(tuple, shard_manifest_of(half).collect())
+    )  # prefix state == prefix manifest
+    rest.coalesce(1).write.parquet(in_dir, mode="append")
+    streaming.drain(
+        streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
+    )
     want = sorted(map(tuple, shard_manifest_of(docs).collect()))
     assert snap() == want and len(want) > 0
 
     # restart on the same checkpoint: no new input -> state unchanged
-    q2 = streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
+    )
     assert snap() == want
 
 
@@ -3807,25 +3670,23 @@ def test_data_card_stream_matches_batch_and_restarts(spark, tmp_path):
             )
         )
 
-    q = streaming.data_card_stream(spark, in_dir, state, ckpt, groups)
-    try:
-        q.processAllAvailable()
-        assert snap() == sorted(
-            map(tuple, data_card_of(half, groups).collect())
-        )  # prefix state == prefix card
-        rest.coalesce(1).write.parquet(in_dir, mode="append")
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.data_card_stream(spark, in_dir, state, ckpt, groups)
+    )
+    assert snap() == sorted(
+        map(tuple, data_card_of(half, groups).collect())
+    )  # prefix state == prefix card
+    rest.coalesce(1).write.parquet(in_dir, mode="append")
+    streaming.drain(
+        streaming.data_card_stream(spark, in_dir, state, ckpt, groups)
+    )
     want = sorted(map(tuple, data_card_of(docs, groups).collect()))
     assert snap() == want and len(want) > 0
 
     # restart on the same checkpoint: no new input -> state unchanged
-    q2 = streaming.data_card_stream(spark, in_dir, state, ckpt, groups)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
+    streaming.drain(
+        streaming.data_card_stream(spark, in_dir, state, ckpt, groups)
+    )
     assert snap() == want
 
     # LIVE mixture readout (r16): read_mixture_plan_state over the
@@ -3864,9 +3725,6 @@ def test_data_card_state_merges_across_streams(spark, tmp_path):
     from data_pipeline_and_visualization_dashboard_spark.extras.dedup import (
         cluster_table, data_card_of,
     )
-    from data_pipeline_and_visualization_dashboard_spark.streaming import (
-        run_data_card_to_completion,
-    )
 
     docs = spark.read.parquet(SF_SMOKE + "/documents.parquet")
     groups = cluster_table(spark, SF_SMOKE)
@@ -3877,9 +3735,9 @@ def test_data_card_state_merges_across_streams(spark, tmp_path):
         in_dir = str(tmp_path / f"in_{name}")
         st = str(tmp_path / f"state_{name}")
         side.coalesce(1).write.parquet(in_dir, mode="append")
-        run_data_card_to_completion(
+        streaming.drain(streaming.data_card_stream(
             spark, in_dir, st, str(tmp_path / f"ckpt_{name}"), groups
-        )
+        ))
         states.append(spark.read.parquet(st))
     merged_dir = str(tmp_path / "state_merged")
     (
@@ -3922,28 +3780,24 @@ def test_publish_lag_readout(spark, tmp_path):
     state = str(tmp_path / "lag_state")
     ckpt = str(tmp_path / "lag_ckpt")
     half.coalesce(1).write.parquet(in_dir, mode="append")
-    q = streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
-    try:
-        q.processAllAvailable()
-        # snapshot the published manifest as literal rows: the state
-        # dir is atomically swapped by later commits, so a lazy frame
-        # over it would silently read wave-2 state
-        snap_df = spark.read.parquet(state).select(
-            "shard", "n_docs", "n_tokens", "content_hash"
-        )
-        published = spark.createDataFrame(
-            snap_df.collect(), snap_df.schema
-        )
-        zero = streaming.publish_lag_readout(
-            spark, state, published
-        ).collect()
-        assert zero and all(
-            not r.needs_rewrite and r.docs_delta == 0 for r in zero
-        )
-        rest.coalesce(1).write.parquet(in_dir, mode="append")
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    streaming.drain(
+        streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
+    )
+    # snapshot the published manifest as literal rows: the state dir
+    # is atomically swapped by later commits, so a lazy frame over it
+    # would silently read wave-2 state
+    snap_df = spark.read.parquet(state).select(
+        "shard", "n_docs", "n_tokens", "content_hash"
+    )
+    published = spark.createDataFrame(snap_df.collect(), snap_df.schema)
+    zero = streaming.publish_lag_readout(spark, state, published).collect()
+    assert zero and all(
+        not r.needs_rewrite and r.docs_delta == 0 for r in zero
+    )
+    rest.coalesce(1).write.parquet(in_dir, mode="append")
+    streaming.drain(
+        streaming.shard_manifest_stream(spark, in_dir, state, ckpt)
+    )
     lag = {
         r.shard: r
         for r in streaming.publish_lag_readout(
