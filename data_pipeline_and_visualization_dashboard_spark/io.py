@@ -341,26 +341,26 @@ def read_csv_dim(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.csv(path)
 
 
-def write_parquet(df: DataFrame, path: str, mode: str = "overwrite",
+def write_parquet(df: DataFrame, path: str,
                   partition_by: list[str] | None = None) -> None:
     """S4: parquet sink (ipynb:223). `partition_by` gives on-disk
     partition pruning for downstream readers at scale (the reference's
     single-file write has no analogue; at 100 TB unpartitioned output is
     not an option)."""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
 
 
-def write_orc(df: DataFrame, path: str, mode: str = "overwrite",
+def write_orc(df: DataFrame, path: str,
               partition_by: list[str] | None = None) -> None:
     """S4c: ORC sink — the other columnar interchange format large
     estates actually run (Hive/Trino-heavy shops standardize on ORC;
     an engine that can't write it can't hand results to them). Same
     partition-pruning contract as write_parquet; Spark's ORC writer
     carries column statistics + bloom-filter support natively."""
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.orc(path)
@@ -379,8 +379,7 @@ def read_orc(spark: SparkSession, path: str,
 
 
 def write_sorted(df: DataFrame, path: str, sort_cols: list[str],
-                 num_files: int | None = None,
-                 mode: str = "overwrite") -> None:
+                 num_files: int | None = None) -> None:
     """S4b: scan-efficient data layout — range-partition rows across
     files by `sort_cols`, then sort within each file. The written
     parquet files carry NON-OVERLAPPING min/max ranges on the sort key,
@@ -398,12 +397,11 @@ def write_sorted(df: DataFrame, path: str, sort_cols: list[str],
     out = df.repartitionByRange(
         *( [num_files] if num_files else [] ), *sort_cols
     ).sortWithinPartitions(*sort_cols)
-    out.write.mode(mode).parquet(path)
+    out.write.mode("overwrite").parquet(path)
 
 
 def write_zorder(df: DataFrame, path: str, col_a: str, col_b: str,
-                 bits: int = 4, num_files: int = 16,
-                 mode: str = "overwrite") -> None:
+                 bits: int = 4, num_files: int = 16) -> None:
     """S4c: Z-order (Morton) TWO-column clustering — the layout lever
     when queries filter on either of two high-cardinality columns.
     write_sorted gives perfect pruning on ONE key and none on others;
@@ -459,7 +457,7 @@ def write_zorder(df: DataFrame, path: str, col_a: str, col_b: str,
         .sortWithinPartitions("_z")
         .drop("_z")
     )
-    out.write.mode(mode).parquet(path)
+    out.write.mode("overwrite").parquet(path)
 
 
 def read_jsonl(spark: SparkSession, path: str,
@@ -513,9 +511,9 @@ def read_jsonl_quarantined(
     return clean, quarantine
 
 
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_jsonl(df: DataFrame, path: str) -> None:
     """S8b: JSON-Lines sink (one file per partition, one doc per line)."""
-    df.write.mode(mode).json(path)
+    df.write.mode("overwrite").json(path)
 
 
 def compact_files(spark: SparkSession, path: str,

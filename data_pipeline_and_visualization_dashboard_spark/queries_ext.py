@@ -1073,6 +1073,15 @@ def _centroid_sim_structs(centroids: list[tuple[int, list[float]]]):
     )
 
 
+def nearest_centroid(centroids: list[tuple[int, list[float]]]):
+    """centroid_id of the centroid nearest the bound `ev` column: the
+    argmax of _centroid_sim_structs, so an exact tie goes to the lowest
+    id. The one assignment rule of the IVF index — the k-means E-step,
+    the persisted inverted lists (ann_disk_index) and the streaming
+    segments (streaming.ivf_assign_stream) all assign through it."""
+    return -F.array_max(_centroid_sim_structs(centroids)).getField("ncid")
+
+
 def train_centroids(
     spark: SparkSession,
     sf_dir: str,
@@ -1081,8 +1090,9 @@ def train_centroids(
 ) -> list[tuple[int, list[float]]]:
     """Spherical k-means index training, the IVF build step:
 
-      init    — k evenly-spaced vec_ids (deterministic for a fixed
-                corpus; a seeded sample adds nothing here)
+      init    — the corpus rows at k evenly-spaced POSITIONS
+                (deterministic for a fixed corpus; a seeded sample
+                adds nothing here)
       E-step  — argmax-cosine assignment with centroids baked into the
                 plan as literals (k×dim doubles — no broadcast var, no
                 shuffle of the corpus)
@@ -1110,33 +1120,26 @@ def train_centroids(
     internally; the explicit sum/count division is the same IEEE op
     on the same operands.
 
-    Init reads (r17): n and the k seed rows come straight off the
-    parquet footer / row groups via pyarrow — row count from file
-    metadata and a ≤k-row id-filtered read — instead of two Spark
-    actions (a count job + a filter-collect job) whose only purpose
-    was 16 rows of driver state.  In the bench these were the first
-    actions of a cold JVM, so the ivf line paid the whole first-scan
-    warmup twice before any training happened.  Same n, same
-    evenly-spaced init_ids, same doubles (parquet values are read
-    bit-exact either way), same sort — trained centroids unchanged
-    (bit-compared).  The corpus-sized E/M work stays fully
-    distributed."""
+    Init reads: n and the k seed rows come straight off the parquet
+    footer / row groups via pyarrow — row count from file metadata and
+    a positional take that decodes only the row groups holding the
+    seeds — instead of Spark actions whose only purpose is k rows of
+    driver state.  Seeds are picked by row position, not by vec_id
+    value: ids need not be 0..n-1 (an offset or sparse id range would
+    otherwise match fewer than k rows, or none).  The corpus-sized
+    E/M work stays fully distributed."""
     import pyarrow.dataset as _pads
-    import pyarrow.parquet as _pq
 
-    epath = os.path.join(sf_dir, "embeddings.parquet")
+    data = _pads.dataset(
+        os.path.join(sf_dir, "embeddings.parquet"), format="parquet"
+    )
     # footer metadata only — no data read for the count
-    n = _pads.dataset(epath, format="parquet").count_rows()
-    init_ids = sorted({int(i * n / k) for i in range(k)})
-    seed_tbl = _pq.read_table(
-        epath, columns=["vec_id", "embedding"],
-        filters=[("vec_id", "in", init_ids)],
-    ).to_pylist()
+    n = data.count_rows()
+    positions = sorted({int(i * n / k) for i in range(k)})
+    seeds = data.take(positions, columns=["embedding"]).column("embedding")
     centroids = [
-        (cid, _unit([float(x) for x in r["embedding"]]))
-        for cid, r in enumerate(
-            sorted(seed_tbl, key=lambda r: r["vec_id"])
-        )
+        (cid, _unit([float(x) for x in vec]))
+        for cid, vec in enumerate(seeds.to_pylist())
     ]
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
     dim = len(centroids[0][1])
@@ -1160,9 +1163,8 @@ def train_centroids(
         + ")"
     ).alias("s")
     for _ in range(iters):
-        best = F.array_max(_centroid_sim_structs(centroids))
         assigned = bound.select(
-            "ev", (-best.getField("ncid")).alias("centroid_id")
+            "ev", nearest_centroid(centroids).alias("centroid_id")
         )
         sums = assigned.groupBy("centroid_id").agg(sum_arr).collect()
         centroids = [
@@ -1175,18 +1177,17 @@ def train_centroids(
     return centroids
 
 
-def ivf_index(spark: SparkSession, sf_dir: str,
-              k: int = IVF_K, iters: int = IVF_ITERS):
+def ivf_index(spark: SparkSession, sf_dir: str):
     """The IVF BUILD step as a first-class, once-per-corpus artifact:
-    train the spherical k-means centroids once per (corpus version,
-    k, iters) (io.memo_artifact) — exactly how a serving system treats
-    an index (built offline, loaded once, queried many times). Cached
-    driver state is k×dim doubles — the trained index IS that small;
-    the corpus-sized work all happened distributed inside
+    train the spherical k-means centroids once per corpus version
+    (io.memo_artifact) — exactly how a serving system treats an index
+    (built offline, loaded once, queried many times). Cached driver
+    state is k×dim doubles — the trained index IS that small; the
+    corpus-sized work all happened distributed inside
     train_centroids."""
     return memo_artifact(
         spark, sf_dir, "ivf_index", ("embeddings",),
-        lambda: train_centroids(spark, sf_dir, k, iters), (k, iters),
+        lambda: train_centroids(spark, sf_dir),
     )
 
 
@@ -1197,8 +1198,9 @@ def ann_disk_index(spark: SparkSession, sf_dir: str):
     version (io.materialize_artifact). A serving system NEVER re-derives
     these at query time — they ARE the index: corpus vectors are read
     once at build, queries then touch only the assignment (for probe
-    pruning), the 16x-smaller codes (for ADC), and the handful of query
-    vectors. Returns (assign_df, codes_df, proj_df)."""
+    pruning), the 16x-smaller codes (for ADC), the projections (for
+    RP), and the handful of query vectors. Returns (assign_df,
+    codes_df, proj_df)."""
     from .extras.similarity import pq_codes, rp_project
 
     def build() -> dict[str, DataFrame]:
@@ -1206,17 +1208,10 @@ def ann_disk_index(spark: SparkSession, sf_dir: str):
         emb = read_table(
             spark, sf_dir, "embeddings", ["vec_id", "embedding"]
         )
-        bound = emb.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("ev")
-        )
-        assign = bound.select(
+        assign = emb.select(
             F.col("vec_id").alias("c_id"),
-            (
-                -F.array_max(
-                    _centroid_sim_structs(centroids)
-                ).getField("ncid")
-            ).alias("centroid_id"),
-        )
+            F.col("embedding").cast("array<double>").alias("ev"),
+        ).select("c_id", nearest_centroid(centroids).alias("centroid_id"))
         codes = pq_codes(spark, sf_dir).withColumnRenamed("vec_id", "c_id")
         return {"ivf_assign": assign, "pq_codes": codes,
                 "rp_proj": rp_project(emb)}
@@ -1227,9 +1222,42 @@ def ann_disk_index(spark: SparkSession, sf_dir: str):
     return index["ivf_assign"], index["pq_codes"], index["rp_proj"]
 
 
-def sim_ivf_topk(spark: SparkSession, sf_dir: str,
-                 centroids: list | None = None,
-                 corpus_assign: DataFrame | None = None) -> DataFrame:
+def _ivf_candidates(spark: SparkSession, sf_dir: str,
+                    assign: DataFrame) -> DataFrame:
+    """(q_id, c_id): every corpus vector in one of the IVF_NPROBE
+    inverted lists nearest each query vector — the probe both IVF
+    families serve from. Centroids come from ivf_index and the lists
+    from the persisted assignment `assign`; only the N_QUERIES query
+    vectors are read from the corpus. The query side sorts its
+    (sim, -centroid_id) structs desc, slices and explodes — row-local,
+    no window needed."""
+    from .extras.similarity import N_QUERIES
+
+    probe = F.slice(
+        F.sort_array(
+            _centroid_sim_structs(ivf_index(spark, sf_dir)), asc=False
+        ),
+        1, IVF_NPROBE,
+    )
+    q_probe = (
+        read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
+        .filter(F.col("vec_id") < N_QUERIES)
+        .select(
+            F.col("vec_id").alias("q_id"),
+            F.col("embedding").cast("array<double>").alias("ev"),
+        )
+        .select("q_id", F.explode(probe).alias("cand"))
+        .select("q_id", (-F.col("cand").getField("ncid")).alias("centroid_id"))
+    )
+    return (
+        q_probe.join(assign, "centroid_id")
+        .filter(F.col("q_id") != F.col("c_id"))
+        .select("q_id", "c_id")
+        .distinct()
+    )
+
+
+def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Search over the TRAINED index: corpus vectors live in their
     top-1 learned inverted list; queries probe their IVF_NPROBE nearest
     lists (~nprobe/k of the corpus) and brute-force only there. Recall
@@ -1237,44 +1265,17 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str,
     is the standard knob. Rows-only: approximate + iterative by design;
     the pytest suite measures recall against the exact brute force.
 
-    With centroids=None each call re-trains (self-contained, what the
-    driver's correctness pass runs); pass a pre-built index (see
-    sim_ivf_topk_pretrained) to measure/serve QUERY cost alone."""
-    if centroids is None:
-        centroids = train_centroids(spark, sf_dir)
-    emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
-    e = F.col("embedding").cast("array<double>")
-    vecs = emb.select("vec_id", e.alias("v"))
-    bound = emb.select("vec_id", e.alias("ev"))
-    sim_structs = _centroid_sim_structs(centroids)
+    Serving only: the centroids come from ivf_index and the inverted
+    lists from ann_disk_index, both built once per corpus version, so
+    the first call of a corpus pays the build and every later call
+    touches the query vectors, the assignment parquet and the
+    candidate vectors. Registered under sim_ivf_topk_pretrained too."""
+    from .extras.similarity import TOP_K
 
-    corpus = (
-        corpus_assign
-        if corpus_assign is not None
-        else bound.select(
-            F.col("vec_id").alias("c_id"),
-            (-F.array_max(sim_structs).getField("ncid")).alias(
-                "centroid_id"
-            ),
-        )
-    )
-    # query side probes its top-IVF_NPROBE centroids: sort the struct
-    # array desc, slice, explode — row-local, no window needed
-    probe = F.slice(
-        F.sort_array(sim_structs, asc=False), 1, IVF_NPROBE
-    )
-    q_probe = (
-        bound.filter(F.col("vec_id") < 5)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.explode(probe).alias("cand"),
-        )
-        .select("q_id", (-F.col("cand").getField("ncid")).alias("centroid_id"))
-    )
-    cand = q_probe.join(corpus, "centroid_id").filter(
-        F.col("q_id") != F.col("c_id")
-    ).select("q_id", "c_id").distinct()
-
+    assign, _, _ = ann_disk_index(spark, sf_dir)
+    vecs = read_table(
+        spark, sf_dir, "embeddings", ["vec_id", "embedding"]
+    ).select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     qv = vecs.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
     cv = vecs.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
     dot = F.aggregate(F.zip_with("qv", "cv", lambda x, y: x * y),
@@ -1285,7 +1286,8 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str,
                             F.lit(0.0), lambda a, x: a + x))
     w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
     return (
-        cand.join(F.broadcast(qv), "q_id")
+        _ivf_candidates(spark, sf_dir, assign)
+        .join(F.broadcast(qv), "q_id")
         .join(cv, "c_id")
         .select(
             F.col("q_id").alias("query_id"),
@@ -1293,85 +1295,51 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str,
             F.round(dot / (nq * nc), 6).alias("sim"),
         )
         .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
+        .filter(F.col("rank") <= TOP_K)
         .orderBy("query_id", "rank")
     )
 
 
-def sim_ivfpq_topk(spark: SparkSession, sf_dir: str,
-                   centroids: list | None = None,
-                   corpus_assign: DataFrame | None = None,
-                   corpus_codes: DataFrame | None = None) -> DataFrame:
+def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ: the canonical billion-scale ANN serving architecture in
     one plan — a TRAINED coarse quantizer (spherical k-means, k=16)
     prunes the corpus to the query's IVF_NPROBE inverted lists, then
     PQ-ADC scores ONLY those candidates from their 4-int codes via
     per-query lookup tables. At scale the two stages compound: probe
     cuts candidates ~nprobe/k, PQ cuts bytes-per-candidate 16×, so the
-    scored working set is ~1% of a brute-force scan's traffic. Corpus
-    vectors are read only at index-build time; query-time touches codes
-    and the centroid literals.
+    scored working set is ~1% of a brute-force scan's traffic.
+
+    Serving only: the coarse centroids come from ivf_index, the
+    inverted lists and the codes from the persisted disk index
+    (ann_disk_index) and the PQ codebook from similarity._pq_codebook,
+    all built once per corpus version — corpus embeddings are never
+    read at query time (only the N_QUERIES query vectors; the filter
+    is pushed to the scan). Registered under sim_ivfpq_topk_pretrained
+    too.
 
     Rows-only by design (trained + doubly approximate); recall vs the
     exact brute force is bounded in tests/test_extras.py, and each
     stage's exactness is separately certified: the PQ encode/ADC
     arithmetic by the sim_pq_* oracle rows, the probe assignment by
-    sim_centroid_assign.
-
-    centroids=None re-trains per call; pass ivf_index(...) to serve
-    from the pre-built index (sim_ivfpq_topk_pretrained)."""
+    sim_centroid_assign."""
     from .extras.similarity import (
         N_QUERIES,
+        PQ_BLOCKS,
         TOP_K,
-        _pq_code_cols,
         _pq_codebook,
         _pq_unit_vectors,
         _pq_with_dls,
-        PQ_BLOCKS,
     )
 
-    if centroids is None:
-        centroids = train_centroids(spark, sf_dir)
-    emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
-    bound = emb.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("ev")
-    )
-    sim_structs = _centroid_sim_structs(centroids)
-    corpus = (
-        corpus_assign
-        if corpus_assign is not None
-        else bound.select(
-            F.col("vec_id").alias("c_id"),
-            (-F.array_max(sim_structs).getField("ncid")).alias("centroid_id"),
-        )
-    )
-    probe = F.slice(F.sort_array(sim_structs, asc=False), 1, IVF_NPROBE)
-    q_probe = (
-        bound.filter(F.col("vec_id") < N_QUERIES)
-        .select(F.col("vec_id").alias("q_id"), F.explode(probe).alias("cand"))
-        .select("q_id", (-F.col("cand").getField("ncid")).alias("centroid_id"))
-    )
-    cand = (
-        q_probe.join(corpus, "centroid_id")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id")
-        .distinct()
-    )
-
-    cents = _pq_codebook(spark, sf_dir)
-    # query-side LUT frame is N_QUERIES rows: pre-filter BEFORE the
-    # unit/dls expressions so the scan prunes to the query vectors when
-    # the corpus codes come from the disk index
-    dls_src = emb if corpus_codes is None else emb.filter(
-        F.col("vec_id") < N_QUERIES
-    )
-    dls = _pq_with_dls(_pq_unit_vectors(dls_src), cents)
-    codes = (
-        corpus_codes
-        if corpus_codes is not None
-        else dls.select(F.col("vec_id").alias("c_id"), *_pq_code_cols())
-    )
-    luts = dls.filter(F.col("vec_id") < N_QUERIES).select(
+    assign, codes, _ = ann_disk_index(spark, sf_dir)
+    # query-side LUT frame is N_QUERIES rows: filter BEFORE the
+    # unit/dls expressions so the scan prunes to the query vectors
+    queries = read_table(
+        spark, sf_dir, "embeddings", ["vec_id", "embedding"]
+    ).filter(F.col("vec_id") < N_QUERIES)
+    luts = _pq_with_dls(
+        _pq_unit_vectors(queries), _pq_codebook(spark, sf_dir)
+    ).select(
         F.col("vec_id").alias("q_id"),
         *[F.col(f"dl_{b}").alias(f"lut_{b}") for b in range(PQ_BLOCKS)],
     )
@@ -1382,7 +1350,8 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str,
         F.asc("adc"), F.asc("neighbor_id")
     )
     return (
-        cand.join(codes, "c_id")
+        _ivf_candidates(spark, sf_dir, assign)
+        .join(codes, "c_id")
         .join(F.broadcast(luts), "q_id")
         .select(
             F.col("q_id").alias("query_id"),
@@ -1399,58 +1368,6 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str,
         )
         .orderBy("query_id", "rank")
     )
-
-
-def sim_ivf_topk_pretrained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF QUERY cost in isolation: centroids from the cached trained
-    index (ivf_index) AND the corpus inverted-list assignment from the
-    persisted disk index (ann_disk_index) — query time touches only
-    the 5 query vectors, the assignment parquet, and the candidate
-    vectors. First call per corpus pays the build (bench.py times it
-    separately, once); every subsequent call is the pure serving path
-    — the number that matters at 100 TB, where the index is built
-    offline. Result is identical to sim_ivf_topk on the same corpus:
-    training is deterministic, only WHERE it runs changes (tested)."""
-    assign, _, _ = ann_disk_index(spark, sf_dir)
-    return sim_ivf_topk(
-        spark, sf_dir,
-        centroids=ivf_index(spark, sf_dir),
-        corpus_assign=assign,
-    )
-
-
-def sim_ivfpq_topk_pretrained(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    """IVF-PQ QUERY cost in isolation: cached coarse centroids (the PQ
-    codebook was already cached per corpus in similarity._pq_codebook),
-    so a call prices probe + code-join + ADC scoring over the PERSISTED
-    codes parquet (ann_disk_index) — corpus embeddings are never read
-    at query time (only the 5 query vectors; filter pushed to scan).
-    The steady-state serving cost of the billion-scale stack; the
-    once-dominant per-call Catalyst planning of the codebook/centroid
-    literal trees was cut ~3x by the r16 nested-literal compaction
-    (similarity._lit_mat, OPTIMIZATION_r16.md change 1)."""
-    assign, codes, _ = ann_disk_index(spark, sf_dir)
-    return sim_ivfpq_topk(
-        spark, sf_dir,
-        centroids=ivf_index(spark, sf_dir),
-        corpus_assign=assign,
-        corpus_codes=codes,
-    )
-
-
-def sim_rp_topk_pretrained(spark: SparkSession,
-                           sf_dir: str) -> DataFrame:
-    """RP QUERY cost in isolation: rank in the projected space over
-    the PERSISTED projections (ann_disk_index) — corpus embeddings are
-    never re-encoded at query time, completing the serving symmetry
-    with the IVF/PQ pretrained paths. Projections round-trip parquet
-    exactly (doubles), so the output is IDENTICAL to sim_rp_topk and
-    shares its DuckDB oracle."""
-    from .extras.similarity import _rp_rank
-
-    _, _, proj = ann_disk_index(spark, sf_dir)
-    return _rp_rank(proj)
 
 
 # serving-path recall floors, asserted ENGINE-SIDE (see the guard
@@ -1511,25 +1428,25 @@ def _recall_guard(
 
 
 def sim_ivf_recall_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall floor for the PRETRAINED IVF serving path (the index a
-    production rollout would actually query), checked by the engine
+    """Recall floor for the IVF serving path (the index a production
+    rollout would actually query), checked by the engine
     itself — rows-only driver entry whose single green row encodes
     recall_at_k >= floor (a regression raises in-plan, see
     _recall_guard)."""
     return _recall_guard(
         spark, sf_dir,
-        sim_ivf_topk_pretrained(spark, sf_dir),
+        sim_ivf_topk(spark, sf_dir),
         IVF_RECALL_FLOOR, "ivf_pretrained",
     )
 
 
 def sim_ivfpq_recall_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall floor for the PRETRAINED IVF-PQ serving path — same
+    """Recall floor for the IVF-PQ serving path — same
     engine-side assertion contract as sim_ivf_recall_guard, at the
     composed (coarse probe × ADC) stack's measured envelope."""
     return _recall_guard(
         spark, sf_dir,
-        sim_ivfpq_topk_pretrained(spark, sf_dir),
+        sim_ivfpq_topk(spark, sf_dir),
         IVFPQ_RECALL_FLOOR, "ivfpq_pretrained",
     )
 
@@ -6555,8 +6472,10 @@ QUERIES = {
     "sim_centroid_assign": sim_centroid_assign,
     "sim_ivf_topk": sim_ivf_topk,
     "sim_ivfpq_topk": sim_ivfpq_topk,
-    "sim_ivf_topk_pretrained": sim_ivf_topk_pretrained,
-    "sim_ivfpq_topk_pretrained": sim_ivfpq_topk_pretrained,
+    # the *_pretrained names are aliases of the one serving function
+    # per ANN family, kept for the names bench.py and plans/ use
+    "sim_ivf_topk_pretrained": sim_ivf_topk,
+    "sim_ivfpq_topk_pretrained": sim_ivfpq_topk,
     "sim_ivf_recall_guard": sim_ivf_recall_guard,
     "sim_ivfpq_recall_guard": sim_ivfpq_recall_guard,
     "q20_shipping_priority": q20_shipping_priority,
@@ -6616,11 +6535,11 @@ QUERIES = {
     "q100_rfm_segments_approx": q100_rfm_segments_approx,
     "q83_approx_percentile_guard": q83_approx_percentile_guard,
     "sim_diverse_subset": sim_diverse_subset,
-    "sim_rp_topk_pretrained": sim_rp_topk_pretrained,
 }
 
-# identical output contract to sim_rp_topk (projections round-trip
-# parquet exactly) -> same oracle
-from .extras.similarity import _duck_rp_topk_sql as _rp_sql  # noqa: E402
+# alias of similarity.rp_topk, which already serves from the persisted
+# projections -> same function, same oracle
+from .extras.similarity import _duck_rp_topk_sql, rp_topk  # noqa: E402
 
-ORACLE_SQL["sim_rp_topk_pretrained"] = _rp_sql()
+QUERIES["sim_rp_topk_pretrained"] = rp_topk
+ORACLE_SQL["sim_rp_topk_pretrained"] = _duck_rp_topk_sql()

@@ -2584,27 +2584,22 @@ def ivf_assign_stream(spark: SparkSession, in_dir: str, index_dir: str,
     epoch segment of the same layout ann_disk_index persists. Readers
     union segments — vec sets are disjoint across epochs — so the
     merged view is byte-identical to the batch assignment and the
-    pretrained IVF serving path can probe a LIVE index.
+    IVF serving path can probe a LIVE index.
 
     Per-batch cost is O(batch × k·dim literals): centroids ride the
     plan, nothing joins the base corpus. Replay safety: epoch-keyed
     overwrite, same recipe as minhash/postings index streams."""
-    from .queries_ext import _centroid_sim_structs
+    from .queries_ext import nearest_centroid
 
     emb = _read_files(spark, "vec_id long, embedding array<float>, label int",
                       in_dir)
-    sim_structs = _centroid_sim_structs(centroids)
+    centroid_id = nearest_centroid(centroids).alias("centroid_id")
 
     def write_segment(batch_df: DataFrame, epoch_id: int) -> None:
         assign = batch_df.select(
             F.col("vec_id").alias("c_id"),
             F.col("embedding").cast("array<double>").alias("ev"),
-        ).select(
-            "c_id",
-            (-F.array_max(sim_structs).getField("ncid")).alias(
-                "centroid_id"
-            ),
-        )
+        ).select("c_id", centroid_id)
         assign.write.mode("overwrite").parquet(
             os.path.join(index_dir, f"epoch={epoch_id}")
         )

@@ -186,7 +186,7 @@ def test_recall_guards_assert_engine_side(spark):
     from data_pipeline_and_visualization_dashboard_spark.queries_ext import (
         _recall_guard,
         sim_ivf_recall_guard,
-        sim_ivf_topk_pretrained,
+        sim_ivf_topk,
         sim_ivfpq_recall_guard,
     )
 
@@ -198,7 +198,7 @@ def test_recall_guards_assert_engine_side(spark):
     with pytest.raises(Exception, match="recall regression"):
         _recall_guard(
             spark, SF_SMOKE,
-            sim_ivf_topk_pretrained(spark, SF_SMOKE),
+            sim_ivf_topk(spark, SF_SMOKE),
             1.01, "impossible",
         ).collect()
 
@@ -966,27 +966,80 @@ def test_hash_stage_md5_matches_duck_and_xxhash_counts(spark, duck):
     assert s == d and len(s) > 0
 
 def test_pretrained_ivf_serving_equals_retrained(spark):
-    """The cached-index serving paths must return exactly what the
-    self-training variants return (training is deterministic — only
-    WHERE it runs changes), and the index cache must hit."""
+    """The persisted inverted lists are exactly the assignment of the
+    corpus under the cached trained centroids (training is
+    deterministic — only WHERE the assignment runs changes), and the
+    index cache must hit."""
     from data_pipeline_and_visualization_dashboard_spark import queries_ext as qx
 
     assert qx.ivf_index(spark, SF_SMOKE) is qx.ivf_index(spark, SF_SMOKE)
     # a second spelling of the directory shares the entry
     assert qx.ivf_index(spark, SF_SMOKE + "/") is qx.ivf_index(spark, SF_SMOKE)
     assert len(_memo_generations("ivf_index", SF_SMOKE)) == 1
-    a = sorted(tuple(r) for r in qx.sim_ivf_topk(spark, SF_SMOKE).collect())
-    b = sorted(
+    emb = read_table(spark, SF_SMOKE, "embeddings", ["vec_id", "embedding"])
+    want = sorted(
         tuple(r)
-        for r in qx.sim_ivf_topk_pretrained(spark, SF_SMOKE).collect()
+        for r in emb.select(
+            F.col("vec_id").alias("c_id"),
+            F.col("embedding").cast("array<double>").alias("ev"),
+        ).select(
+            "c_id", qx.nearest_centroid(qx.ivf_index(spark, SF_SMOKE))
+        ).collect()
     )
-    assert a == b and len(a) > 0
-    c = sorted(tuple(r) for r in qx.sim_ivfpq_topk(spark, SF_SMOKE).collect())
-    d = sorted(
-        tuple(r)
-        for r in qx.sim_ivfpq_topk_pretrained(spark, SF_SMOKE).collect()
+    got = sorted(
+        tuple(r) for r in qx.ann_disk_index(spark, SF_SMOKE)[0].collect()
     )
-    assert c == d and len(c) > 0
+    assert got == want and len(got) == emb.count()
+
+
+def test_ann_serving_never_trains(spark, monkeypatch):
+    """Once the index of a corpus is built, the IVF and IVF-PQ serving
+    entries and both recall guards only probe it: with k-means
+    training made to raise, they return exactly their unpatched
+    rows."""
+    from data_pipeline_and_visualization_dashboard_spark import queries_ext as qx
+
+    qx.ivf_index(spark, SF_SMOKE)
+    qx.ann_disk_index(spark, SF_SMOKE)
+    serving = (qx.sim_ivf_topk, qx.sim_ivfpq_topk,
+               qx.sim_ivf_recall_guard, qx.sim_ivfpq_recall_guard)
+
+    def rows():
+        return [sorted(tuple(r) for r in fn(spark, SF_SMOKE).collect())
+                for fn in serving]
+
+    want = rows()
+
+    def train_centroids(*args, **kwargs):
+        raise AssertionError("a serving call trained k-means")
+
+    monkeypatch.setattr(qx, "train_centroids", train_centroids)
+    assert rows() == want and all(want)
+
+
+def test_kmeans_seeds_by_row_position(spark, tmp_path):
+    """k-means seeds from k evenly spaced row POSITIONS, so the same
+    vectors under ids that do not run 0..n-1 (shifted by one, or far
+    past n) get the same k seeds as under dense ids (iters=0 returns
+    the seeds; the E/M steps never read an id)."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from data_pipeline_and_visualization_dashboard_spark import queries_ext as qx
+
+    table = pq.read_table(SF_SMOKE + "/embeddings.parquet")
+    col = table.schema.get_field_index("vec_id")
+    want = qx.train_centroids(spark, SF_SMOKE, iters=0)
+    assert len(want) == qx.IVF_K
+    for shift in (1, 10**6):
+        d = tmp_path / f"shift{shift}"
+        d.mkdir()
+        pq.write_table(
+            table.set_column(col, "vec_id", pc.add(table["vec_id"], shift)),
+            str(d / "embeddings.parquet"),
+        )
+        assert qx.train_centroids(spark, str(d), iters=0) == want, shift
+
 
 def test_scrub_pii_on_planted_corpus(spark, tmp_path):
     """PII scrub semantics on PLANTED data (the driver corpus has no
