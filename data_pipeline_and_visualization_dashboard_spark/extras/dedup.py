@@ -2315,7 +2315,13 @@ def corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds two hash-key shuffles (md5 rank, component keeper) on top of
     the near-dup pipeline; no stage rescans raw text more than once.
     """
-    return _funnel_flags(spark, sf_dir).agg(
+    return funnel_accounting(_funnel_flags(spark, sf_dir))
+
+
+def funnel_accounting(flags: DataFrame) -> DataFrame:
+    """corpus_funnel's one accounting row over a `_funnel_flags` frame
+    (the corpus runner reuses its frame for the survivor ids)."""
+    return flags.agg(
         F.count(F.lit(1)).alias("docs_in"),
         F.sum(F.when(~F.col("kept"), 1).otherwise(0)).alias(
             "removed_quality"

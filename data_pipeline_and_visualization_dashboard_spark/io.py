@@ -8,8 +8,9 @@ once-per-corpus artifacts of the LLM-pipeline extension (BPE merges,
 the PQ codebook, IVF centroids, the ANN disk index, the near-dup
 cluster and survivor tables, the bucketed join tables) are keyed,
 evicted, placed and completed here, by one rule (`memo_artifact`,
-`materialize_artifact`); every directory the package replaces is
-staged, marked and swapped into place by one rule, `publish_dir`.
+`materialize_artifact`); every directory the package writes for readers
+(each sink, both runners' outputs) is staged, marked and swapped into
+place by one rule, `publish_dir`.
 
 Spark-first mapping: scans are lazy `spark.read` plans; projection is a
 `.select` that Catalyst pushes into the vectorized parquet reader
@@ -253,9 +254,10 @@ def recover_dir(path: str) -> None:
 
 
 def publish_dir(path: str, write) -> None:
-    """The one rule by which the package replaces a directory readers
-    trust (merge and monitor state, stream outputs, compacted tables,
-    artifact generations): (1) `recover_dir(path)`; (2) `write` fills
+    """The one rule by which the package writes a directory readers
+    trust (every sink, both pipeline runners' outputs, merge and
+    monitor state, stream outputs, compacted tables, artifact
+    generations): (1) `recover_dir(path)`; (2) `write` fills
     a sibling staging directory `{path}.{pid}-{tag}`; (3) `_SUCCESS`
     marks it complete (underscore files are invisible to parquet
     readers, so a fence can ride along); (4) the contents in place
@@ -266,7 +268,15 @@ def publish_dir(path: str, write) -> None:
     rename in fails (OSError) and that copy stays. Each rename is
     atomic on POSIX, so after a kill at any step recovery leaves the
     old complete contents or the new ones, never none or a part.
-    `path` is local or a file:// URI (`local_path`)."""
+    `path` is local or a file:// URI (`local_path`). Kept apart:
+    - `write_training_shards_incremental`: its write I/O scales with
+      the dirty shards, and a rerun re-diffs the layout on disk;
+    - `ingest_incremental`'s append: at-least-once by design;
+    - the streaming per-epoch segments `epoch=N`: a staging sibling
+      `epoch=N.{pid}-{tag}` in the appended directory would be read
+      as a partition;
+    - `_bucketed_pair`'s catalog tables: the session catalog keeps
+      their bucket spec and path."""
     recover_dir(path)
     path = local_path(path)
     existed = os.path.exists(path)
@@ -346,11 +356,9 @@ def write_parquet(df: DataFrame, path: str,
     """S4: parquet sink (ipynb:223). `partition_by` gives on-disk
     partition pruning for downstream readers at scale (the reference's
     single-file write has no analogue; at 100 TB unpartitioned output is
-    not an option)."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+    not an option). Like every sink here it writes through
+    `publish_dir`: a failed rewrite leaves the old contents readable."""
+    publish_dir(path, df.write.partitionBy(*(partition_by or ())).parquet)
 
 
 def write_orc(df: DataFrame, path: str,
@@ -360,10 +368,7 @@ def write_orc(df: DataFrame, path: str,
     an engine that can't write it can't hand results to them). Same
     partition-pruning contract as write_parquet; Spark's ORC writer
     carries column statistics + bloom-filter support natively."""
-    writer = df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.orc(path)
+    publish_dir(path, df.write.partitionBy(*(partition_by or ())).orc)
 
 
 def read_orc(spark: SparkSession, path: str,
@@ -397,7 +402,7 @@ def write_sorted(df: DataFrame, path: str, sort_cols: list[str],
     out = df.repartitionByRange(
         *( [num_files] if num_files else [] ), *sort_cols
     ).sortWithinPartitions(*sort_cols)
-    out.write.mode("overwrite").parquet(path)
+    publish_dir(path, out.write.parquet)
 
 
 def write_zorder(df: DataFrame, path: str, col_a: str, col_b: str,
@@ -457,7 +462,7 @@ def write_zorder(df: DataFrame, path: str, col_a: str, col_b: str,
         .sortWithinPartitions("_z")
         .drop("_z")
     )
-    out.write.mode("overwrite").parquet(path)
+    publish_dir(path, out.write.parquet)
 
 
 def read_jsonl(spark: SparkSession, path: str,
@@ -513,7 +518,7 @@ def read_jsonl_quarantined(
 
 def write_jsonl(df: DataFrame, path: str) -> None:
     """S8b: JSON-Lines sink (one file per partition, one doc per line)."""
-    df.write.mode("overwrite").json(path)
+    publish_dir(path, df.write.json)
 
 
 def compact_files(spark: SparkSession, path: str,
@@ -527,10 +532,10 @@ def compact_files(spark: SparkSession, path: str,
     writing, unlike coalesce(n) which would collapse the WRITE stage's
     upstream parallelism too). Returns the new file count.
 
-    The rewrite replaces the directory by `publish_dir`, so a kill at
-    any point leaves every row in place, in either the old or the
-    compacted files, once recovered (a local filesystem; on object
-    stores use a manifest/table format instead)."""
+    The rewrite is `write_parquet`'s publish, so a kill at any point
+    leaves every row in place, in either the old or the compacted
+    files, once recovered (a local filesystem; on object stores use a
+    manifest/table format instead)."""
     import math
 
     recover_dir(path)
@@ -540,10 +545,7 @@ def compact_files(spark: SparkSession, path: str,
         if f.endswith(".parquet")
     )
     n_files = max(1, math.ceil(size / target_file_bytes))
-    publish_dir(
-        path,
-        spark.read.parquet(path).repartition(n_files).write.parquet,
-    )
+    write_parquet(spark.read.parquet(path).repartition(n_files), path)
     return n_files
 
 
@@ -638,32 +640,34 @@ def write_training_shards(
     survives by construction and no funnel or artifact is consulted.
     At 100 TB: n_shards scales with the corpus, each shard writes
     from its own partition (no driver fan-in)."""
-    from .extras.dedup import (
-        N_TRAINING_SHARDS,
-        _manifest_agg,
-        shard_assignments,
-    )
+    from .extras.dedup import N_TRAINING_SHARDS, shard_assignments
 
     if n_shards is None:
         n_shards = N_TRAINING_SHARDS
     a = shard_assignments(spark, sf_dir, n_shards, curated)
-    _write_shard_partitions(a, n_shards, out_dir)
+    publish_dir(out_dir, _shard_writer(a, n_shards).parquet)
+    return _layout_manifest(spark, out_dir)
+
+
+def _layout_manifest(spark: SparkSession, out_dir: str) -> DataFrame:
+    """The manifest of the shard layout on disk: a pruned (shard,
+    n_tokens, doc_hash) scan through the shared ≤n_shards-row agg."""
+    from .extras.dedup import _manifest_agg
+
     return _manifest_agg(
-        spark.read.parquet(out_dir)
-        .select("shard", "n_tokens", "doc_hash")
+        spark.read.parquet(out_dir).select("shard", "n_tokens", "doc_hash")
     )
 
 
-def _write_shard_partitions(a: DataFrame, n_shards: int, out_dir: str,
-                            dynamic: bool = False) -> None:
-    """The shared shard-layout write: ONE hash exchange on shard plus a
-    local total-order sort, then a shard=NNN dynamic-partition write.
-    `dynamic=True` switches partitionOverwriteMode so ONLY the
-    partitions present in `a` are replaced — the incremental-publish
-    path; the default replaces the whole layout."""
+def _shard_writer(a: DataFrame, n_shards: int):
+    """The shared shard-layout writer: ONE hash exchange on shard plus
+    a local total-order sort, then a shard=NNN partitioned write —
+    published whole by `write_training_shards`, or, in dynamic
+    overwrite mode, replacing only the partitions present in `a` (the
+    incremental path)."""
     from .extras.hashing import spark_h60
 
-    w = (
+    return (
         a.withColumn(
             "pos",
             F.expr(spark_h60("concat('order', CAST(doc_id AS STRING))")),
@@ -674,12 +678,8 @@ def _write_shard_partitions(a: DataFrame, n_shards: int, out_dir: str,
         # unlikely" — with the tiebreak the order is total, period
         .sortWithinPartitions("shard", "pos", "doc_id")
         .drop("pos")
-        .write.mode("overwrite")
-        .partitionBy("shard")
+        .write.partitionBy("shard")
     )
-    if dynamic:
-        w = w.option("partitionOverwriteMode", "dynamic")
-    w.parquet(out_dir)
 
 
 def write_training_shards_incremental(
@@ -708,7 +708,10 @@ def write_training_shards_incremental(
     nothing for an empty partition, so a now-empty shard's stale
     files must be dropped by hand).  The result is file-for-file
     identical to a from-scratch write_training_shards of the same
-    corpus (pinned in tests, along with untouched-shard mtimes).
+    corpus (pinned in tests, along with untouched-shard mtimes), also
+    when it completes a run interrupted between (a) and (b): the
+    layout is written in place, not by `publish_dir`, because the
+    rerun re-diffs what is on disk.
 
     At 100 TB this is the difference between publishing a corpus
     delta and republishing the corpus: write I/O scales with the
@@ -725,35 +728,23 @@ def write_training_shards_incremental(
     if n_shards is None:
         n_shards = N_TRAINING_SHARDS
     a = shard_assignments(spark, sf_dir, n_shards, curated)
-    cur_manifest = _manifest_agg(
-        a.select("shard", "n_tokens", "doc_hash")
-    )
-    prev_manifest = _manifest_agg(
-        spark.read.parquet(out_dir)
-        .select("shard", "n_tokens", "doc_hash")
-    )
-    diff = manifest_diff_of(prev_manifest, cur_manifest).collect()
-    dirty = [r.shard for r in diff if r.needs_rewrite]
-    emptied = [
-        r.shard for r in diff if r.needs_rewrite and r.n_docs_cur == 0
-    ]
-    if dirty:
-        to_write = [s for s in dirty if s not in set(emptied)]
-        if to_write:
-            _write_shard_partitions(
-                a.filter(F.col("shard").isin(to_write)),
-                n_shards,
-                out_dir,
-                dynamic=True,
-            )
-        for s in emptied:
-            shutil.rmtree(
-                os.path.join(out_dir, f"shard={s}"), ignore_errors=True
-            )
-    return _manifest_agg(
-        spark.read.parquet(out_dir)
-        .select("shard", "n_tokens", "doc_hash")
-    )
+    diff = manifest_diff_of(
+        _layout_manifest(spark, out_dir),
+        _manifest_agg(a.select("shard", "n_tokens", "doc_hash")),
+    ).collect()
+    to_write = [r.shard for r in diff if r.needs_rewrite and r.n_docs_cur]
+    emptied = [r.shard for r in diff if r.needs_rewrite and not r.n_docs_cur]
+    if to_write:
+        _shard_writer(
+            a.filter(F.col("shard").isin(to_write)), n_shards
+        ).mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).parquet(out_dir)
+    for s in emptied:
+        shutil.rmtree(
+            os.path.join(out_dir, f"shard={s}"), ignore_errors=True
+        )
+    return _layout_manifest(spark, out_dir)
 
 
 def register_views(spark: SparkSession, tables: dict[str, DataFrame]) -> None:

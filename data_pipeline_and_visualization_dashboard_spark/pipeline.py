@@ -10,7 +10,9 @@ returned frame: one WholeStageCodegen span over the file scan).
 
 Output is partitioned by event date: at 100 TB this is what makes
 downstream date-range queries (charts F7) prune partitions instead of
-scanning the world.
+scanning the world. Both runners publish their output whole
+(`io.publish_dir`): a failed rerun leaves the previous output in
+place, and a non-local output is refused before any Spark job runs.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from pyspark.sql import functions as F
 
 from .clean import clean_events_observed
 from .derive import derive_event_columns
-from .io import read_table, write_parquet
+from .io import local_path, publish_dir, read_table, write_parquet
 from .schemas import EVENTS
 from .validate import validate_schema
 
@@ -45,6 +47,7 @@ def run_events_pipeline(
     frame reads BACK from parquet (so downstream analytics benefit from
     partition pruning + fresh statistics, exactly like the reference's
     clean-parquet handoff, ipynb:212-243)."""
+    local_path(out_path)  # the sink's refusal, before the first job
     raw = read_table(spark, sf_dir, "events")
     validate_schema(raw, EVENTS, timestamp_columns=["ts"])
 
@@ -130,7 +133,12 @@ def run_corpus_pipeline(
     incremental publish must replace.  Content-hash shard assignment
     makes that set minimal: docs that didn't change never migrate
     shards, so an unchanged corpus diffs to needs_rewrite=false
-    everywhere (pinned in tests)."""
+    everywhere (pinned in tests).
+
+    The release is one `publish_dir(out_dir, ...)`: every artifact is
+    written under the staging copy and swapped in together, so a failed
+    release leaves the previous one whole, and `prev_release_dir` may be
+    `out_dir` itself (it is read before the swap)."""
     import os
 
     from pyspark.sql import functions as SF
@@ -141,6 +149,7 @@ def run_corpus_pipeline(
         _token_hash_proj,
         contamination_multi,
         corpus_data_card,
+        funnel_accounting,
         manifest_diff_of,
         mixture_plan_of,
     )
@@ -148,131 +157,124 @@ def run_corpus_pipeline(
     from .extras.text import PII_RULES, packing, scrub_pii, split_assign
     from .io import write_training_shards
 
-    # ONE _funnel_flags frame feeds both the accounting row and the
-    # survivor ids: corpus_funnel + corpus_survivors each rebuild it,
-    # and its CC loop runs eagerly per invocation — the runner's most
-    # expensive stage would otherwise be paid twice
-    flags = _funnel_flags(spark, sf_dir)
-    funnel = flags.agg(
-        SF.count(SF.lit(1)).alias("docs_in"),
-        SF.sum(SF.when(~SF.col("kept"), 1).otherwise(0)).alias(
-            "removed_quality"
-        ),
-        SF.sum(
-            SF.when(SF.col("kept") & ~SF.col("pe"), 1).otherwise(0)
-        ).alias("removed_exact"),
-        SF.sum(
-            SF.when(SF.col("pe") & ~SF.col("pn"), 1).otherwise(0)
-        ).alias("removed_neardup"),
-        SF.sum(SF.when(SF.col("pn"), 1).otherwise(0)).alias("docs_out"),
-    ).first().asDict()
+    release = {}
 
-    docs = read_table(spark, sf_dir, "documents")
-    surv_ids = flags.filter(SF.col("pn")).select("doc_id")
-    curated_dir = os.path.join(out_dir, "curated")
-    # scrub-at-ingest: survivors' text is replaced by the redacted
-    # clean_text BEFORE materialization, so packs/splits/index — and
-    # anything else reading the curated layout — can never leak raw
-    # PII; the per-rule totals land as their own report artifact
-    # (counts are row-local codegen riding the same survivor join)
-    scrubbed = scrub_pii(spark, sf_dir)
-    curated_scrubbed = (
-        docs.join(surv_ids, "doc_id")
-        .join(scrubbed, "doc_id")
-        .withColumn("text", SF.col("clean_text"))
-    )
-    pii_cols = [f"n_{name}" for name, _ in PII_RULES]
-    write_parquet(
-        curated_scrubbed.drop("clean_text", *pii_cols),
-        os.path.join(curated_dir, "documents.parquet"),
-    )
-    pii_report = curated_scrubbed.agg(
-        SF.count(SF.lit(1)).alias("docs_scrubbed"),
-        *[SF.sum(c).cast("bigint").alias(c) for c in pii_cols],
-    )
-    write_parquet(pii_report, os.path.join(out_dir, "pii_report.parquet"))
+    def write(out: str) -> None:
+        # ONE _funnel_flags frame feeds both the accounting row and the
+        # survivor ids: corpus_funnel + corpus_survivors each rebuild
+        # it, and its CC loop runs eagerly per invocation — the runner's
+        # most expensive stage would otherwise be paid twice
+        flags = _funnel_flags(spark, sf_dir)
+        release["funnel"] = funnel_accounting(flags).first().asDict()
 
-    write_parquet(
-        contamination_multi(spark, sf_dir),
-        os.path.join(out_dir, "contamination.parquet"),
-    )
-    merges_df = bpe_train(spark, sf_dir)
-    write_parquet(
-        merges_df, os.path.join(out_dir, "tokenizer_merges.parquet")
-    )
-    packs = packing(spark, curated_dir)
-    write_parquet(packs, os.path.join(out_dir, "packs.parquet"))
-    write_parquet(
-        split_assign(spark, curated_dir),
-        os.path.join(out_dir, "splits.parquet"),
-    )
-    write_parquet(
-        index_postings(spark, curated_dir),
-        os.path.join(out_dir, "index.parquet"),
-    )
-    # 7. the release loop closed (VERDICT r15 ask #3): shard files
-    # over the CURATED (scrubbed) corpus — curated=True because the
-    # funnel already ran; re-running it on its own survivors would
-    # double-filter and double-pay — manifest recomputed from the
-    # written files (so it accounts for what is actually on disk,
-    # scrubbed text included), and the release data card over the RAW
-    # corpus (keep-rates/dup-rates describe the curation decisions,
-    # which need the pre-curation denominator)
-    shards_dir = os.path.join(out_dir, "shards")
-    manifest_df = write_training_shards(
-        spark, curated_dir, shards_dir, curated=True
-    )
-    write_parquet(
-        manifest_df, os.path.join(out_dir, "shard_manifest.parquet")
-    )
-    manifest = spark.read.parquet(
-        os.path.join(out_dir, "shard_manifest.parquet")
-    ).orderBy("shard").collect()
-    write_parquet(
-        corpus_data_card(spark, sf_dir),
-        os.path.join(out_dir, "data_card.parquet"),
-    )
-    # the sampling table a trainer consumes, computed over the
-    # CURATED (scrubbed) layout — the text that actually ships — with
-    # the shared _token_hash_proj tokenizer, so the plan's token
-    # budget is definitionally the shard manifest's (cross-checked in
-    # tests: sum(tokens_avail) == sum(manifest.n_tokens))
-    curated_docs = spark.read.parquet(
-        os.path.join(curated_dir, "documents.parquet")
-    )
-    slice_agg = (
-        curated_docs.select("source", "lang", _token_hash_proj()[0])
-        .groupBy("source", "lang")
-        .agg(
-            SF.count(SF.lit(1)).alias("n_docs"),
-            SF.sum("n_tokens").alias("tokens_avail"),
+        docs = read_table(spark, sf_dir, "documents")
+        surv_ids = flags.filter(SF.col("pn")).select("doc_id")
+        curated_dir = os.path.join(out, "curated")
+        # scrub-at-ingest: survivors' text is replaced by the redacted
+        # clean_text BEFORE materialization, so packs/splits/index — and
+        # anything else reading the curated layout — can never leak raw
+        # PII; the per-rule totals land as their own report artifact
+        # (counts are row-local codegen riding the same survivor join)
+        scrubbed = scrub_pii(spark, sf_dir)
+        curated_scrubbed = (
+            docs.join(surv_ids, "doc_id")
+            .join(scrubbed, "doc_id")
+            .withColumn("text", SF.col("clean_text"))
         )
-    )
-    write_parquet(
-        mixture_plan_of(slice_agg),
-        os.path.join(out_dir, "mixture_plan.parquet"),
-    )
-    if prev_release_dir is not None:
-        prev_manifest = spark.read.parquet(
-            os.path.join(prev_release_dir, "shard_manifest.parquet")
+        pii_cols = [f"n_{name}" for name, _ in PII_RULES]
+        write_parquet(
+            curated_scrubbed.drop("clean_text", *pii_cols),
+            os.path.join(curated_dir, "documents.parquet"),
+        )
+        pii_report = curated_scrubbed.agg(
+            SF.count(SF.lit(1)).alias("docs_scrubbed"),
+            *[SF.sum(c).cast("bigint").alias(c) for c in pii_cols],
+        )
+        write_parquet(pii_report, os.path.join(out, "pii_report.parquet"))
+
+        write_parquet(
+            contamination_multi(spark, sf_dir),
+            os.path.join(out, "contamination.parquet"),
+        )
+        release["merges"] = bpe_train(spark, sf_dir)
+        write_parquet(
+            release["merges"], os.path.join(out, "tokenizer_merges.parquet")
         )
         write_parquet(
-            manifest_diff_of(
-                prev_manifest,
-                spark.read.parquet(
-                    os.path.join(out_dir, "shard_manifest.parquet")
-                ),
-            ),
-            os.path.join(out_dir, "shard_manifest_diff.parquet"),
+            packing(spark, curated_dir), os.path.join(out, "packs.parquet")
         )
+        write_parquet(
+            split_assign(spark, curated_dir),
+            os.path.join(out, "splits.parquet"),
+        )
+        write_parquet(
+            index_postings(spark, curated_dir),
+            os.path.join(out, "index.parquet"),
+        )
+        # 7. the release loop closed (VERDICT r15 ask #3): shard files
+        # over the CURATED (scrubbed) corpus — curated=True because the
+        # funnel already ran; re-running it on its own survivors would
+        # double-filter and double-pay — manifest recomputed from the
+        # written files (so it accounts for what is actually on disk,
+        # scrubbed text included), and the release data card over the
+        # RAW corpus (keep-rates/dup-rates describe the curation
+        # decisions, which need the pre-curation denominator)
+        manifest_path = os.path.join(out, "shard_manifest.parquet")
+        write_parquet(
+            write_training_shards(
+                spark, curated_dir, os.path.join(out, "shards"),
+                curated=True,
+            ),
+            manifest_path,
+        )
+        release["manifest"] = (
+            spark.read.parquet(manifest_path).orderBy("shard").collect()
+        )
+        write_parquet(
+            corpus_data_card(spark, sf_dir),
+            os.path.join(out, "data_card.parquet"),
+        )
+        # the sampling table a trainer consumes, computed over the
+        # CURATED (scrubbed) layout — the text that actually ships —
+        # with the shared _token_hash_proj tokenizer, so the plan's
+        # token budget is definitionally the shard manifest's
+        # (cross-checked in tests: sum(tokens_avail) ==
+        # sum(manifest.n_tokens))
+        curated_docs = spark.read.parquet(
+            os.path.join(curated_dir, "documents.parquet")
+        )
+        slice_agg = (
+            curated_docs.select("source", "lang", _token_hash_proj()[0])
+            .groupBy("source", "lang")
+            .agg(
+                SF.count(SF.lit(1)).alias("n_docs"),
+                SF.sum("n_tokens").alias("tokens_avail"),
+            )
+        )
+        write_parquet(
+            mixture_plan_of(slice_agg),
+            os.path.join(out, "mixture_plan.parquet"),
+        )
+        if prev_release_dir is not None:
+            prev_manifest = spark.read.parquet(
+                os.path.join(prev_release_dir, "shard_manifest.parquet")
+            )
+            write_parquet(
+                manifest_diff_of(
+                    prev_manifest, spark.read.parquet(manifest_path)
+                ),
+                os.path.join(out, "shard_manifest_diff.parquet"),
+            )
+
+    publish_dir(out_dir, write)
     return CorpusPipelineResult(
-        funnel=funnel,
+        funnel=release["funnel"],
         out_dir=out_dir,
-        n_survivors=int(funnel["docs_out"]),
+        n_survivors=int(release["funnel"]["docs_out"]),
         n_packs=spark.read.parquet(
             os.path.join(out_dir, "packs.parquet")
         ).count(),
-        n_merges=merges_df.count(),
-        n_shards=len(manifest),
-        manifest=manifest,
+        n_merges=release["merges"].count(),
+        n_shards=len(release["manifest"]),
+        manifest=release["manifest"],
     )

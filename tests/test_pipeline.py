@@ -56,6 +56,98 @@ def test_events_pipeline_runs_two_spark_jobs(spark, tmp_path):
     assert len(jobs) == 2, f"{len(jobs)} jobs for one pipeline run"
 
 
+@pytest.mark.parametrize("sink", [
+    "write_parquet", "write_orc", "write_sorted", "write_zorder",
+    "write_jsonl", "run_events_pipeline",
+])
+def test_failed_rewrite_keeps_the_old_output(spark, tmp_path, monkeypatch,
+                                              sink):
+    """Every io sink, and the ETL runner through its sink, publishes
+    its output whole (io.publish_dir): a rewrite of an existing path
+    whose job fails on one row (raise_error) leaves the old rows in
+    place and readable, and no staging debris beside them. Spark's
+    delete-first overwrite left an empty directory instead."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from data_pipeline_and_visualization_dashboard_spark import io, pipeline
+
+    path = str(tmp_path / "out")
+
+    def fail_on(df, cond, col):
+        boom = F.raise_error(F.lit("boom on one row"))
+        return df.withColumn(col, F.when(cond, boom).otherwise(F.col(col)))
+
+    if sink == "run_events_pipeline":
+        read = spark.read.parquet
+        old = run_events_pipeline(spark, SF_SMOKE, path).cleaned.collect()
+        victim = old[0].event_id
+        derive = pipeline.derive_event_columns
+        monkeypatch.setattr(
+            pipeline, "derive_event_columns",
+            lambda df: fail_on(derive(df), F.col("event_id") == victim,
+                               "value"),
+        )
+
+        def rewrite():
+            run_events_pipeline(spark, SF_SMOKE, path)
+    else:
+        read = {"write_orc": spark.read.orc,
+                "write_jsonl": spark.read.json}.get(sink, spark.read.parquet)
+        sink_fn = getattr(io, sink)
+        args = {"write_sorted": (["id"],),
+                "write_zorder": ("id", "v")}.get(sink, ())
+        df = spark.range(200).selectExpr(
+            "id", "CAST(id % 7 AS DOUBLE) AS v", "CAST(id AS STRING) AS w"
+        )
+        sink_fn(df, path, *args)
+        old = read(path).collect()
+
+        def rewrite():
+            # the failing column is not a z-order key, so the write job
+            # (not write_zorder's percentile pass) is the one that fails
+            sink_fn(fail_on(df, F.col("id") == 7, "w"), path, *args)
+    assert len(old) > 0
+    # adaptive execution would run write_sorted's and write_zorder's
+    # range-exchange map stage, where the row fails, before the
+    # write's own job; off, the failure lands inside the write job
+    aqe = "spark.sql.adaptive.enabled"
+    was = spark.conf.get(aqe)
+    spark.conf.set(aqe, "false")
+    try:
+        with pytest.raises(Exception, match="boom on one row"):
+            rewrite()
+    finally:
+        spark.conf.set(aqe, was)
+    assert sorted(map(tuple, read(path).collect())) == sorted(
+        map(tuple, old))
+    assert os.listdir(tmp_path) == ["out"]
+
+
+def test_runners_refuse_a_non_local_output_before_any_job(spark, tmp_path):
+    """Both runners publish through io.publish_dir, whose renames are
+    local: an hdfs:// output is refused with io.local_path's
+    ValueError before the first Spark job, not after the ETL scan or
+    the corpus funnel has run."""
+    from data_pipeline_and_visualization_dashboard_spark.pipeline import (
+        run_corpus_pipeline,
+    )
+
+    sc = spark.sparkContext
+    group = "test-runner-refusal"
+    sc.setJobGroup(group, "runners given an hdfs:// output")
+    try:
+        for run in (run_events_pipeline, run_corpus_pipeline):
+            with pytest.raises(ValueError, match="not a local path"):
+                run(spark, SF_SMOKE, "hdfs://" + str(tmp_path / "out"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_observed_accounting_matches_standalone(spark):
     """clean_events_observed must report the same V5 metrics as the
     standalone removal_accounting scan — but collected DURING the job
@@ -151,7 +243,8 @@ def test_validate_schema_raises_on_dtype(spark):
         validate_schema(df, EVENTS, timestamp_columns=["ts"])
 
 
-def test_run_corpus_pipeline_writes_all_artifacts(spark, tmp_path):
+def test_run_corpus_pipeline_writes_all_artifacts(spark, tmp_path,
+                                                  monkeypatch):
     """The corpus runner must leave a complete, consistent artifact
     set: curated corpus = funnel survivors exactly; packs conserve the
     curated chunks; every survivor gets one split; the tokenizer
@@ -299,6 +392,63 @@ def test_run_corpus_pipeline_writes_all_artifacts(spark, tmp_path):
         assert r.docs_delta == 0 and r.tokens_delta == 0
         assert r.checksum_prev == r.checksum_cur
 
+    # (d) a release is one publish: a release that fails at its
+    # mixture plan leaves every file of the release it would replace
+    # byte-identical, and no debris beside it
+    from pathlib import Path
+
+    from data_pipeline_and_visualization_dashboard_spark.extras import (
+        dedup as _dedup,
+    )
+    from tests.conftest import SF_CORRECT
+
+    def tree(d):
+        return {
+            str(p.relative_to(d)): p.read_bytes()
+            for p in Path(d).rglob("*") if p.is_file()
+        }
+
+    def no_plan(slice_agg):
+        raise RuntimeError("no mixture plan")
+
+    before = tree(out)
+    monkeypatch.setattr(_dedup, "mixture_plan_of", no_plan)
+    with pytest.raises(RuntimeError, match="no mixture plan"):
+        run_corpus_pipeline(spark, SF_CORRECT, out)
+    monkeypatch.undo()
+    assert tree(out) == before
+    assert sorted(_os.listdir(tmp_path)) == ["artifacts", "artifacts2"]
+
+    # (e) an in-place release (prev_release_dir is out_dir itself)
+    # diffs against the release it replaces, read before the swap: the
+    # emitted diff equals one against a copy of the old release, and a
+    # rewrite is needed for exactly the shards whose content changed
+    import shutil as _shutil
+
+    prev = str(tmp_path / "prev_copy")
+    _shutil.copytree(out, prev)
+    res3 = run_corpus_pipeline(spark, SF_CORRECT, out, prev_release_dir=out)
+    diff = sorted(map(tuple, spark.read.parquet(
+        f"{out}/shard_manifest_diff.parquet").collect()))
+    assert diff == sorted(map(tuple, _dedup.manifest_diff_of(
+        spark.read.parquet(f"{prev}/shard_manifest.parquet"),
+        spark.read.parquet(f"{out}/shard_manifest.parquet"),
+    ).collect()))
+    old_sums = {
+        r.shard: r.content_hash
+        for r in spark.read.parquet(
+            f"{prev}/shard_manifest.parquet").collect()
+    }
+    new_sums = {r.shard: r.content_hash for r in res3.manifest}
+    changed = {
+        s for s in old_sums.keys() | new_sums.keys()
+        if old_sums.get(s) != new_sums.get(s)
+    }
+    assert changed  # sf0.01's curated corpus is not sf0.001's
+    rewrite = spark.read.parquet(
+        f"{out}/shard_manifest_diff.parquet").filter("needs_rewrite")
+    assert {r.shard for r in rewrite.collect()} == changed
+
 
 def test_zorder_write_prunes_trailing_dim_predicates(spark, tmp_path):
     """The q86 layout claim, materialized: write the events bucket
@@ -382,6 +532,34 @@ def test_zorder_write_prunes_trailing_dim_predicates(spark, tmp_path):
     assert z_a < 0.75, z_a
 
 
+def _shard_of(doc_id):
+    """io.write_training_shards' content-hash shard of a doc (16)."""
+    import hashlib
+
+    h = int(hashlib.md5(f"shard{doc_id}".encode()).hexdigest()[:15], 16)
+    return h % 16
+
+
+def _shard_doc_ids(d):
+    """Each shard=N directory under `d` -> its doc_ids in file order
+    (the seeded in-shard order the layout pins)."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    return {
+        os.path.basename(s): [
+            v
+            for p in sorted(glob.glob(os.path.join(s, "*.parquet")))
+            for v in pq.read_table(p, columns=["doc_id"])[
+                "doc_id"
+            ].to_pylist()
+        ]
+        for s in glob.glob(os.path.join(d, "shard=*"))
+    }
+
+
 def test_write_training_shards_layout_and_determinism(spark, tmp_path):
     """io.write_training_shards (VERDICT r14 ask #2): the written
     shard=NNN layout agrees file-for-file with the oracle-backed
@@ -448,20 +626,7 @@ def test_write_training_shards_layout_and_determinism(spark, tmp_path):
     out2 = str(tmp_path / "shards2")
     write_training_shards(spark, SF_SMOKE, out2)
 
-    def seqs(d):
-        out = {}
-        for s in sorted(manifest):
-            parts = sorted(glob.glob(os.path.join(d, f"shard={s}", "*.parquet")))
-            out[s] = [
-                v
-                for p in parts
-                for v in pq.read_table(
-                    p, columns=["doc_id"]
-                )["doc_id"].to_pylist()
-            ]
-        return out
-
-    assert seqs(out1) == seqs(out2)
+    assert _shard_doc_ids(out1) == _shard_doc_ids(out2)
 
 
 def test_baseline_gate_branches(tmp_path):
@@ -718,7 +883,6 @@ def test_incremental_shard_write_matches_full_rewrite(spark, tmp_path):
     import glob
     import os
 
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from data_pipeline_and_visualization_dashboard_spark.io import (
@@ -764,33 +928,12 @@ def test_incremental_shard_write_matches_full_rewrite(spark, tmp_path):
     ).collect()))
     assert m_inc == m_full  # manifests agree exactly (checksums too)
 
-    def seqs(d):
-        out = {}
-        for s in range(16):
-            parts = sorted(
-                glob.glob(os.path.join(d, f"shard={s}", "*.parquet"))
-            )
-            out[s] = [
-                v
-                for p in parts
-                for v in pq.read_table(p, columns=["doc_id"])[
-                    "doc_id"
-                ].to_pylist()
-            ]
-        return out
-
-    inc_seqs, full_seqs = seqs(out_inc), seqs(out_full)
-    assert inc_seqs == full_seqs  # layout == from-scratch rewrite
+    # layout == from-scratch rewrite
+    assert _shard_doc_ids(out_inc) == _shard_doc_ids(out_full)
 
     # ground-truth dirty set: shards holding a revised or removed doc
-    import hashlib as _hl
-
-    def shard_of(doc_id):
-        h = int(_hl.md5(f"shard{doc_id}".encode()).hexdigest()[:15], 16)
-        return h % 16
-
     touched = {
-        shard_of(r.doc_id)
+        _shard_of(r.doc_id)
         for r in docs.select("doc_id").collect()
         if r.doc_id % 89 == 0 or r.doc_id % 97 == 0
     }
@@ -800,6 +943,79 @@ def test_incremental_shard_write_matches_full_rewrite(spark, tmp_path):
             assert before[s] != after[s], f"dirty shard {s} untouched"
         else:
             assert before[s] == after[s], f"clean shard {s} rewritten"
+
+
+def test_incremental_shard_write_completes_an_interrupted_run(
+        spark, tmp_path, monkeypatch):
+    """write_training_shards_incremental writes in place, outside
+    io.publish_dir, on the claim that a rerun re-diffs the layout on
+    disk. So a run interrupted between the dirty-shard overwrite and
+    the removal of emptied shards (one emptied shard removed, the
+    other not) is completed by the next run, to exactly a from-scratch
+    write_training_shards of the new corpus."""
+    import os
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    from data_pipeline_and_visualization_dashboard_spark.io import (
+        write_training_shards, write_training_shards_incremental,
+    )
+
+    # corpus v2: every doc of shards 3 and 11 removed, doc_id%97==0
+    # revised (so other shards are rewritten, not emptied)
+    emptied = [3, 11]
+    docs = spark.read.parquet(SF_SMOKE + "/documents.parquet")
+    ids = [r.doc_id for r in docs.select("doc_id").collect()]
+    gone = [d for d in ids if _shard_of(d) in emptied]
+    assert {_shard_of(d) for d in gone} == set(emptied)
+    assert any(d % 97 == 0 and d not in gone for d in ids)
+    v2dir = str(tmp_path / "corpus_v2")
+    (
+        docs.filter(~F.col("doc_id").isin(gone))
+        .withColumn(
+            "text",
+            F.when(
+                F.col("doc_id") % 97 == 0,
+                F.concat(F.col("text"), F.lit(" rev2")),
+            ).otherwise(F.col("text")),
+        )
+        .write.parquet(os.path.join(v2dir, "documents.parquet"))
+    )
+
+    out = str(tmp_path / "shards_inc")
+    write_training_shards(spark, SF_SMOKE, out, curated=True)
+
+    class Interrupted(Exception):
+        pass
+
+    rmtree, removed = shutil.rmtree, []
+
+    def interrupted_rmtree(path, *args, **kwargs):
+        if removed:
+            raise Interrupted(path)
+        removed.append(path)
+        rmtree(path, *args, **kwargs)
+
+    monkeypatch.setattr(shutil, "rmtree", interrupted_rmtree)
+    with pytest.raises(Interrupted):
+        write_training_shards_incremental(spark, v2dir, out, curated=True)
+    monkeypatch.undo()
+    assert [os.path.isdir(f"{out}/shard={s}") for s in emptied] == [
+        False, True]
+
+    m_inc = sorted(map(tuple, write_training_shards_incremental(
+        spark, v2dir, out, curated=True
+    ).collect()))
+    out_full = str(tmp_path / "shards_full")
+    m_full = sorted(map(tuple, write_training_shards(
+        spark, v2dir, out_full, curated=True
+    ).collect()))
+    assert m_inc == m_full
+
+    layout = _shard_doc_ids(out)
+    assert layout == _shard_doc_ids(out_full)
+    assert len(layout) == 16 - len(emptied)
 
 
 def test_null_counts_matches_duckdb(spark, tmp_path):
