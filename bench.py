@@ -59,16 +59,16 @@ def family(name: str) -> str:
 #      *_pretrained serving, bpe_apply) or under index_build_sec.
 #   3. brute-force accuracy-oracle twins (dedup_embedding_pairs,
 #      dedup_ngram_jaccard_topk, dedup_containment_topk,
-#      dedup_simhash_hamming_topk,
-#      sim_cosine_topk_pandas, dedup_embedding_pairs_lsh's exact
+#      dedup_simhash_hamming_topk, dedup_embedding_pairs_lsh's exact
 #      side, and text_pack_bestfit — the BFD planning tool that
 #      prices the concat packer's splits; the benched scale path is
 #      text_pack_sequences): exist to verify/measure, not to be
 #      fast; timing them would reward paths the engine must never
 #      take at scale.
-#   4. serving aliases (sim_ivf_topk, sim_ivfpq_topk): the same
-#      functions as the benched *_pretrained names; the one-time build
-#      is priced separately in index_build_sec.
+#   4. aliases (sim_ivf_topk, sim_ivfpq_topk, sim_cosine_topk_pandas):
+#      the same functions as the benched *_pretrained names and
+#      sim_cosine_topk; the one-time index build is priced separately
+#      in index_build_sec.
 #   5. streaming harness (dedup_snapshot_ledger): timing would
 #      measure checkpoint/trigger scheduling, not an operator (see
 #      the note at the end of this list).
@@ -257,7 +257,7 @@ BASELINE_REFREEZE = {
     # run 14 (.new13, 0.342):
     "corpus_mixture_plan": 0.342,
     # ---- r16 OPTIMIZATION-PHASE deliberate-engine-change re-bases:
-    # the literal-matrix plan compaction (similarity._lit_mat,
+    # the literal-matrix plan compaction (similarity.lit_matrix,
     # OPTIMIZATION_r16.md change 1) removed the Catalyst planning of
     # dim x k separate literal nodes that every registry call re-paid
     # on the PQ/IVF serving paths — results bit-identical (17/17

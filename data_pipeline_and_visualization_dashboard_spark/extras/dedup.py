@@ -28,7 +28,7 @@ Every stage is differential-tested: the hash family is md5-derived
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..io import materialize_artifact, read_table
@@ -41,6 +41,7 @@ from .hashing import (
     spark_base_hash,
     spark_h60,
 )
+from .similarity import _bucket_expr, _dot, cosine
 from .text import (
     _DUCK_SPLIT_SQL,
     _VERDICT_CASE,
@@ -348,6 +349,19 @@ def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
     )
 
 
+def minhash_agreement() -> Column:
+    """The MinHash Jaccard estimate of a pair: the share of the
+    NUM_HASHES slots on which the sig_a and sig_b signatures agree."""
+    agree = F.aggregate(
+        F.zip_with(
+            "sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)
+        ),
+        F.lit(0),
+        lambda acc, x: acc + x,
+    )
+    return agree.cast("double") / F.lit(float(NUM_HASHES))
+
+
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs + verification.
 
@@ -384,11 +398,6 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingled.select("doc_id", F.array_distinct("shingles").alias("sh"))
     sh_a = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
     sh_b = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (
@@ -399,7 +408,7 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id_a",
             "doc_id_b",
-            (agree.cast("double") / F.lit(float(NUM_HASHES))).alias("est_jaccard"),
+            minhash_agreement().alias("est_jaccard"),
             (inter.cast("double") / union.cast("double")).alias("jaccard"),
         )
         .orderBy("doc_id_a", "doc_id_b")
@@ -437,12 +446,7 @@ def dedup_containment_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     za = sz.select(F.col("doc_id").alias("doc_id_a"), F.col("n_sh").alias("n_a"))
     zb = sz.select(F.col("doc_id").alias("doc_id_b"), F.col("n_sh").alias("n_b"))
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    est_j = agree.cast("double") / F.lit(float(NUM_HASHES))
+    est_j = minhash_agreement()
     inter_est = est_j * (F.col("n_a") + F.col("n_b")) / (F.lit(1.0) + est_j)
     return (
         pairs.join(sa, "doc_id_a")
@@ -569,11 +573,6 @@ def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shingled.select("doc_id", F.array_distinct("shingles").alias("sh"))
     sh_a = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
     sh_b = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
-    agree = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: F.when(x == y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
     return (
@@ -584,7 +583,7 @@ def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id_a",
             "doc_id_b",
-            (agree.cast("double") / F.lit(float(NUM_HASHES))).alias("est_jaccard"),
+            minhash_agreement().alias("est_jaccard"),
             (inter.cast("double") / union.cast("double")).alias("jaccard"),
         )
         .orderBy("doc_id_a", "doc_id_b")
@@ -1094,20 +1093,8 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Similarity rounded to 6dp for cross-engine rank/threshold parity."""
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
     e = F.col("embedding").cast("array<double>")
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    norm = F.sqrt(
-        F.aggregate(
-            F.zip_with("ea", "ea", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
     a = emb.select(F.col("vec_id").alias("vec_id_a"), e.alias("ea"))
-    a = a.withColumn("na", norm)
+    a = a.withColumn("na", F.sqrt(_dot(F.col("ea"), F.col("ea"))))
     b = a.select(
         F.col("vec_id_a").alias("vec_id_b"),
         F.col("ea").alias("eb"),
@@ -1118,7 +1105,9 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id_a",
             "vec_id_b",
-            F.round(dot / (F.col("na") * F.col("nb")), 6).alias("sim"),
+            cosine(
+                F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
+            ).alias("sim"),
         )
         .filter(F.col("sim") >= EMB_DUP_THRESHOLD)
         .orderBy("vec_id_a", "vec_id_b")
@@ -1161,17 +1150,10 @@ def embedding_neardup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
     planes = _emb_planes()
     e = F.col("embedding").cast("array<double>")
-    norm = F.sqrt(
-        F.aggregate(
-            F.zip_with("e", "e", lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-    from .similarity import _bucket_expr
-
     P = EMB_LSH_PLANES
-    bound = emb.select("vec_id", e.alias("e")).withColumn("nrm", norm)
+    bound = emb.select("vec_id", e.alias("e")).withColumn(
+        "nrm", F.sqrt(_dot(F.col("e"), F.col("e")))
+    )
     banded = bound.select(
         "vec_id",
         *[
@@ -1203,18 +1185,15 @@ def embedding_neardup_pairs_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("e").alias("eb"),
         F.col("nrm").alias("nb"),
     )
-    dot = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
         cand.join(a, "vec_id_a")
         .join(b, "vec_id_b")
         .select(
             "vec_id_a",
             "vec_id_b",
-            F.round(dot / (F.col("na") * F.col("nb")), 6).alias("sim"),
+            cosine(
+                F.col("ea"), F.col("eb"), F.col("na"), F.col("nb")
+            ).alias("sim"),
         )
         .filter(F.col("sim") >= EMB_DUP_THRESHOLD)
         .orderBy("vec_id_a", "vec_id_b")
@@ -2645,15 +2624,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sampled fixed centroids keep the op deterministic → fully
     oracle-backed; swap in queries_ext.ivf_index for trained clusters
     (then rows-only, like sim_ivf_topk)."""
-    emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
-    e = F.col("embedding").cast("array<double>")
-    vecs = emb.repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    ).select("vec_id", e.alias("v"))
-    cents = emb.filter(F.col("vec_id").isin(SEM_CENTROID_IDS)).select(
-        F.col("vec_id").alias("cluster_id"), e.alias("cv")
-    )
-    return _semantic_from_clusters(vecs, cents)
+    return _semantic_drop(_sampled_assignment(spark, sf_dir))
 
 
 def dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2673,16 +2644,10 @@ def dedup_semantic_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..queries_ext import ivf_index
 
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
-    e = F.col("embedding").cast("array<double>")
-    vecs = emb.repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    ).select("vec_id", e.alias("v"))
-    cents_rows = ivf_index(spark, sf_dir)
     cents = spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents_rows],
-        "cluster_id int, cv array<double>",
+        ivf_index(spark, sf_dir), "cluster_id int, cv array<double>"
     )
-    return _semantic_from_clusters(vecs, cents, pair_impl="blas")
+    return _semantic_drop_blas(_semantic_assign(emb, cents))
 
 
 def _semantic_drop_blas(assigned: DataFrame) -> DataFrame:
@@ -2692,9 +2657,9 @@ def _semantic_drop_blas(assigned: DataFrame) -> DataFrame:
     >= SEM_THRESHOLD. Per-group memory = |cluster| x dim vectors plus
     a 256 x |cluster| sim block — bounded by the cluster size, which
     k-scaling bounds by design (the SemDeDup contract). This replaces
-    ~n²/k interpreted-HOF fold evaluations with vectorized matmuls:
-    the same justification as cosine_topk_pandas (built-ins CAN spell
-    it, 39x slower — measured 52.8s -> 1.36s at sf1/k=64)."""
+    ~n²/k interpreted-HOF fold evaluations with vectorized matmuls
+    (built-ins CAN spell it, 39x slower — measured 52.8s -> 1.36s at
+    sf1/k=64)."""
     import pandas as pd
 
     def drop(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -2725,34 +2690,31 @@ def _semantic_drop_blas(assigned: DataFrame) -> DataFrame:
     )
 
 
-def _semantic_from_clusters(vecs: DataFrame, cents: DataFrame,
-                            pair_impl: str = "hof") -> DataFrame:
-    """Shared assign -> within-cluster drop stage (see dedup_semantic
-    for the semantics and the scale argument).
+def _semantic_assign(emb: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, cluster_id, u): every embedding of `emb` unit-normalized
+    and assigned to its most similar centroid of `cents` (cluster_id,
+    cv) — 6dp-rounded cosine argmax, ties to the lower cluster_id (see
+    dedup_semantic for the semantics and the scale argument).
 
     Hot-path discipline: vectors are UNIT-NORMALIZED once per row
     (norm bound as its own projection, the _pq_unit_vectors recipe),
-    so every pairwise cosine is ONE interpreted-HOF dot instead of
-    three (dot + two norms) — with pairs ≈ n²/k, that per-pair
-    constant is the whole cost of this operator (measured ~3x at
-    sf0.1). The oracle mirrors normalize-then-dot exactly, so the
+    so every pairwise cosine of the pair stage is ONE interpreted-HOF
+    dot instead of three (dot + two norms) — with pairs ≈ n²/k, that
+    per-pair constant is the whole cost of this operator (measured ~3x
+    at sf0.1). The oracle mirrors normalize-then-dot exactly, so the
     rounded values still reproduce cross-engine."""
-    from pyspark.sql import Window
-
-    def dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+    e = F.col("embedding").cast("array<double>")
+    unit = (
+        emb.repartition(emb.sparkSession.sparkContext.defaultParallelism,
+                        "vec_id")
+        .select("vec_id", e.alias("v"))
+        .withColumn("nrm", F.sqrt(_dot(F.col("v"), F.col("v"))))
+        .select(
+            "vec_id", F.transform("v", lambda x: x / F.col("nrm")).alias("u")
         )
-
-    unit = vecs.withColumn(
-        "nrm", F.sqrt(dot(F.col("v"), F.col("v")))
-    ).select(
-        "vec_id", F.transform("v", lambda x: x / F.col("nrm")).alias("u")
     )
     ucents = cents.withColumn(
-        "cnrm", F.sqrt(dot(F.col("cv"), F.col("cv")))
+        "cnrm", F.sqrt(_dot(F.col("cv"), F.col("cv")))
     ).select(
         "cluster_id",
         F.transform("cv", lambda x: x / F.col("cnrm")).alias("cu"),
@@ -2761,37 +2723,55 @@ def _semantic_from_clusters(vecs: DataFrame, cents: DataFrame,
         "vec_id",
         "u",
         "cluster_id",
-        F.round(dot(F.col("u"), F.col("cu")), 6).alias("sim"),
+        F.round(_dot(F.col("u"), F.col("cu")), 6).alias("sim"),
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.desc("sim"), F.asc("cluster_id")
     )
-    assigned = (
+    return (
         sims.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("vec_id", "cluster_id", "u")
     )
-    if pair_impl == "blas":
-        return _semantic_drop_blas(assigned)
+
+
+def _sampled_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """_semantic_assign over the SEM_CENTROID_IDS sampled centroids —
+    the deterministic, oracle-backed clustering."""
+    emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
+    cents = emb.filter(F.col("vec_id").isin(SEM_CENTROID_IDS)).select(
+        F.col("vec_id").alias("cluster_id"),
+        F.col("embedding").cast("array<double>").alias("cv"),
+    )
+    return _semantic_assign(emb, cents)
+
+
+def _semantic_pair_sims(assigned: DataFrame) -> DataFrame:
+    """(vid_a, vid_b, sim): every within-cluster pair with vid_b < vid_a
+    and its 6dp-rounded cosine (one dot of the unit vectors)."""
     a = assigned.select(
         "cluster_id", F.col("vec_id").alias("vid_a"), F.col("u").alias("ua")
     )
     b = assigned.select(
         "cluster_id", F.col("vec_id").alias("vid_b"), F.col("u").alias("ub")
     )
-    pair_sims = (
+    return (
         a.join(b, "cluster_id")
         .filter(F.col("vid_b") < F.col("vid_a"))
         .select(
             "vid_a",
             "vid_b",
-            F.round(dot(F.col("ua"), F.col("ub")), 6).alias("sim"),
+            F.round(_dot(F.col("ua"), F.col("ub")), 6).alias("sim"),
         )
     )
-    if pair_impl == "sims":  # dedup_threshold_curve's input stage
-        return pair_sims
+
+
+def _semantic_drop(assigned: DataFrame) -> DataFrame:
+    """(vec_id, cluster_id, kept): kept is false for a vector with a
+    lower-id cluster-mate at cosine >= SEM_THRESHOLD."""
     dropped = (
-        pair_sims.filter(F.col("sim") >= SEM_THRESHOLD)
+        _semantic_pair_sims(assigned)
+        .filter(F.col("sim") >= SEM_THRESHOLD)
         .select(F.col("vid_a").alias("vec_id"))
         .distinct()
         .withColumn("dropped", F.lit(True))
@@ -2898,15 +2878,7 @@ def dedup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cumulative runs over the bin frame, which is bins-sized by
     construction (the q3_event_type_pct known-tiny global-window
     pattern — the reference's own W1 shape — never data-sized)."""
-    emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
-    e = F.col("embedding").cast("array<double>")
-    vecs = emb.repartition(
-        spark.sparkContext.defaultParallelism, "vec_id"
-    ).select("vec_id", e.alias("v"))
-    cents = emb.filter(F.col("vec_id").isin(SEM_CENTROID_IDS)).select(
-        F.col("vec_id").alias("cluster_id"), e.alias("cv")
-    )
-    sims = _semantic_from_clusters(vecs, cents, pair_impl="sims").filter(
+    sims = _semantic_pair_sims(_sampled_assignment(spark, sf_dir)).filter(
         F.col("sim") >= CURVE_MIN_SIM
     )
     bins = sims.groupBy(

@@ -495,7 +495,7 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fleet-gate whitelisted), and the fusion is a full outer join of
     two ≤HYBRID_DEPTH-row frames.  At 100 TB only the two retrieval
     scans scale with data; the fusion cost is a constant."""
-    from .similarity import _dot, _with_norm
+    from .similarity import _qc_cosine, _with_norm
 
     # -- lexical list: search_ranked's scoring frame, depth HYBRID_DEPTH
     toks = _positions(spark, sf_dir).select("doc_id", "term")
@@ -539,15 +539,10 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
     q = _with_norm(emb.filter(F.col("vec_id") == HYBRID_QUERY_VEC), "q")
     c = _with_norm(emb, "c")
-    sim = F.round(
-        _dot(F.col("q_e"), F.col("c_e"))
-        / (F.col("q_norm") * F.col("c_norm")),
-        6,
-    )
     sem = (
         F.broadcast(q)
         .join(c, F.col("q_id") != F.col("c_id"))
-        .select(F.col("c_id").alias("doc_id"), sim.alias("sim"))
+        .select(F.col("c_id").alias("doc_id"), _qc_cosine().alias("sim"))
         .orderBy(F.desc("sim"), F.asc("doc_id"))
         .limit(HYBRID_DEPTH)
     )

@@ -1,34 +1,36 @@
 """Similarity search over the embeddings table (array<float>, 64-dim).
 
-Two paths, per the standard ANN playbook:
+Every exact cosine of two raw vectors in the package is `cosine`
+below, and every per-query top-k is `top_k`; the search paths differ
+only in which (query, candidate) pairs reach them and what they score:
 
-  brute-force cosine top-k — exact; O(|Q|·n) dot products. The
+  brute force (cosine_topk) — exact; O(|Q|·n) dot products. The
       verification baseline and the right answer when |Q| is small
       (the query side broadcasts; the corpus streams through one scan,
       fully parallel, no shuffle of the corpus).
-  LSH-bucketed (random hyperplane / SimHash for vectors) — the scale
-      path: corpus is bucketed by sign-pattern once (row-local), then
-      queries probe only their bucket. Sub-linear candidates at the
-      cost of recall; multiprobe (flipping low-margin bits) is the
-      standard recall knob, noted but not enabled by default.
+  LSH (lsh_topk, lsh_multiprobe_topk) — random-hyperplane sign
+      buckets: the corpus is bucketed row-locally once, queries probe
+      their own bucket (or, multiprobe, the buckets one bit away) and
+      score only there. Sub-linear candidates at the cost of recall,
+      which recall_eval measures.
+  compressed (rp_topk, sq_topk, pq_adc_topk) — rank a projection,
+      int8 codes or PQ codes instead of the raw vectors.
 
-Dot products use built-in higher-order functions (zip_with + aggregate)
-— JVM-side, no Python. A Pandas-UDF/numpy variant, `cosine_topk_pandas`,
-exists for wide-vector workloads (matrix multiply beats per-row folds
-when dim is large); it is its own registry entry,
-`sim_cosine_topk_pandas`.
+Dot products are built-in higher-order functions (zip_with + a
+left-fold aggregate) — JVM-side, no Python. `sim_cosine_topk_pandas`
+is kept as a registry alias of cosine_topk.
 
 Cosine values: Spark folds left-to-right; DuckDB's list_dot_product may
 sum in another order — results differ at ~1 ulp, so ranking uses
-ROUNDED similarity (6 dp) with a doc-id tie-break, making the top-k
-set identical in both engines (SURVEY §7.4 #7/#10).
+ROUNDED similarity (6 dp) with a neighbor-id tie-break, making the
+top-k set identical in both engines (SURVEY §7.4 #7/#10). A zero
+vector has no cosine: its score is NULL and ranks last, as in DuckDB,
+whose division by zero also returns NULL.
 """
 
 from __future__ import annotations
 
 import math
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -46,6 +48,22 @@ def _dot(a, b) -> Column:
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0.0),
         lambda acc, x: acc + x,
+    )
+
+
+def cosine(a, b, na, nb) -> Column:
+    """The rounded cosine of vectors a and b whose norms are na and nb:
+    _dot over the norm product, rounded to 6 dp. NULL when either norm
+    is 0 (try_divide: ANSI division by zero would fail the job)."""
+    return F.round(F.try_divide(_dot(a, b), na * nb), 6)
+
+
+def top_k(scored: DataFrame, order: Column) -> DataFrame:
+    """The TOP_K rows per query_id of `scored` by `order`, ties broken
+    by the lower neighbor_id, numbered 1..TOP_K in `rank`."""
+    w = Window.partitionBy("query_id").orderBy(order, F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= TOP_K
     )
 
 
@@ -79,8 +97,7 @@ def lit_matrix(rows) -> Column:
     centroids); inf/nan have no SQL literal spelling, so they are
     rejected up front with a ValueError naming the row and column.
 
-    Public per ADVICE r16 #4 (queries_ext._centroid_sim_structs is a
-    second consumer); `_lit_mat` stays as a compatibility alias."""
+    Public: queries_ext._centroid_sim_structs is a second consumer."""
     rows = [[float(v) for v in row] for row in rows]
     for i, row in enumerate(rows):
         for j, v in enumerate(row):
@@ -99,9 +116,6 @@ def lit_matrix(rows) -> Column:
     )
 
 
-_lit_mat = lit_matrix
-
-
 def _with_norm(df: DataFrame, prefix: str) -> DataFrame:
     """Spread the single-row-group embeddings scan across cores before
     the per-row dot-product expressions (same single-file trap and fix
@@ -117,6 +131,11 @@ def _with_norm(df: DataFrame, prefix: str) -> DataFrame:
     )
 
 
+def _qc_cosine() -> Column:
+    """cosine between the q_ and c_ columns of two _with_norm frames."""
+    return cosine(F.col("q_e"), F.col("c_e"), F.col("q_norm"), F.col("c_norm"))
+
+
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact brute-force: queries (vec_id < N_QUERIES) broadcast against
     the corpus; per-query top-k via rank window partitioned by query.
@@ -127,24 +146,16 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
     q = _with_norm(emb.filter(F.col("vec_id") < N_QUERIES), "q")
     c = _with_norm(emb, "c")
-    sim = F.round(
-        _dot(F.col("q_e"), F.col("c_e")) / (F.col("q_norm") * F.col("c_norm")), 6
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
+    scored = (
         F.broadcast(q)
         .join(c, F.col("q_id") != F.col("c_id"))
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            sim.alias("sim"),
+            _qc_cosine().alias("sim"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
     )
+    return top_k(scored, F.desc("sim")).orderBy("query_id", "rank")
 
 
 def _hyperplanes(dim: int = 64):
@@ -164,7 +175,7 @@ def _bucket_expr(e: Column, planes) -> Column:
     weights = F.lit([1 << i for i in range(len(planes))])
     return F.aggregate(
         F.zip_with(
-            _lit_mat(planes),
+            lit_matrix(planes),
             weights,
             lambda p, w: F.when(_dot(e, p) >= 0, w).otherwise(F.lit(0)),
         ),
@@ -189,25 +200,17 @@ def lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _with_norm(emb, "c").withColumn(
         "bucket", _bucket_expr(F.col("c_e"), planes)
     )
-    sim = F.round(
-        _dot(F.col("q_e"), F.col("c_e")) / (F.col("q_norm") * F.col("c_norm")), 6
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
+    scored = (
         F.broadcast(q)
         .join(c, "bucket")
         .filter(F.col("q_id") != F.col("c_id"))
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            sim.alias("sim"),
+            _qc_cosine().alias("sim"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
     )
+    return top_k(scored, F.desc("sim")).orderBy("query_id", "rank")
 
 
 def lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -282,25 +285,17 @@ def lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _with_norm(emb, "c").withColumn(
         "bucket", _bucket_expr(F.col("c_e"), planes)
     )
-    sim = F.round(
-        _dot(F.col("q_e"), F.col("c_e")) / (F.col("q_norm") * F.col("c_norm")), 6
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    return (
+    scored = (
         F.broadcast(q)
         .join(c, "bucket")
         .filter(F.col("q_id") != F.col("c_id"))
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            sim.alias("sim"),
+            _qc_cosine().alias("sim"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
     )
+    return top_k(scored, F.desc("sim")).orderBy("query_id", "rank")
 
 
 def _duck_lsh_topk_sql(multiprobe: bool) -> str:
@@ -382,34 +377,20 @@ def recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _with_norm(emb, "c").withColumn(
         "c_bucket", _bucket_expr(F.col("c_e"), planes)
     )
-    sim = F.round(
-        _dot(F.col("q_e"), F.col("c_e")) / (F.col("q_norm") * F.col("c_norm")),
-        6,
-    )
     sims = (
         F.broadcast(q)
         .join(c, F.col("q_id") != F.col("c_id"))
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            sim.alias("sim"),
+            _qc_cosine().alias("sim"),
             (F.col("q_bucket") == F.col("c_bucket")).alias("same_bucket"),
         )
         .localCheckpoint()  # scored once, ranked twice below
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("sim"), F.asc("neighbor_id")
-    )
-    ex = (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id")
-    )
-    ap = (
-        sims.filter("same_bucket")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id")
+    ex = top_k(sims, F.desc("sim")).select("query_id", "neighbor_id")
+    ap = top_k(sims.filter("same_bucket"), F.desc("sim")).select(
+        "query_id", "neighbor_id"
     )
     hits = (
         ex.join(ap, ["query_id", "neighbor_id"], "left_semi")
@@ -556,7 +537,7 @@ def rp_project(emb: DataFrame) -> DataFrame:
     e = F.col("embedding").cast("array<double>")
     # transform over ONE nested matrix literal (RP_DIM×dim) — same
     # per-row folds in the same order, a fraction of the plan nodes
-    proj = F.transform(_lit_mat(mat), lambda row: _dot(e, row))
+    proj = F.transform(lit_matrix(mat), lambda row: _dot(e, row))
     return emb.select("vec_id", proj.alias("p"))
 
 
@@ -570,25 +551,16 @@ def _rp_rank(p: DataFrame) -> DataFrame:
         "q",
     )
     c = _with_norm(p.withColumnRenamed("p", "embedding"), "c")
-    sim = F.round(
-        _dot(F.col("q_e"), F.col("c_e")) / (F.col("q_norm") * F.col("c_norm")),
-        6,
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("rp_sim"), F.asc("neighbor_id")
-    )
-    return (
+    scored = (
         F.broadcast(q)
         .join(c, F.col("q_id") != F.col("c_id"))
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            sim.alias("rp_sim"),
+            _qc_cosine().alias("rp_sim"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
     )
+    return top_k(scored, F.desc("rp_sim")).orderBy("query_id", "rank")
 
 
 def rp_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -704,10 +676,7 @@ def sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
     q = _sq_vectors(emb.filter(F.col("vec_id") < N_QUERIES), "q")
     c = _sq_vectors(emb, "c")
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("qsim"), F.asc("neighbor_id")
-    )
-    return (
+    scored = (
         F.broadcast(q)
         .join(c, F.col("q_id") != F.col("c_id"))
         .select(
@@ -715,10 +684,8 @@ def sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_id").alias("neighbor_id"),
             _idot(F.col("q_qv"), F.col("c_qv")).alias("qsim"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
     )
+    return top_k(scored, F.desc("qsim")).orderBy("query_id", "rank")
 
 
 _DUCK_SQ_QV = """
@@ -748,48 +715,6 @@ _DUCK_SQ_TOPK = f"""
     WHERE rn <= {TOP_K}
     ORDER BY query_id, rank
 """
-
-
-def cosine_topk_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """numpy/Arrow variant of brute-force cosine: per-partition matrix
-    multiply via mapInPandas. Same output contract as cosine_topk;
-    wins when dim or |Q| is large (BLAS beats per-row folds). The
-    driver-side collect of the query block is |Q|×dim — tiny."""
-    import numpy as np
-
-    emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
-    qrows = emb.filter(F.col("vec_id") < N_QUERIES).collect()
-    q_ids = np.array([r.vec_id for r in qrows])
-    q_mat = np.array([r.embedding for r in qrows], dtype=np.float64)
-    q_mat /= np.linalg.norm(q_mat, axis=1, keepdims=True)
-
-    def part(batches):
-        for pdf in batches:
-            c_mat = np.array(list(pdf["embedding"]), dtype=np.float64)
-            norms = np.linalg.norm(c_mat, axis=1, keepdims=True)
-            sims = (c_mat / norms) @ q_mat.T  # (n_corpus, n_q)
-            out = pd.DataFrame(
-                {
-                    "query_id": np.repeat(q_ids, len(pdf)),
-                    "neighbor_id": np.tile(pdf["vec_id"].values, len(q_ids)),
-                    # UNROUNDED: np.round is round-half-even while the
-                    # Spark/DuckDB twins round half-up-style; rounding
-                    # happens once, in the Spark plan below, so all
-                    # three paths share one implementation
-                    "sim": sims.T.ravel(),
-                }
-            )
-            yield out[out.query_id != out.neighbor_id]
-
-    cand = emb.mapInPandas(
-        part, schema="query_id long, neighbor_id long, sim double"
-    ).withColumn("sim", F.round("sim", 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
-    )
 
 
 # ----------------------------------------------------------------------
@@ -832,11 +757,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
     q = _with_norm(emb.filter(F.col("vec_id") == MMR_QUERY), "q")
     c = _with_norm(emb.filter(F.col("vec_id") != MMR_QUERY), "c")
-    rel = F.round(
-        _dot(F.col("q_e"), F.col("c_e"))
-        / (F.col("q_norm") * F.col("c_norm")),
-        6,
-    )
+    rel = _qc_cosine()
     cand = (
         F.broadcast(q)
         .join(c)
@@ -853,10 +774,8 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_id").alias("b_id"),
         F.col("c_e").alias("b_e"), F.col("c_norm").alias("b_norm"),
     )
-    pair_sim = F.round(
-        _dot(F.col("a_e"), F.col("b_e"))
-        / (F.col("a_norm") * F.col("b_norm")),
-        6,
+    pair_sim = cosine(
+        F.col("a_e"), F.col("b_e"), F.col("a_norm"), F.col("b_norm")
     )
     pairs = (
         a.join(F.broadcast(b), F.col("a_id") != F.col("b_id"))
@@ -1001,8 +920,7 @@ def _pq_codebook(spark: SparkSession, sf_dir: str):
     """Sampled codebook: block-slices of the first PQ_CODES normalized
     corpus vectors (k-means init by sampling; `train_centroids` in
     queries_ext demonstrates the training loop itself). Collected
-    driver-side — PQ_CODES x 64 doubles, bounded like
-    cosine_topk_pandas' query block — and baked into the plan as
+    driver-side — PQ_CODES x 64 doubles — and baked into the plan as
     literals: the production shape for a trained codebook (broadcast
     constants, fully row-local encode).
 
@@ -1070,7 +988,7 @@ def _pq_with_dls(unit: DataFrame, cents) -> DataFrame:
     dl values are bit-identical to the old per-code expression and to
     DuckDB's list_dot_product, only the plan SHAPE changed: one
     zip_with over two literals per block instead of 16 separate
-    CreateArray(16 lits) + fold trees (the _lit_mat plan-size
+    CreateArray(16 lits) + fold trees (the lit_matrix plan-size
     discipline — PQ planning was ~2-3 s of every registry call)."""
     cols = []
     for b in range(PQ_BLOCKS):
@@ -1082,7 +1000,7 @@ def _pq_with_dls(unit: DataFrame, cents) -> DataFrame:
             + ",".join(f"{float(_pq_cnorm(c))!r}D" for c in cents[b])
             + ")"
         )
-        cb = _lit_mat(cents[b])
+        cb = lit_matrix(cents[b])
         cols.append(
             F.zip_with(
                 cnorms, cb, lambda n, c: n - F.lit(2.0) * _dot(sl, c)
@@ -1145,10 +1063,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = F.element_at("lut_0", F.col("code_0") + 1)
     for b in range(1, PQ_BLOCKS):
         score = score + F.element_at(f"lut_{b}", F.col(f"code_{b}") + 1)
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc"), F.asc("neighbor_id")
-    )
-    return (
+    scored = (
         F.broadcast(luts)
         .join(codes, F.col("q_id") != F.col("vec_id"))
         .select(
@@ -1156,8 +1071,9 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("neighbor_id"),
             score.alias("adc"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+    )
+    return (
+        top_k(scored, F.asc("adc"))
         .select(
             "query_id",
             "neighbor_id",
@@ -1285,7 +1201,7 @@ ORACLE_SQL: dict[str, str] = {
 QUERIES = {
     "sim_cosine_topk": cosine_topk,
     "sim_mmr_rerank": mmr_rerank,
-    "sim_cosine_topk_pandas": cosine_topk_pandas,
+    "sim_cosine_topk_pandas": cosine_topk,  # kept key: an alias
     "sim_lsh_topk": lsh_topk,
     "sim_lsh_buckets": lsh_buckets,
     "sim_lsh_multiprobe_topk": lsh_multiprobe_topk,

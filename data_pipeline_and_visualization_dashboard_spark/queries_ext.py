@@ -1051,11 +1051,11 @@ def _centroid_sim_structs(centroids: list[tuple[int, list[float]]]):
     Plan shape: ONE zip_with over two literals (the k×dim centroid
     matrix and the k ncid ints) instead of k separate
     struct(CreateArray(dim lits) + fold) trees — the similarity
-    family's _lit_mat plan-size discipline (Catalyst planning of the
+    family's lit_matrix plan-size discipline (Catalyst planning of the
     wide form dominated every per-call cost; OPTIMIZATION_r16.md).
     Same left-fold dot in the same centroid order ⇒ bit-identical
     sims, identical (sim, ncid) lexicographic argmax."""
-    from .extras.similarity import lit_matrix
+    from .extras.similarity import _dot, lit_matrix
 
     vecs = lit_matrix([vec for _, vec in centroids])
     ncids = F.lit([-int(cid) for cid, _ in centroids])
@@ -1063,12 +1063,7 @@ def _centroid_sim_structs(centroids: list[tuple[int, list[float]]]):
         vecs,
         ncids,
         lambda c, n: F.struct(
-            F.aggregate(
-                F.zip_with("ev", c, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("sim"),
-            n.alias("ncid"),
+            _dot(F.col("ev"), c).alias("sim"), n.alias("ncid")
         ),
     )
 
@@ -1270,7 +1265,7 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the first call of a corpus pays the build and every later call
     touches the query vectors, the assignment parquet and the
     candidate vectors. Registered under sim_ivf_topk_pretrained too."""
-    from .extras.similarity import TOP_K
+    from .extras.similarity import _dot, cosine, top_k
 
     assign, _, _ = ann_disk_index(spark, sf_dir)
     vecs = read_table(
@@ -1278,26 +1273,18 @@ def sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
     qv = vecs.select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv"))
     cv = vecs.select(F.col("vec_id").alias("c_id"), F.col("v").alias("cv"))
-    dot = F.aggregate(F.zip_with("qv", "cv", lambda x, y: x * y),
-                      F.lit(0.0), lambda a, x: a + x)
-    nq = F.sqrt(F.aggregate(F.zip_with("qv", "qv", lambda x, y: x * y),
-                            F.lit(0.0), lambda a, x: a + x))
-    nc = F.sqrt(F.aggregate(F.zip_with("cv", "cv", lambda x, y: x * y),
-                            F.lit(0.0), lambda a, x: a + x))
-    w = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("neighbor_id"))
-    return (
+    q, c = F.col("qv"), F.col("cv")
+    scored = (
         _ivf_candidates(spark, sf_dir, assign)
         .join(F.broadcast(qv), "q_id")
         .join(cv, "c_id")
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            F.round(dot / (nq * nc), 6).alias("sim"),
+            cosine(q, c, F.sqrt(_dot(q, q)), F.sqrt(_dot(c, c))).alias("sim"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .orderBy("query_id", "rank")
     )
+    return top_k(scored, F.desc("sim")).orderBy("query_id", "rank")
 
 
 def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1325,10 +1312,10 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .extras.similarity import (
         N_QUERIES,
         PQ_BLOCKS,
-        TOP_K,
         _pq_codebook,
         _pq_unit_vectors,
         _pq_with_dls,
+        top_k,
     )
 
     assign, codes, _ = ann_disk_index(spark, sf_dir)
@@ -1346,10 +1333,7 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     score = F.element_at("lut_0", F.col("code_0") + 1)
     for b in range(1, PQ_BLOCKS):
         score = score + F.element_at(f"lut_{b}", F.col(f"code_{b}") + 1)
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc"), F.asc("neighbor_id")
-    )
-    return (
+    scored = (
         _ivf_candidates(spark, sf_dir, assign)
         .join(codes, "c_id")
         .join(F.broadcast(luts), "q_id")
@@ -1358,8 +1342,9 @@ def sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_id").alias("neighbor_id"),
             score.alias("adc"),
         )
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+    )
+    return (
+        top_k(scored, F.asc("adc"))
         .select(
             "query_id",
             "neighbor_id",
@@ -1454,21 +1439,18 @@ def sim_ivfpq_recall_guard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _centroid_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, centroid_id, sim) for all vector×centroid pairs —
     shared by assignment (argmax) and multiprobe (top-nprobe)."""
+    from .extras.similarity import _dot, cosine
+
     emb = read_table(spark, sf_dir, "embeddings", ["vec_id", "embedding"])
     e = F.col("embedding").cast("array<double>")
-    dot = F.aggregate(F.zip_with("ev", "cv", lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    norm_v = F.sqrt(F.aggregate(F.zip_with("ev", "ev", lambda x, y: x * y),
-                                F.lit(0.0), lambda acc, x: acc + x))
-    norm_c = F.sqrt(F.aggregate(F.zip_with("cv", "cv", lambda x, y: x * y),
-                                F.lit(0.0), lambda acc, x: acc + x))
+    v, c = F.col("ev"), F.col("cv")
     cents = emb.filter(F.col("vec_id").isin(_CENTROID_IDS)).select(
         F.col("vec_id").alias("centroid_id"), e.alias("cv")
     )
     vecs = emb.select("vec_id", e.alias("ev"))
     return vecs.join(F.broadcast(cents)).select(
         "vec_id", "centroid_id",
-        F.round(dot / (norm_v * norm_c), 6).alias("sim"),
+        cosine(v, c, F.sqrt(_dot(v, v)), F.sqrt(_dot(c, c))).alias("sim"),
     )
 
 

@@ -2165,6 +2165,7 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
         BANDS,
         MAX_BUCKET,
         NUM_HASHES,
+        minhash_agreement,
         shingle_sets_from,
         signatures_from,
     )
@@ -2233,14 +2234,6 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
         mb = all_meta.selectExpr(
             "doc_id AS doc_id_b", "sig AS sig_b", "sh AS sh_b"
         )
-        agree = F.aggregate(
-            F.zip_with(
-                "sig_a", "sig_b",
-                lambda x, y: F.when(x == y, 1).otherwise(0),
-            ),
-            F.lit(0),
-            lambda acc, x: acc + x,
-        )
         inter = F.size(F.array_intersect("sh_a", "sh_b"))
         union = F.size("sh_a") + F.size("sh_b") - inter
         pairs = (
@@ -2249,9 +2242,7 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
             .select(
                 "doc_id_a",
                 "doc_id_b",
-                (agree.cast("double") / F.lit(float(NUM_HASHES))).alias(
-                    "est_jaccard"
-                ),
+                minhash_agreement().alias("est_jaccard"),
                 (inter.cast("double") / union.cast("double")).alias(
                     "jaccard"
                 ),

@@ -203,12 +203,12 @@ def test_recall_guards_assert_engine_side(spark):
         ).collect()
 
 
-def test_pandas_cosine_matches_builtin(spark):
-    a = similarity.cosine_topk(spark, SF_SMOKE).collect()
-    b = similarity.cosine_topk_pandas(spark, SF_SMOKE).collect()
-    ka = [(r.query_id, r.neighbor_id, r.rank) for r in a]
-    kb = [(r.query_id, r.neighbor_id, r.rank) for r in b]
-    assert ka == kb
+def test_pandas_cosine_matches_builtin():
+    """The sim_cosine_topk_pandas registry key is cosine_topk."""
+    import __spark_entry__ as entrymod
+
+    alias = entrymod.queries()["sim_cosine_topk_pandas"]
+    assert alias is similarity.cosine_topk
 
 
 @pytest.mark.parametrize(
@@ -1196,20 +1196,12 @@ def test_semantic_blas_pair_stage_equals_hof(spark):
 
     emb = read_table(spark, SF_SMOKE, "embeddings", ["vec_id", "embedding"])
     e = F.col("embedding").cast("array<double>")
-    vecs = emb.repartition(4, "vec_id").select("vec_id", e.alias("v"))
     cents = emb.filter(F.col("vec_id").isin(dedup.SEM_CENTROID_IDS)).select(
         F.col("vec_id").cast("int").alias("cluster_id"), e.alias("cv")
     )
-    hof = {
-        tuple(r)
-        for r in dedup._semantic_from_clusters(vecs, cents).collect()
-    }
-    blas = {
-        tuple(r)
-        for r in dedup._semantic_from_clusters(
-            vecs, cents, pair_impl="blas"
-        ).collect()
-    }
+    assigned = dedup._semantic_assign(emb, cents)
+    hof = {tuple(r) for r in dedup._semantic_drop(assigned).collect()}
+    blas = {tuple(r) for r in dedup._semantic_drop_blas(assigned).collect()}
     assert hof == blas and len(hof) > 0
 
 

@@ -1498,6 +1498,7 @@ CARTESIAN_OK = {
     "q71_idle_rich_customers", "q86_zorder_layout",
     "q88_basket_pairs",
     "sim_centroid_assign", "sim_cosine_topk", "sim_diverse_subset",
+    "sim_cosine_topk_pandas",  # an alias of sim_cosine_topk
     "sim_ivf_recall_guard", "sim_ivfpq_recall_guard",
     "sim_mmr_rerank",
     "sim_pq_adc_topk", "sim_rp_topk", "sim_rp_topk_pretrained",

@@ -13,7 +13,7 @@ import math
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_CORRECT
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def _normalize(rows, columns):
@@ -111,6 +111,67 @@ def test_session_oracles_match_engine_on_edge_rows(spark, tmp_path):
     assert sorted((r["user_id"], r["n_events"]) for r in q36) == [
         (1, 1), (1, 1), (1, 2), (2, 2)
     ]
+
+
+def test_cosine_oracles_match_engine_on_zero_norms_and_ties(
+    spark, tmp_path
+):
+    """Nine cosine entries against their oracles on sf0.001's
+    embeddings with three zero vectors — id 2 (a query), id 100 (a
+    sim_centroid_assign centroid) and id 7 (a corpus row) — and ids
+    20..31 set to copies of id 17, query 0's nearest neighbour, so 13
+    equal scores straddle query 0's top-k cut. A zero vector has no
+    cosine: its score is NULL and ranks last in both engines, and equal
+    scores rank by the lower id."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from data_pipeline_and_visualization_dashboard_spark.extras import (
+        similarity,
+    )
+
+    src = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    vecs = dict(zip(src["vec_id"].to_pylist(), src["embedding"].to_pylist()))
+    dim = len(vecs[0])
+    for vid in (2, 7, 100):
+        vecs[vid] = [0.0] * dim
+    for vid in range(20, 32):
+        vecs[vid] = vecs[17]
+    ids = src["vec_id"].to_pylist()
+    src = src.set_column(
+        src.schema.get_field_index("embedding"),
+        "embedding",
+        pa.array([vecs[i] for i in ids], src.schema.field("embedding").type),
+    )
+    pq.write_table(src, str(tmp_path / "embeddings.parquet"))
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW embeddings AS SELECT * FROM "
+        f"read_parquet('{tmp_path / 'embeddings.parquet'}')"
+    )
+    for name in (
+        "sim_cosine_topk_pandas", "sim_lsh_topk", "sim_lsh_multiprobe_topk",
+        "sim_recall_eval", "sim_mmr_rerank", "dedup_embedding_pairs",
+        "dedup_embedding_pairs_lsh",
+    ):
+        _compare(spark, con, name, str(tmp_path))
+    top = _compare(spark, con, "sim_cosine_topk", str(tmp_path))
+    by_query = {}
+    for r in sorted(top, key=lambda r: (r["query_id"], r["rank"])):
+        by_query.setdefault(r["query_id"], []).append(r)
+    assert [r["neighbor_id"] for r in by_query[0]] == [
+        17, *range(20, 20 + similarity.TOP_K - 1)
+    ]
+    assert len({r["sim"] for r in by_query[0]}) == 1
+    assert all(r["sim"] is None for r in by_query[2])
+    assert not [
+        r for r in top
+        if r["query_id"] != 2 and r["neighbor_id"] in (2, 7, 100)
+    ]
+    assign = _compare(spark, con, "sim_centroid_assign", str(tmp_path))
+    assert {r["vec_id"] for r in assign if r["sim"] is None} == {2, 7, 100}
+    assert all(r["centroid_id"] != 100 for r in assign)
 
 
 def test_entry_smoke(spark):
