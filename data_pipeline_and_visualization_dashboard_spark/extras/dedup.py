@@ -312,22 +312,32 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )  # no terminal sort: O(n) output, order-insensitive compare
 
 
-def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
-    """Banded-LSH candidate pairs from a (cached) signature frame:
-    stack band hashes -> MAX_BUCKET skew cap -> per-bucket self-join
-    -> distinct ordered pairs. No all-pairs stage: the join fan-out is
-    bounded per bucket.
+def _lsh_candidate_pairs(sigs: DataFrame, new: Column) -> DataFrame:
+    """THE banded-LSH candidate rule: (doc_id_a < doc_id_b) pairs that
+    share a capped band bucket and involve at least one NEW doc.
+
+    `sigs` is the current corpus (doc_id + band_* columns) and `new`
+    marks the docs whose pairs are wanted: F.lit(True) for the full
+    corpus, the delta predicate for an incremental ingest, the batch
+    flag for the streaming index (index ∪ batch). Band hashes are
+    stacked to (band_idx, band_hash) rows, buckets over MAX_BUCKET are
+    dropped over the WHOLE current corpus (the skew guard sees the
+    same bucket sizes whichever docs are new), and the new docs'
+    bucket rows join all bucket rows. A new-new pair meets twice, so
+    it is kept once (d_id < o_id); a new-old pair is kept from its new
+    side. least/greatest orders every pair, so the incremental and
+    streaming outputs are exactly the full output restricted to pairs
+    touching a new doc.
 
     The cap is a window count over (band_idx, band_hash), not a
-    groupBy-sizes + join-back: ONE exchange on the bucket key (vs an
-    agg shuffle plus a size-frame join whose build side grows with
-    the number of distinct buckets at scale), and the self-join then
-    reuses that same partitioning — zero additional exchange."""
-    from pyspark.sql import Window
-
+    groupBy-sizes + join-back: ONE exchange on the bucket key, and the
+    bucket join then reuses that partitioning — no further exchange
+    before the final distinct. No all-pairs stage: the join fan-out is
+    bounded per bucket."""
     band_cols = ", ".join(f"{b}, band_{b}" for b in range(BANDS))
-    buckets = sigs.selectExpr(
-        "doc_id", f"stack({BANDS}, {band_cols}) AS (band_idx, band_hash)"
+    buckets = sigs.withColumn("new", new).selectExpr(
+        "doc_id", "new",
+        f"stack({BANDS}, {band_cols}) AS (band_idx, band_hash)",
     )
     w = Window.partitionBy("band_idx", "band_hash")
     buckets = (
@@ -335,17 +345,50 @@ def _lsh_candidate_pairs(sigs: DataFrame) -> DataFrame:
         .filter(F.col("bucket_n") <= MAX_BUCKET)
         .drop("bucket_n")
     )
-    a = buckets.select(
-        F.col("band_idx"), F.col("band_hash"), F.col("doc_id").alias("doc_id_a")
+    d = buckets.filter("new").select(
+        "band_idx", "band_hash", F.col("doc_id").alias("d_id")
     )
-    b = buckets.select(
-        F.col("band_idx"), F.col("band_hash"), F.col("doc_id").alias("doc_id_b")
+    o = buckets.select(
+        "band_idx", "band_hash", F.col("doc_id").alias("o_id"),
+        F.col("new").alias("o_new"),
     )
     return (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("doc_id_a") < F.col("doc_id_b"))
-        .select("doc_id_a", "doc_id_b")
+        d.join(o, ["band_idx", "band_hash"])
+        .filter(
+            (F.col("d_id") != F.col("o_id"))
+            & ((F.col("d_id") < F.col("o_id")) | ~F.col("o_new"))
+        )
+        .select(
+            F.least("d_id", "o_id").alias("doc_id_a"),
+            F.greatest("d_id", "o_id").alias("doc_id_b"),
+        )
         .distinct()
+    )
+
+
+def _lsh_candidates(
+    spark: SparkSession, sf_dir: str, new: Column
+) -> tuple[DataFrame, DataFrame]:
+    """The corpus's signature frame, checkpointed, and its candidate
+    pairs under `new`. localCheckpoint, not cache: the signatures feed
+    the bucket join and both pair sides, so they are computed once,
+    and a checkpoint is a fresh RDD per call — a plan-keyed cache
+    would hand a corpus rewritten in place the old corpus's
+    signatures."""
+    sigs = minhash_signatures(spark, sf_dir).localCheckpoint()
+    return sigs, _lsh_candidate_pairs(sigs, new)
+
+
+def sig_array() -> Column:
+    """A signature frame's sig_* columns as one array."""
+    return F.array(*[F.col(f"sig_{j}") for j in range(NUM_HASHES)])
+
+
+def distinct_shingles(shingled: DataFrame) -> DataFrame:
+    """(doc_id, sh): each doc's distinct shingles, the set that
+    shingle_jaccard compares."""
+    return shingled.select(
+        "doc_id", F.array_distinct("shingles").alias("sh")
     )
 
 
@@ -362,6 +405,52 @@ def minhash_agreement() -> Column:
     return agree.cast("double") / F.lit(float(NUM_HASHES))
 
 
+def shingle_jaccard() -> Column:
+    """The exact Jaccard of a pair's distinct-shingle sets sh_a, sh_b."""
+    inter = F.size(F.array_intersect("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
+    return inter.cast("double") / union.cast("double")
+
+
+def _with_sides(cand: DataFrame, *sides: DataFrame) -> DataFrame:
+    """Attach each doc_id-keyed side frame to both ends of the
+    (doc_id_a, doc_id_b) pairs: side column c becomes c_a and c_b. One
+    join per side and end, with the pairs the small (broadcastable)
+    side of each, so no corpus-grain frame is shuffled."""
+    for side in sides:
+        for end in ("a", "b"):
+            cand = cand.join(
+                side.select(
+                    *[F.col(c).alias(f"{c}_{end}") for c in side.columns]
+                ),
+                f"doc_id_{end}",
+            )
+    return cand
+
+
+def _pair_scores(cand: DataFrame, *sides: DataFrame) -> DataFrame:
+    """THE candidate verifier: (doc_id_a, doc_id_b, est_jaccard,
+    jaccard) from sides that carry `sig` (the signature array) and
+    `sh` (the distinct shingles) — the full, incremental and streaming
+    pair outputs."""
+    return _with_sides(cand, *sides).select(
+        "doc_id_a",
+        "doc_id_b",
+        minhash_agreement().alias("est_jaccard"),
+        shingle_jaccard().alias("jaccard"),
+    )
+
+
+def _minhash_pairs(spark: SparkSession, sf_dir: str, new: Column) -> DataFrame:
+    """Scored candidate pairs under `new`, ordered by pair."""
+    sigs, cand = _lsh_candidates(spark, sf_dir, new)
+    return _pair_scores(
+        cand,
+        sigs.select("doc_id", sig_array().alias("sig")),
+        distinct_shingles(shingle_sets(spark, sf_dir)),
+    ).orderBy("doc_id_a", "doc_id_b")
+
+
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs + verification.
 
@@ -373,46 +462,20 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus never shuffles its shingles, just 12 longs + 4 band hashes
     per doc.
 
-    Cache discipline at 100 TB: only the SIGNATURES are cached (12
-    longs + 4 band strings per doc — lean); shingle arrays are
-    recomputed row-local from text where needed rather than pinned in
-    storage memory (a corpus-sized array cache would evict everything
-    else). An alternative spelling that caches a joined
-    (sig, shingles) frame and halves the join count was benchmarked at
-    sf0.1: identical wall time (the residual cost is per-stage
-    scheduling overhead on a 1.6 MB corpus, not plan work), so the
-    lean-cache layout wins on memory at scale with no local penalty.
+    Materialization at 100 TB: only the SIGNATURES are materialized
+    (12 longs + 4 band strings per doc — lean), by localCheckpoint:
+    one pass feeds the bucket join and both pair sides, and the
+    checkpoint is a new RDD per call, so a corpus rewritten in place
+    is re-read, never served from a plan-keyed cache. Shingle arrays
+    are recomputed row-local from text where needed rather than pinned
+    in storage memory (a corpus-sized array cache would evict
+    everything else). An alternative spelling that materializes a
+    joined (sig, shingles) frame and halves the join count was
+    benchmarked at sf0.1: identical wall time (the residual cost is
+    per-stage scheduling overhead on a 1.6 MB corpus, not plan work),
+    so the lean layout wins on memory at scale with no local penalty.
     """
-    sigs = minhash_signatures(spark, sf_dir).cache()
-    sigs.count()  # materialize BEFORE fan-out: the signature subtree is
-    # referenced 4× below; without this, concurrent subtrees race the
-    # cache and each recomputes the hash pass
-    shingled = shingle_sets(spark, sf_dir)
-    pairs = _lsh_candidate_pairs(sigs)
-    # enrich the (small) pair set: each join keeps pairs as the
-    # broadcastable side, so neither signatures nor shingle arrays of
-    # the full corpus ever shuffle
-    sig_arr = F.array(*[F.col(f"sig_{j}") for j in range(NUM_HASHES)])
-    sa = sigs.select(F.col("doc_id").alias("doc_id_a"), sig_arr.alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_id_b"), sig_arr.alias("sig_b"))
-    sh = shingled.select("doc_id", F.array_distinct("shingles").alias("sh"))
-    sh_a = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
-    sh_b = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        pairs.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
-        .join(sh_a, "doc_id_a")
-        .join(sh_b, "doc_id_b")
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            minhash_agreement().alias("est_jaccard"),
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .orderBy("doc_id_a", "doc_id_b")
-    )
+    return _minhash_pairs(spark, sf_dir, F.lit(True))
 
 
 def dedup_containment_est(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,75 +497,34 @@ def dedup_containment_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     6dp-rounded outputs), so the estimator itself is oracle-checked,
     and its accuracy against exact containment is pinned in
     tests/test_extras.py."""
-    sigs = minhash_signatures(spark, sf_dir).cache()
-    sigs.count()  # materialize before the 3-way fan-out (see
-    # dedup_minhash_pairs)
-    pairs = _lsh_candidate_pairs(sigs)
-    sig_arr = F.array(*[F.col(f"sig_{j}") for j in range(NUM_HASHES)])
-    sa = sigs.select(F.col("doc_id").alias("doc_id_a"), sig_arr.alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_id_b"), sig_arr.alias("sig_b"))
-    sz = shingle_sets(spark, sf_dir).select(
-        "doc_id", F.size(F.array_distinct("shingles")).alias("n_sh")
+    sigs, cand = _lsh_candidates(spark, sf_dir, F.lit(True))
+    sizes = distinct_shingles(shingle_sets(spark, sf_dir)).select(
+        "doc_id", F.size("sh").alias("n_sh")
     )
-    za = sz.select(F.col("doc_id").alias("doc_id_a"), F.col("n_sh").alias("n_a"))
-    zb = sz.select(F.col("doc_id").alias("doc_id_b"), F.col("n_sh").alias("n_b"))
     est_j = minhash_agreement()
-    inter_est = est_j * (F.col("n_a") + F.col("n_b")) / (F.lit(1.0) + est_j)
+    n_a, n_b = F.col("n_sh_a"), F.col("n_sh_b")
+    inter_est = est_j * (n_a + n_b) / (F.lit(1.0) + est_j)
+    sig = sigs.select("doc_id", sig_array().alias("sig"))
     return (
-        pairs.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
-        .join(za, "doc_id_a")
-        .join(zb, "doc_id_b")
+        _with_sides(cand, sig, sizes)
         .select(
             "doc_id_a",
             "doc_id_b",
             F.round(est_j, 6).alias("est_jaccard"),
-            F.round(
-                F.least(F.lit(1.0), inter_est / F.col("n_a")), 6
-            ).alias("cont_ab"),
-            F.round(
-                F.least(F.lit(1.0), inter_est / F.col("n_b")), 6
-            ).alias("cont_ba"),
+            F.round(F.least(F.lit(1.0), inter_est / n_a), 6).alias("cont_ab"),
+            F.round(F.least(F.lit(1.0), inter_est / n_b), 6).alias("cont_ba"),
         )
         .orderBy("doc_id_a", "doc_id_b")
     )
 
 
 def _duck_containment_est_sql() -> str:
-    band_hashes = ",\n                   ".join(_band_hash_exprs())
-    band_union = "\n            UNION ALL\n".join(
-        f"            SELECT doc_id, {b} AS band_idx, band_{b} AS band_hash"
-        " FROM banded"
-        for b in range(BANDS)
-    )
-    sig_list = ", ".join(f"sig_{j}" for j in range(NUM_HASHES))
-    agree_sum = " + ".join(
-        f"CASE WHEN a.sig_{j} = b.sig_{j} THEN 1 ELSE 0 END"
-        for j in range(NUM_HASHES)
-    )
     # arithmetic mirrors the Spark expressions op-for-op (same IEEE
     # order) so the 6dp rounding can never straddle an ulp
-    est = f"(CAST(({agree_sum}) AS DOUBLE) / {float(NUM_HASHES)})"
+    est = f"(CAST(({_DUCK_SIG_AGREE}) AS DOUBLE) / {float(NUM_HASHES)})"
     inter = f"({est} * (za.n_sh + zb.n_sh) / (1.0 + {est}))"
     return f"""
-        {_duck_signatures_cte()}, banded AS (
-            SELECT doc_id, {sig_list},
-                   {band_hashes}
-            FROM sigs
-        ), buckets_all AS (
-{band_union}
-        ), sized AS (
-            SELECT band_idx, band_hash FROM buckets_all
-            GROUP BY 1, 2 HAVING count(*) <= {MAX_BUCKET}
-        ), buckets AS (
-            SELECT b.* FROM buckets_all b JOIN sized s
-            USING (band_idx, band_hash)
-        ), pairs AS (
-            SELECT DISTINCT x.doc_id AS doc_id_a, y.doc_id AS doc_id_b
-            FROM buckets x JOIN buckets y
-              ON x.band_idx = y.band_idx AND x.band_hash = y.band_hash
-            WHERE x.doc_id < y.doc_id
-        ), sizes AS (
+        {_duck_lsh_pairs_ctes()}, sizes AS (
             SELECT doc_id, len(list_distinct(shingles)) AS n_sh
             FROM shingled
         )
@@ -526,68 +548,17 @@ def dedup_incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuously-curated corpora, where re-pairing the base against
     itself on every ingest would be O(corpus) wasted work per batch.
 
-    Scale shape: signatures are computed for ALL docs (in production
-    the base's signatures are read back from the index store — see
-    dedup_minhash_pairs' cache discipline; recomputing here keeps the
-    query self-contained), but the LSH self-join is replaced by a
-    delta-buckets ⋈ all-buckets join: candidate generation scans only
-    buckets CONTAINING a delta doc, so per-batch cost is
-    O(delta × bucket_density), independent of base×base. Pair order
-    normalized via least/greatest so a (base, delta) collision yields
-    the same ordered row the full pipeline would emit; output is
+    It is dedup_minhash_pairs with the delta as the candidate rule's
+    `new` docs (_lsh_candidate_pairs): only the delta's bucket rows
+    probe the capped buckets, so per-batch candidate cost is
+    O(delta × bucket_density), independent of base×base. Signatures
+    are computed for ALL docs (in production the base's signatures are
+    read back from the index store, as streaming.minhash_index_stream
+    does; recomputing here keeps the query self-contained). Output is
     exactly dedup_minhash_pairs restricted to delta-touching pairs
     (the oracle twin IS that restriction, so the equivalence is
     hash-checked, and pytest asserts it against the full pipeline)."""
-    sigs = minhash_signatures(spark, sf_dir).cache()
-    sigs.count()  # materialize before fan-out (see dedup_minhash_pairs)
-    is_delta = F.col("doc_id") % 10 == 0
-    band_cols = ", ".join(f"{b}, band_{b}" for b in range(BANDS))
-    buckets = sigs.selectExpr(
-        "doc_id", f"stack({BANDS}, {band_cols}) AS (band_idx, band_hash)"
-    )
-    w = Window.partitionBy("band_idx", "band_hash")
-    buckets = (
-        buckets.withColumn("bucket_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("bucket_n") <= MAX_BUCKET)
-        .drop("bucket_n")
-    )
-    delta_b = buckets.filter(is_delta).select(
-        "band_idx", "band_hash", F.col("doc_id").alias("d_id")
-    )
-    all_b = buckets.select(
-        "band_idx", "band_hash", F.col("doc_id").alias("o_id")
-    )
-    cand = (
-        delta_b.join(all_b, ["band_idx", "band_hash"])
-        .filter(F.col("d_id") != F.col("o_id"))
-        .select(
-            F.least("d_id", "o_id").alias("doc_id_a"),
-            F.greatest("d_id", "o_id").alias("doc_id_b"),
-        )
-        .distinct()
-    )
-    shingled = shingle_sets(spark, sf_dir)
-    sig_arr = F.array(*[F.col(f"sig_{j}") for j in range(NUM_HASHES)])
-    sa = sigs.select(F.col("doc_id").alias("doc_id_a"), sig_arr.alias("sig_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_id_b"), sig_arr.alias("sig_b"))
-    sh = shingled.select("doc_id", F.array_distinct("shingles").alias("sh"))
-    sh_a = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
-    sh_b = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(sa, "doc_id_a")
-        .join(sb, "doc_id_b")
-        .join(sh_a, "doc_id_a")
-        .join(sh_b, "doc_id_b")
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            minhash_agreement().alias("est_jaccard"),
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
-        .orderBy("doc_id_a", "doc_id_b")
-    )
+    return _minhash_pairs(spark, sf_dir, F.col("doc_id") % 10 == 0)
 
 
 # Verified-pair Jaccard threshold above which two docs belong to the
@@ -596,48 +567,28 @@ NEARDUP_JACCARD = 0.5
 
 
 def _verified_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
-    """Verified near-dup edge list (doc_id_a, doc_id_b): LSH candidates
-    whose exact shingle Jaccard clears NEARDUP_JACCARD. Shared front end
-    of both connected-components variants; returns the cached frame plus
-    its materialized count (the count doubles as the materialization
-    barrier — see dedup_minhash_pairs for why fan-out needs it)."""
-    # lean verification path: grouping only needs candidates + exact
-    # shingle Jaccard — the est_jaccard signature-agreement joins of the
-    # full dedup_minhash_pairs output (2 of its 4 enrichment joins and
-    # its terminal sort) are dead weight here, so skip them
-    sigs = minhash_signatures(spark, sf_dir).cache()
-    sigs.count()  # materialize before fan-out (see dedup_minhash_pairs)
-    cand = _lsh_candidate_pairs(sigs)
-    sh = shingle_sets(spark, sf_dir).select(
-        "doc_id", F.array_distinct("shingles").alias("sh")
-    )
-    sh_a = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
-    sh_b = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+    """Verified near-dup edge list (doc_id_a, doc_id_b, jaccard): LSH
+    candidates whose exact shingle Jaccard clears NEARDUP_JACCARD —
+    the shared front end of both connected-components variants and
+    training_triplets. Only the shingle sides are attached: the
+    est_jaccard signature joins of dedup_minhash_pairs are dead weight
+    for grouping. The frame is localCheckpointed, with its row count
+    observed on the same job: the CC loops' bidirectional unions
+    reference it twice and would otherwise each recompute the whole
+    LSH pipeline (profiled 3.0s -> 1.5s at sf0.1), and a checkpoint,
+    unlike a plan-keyed cache, cannot serve a rewritten corpus."""
+    from pyspark.sql import Observation
+
+    _sigs, cand = _lsh_candidates(spark, sf_dir, F.lit(True))
+    obs = Observation()
     pairs = (
-        cand.join(sh_a, "doc_id_a")
-        .join(sh_b, "doc_id_b")
-        .filter(
-            inter.cast("double") / union.cast("double") >= NEARDUP_JACCARD
-        )
-        # keep the exact jaccard: free to compute here, and it lets
-        # training_triplets share THIS cached frame with the CC loop
-        # instead of running the full enriched pair pipeline twice
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            (inter.cast("double") / union.cast("double")).alias(
-                "jaccard"
-            ),
-        )
-        .cache()
+        _with_sides(cand, distinct_shingles(shingle_sets(spark, sf_dir)))
+        .select("doc_id_a", "doc_id_b", shingle_jaccard().alias("jaccard"))
+        .filter(F.col("jaccard") >= NEARDUP_JACCARD)
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint()
     )
-    n_pairs = pairs.count()  # materialize BEFORE any bidirectional union
-    # — its branches otherwise each recompute the whole LSH pipeline
-    # (2× signatures+joins; profiled 3.0s -> 1.5s at sf0.1)
-    sigs.unpersist()
-    return pairs, n_pairs
+    return pairs, obs.get["n"]
 
 
 def dedup_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -663,7 +614,13 @@ def dedup_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (doc_id, group_id) for every doc in the pair graph
     (singletons carry no dedup decision and are omitted)."""
-    pairs, n_pairs = _verified_pairs(spark, sf_dir)
+    return _min_label_groups(spark, *_verified_pairs(spark, sf_dir))
+
+
+def _min_label_groups(
+    spark: SparkSession, pairs: DataFrame, n_pairs: int
+) -> DataFrame:
+    """dedup_neardup_groups over a given _verified_pairs result."""
     pairs = pairs.drop("jaccard")  # CC needs only the edge list
 
     # Loop hygiene — three fixes that took the sf0.1 loop 3.0s -> 0.8s
@@ -695,7 +652,6 @@ def dedup_neardup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(nparts, "src")
             .localCheckpoint()  # eager: materializes, referenced every round
         )
-        pairs.unpersist()
         from pyspark.sql import Observation
 
         # round-1 labels derived INLINE from the checkpointed edges
@@ -815,7 +771,7 @@ def dedup_neardup_groups_lsss(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition(nparts, "u")
             .localCheckpoint()
         )
-        pairs.unpersist()
+
         def star_pair(e: DataFrame) -> DataFrame:
             # LARGE-STAR over the symmetric adjacency: per node u the
             # neighborhood min m = min(min_v, u); larger neighbors
@@ -908,20 +864,12 @@ def ngram_jaccard_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFra
     n but only feasible when n is modest (here 500 docs = 125k pairs).
     At 100 TB the LSH path above replaces it; this operator exists to
     verify LSH recall and to serve small ad-hoc corpora."""
-    sh = shingle_sets(spark, sf_dir).select(
-        "doc_id", F.array_distinct("shingles").alias("sh")
-    )
+    sh = distinct_shingles(shingle_sets(spark, sf_dir))
     a = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
     return (
         a.join(b, F.col("doc_id_a") < F.col("doc_id_b"))
-        .select(
-            "doc_id_a",
-            "doc_id_b",
-            (inter.cast("double") / union.cast("double")).alias("jaccard"),
-        )
+        .select("doc_id_a", "doc_id_b", shingle_jaccard().alias("jaccard"))
         .orderBy(F.desc("jaccard"), "doc_id_a", "doc_id_b")
         .limit(k)
     )
@@ -950,9 +898,7 @@ def containment_topk(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame
     one shipped; the MinHash one is, and this brute-force operator is
     its verification oracle.) Scores are rounded to 6dp BEFORE the
     ordering so the top-k tie decisions are identical in both engines."""
-    sh = shingle_sets(spark, sf_dir).select(
-        "doc_id", F.array_distinct("shingles").alias("sh")
-    )
+    sh = distinct_shingles(shingle_sets(spark, sf_dir))
     a = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
@@ -1030,8 +976,9 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding: docs sharing any of the 4 fingerprint bytes are candidates
     (pigeonhole: <=3 differing bits cannot touch all 4 bands), verified
     by exact popcount. No n² stage at any scale."""
-    fps = simhash_fingerprints(spark, sf_dir).cache()
-    fps.count()  # materialize before the self-join references it twice
+    # materialized once for the two pair sides; a checkpoint, not a
+    # plan-keyed cache, so a corpus rewritten in place is re-read
+    fps = simhash_fingerprints(spark, sf_dir).localCheckpoint()
     bands = fps.selectExpr(
         "doc_id",
         "fp",
@@ -1047,15 +994,22 @@ def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = bands.selectExpr(
         "band_idx", "band_val", "doc_id AS doc_id_b", "fp AS fp_b"
     )
+    # a pair meets once per band it shares; keeping it only from the
+    # first shared band replaces a distinct (and its shuffle) over the
+    # joined pairs
+    first_band = "least(" + ", ".join(
+        f"CASE WHEN (shiftright(fp_a ^ fp_b, {8 * b}) & 255) = 0 THEN {b} END"
+        for b in range(SIMHASH_BANDS)
+    ) + ")"
     return (
         a.join(b, ["band_idx", "band_val"])
         .filter(F.col("doc_id_a") < F.col("doc_id_b"))
+        .filter(F.expr(f"band_idx = {first_band}"))
         .selectExpr(
             "doc_id_a", "doc_id_b",
             "CAST(bit_count(fp_a ^ fp_b) AS INT) AS hamming",
         )
         .filter(F.col("hamming") <= HAMMING_MAX)
-        .distinct()
         .orderBy("doc_id_a", "doc_id_b")
     )
 
@@ -2132,7 +2086,7 @@ def training_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     Everything is a pure function of the data (the q54 determinism
     discipline), so the triplet set is reproducible across engines,
     retries, and cluster sizes — fully oracle-backed."""
-    pairs, _n = _verified_pairs(spark, sf_dir)
+    pairs, n_pairs = _verified_pairs(spark, sf_dir)
     # positives in both directions: anchor is each side once
     both = pairs.selectExpr(
         "doc_id_a AS anchor", "doc_id_b AS positive", "jaccard"
@@ -2156,7 +2110,8 @@ def training_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = both.selectExpr("anchor", "positive", "jaccard", f"{nb} AS bucket").join(
         F.broadcast(reps), "bucket"
     )
-    groups = dedup_neardup_groups(spark, sf_dir)
+    # the components of the same verified pairs, not a second LSH pass
+    groups = _min_label_groups(spark, pairs, n_pairs)
     ga = groups.selectExpr("doc_id AS anchor", "group_id AS comp_a")
     gn = groups.selectExpr("doc_id AS negative", "group_id AS comp_n")
     return (
@@ -2396,7 +2351,16 @@ def _duck_signatures_cte() -> str:
     """
 
 
-def _duck_pairs_sql() -> str:
+_DUCK_SIG_AGREE = " + ".join(
+    f"CASE WHEN a.sig_{j} = b.sig_{j} THEN 1 ELSE 0 END"
+    for j in range(NUM_HASHES)
+)
+
+
+def _duck_lsh_pairs_ctes() -> str:
+    """The oracle's candidate rule as a CTE chain ending in `pairs`:
+    signatures -> banded -> stacked buckets -> MAX_BUCKET cap ->
+    distinct (doc_id_a < doc_id_b) bucket pairs."""
     band_hashes = ",\n                   ".join(_band_hash_exprs())
     band_union = "\n            UNION ALL\n".join(
         f"            SELECT doc_id, {b} AS band_idx, band_{b} AS band_hash"
@@ -2404,12 +2368,7 @@ def _duck_pairs_sql() -> str:
         for b in range(BANDS)
     )
     sig_list = ", ".join(f"sig_{j}" for j in range(NUM_HASHES))
-    agree_sum = " + ".join(
-        f"CASE WHEN a.sig_{j} = b.sig_{j} THEN 1 ELSE 0 END"
-        for j in range(NUM_HASHES)
-    )
-    return f"""
-        {_duck_signatures_cte()}, banded AS (
+    return f"""{_duck_signatures_cte()}, banded AS (
             SELECT doc_id, {sig_list},
                    {band_hashes}
             FROM sigs
@@ -2426,9 +2385,14 @@ def _duck_pairs_sql() -> str:
             FROM buckets x JOIN buckets y
               ON x.band_idx = y.band_idx AND x.band_hash = y.band_hash
             WHERE x.doc_id < y.doc_id
-        )
+        )"""
+
+
+def _duck_pairs_sql() -> str:
+    return f"""
+        {_duck_lsh_pairs_ctes()}
         SELECT p.doc_id_a, p.doc_id_b,
-               CAST(({agree_sum}) AS DOUBLE) / {NUM_HASHES}.0 AS est_jaccard,
+               CAST(({_DUCK_SIG_AGREE}) AS DOUBLE) / {NUM_HASHES}.0 AS est_jaccard,
                CAST(len(list_intersect(list_distinct(sha.shingles),
                                        list_distinct(shb.shingles))) AS DOUBLE)
                / CAST(len(list_distinct(sha.shingles))

@@ -143,16 +143,17 @@ def search_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def search_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-RANKED_K docs by summed TF-IDF over QUERY_RANKED — scored
-    retrieval with the same tf·ln(N/df) formula and 6dp rounding
-    policy as text_tfidf_topk (ln is aggregate-derived; the top-k
-    orders by the ROUNDED score, doc_id tiebreak, so ranks agree
-    across engines). df comes from the full corpus (idf must price
-    rarity globally), but the scored rows are only the query terms'."""
-    toks = _positions(spark, sf_dir).select("doc_id", "term")
-    tf = toks.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).alias("tf")
+def _query_term_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, term, w): the 6dp-rounded tf·ln(N/df) weight of every
+    QUERY_RANKED term occurrence — the scoring frame of search_ranked
+    and of search_hybrid_rrf's lexical list. df and N come from the
+    full corpus; tf rows are filtered to the query terms before any
+    join."""
+    tf = (
+        _positions(spark, sf_dir)
+        .select("doc_id", "term")
+        .groupBy("doc_id", "term")
+        .agg(F.count(F.lit(1)).alias("tf"))
     )
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = (
@@ -160,7 +161,7 @@ def search_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("text").isNotNull())
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
-    scored = (
+    return (
         tf.filter(F.col("term").isin(*QUERY_RANKED))
         .join(df_, "term")
         .join(F.broadcast(n))
@@ -173,7 +174,16 @@ def search_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    ranked = scored.groupBy("doc_id").agg(
+
+
+def search_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-RANKED_K docs by summed TF-IDF over QUERY_RANKED — scored
+    retrieval with the same tf·ln(N/df) formula and 6dp rounding
+    policy as text_tfidf_topk (ln is aggregate-derived; the top-k
+    orders by the ROUNDED score, doc_id tiebreak, so ranks agree
+    across engines). df comes from the full corpus (idf must price
+    rarity globally), but the scored rows are only the query terms'."""
+    ranked = _query_term_weights(spark, sf_dir).groupBy("doc_id").agg(
         F.round(F.sum("w"), 6).alias("score"),
         F.count(F.lit(1)).alias("n_terms"),
     )
@@ -498,29 +508,9 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .similarity import _qc_cosine, _with_norm
 
     # -- lexical list: search_ranked's scoring frame, depth HYBRID_DEPTH
-    toks = _positions(spark, sf_dir).select("doc_id", "term")
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n = (
-        read_table(spark, sf_dir, "documents", ["doc_id", "text"])
-        .filter(F.col("text").isNotNull())
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    scored = (
-        tf.filter(F.col("term").isin(*QUERY_RANKED))
-        .join(df_, "term")
-        .join(F.broadcast(n))
-        .withColumn(
-            "w",
-            F.round(
-                F.col("tf")
-                * F.log(F.col("n_docs").cast("double") / F.col("df")),
-                6,
-            ),
-        )
-    )
     lex = (
-        scored.groupBy("doc_id")
+        _query_term_weights(spark, sf_dir)
+        .groupBy("doc_id")
         .agg(F.round(F.sum("w"), 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(HYBRID_DEPTH)

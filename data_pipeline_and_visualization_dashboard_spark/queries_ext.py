@@ -2543,10 +2543,14 @@ def q66_late_supplier_blame(spark: SparkSession,
     supplier exists) on the order key — the plan shape optimizers
     struggle with when left as nested subqueries. Top-10 by blame
     count with name tiebreak. The window-count respelling folklore
-    recommends instead of this compile is MEASURED AT PAR, not
-    faster — see q66_late_supplier_blame_agg for the head-to-head
-    numbers and why (ReuseExchange already shares the joined
-    frame)."""
+    recommends (one (order, supplier) aggregation + per-order window
+    counts, no semi/anti nodes) measured AT PAR, best-of-2 warm, this
+    compile vs the respelling: sf0.1 1.57 vs 2.05 s, sf1 2.88 vs
+    2.76 s, sf3 6.47 vs 6.93 s — ReuseExchange already shares the
+    lineitem⋈orders frame, and the window's partition sort replaces
+    the join sorts — so it is not kept as a second spelling (the
+    registry key q66_late_supplier_blame_agg is an alias of this
+    one)."""
     li = read_table(
         spark, sf_dir, "lineitem",
         ["l_orderkey", "l_suppkey", "l_shipdate"],
@@ -2620,68 +2624,6 @@ _DUCK_Q66_SQL = f"""
         ORDER BY n_blamed DESC, s_name, l_suppkey LIMIT 10
     )
 """
-
-def q66_late_supplier_blame_agg(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """The window-aggregation respelling of q66 (same oracle,
-    hash-identical result) — and a MEASURED NEGATIVE RESULT kept on
-    purpose. The folk rewrite for TPC-H Q21 says: avoid the semi +
-    anti self-joins by reducing to (order, supplier, ever-late) grain
-    and reading both existence predicates off per-order window counts
-    ("another supplier exists" = supplier_count > 1, "no other late
-    supplier" = late_supplier_count == 1). This spelling does exactly
-    that: one composite-key aggregation + one order-keyed window, 3
-    data-sized shuffles, no semi/anti nodes (plan-pinned).
-
-    Measured head-to-head (best-of-2, warmed, three-point ladder):
-    sf0.1 1.57 s (semi/anti) vs 2.05 s (this); sf1 2.88 vs 2.76;
-    sf3 6.47 vs 6.93 — AT PAR, not the folk-claimed win. Why: Spark
-    already shares the lineitem⋈orders frame across the three
-    consumers via ReuseExchange, and the SortMergeJoin sorts the
-    rewrite was supposed to avoid reappear as the window's
-    partition-sort over the near-lineitem-sized supplier grain. Kept
-    in the registry so the next person measuring this rewrite finds
-    the numbers instead of the folklore; q66 remains the
-    literal-compile pin (semi/anti, never a nested loop)."""
-    li = read_table(
-        spark, sf_dir, "lineitem",
-        ["l_orderkey", "l_suppkey", "l_shipdate"],
-    )
-    o = read_table(spark, sf_dir, "orders", ["o_orderkey", "o_orderdate"])
-    s = read_table(spark, sf_dir, "supplier", ["s_suppkey", "s_name"])
-    lines = li.join(
-        o, li.l_orderkey == o.o_orderkey
-    ).select(
-        "l_orderkey",
-        "l_suppkey",
-        (
-            F.datediff(F.col("l_shipdate"), F.col("o_orderdate"))
-            > Q66_LATE_DAYS
-        ).alias("late"),
-    )
-    sup_grain = lines.groupBy("l_orderkey", "l_suppkey").agg(
-        F.max("late").alias("late")
-    )
-    w = Window.partitionBy("l_orderkey")
-    flagged = sup_grain.select(
-        "l_orderkey",
-        "l_suppkey",
-        "late",
-        F.count(F.lit(1)).over(w).alias("n_supp"),
-        F.sum(F.col("late").cast("int")).over(w).alias("n_late"),
-    )
-    blamed = flagged.filter(
-        F.col("late") & (F.col("n_supp") > 1) & (F.col("n_late") == 1)
-    )
-    return (
-        blamed.groupBy("l_suppkey")
-        .agg(F.count(F.lit(1)).alias("n_blamed"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_name", "n_blamed", "l_suppkey")
-        .orderBy(F.desc("n_blamed"), F.asc("s_name"), F.asc("l_suppkey"))
-        .limit(10)
-        .select("s_name", "n_blamed")
-    )
 
 
 def q88_basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -6476,7 +6418,7 @@ QUERIES = {
     "q64_weighted_sample": q64_weighted_sample,
     "q65_small_quantity_revenue": q65_small_quantity_revenue,
     "q66_late_supplier_blame": q66_late_supplier_blame,
-    "q66_late_supplier_blame_agg": q66_late_supplier_blame_agg,
+    "q66_late_supplier_blame_agg": q66_late_supplier_blame,  # kept key: an alias
     "q67_important_parts": q67_important_parts,
     "q68_value_deciles": q68_value_deciles,
     "q69_concurrent_sessions": q69_concurrent_sessions,

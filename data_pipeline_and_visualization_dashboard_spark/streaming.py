@@ -2156,97 +2156,53 @@ def minhash_index_stream(spark: SparkSession, in_dir: str, index_dir: str,
     LSM/lakehouse table (Delta/Iceberg append), which is byte-layout
     identical to this pattern.
 
-    Every pair is emitted exactly once — when its LATER doc arrives
-    (earlier member is then in the index or the same batch), so the
-    union of all epochs' pairs equals the batch pipeline's output on
-    the same corpus (asserted in tests against dedup_minhash_pairs,
-    bucket-cap permitting)."""
+    Candidates and verification are dedup's own: the current corpus
+    is index ∪ batch with the batch rows flagged as the candidate
+    rule's `new` docs (dedup._lsh_candidate_pairs, whose MAX_BUCKET
+    cap therefore sees the whole current corpus), scored by the one
+    verifier (dedup._pair_scores). Every pair is emitted exactly once
+    — when its LATER doc arrives (earlier member is then in the index
+    or the same batch), so the union of all epochs' pairs equals the
+    batch pipeline's output on the same corpus (asserted in tests
+    against dedup_minhash_pairs, bucket-cap permitting)."""
     from .extras.dedup import (
         BANDS,
-        MAX_BUCKET,
-        NUM_HASHES,
-        minhash_agreement,
+        _lsh_candidate_pairs,
+        _pair_scores,
+        distinct_shingles,
         shingle_sets_from,
+        sig_array,
         signatures_from,
     )
 
     docs = read_document_stream(spark, in_dir)
 
-    sig_arr = F.array(*[F.col(f"sig_{j}") for j in range(NUM_HASHES)])
-    band_cols = ", ".join(f"{b}, band_{b}" for b in range(BANDS))
-
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         ss = batch_df.sparkSession
         batch = batch_df.filter(F.col("text").isNotNull())
-        sigs = signatures_from(batch)
-        sh = shingle_sets_from(batch).select(
-            "doc_id", F.array_distinct("shingles").alias("sh")
-        )
         delta_meta = (
-            sigs.select(
+            signatures_from(batch)
+            .select(
                 "doc_id",
-                sig_arr.alias("sig"),
+                sig_array().alias("sig"),
                 *[F.col(f"band_{b}") for b in range(BANDS)],
             )
-            .join(sh, "doc_id")
+            .join(distinct_shingles(shingle_sets_from(batch)), "doc_id")
             .localCheckpoint()  # one materialization; read 3x below
         )
         if not delta_meta.take(1):
             return
-        have_index = os.path.isdir(index_dir)
-        if have_index:
-            all_meta = ss.read.parquet(index_dir).drop("epoch").unionByName(
-                delta_meta
+        current = delta_meta.withColumn("new", F.lit(True))
+        if os.path.isdir(index_dir):
+            current = (
+                ss.read.parquet(index_dir)
+                .drop("epoch")
+                .withColumn("new", F.lit(False))
+                .unionByName(current)
             )
-        else:
-            all_meta = delta_meta
-        delta_buckets = delta_meta.selectExpr(
-            "doc_id",
-            f"stack({BANDS}, {band_cols}) AS (band_idx, band_hash)",
-        )
-        all_buckets = all_meta.selectExpr(
-            "doc_id",
-            f"stack({BANDS}, {band_cols}) AS (band_idx, band_hash)",
-        )
-        # same skew guard as the batch path, over the CURRENT corpus
-        w = Window.partitionBy("band_idx", "band_hash")
-        capped = (
-            all_buckets.withColumn("n", F.count(F.lit(1)).over(w))
-            .filter(F.col("n") <= MAX_BUCKET)
-            .drop("n")
-        )
-        d = capped.join(
-            delta_buckets.select("doc_id").distinct(), "doc_id"
-        ).selectExpr("band_idx", "band_hash", "doc_id AS d_id")
-        o = capped.selectExpr("band_idx", "band_hash", "doc_id AS o_id")
-        cand = (
-            d.join(o, ["band_idx", "band_hash"])
-            .filter(F.col("d_id") != F.col("o_id"))
-            .select(
-                F.least("d_id", "o_id").alias("doc_id_a"),
-                F.greatest("d_id", "o_id").alias("doc_id_b"),
-            )
-            .distinct()
-        )
-        ma = all_meta.selectExpr(
-            "doc_id AS doc_id_a", "sig AS sig_a", "sh AS sh_a"
-        )
-        mb = all_meta.selectExpr(
-            "doc_id AS doc_id_b", "sig AS sig_b", "sh AS sh_b"
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        pairs = (
-            cand.join(ma, "doc_id_a")
-            .join(mb, "doc_id_b")
-            .select(
-                "doc_id_a",
-                "doc_id_b",
-                minhash_agreement().alias("est_jaccard"),
-                (inter.cast("double") / union.cast("double")).alias(
-                    "jaccard"
-                ),
-            )
+        pairs = _pair_scores(
+            _lsh_candidate_pairs(current, F.col("new")),
+            current.select("doc_id", "sig", "sh"),
         )
         pairs.write.mode("overwrite").parquet(
             os.path.join(pairs_dir, f"epoch={epoch_id}")

@@ -808,6 +808,36 @@ def test_incremental_pairs_equal_full_restricted(spark):
     }
     assert inc == full and len(inc) > 0
 
+
+@pytest.mark.parametrize("name", [
+    "dedup_minhash_pairs", "dedup_containment_est",
+    "dedup_incremental_pairs", "dedup_neardup_groups", "corpus_funnel",
+    "simhash_pairs",
+])
+def test_near_dup_entry_follows_rewritten_corpus(spark, tmp_path, name):
+    """A documents.parquet rewritten in place within one session must
+    give a near-dup entry the new corpus's result, the same as after
+    spark.catalog.clearCache(): the signature, verified-pair and
+    fingerprint frames are checkpointed per call, so no plan-keyed
+    cache can serve the old corpus."""
+    import shutil
+
+    fn = getattr(dedup, name)
+    path = str(tmp_path / "documents.parquet")
+
+    def result():
+        return sorted(tuple(r) for r in fn(spark, str(tmp_path)).collect())
+
+    spark.catalog.clearCache()
+    shutil.copyfile(f"{SF_SMOKE}/documents.parquet", path)
+    old = result()
+    shutil.copyfile(f"{SF_CORRECT}/documents.parquet", path)
+    got = result()
+    spark.catalog.clearCache()
+    want = result()
+    assert want != old  # the two corpora give different results
+    assert got == want, "stale result after the in-place rewrite"
+
 def _memo_generations(kind, sf_dir):
     """The generations of `sf_dir`'s corpus held in io's driver-side
     artifact memo for `kind`."""

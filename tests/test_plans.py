@@ -442,16 +442,6 @@ CASES = {
          "Window"],
         2,
     ),
-    "q66_late_supplier_blame_agg": (
-        # the window respelling: NO semi/anti nodes, one composite agg
-        # + one order-keyed window; measured at par with q66 (negative
-        # result documented in the docstring) — the pin keeps the
-        # SHAPE claim honest even though the speed claim died
-        ["Window", "HashAggregate"],
-        ["LeftSemi", "LeftAnti", "CartesianProduct",
-         "BroadcastNestedLoopJoin"],
-        5,
-    ),
     "q66_late_supplier_blame": (
         # Q21 shape: EXISTS/NOT EXISTS must compile to semi + anti
         # joins on the order key — fact-fact, so SortMergeJoin is the
@@ -1525,15 +1515,15 @@ CARTESIAN_OK = {
 # with their reason.
 FACT_FANOUT_OK = {
     # pair/candidate joins — corpus texts rejoined per pair side,
-    # plus the signature/candidate build itself:
-    "dedup_minhash_pairs",
-    "dedup_simhash_pairs",
-    # (dedup_simhash_hamming_topk is NOT here: its plan reads the
-    # documents fingerprint subtree exactly TWICE — once per pair
-    # side — which is under the >= 3 threshold; probed cold-cache)
-    "dedup_incremental_pairs", "dedup_incremental_exact",
-    "dedup_containment_est", "dedup_pair_features",
-    "dedup_training_triplets", "dedup_embedding_pairs_lsh",
+    # plus the signature/candidate build itself. NOT here: the
+    # entries whose signature, verified-pair or fingerprint frame is a
+    # checkpoint and whose plan then reads documents at most twice
+    # (dedup_minhash_pairs, dedup_incremental_pairs,
+    # dedup_containment_est, dedup_training_triplets,
+    # dedup_simhash_pairs), and dedup_simhash_hamming_topk, which
+    # reads its fingerprint subtree once per pair side:
+    "dedup_incremental_exact", "dedup_pair_features",
+    "dedup_embedding_pairs_lsh",
     "dedup_split_leakage", "dedup_semantic", "dedup_threshold_curve",
     # staged curation funnels — one pass per quality/exact/near stage
     # (corpus_shard_manifest left r16: it reads the survivors_table
@@ -1556,6 +1546,7 @@ FACT_FANOUT_OK = {
     "q52_gap_fill",         # spine bounds + LOCF source + fill
     "q63_drift_kl",         # per-day dist + corpus dist + readout
     "q66_late_supplier_blame",  # EXISTS/NOT-EXISTS double self-join
+    "q66_late_supplier_blame_agg",  # an alias of q66_late_supplier_blame
     "q69_concurrent_sessions",  # sweep endpoints from both interval ends
     "q88_basket_pairs",     # basket pair sides + basket sizes
     "q90_mad_outliers",     # median pass + MAD pass + flag pass
@@ -1575,17 +1566,11 @@ FACT_FANOUT_OK = {
 # applied in the other direction), so the carve-out is explicit and
 # annotated rather than silent.
 SELF_CACHE_OK = {
-    # minhash signature frame cached, reused by band-bucket join +
-    # pair verification (each consumer would otherwise recompute the
-    # full shingle->minhash pipeline):
-    "dedup_minhash_pairs",
-    "dedup_incremental_pairs", "dedup_containment_est",
-    "dedup_pair_features", "dedup_training_triplets",
-    "dedup_split_leakage",
-    # simhash fingerprint frame cached, reused per pair side:
-    "dedup_simhash_pairs",
+    # (the MinHash signature, verified-pair and SimHash fingerprint
+    # frames are localCheckpointed, not cached: their entries plan an
+    # existing-RDD scan, not an InMemoryTableScan)
     # funnel flags cached: stage verdicts feed survivor + accounting
-    # branches (and the LSH pairs frame inside is count()-pinned);
+    # branches (and the LSH pairs frame inside is checkpointed);
     # corpus_shard_manifest left r16 — the artifact scan caches
     # nothing:
     "corpus_funnel", "corpus_survivors",
