@@ -61,12 +61,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .derive import (
-    EVENT_TYPE_LABELS,
-    WEEKDAYS,
-    derive_event_columns,
-    weekday_num_expr,
-)
+from .derive import WEEKDAYS, derive_event_columns, weekday_num_expr
 from .io import read_table
 
 HIST_LO, HIST_HI, HIST_BIN = 0.0, 500.0, 10.0
@@ -399,18 +394,6 @@ _DATE_LO, _DATE_HI = "2024-01-05", "2024-01-20"
 _HOUR_LO, _HOUR_HI = 6, 18
 _LABELS = ["Click", "Purchase", "Sign Up"]
 
-# Shared SQL fragments so the oracle filter is char-for-char the same
-# semantics as filtered_events().
-_LABEL_CASE = "CASE event_type " + " ".join(
-    f"WHEN '{k}' THEN '{v}'" for k, v in EVENT_TYPE_LABELS.items()
-) + " END"
-_FILTER_SQL = (
-    f"ts >= TIMESTAMP '{_DATE_LO} 00:00:00' "
-    f"AND ts <= TIMESTAMP '{_DATE_HI} 00:00:00' "
-    f"AND hour(ts) BETWEEN {_HOUR_LO} AND {_HOUR_HI} "
-    f"AND {_LABEL_CASE} IN ({', '.join(repr(l) for l in _LABELS)})"
-)
-
 
 def _filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     return filtered_events(
@@ -457,67 +440,3 @@ def q12_derived_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value_per_k",
         "dow_num",
     )
-
-
-ORACLE_SQL: dict[str, str] = {
-    "q7_filtered_metrics": f"""
-        SELECT count(*) AS total_events,
-               round(avg(value), 6) AS avg_value,
-               round(sum(value), 4) AS total_value,
-               count(DISTINCT user_id) AS n_users,
-               min(ts) AS min_ts, max(ts) AS max_ts
-        FROM events WHERE {_FILTER_SQL}
-    """,
-    "q8_top_users": f"""
-        SELECT user_id, count(*) AS event_cnt
-        FROM events WHERE {_FILTER_SQL}
-        GROUP BY user_id ORDER BY event_cnt DESC, user_id LIMIT 10
-    """,
-    "q9_value_histogram": f"""
-        SELECT CAST(floor(value / {HIST_BIN}) AS INT) AS bin,
-               count(*) AS cnt
-        FROM events
-        WHERE {_FILTER_SQL} AND value > {HIST_LO} AND value < {HIST_HI}
-        GROUP BY 1 ORDER BY 1
-    """,
-    "q10_type_donut": f"""
-        SELECT {_LABEL_CASE} AS event_type_label, count(*) AS cnt
-        FROM events WHERE {_FILTER_SQL}
-        GROUP BY 1 HAVING event_type_label IS NOT NULL
-        ORDER BY cnt DESC, event_type_label
-    """,
-    "q11_day_hour_heatmap": f"""
-        SELECT dayname(ts) AS event_dow, CAST(hour(ts) AS INT) AS event_hour,
-               count(*) AS event_cnt
-        FROM events WHERE {_FILTER_SQL}
-        GROUP BY 1, 2 ORDER BY 1, 2
-    """,
-    "q12_derived_events": f"""
-        SELECT event_id,
-               CAST(hour(ts) AS INT) AS event_hour,
-               dayname(ts) AS event_dow,
-               CAST(nullif(regexp_extract(props, '"k":\\s*(\\d+)', 1), '')
-                    AS INT) AS props_k,
-               {_LABEL_CASE} AS event_type_label,
-               CASE WHEN CAST(nullif(regexp_extract(props,
-                         '"k":\\s*(\\d+)', 1), '') AS INT) > 0
-                    THEN value / CAST(nullif(regexp_extract(props,
-                         '"k":\\s*(\\d+)', 1), '') AS INT)
-                    ELSE 0.0 END AS value_per_k,
-               CAST(CASE dayname(ts)
-                    WHEN 'Monday' THEN 1 WHEN 'Tuesday' THEN 2
-                    WHEN 'Wednesday' THEN 3 WHEN 'Thursday' THEN 4
-                    WHEN 'Friday' THEN 5 WHEN 'Saturday' THEN 6
-                    WHEN 'Sunday' THEN 7 END AS INT) AS dow_num
-        FROM events
-    """,
-}
-
-QUERIES = {
-    "q7_filtered_metrics": q7_filtered_metrics,
-    "q8_top_users": q8_top_users,
-    "q9_value_histogram": q9_value_histogram,
-    "q10_type_donut": q10_type_donut,
-    "q11_day_hour_heatmap": q11_day_hour_heatmap,
-    "q12_derived_events": q12_derived_events,
-}

@@ -497,17 +497,19 @@ def read_jsonl_quarantined(
     silently dropped.
 
     The schema string must NOT already contain the corrupt column; it
-    is appended here. Spark requires caching-or-materialization
-    before filtering on the corrupt column alone (SPARK-21610: the
-    parser is lazy per referenced column) — selecting the data
-    columns alongside, as both outputs here do, is sufficient."""
+    is appended here. Spark refuses a query of the raw file that
+    references the corrupt column alone (SPARK-21610: the parser is
+    lazy per referenced column), as the quarantine output does. The
+    parse is localCheckpointed: both outputs read the one
+    materialized parse, never the file, and unlike a plan-keyed cache
+    it cannot serve a rewritten file's old rows."""
     full = f"{schema}, {CORRUPT_COL} string"
     raw = (
         spark.read.schema(full)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
-        .cache()  # one parse feeds both outputs (and SPARK-21610)
+        .localCheckpoint()  # one parse feeds both outputs
     )
     clean = raw.filter(F.col(CORRUPT_COL).isNull()).drop(CORRUPT_COL)
     quarantine = raw.filter(F.col(CORRUPT_COL).isNotNull()).select(

@@ -1,9 +1,10 @@
 """SQL analytics surface (SURVEY §3.2 Q1-Q5 shapes + §2.6-§2.8 operators),
 re-targeted at the driver's TPC-H-ish tables.
 
-Each query exists twice with IDENTICAL output column names and types:
-  * a Spark DataFrame builder `(spark, sf_dir) -> DataFrame`
-  * a DuckDB oracle SQL string in ORACLE_SQL
+Each query is a Spark DataFrame builder `(spark, sf_dir) -> DataFrame`.
+Its registry record in oracles/queries.py pairs it with a DuckDB
+oracle of IDENTICAL output column names and types, or marks it
+rows-only.
 
 Shape parity with the reference's five DuckDB queries
 (assignment1.ipynb cells ad0ce8ff, 5dde42b2, d61ce027, 678ca237, 594b2790):
@@ -30,14 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .derive import WEEKDAYS, weekday_num_expr
+from .derive import weekday_num_expr
 from .io import read_table
-
-# Weekday CASE ladder shared by oracle SQL strings (reference O4,
-# ipynb:376-386).
-_WEEKDAY_CASE = "CASE {col} " + " ".join(
-    f"WHEN '{d}' THEN {i + 1}" for i, d in enumerate(WEEKDAYS)
-) + " END"
 
 
 # ----------------------------------------------------------------------
@@ -418,169 +413,3 @@ def q33_status_priority_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.asc_nulls_first("o_orderpriority"),
         )
     )
-
-
-_NULLS = "ts IS NULL OR user_id IS NULL OR event_type IS NULL OR value IS NULL"
-_TS_OK = "ts >= TIMESTAMP '2000-01-01' AND ts < TIMESTAMP '2100-01-01'"
-
-ORACLE_SQL: dict[str, str] = {
-    "q14_clean_accounting": f"""
-        SELECT count(*) AS rows_in,
-               CAST(sum(CASE WHEN {_NULLS} THEN 1 ELSE 0 END) AS BIGINT)
-                   AS removed_nulls,
-               CAST(sum(CASE WHEN NOT ({_NULLS}) AND NOT (value > 0)
-                        THEN 1 ELSE 0 END) AS BIGINT) AS removed_value_pos,
-               CAST(sum(CASE WHEN NOT ({_NULLS}) AND value > 0
-                             AND NOT (value <= 500)
-                        THEN 1 ELSE 0 END) AS BIGINT) AS removed_value_cap,
-               CAST(sum(CASE WHEN NOT ({_NULLS}) AND value > 0
-                             AND value <= 500 AND NOT ({_TS_OK})
-                        THEN 1 ELSE 0 END) AS BIGINT) AS removed_ts_valid,
-               CAST(sum(CASE WHEN NOT ({_NULLS}) AND value > 0
-                             AND value <= 500 AND {_TS_OK}
-                        THEN 1 ELSE 0 END) AS BIGINT) AS rows_kept
-        FROM events
-    """,
-    "q1_top_nations": """
-        SELECT n_name, count(*) AS order_cnt
-        FROM orders
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        GROUP BY n_name
-        ORDER BY order_cnt DESC, n_name
-        LIMIT 10
-    """,
-    "q2_avg_value_by_hour": """
-        SELECT CAST(hour(ts) AS INT) AS event_hour,
-               round(avg(value), 6) AS avg_value
-        FROM events
-        GROUP BY 1
-        ORDER BY 1
-    """,
-    "q3_event_type_pct": """
-        SELECT event_type, count(*) AS cnt,
-               round(count(*) * 100.0 / sum(count(*)) OVER (), 6) AS pct
-        FROM events
-        GROUP BY event_type
-        ORDER BY pct DESC, event_type
-    """,
-    "q4_unit_price_by_weekday": f"""
-        SELECT dayname(l_shipdate) AS ship_dow,
-               round(avg(CASE WHEN l_quantity > 0
-                              THEN l_extendedprice / l_quantity END), 6)
-                   AS avg_unit_price
-        FROM lineitem
-        WHERE l_returnflag = 'R'
-        GROUP BY 1
-        ORDER BY {_WEEKDAY_CASE.format(col="ship_dow")}
-    """,
-    "q5_trade_routes": """
-        SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
-               count(*) AS shipments
-        FROM lineitem
-        JOIN supplier ON l_suppkey = s_suppkey
-        JOIN nation ns ON s_nationkey = ns.n_nationkey
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN nation nc ON c_nationkey = nc.n_nationkey
-        GROUP BY 1, 2
-        ORDER BY shipments DESC, supp_nation, cust_nation
-        LIMIT 5
-    """,
-    "q6_pricing_summary": """
-        SELECT l_returnflag, l_linestatus,
-               round(sum(l_quantity), 4) AS sum_qty,
-               round(sum(l_extendedprice), 4) AS sum_base_price,
-               round(sum(l_extendedprice * (1 - l_discount)), 4) AS sum_disc_price,
-               round(sum(l_extendedprice * (1 - l_discount) * (1 + l_tax)), 4)
-                   AS sum_charge,
-               round(avg(l_quantity), 6) AS avg_qty,
-               round(avg(l_extendedprice), 6) AS avg_price,
-               round(avg(l_discount), 6) AS avg_disc,
-               count(*) AS count_order
-        FROM lineitem
-        WHERE l_shipdate <= TIMESTAMP '2000-09-02'
-        GROUP BY l_returnflag, l_linestatus
-        ORDER BY l_returnflag, l_linestatus
-    """,
-    "q13_windowed_counts": """
-        SELECT date_trunc('hour', ts) AS window_start, event_type,
-               count(*) AS event_cnt,
-               round(sum(value), 4) AS value_sum
-        FROM events
-        GROUP BY 1, 2
-        ORDER BY 1, 2
-    """,
-    "q16_sessionization": f"""
-        WITH flagged AS (
-            SELECT user_id, ts, event_id,
-                   CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER
-                            (PARTITION BY user_id
-                             ORDER BY ts NULLS FIRST, event_id)
-                            > {SESSION_GAP_US}
-                        THEN 1 ELSE 0 END AS new_sess
-            FROM events
-        ), numbered AS (
-            SELECT user_id,
-                   sum(new_sess) OVER (PARTITION BY user_id
-                                       ORDER BY ts NULLS FIRST, event_id
-                                       ROWS UNBOUNDED PRECEDING) AS sess_no
-            FROM flagged
-        ), per_session AS (
-            SELECT user_id, sess_no, count(*) AS n_events
-            FROM numbered GROUP BY 1, 2
-        )
-        SELECT user_id, count(*) AS n_sessions,
-               max(n_events) AS max_session_events,
-               round(avg(n_events), 6) AS avg_session_events
-        FROM per_session GROUP BY user_id ORDER BY user_id
-    """,
-    "q17_top_customers_per_nation": """
-        WITH rev AS (
-            SELECT o_custkey, round(sum(o_totalprice), 4) AS revenue
-            FROM orders GROUP BY o_custkey
-        ), ranked AS (
-            SELECT n_name, o_custkey AS custkey, revenue,
-                   CAST(row_number() OVER (PARTITION BY n_name
-                                           ORDER BY revenue DESC, o_custkey)
-                        AS INT) AS rank
-            FROM rev
-            JOIN customer ON o_custkey = c_custkey
-            JOIN nation ON c_nationkey = n_nationkey
-        )
-        SELECT * FROM ranked WHERE rank <= 3 ORDER BY n_name, rank
-    """,
-    "q18_status_priority_rollup": """
-        SELECT o_orderstatus, o_orderpriority,
-               count(*) AS cnt,
-               round(sum(o_totalprice), 4) AS total
-        FROM orders
-        GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-        ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
-    """,
-    "q33_status_priority_cube": """
-        SELECT o_orderstatus, o_orderpriority,
-               count(*) AS cnt,
-               round(sum(o_totalprice), 4) AS total
-        FROM orders
-        GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST
-    """,
-}
-
-QUERIES = {
-    "q14_clean_accounting": q14_clean_accounting,
-    "q15_sample_events": q15_sample_events,
-    "q19_stratified_sample": q19_stratified_sample,
-    "q1_top_nations": q1_top_nations,
-    "q2_avg_value_by_hour": q2_avg_value_by_hour,
-    "q3_event_type_pct": q3_event_type_pct,
-    "q4_unit_price_by_weekday": q4_unit_price_by_weekday,
-    "q5_trade_routes": q5_trade_routes,
-    "q6_pricing_summary": q6_pricing_summary,
-    "q13_windowed_counts": q13_windowed_counts,
-    "q16_sessionization": q16_sessionization,
-    "q17_top_customers_per_nation": q17_top_customers_per_nation,
-    "q18_status_priority_rollup": q18_status_priority_rollup,
-    "q33_status_priority_cube": q33_status_priority_cube,
-}

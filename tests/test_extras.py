@@ -838,6 +838,68 @@ def test_near_dup_entry_follows_rewritten_corpus(spark, tmp_path, name):
     assert want != old  # the two corpora give different results
     assert got == want, "stale result after the in-place rewrite"
 
+
+@pytest.mark.parametrize("name", [
+    "q51_nation_pagerank", "kmv_overlap", "read_jsonl_quarantined",
+])
+def test_checkpointed_frame_follows_rewritten_input(spark, tmp_path, name):
+    """An input rewritten in place within one session must give the new
+    rows, the same as after spark.catalog.clearCache(): q51's edge
+    matrix, kmv_overlap's hash frame and the JSONL parse are
+    checkpointed per call, so no plan-keyed cache can serve the old
+    input."""
+    import shutil
+
+    from data_pipeline_and_visualization_dashboard_spark.extras import (
+        sketches,
+    )
+    from data_pipeline_and_visualization_dashboard_spark.io import (
+        read_jsonl_quarantined,
+    )
+    from data_pipeline_and_visualization_dashboard_spark.queries_ext import (
+        q51_nation_pagerank,
+    )
+
+    if name == "read_jsonl_quarantined":
+        path = tmp_path / "docs.jsonl"
+        versions = ['{"doc_id": 1}\n{"doc_id": 2}\n', '{"doc_id": 7}\n']
+
+        def install(version):
+            path.write_text(version)
+
+        def rows():
+            clean, _ = read_jsonl_quarantined(spark, str(path), "doc_id long")
+            return clean.collect()
+    else:
+        fn, tables = {
+            "q51_nation_pagerank": (q51_nation_pagerank, [
+                "lineitem", "orders", "customer", "supplier", "nation"]),
+            "kmv_overlap": (sketches.kmv_overlap, ["documents"]),
+        }[name]
+        versions = [SF_SMOKE, SF_CORRECT]
+
+        def install(sf_dir):
+            for t in tables:
+                shutil.copyfile(f"{sf_dir}/{t}.parquet",
+                                tmp_path / f"{t}.parquet")
+
+        def rows():
+            return fn(spark, str(tmp_path)).collect()
+
+    def result():
+        return sorted(tuple(r) for r in rows())
+
+    spark.catalog.clearCache()
+    install(versions[0])
+    old = result()
+    install(versions[1])
+    got = result()
+    spark.catalog.clearCache()
+    want = result()
+    assert want != old  # the two inputs give different results
+    assert got == want, "stale result after the in-place rewrite"
+
+
 def _memo_generations(kind, sf_dir):
     """The generations of `sf_dir`'s corpus held in io's driver-side
     artifact memo for `kind`."""
@@ -989,10 +1051,11 @@ def test_hash_stage_md5_matches_duck_and_xxhash_counts(spark, duck):
     """Isolated base-hash stage: the md5 base hash reproduces in DuckDB
     value-for-value. (The name is kept from when an xxhash64 twin of
     this stage also existed and was compared here.)"""
-    from data_pipeline_and_visualization_dashboard_spark.extras import dedup
+    import __spark_entry__ as entrymod
 
+    sql = entrymod.oracle_sql()["dedup_hash_stage_md5"]
     s = {tuple(r) for r in dedup.dedup_hash_stage_md5(spark, SF_CORRECT).collect()}
-    d = {tuple(r) for r in duck.execute(dedup._DUCK_HASH_STAGE_SQL).fetchall()}
+    d = {tuple(r) for r in duck.execute(sql).fetchall()}
     assert s == d and len(s) > 0
 
 def test_pretrained_ivf_serving_equals_retrained(spark):
@@ -1842,6 +1905,7 @@ def test_q60_follows_rewritten_orders(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    import __spark_entry__ as entrymod
     from data_pipeline_and_visualization_dashboard_spark import io
     from data_pipeline_and_visualization_dashboard_spark import (
         queries_ext as qx,
@@ -1852,12 +1916,14 @@ def test_q60_follows_rewritten_orders(spark, tmp_path):
     for name in ("lineitem", "orders"):
         shutil.copy(f"{SF_SMOKE}/{name}.parquet", d)
 
+    oracle = entrymod.oracle_sql()["q60_bucketed_join"]
+
     def check():
         con = duckdb.connect()
         for name in ("lineitem", "orders"):
             con.execute(f"CREATE VIEW {name} AS SELECT * FROM "
                         f"read_parquet('{d}/{name}.parquet')")
-        want = con.execute(qx.ORACLE_SQL["q60_bucketed_join"]).fetchall()
+        want = con.execute(oracle).fetchall()
         con.close()
         got = [tuple(r) for r in qx.q60_bucketed_join(spark, d).collect()]
         assert [g[:2] for g in got] == [w[:2] for w in want]

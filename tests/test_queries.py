@@ -188,17 +188,44 @@ def test_all_queries_have_callables(spark):
 
 def test_registry_has_no_silent_collisions():
     """Module registries must not shadow each other's query names."""
-    from data_pipeline_and_visualization_dashboard_spark import charts, queries, queries_ext
-    from data_pipeline_and_visualization_dashboard_spark.extras import (
-        bpe, dedup, multimodal, search, similarity, sketches, text,
-    )
+    import oracles
 
-    mods = [queries, queries_ext, charts, dedup, text, similarity,
-            sketches, bpe, search, multimodal]
-    total = sum(len(m.QUERIES) for m in mods)
+    tables = [m.ENTRIES for m in oracles.MODULES]
+    total = sum(len(t) for t in tables)
     assert len(entrymod.queries()) == total
-    total_oracles = sum(len(m.ORACLE_SQL) for m in mods)
+    total_oracles = sum(
+        sum(oracle is not None for _, oracle in t.values()) for t in tables
+    )
     assert len(entrymod.oracle_sql()) == total_oracles
+
+
+def test_package_import_builds_no_oracle():
+    """In a fresh interpreter, importing every package module loads no
+    oracles module, and no package module defines a registry table
+    (QUERIES, ORACLE_SQL) or a DuckDB oracle (_duck*, _DUCK*): each
+    entry's record and oracle live in oracles/ only."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    code = """
+import importlib, json, pkgutil, sys
+import data_pipeline_and_visualization_dashboard_spark as pkg
+bad = []
+for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + "."):
+    mod = importlib.import_module(info.name)
+    bad += [f"{info.name}.{n}" for n in vars(mod)
+            if n in ("QUERIES", "ORACLE_SQL")
+            or n.startswith(("_duck", "_DUCK"))]
+loaded = [m for m in sys.modules if m.split(".")[0] == "oracles"]
+print(json.dumps({"oracles": loaded, "bad": bad}))
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = subprocess.run([sys.executable, "-c", code], cwd=root,
+                         capture_output=True, text=True, check=True)
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"oracles": [], "bad": []}
 
 
 # Entries where an empty result at SF_CORRECT is provably the right
@@ -331,16 +358,14 @@ def test_check_first_oracles_not_vacuous(duck):
     entry in the driver's correctness window (_CHECK_FIRST) must
     return >=1 row at SF_CORRECT, so the default tier keeps a
     vacuous-green guard. The window holds the dashboard's q7-q12."""
-    from data_pipeline_and_visualization_dashboard_spark.charts import (
-        QUERIES as DASHBOARD_QUERIES,
-    )
+    from oracles.charts import ENTRIES as DASHBOARD_ENTRIES
 
     oracles = entrymod.oracle_sql()
     names = [
         n for n in entrymod._CHECK_FIRST
         if n in oracles and n not in VACUOUS_WHITELIST
     ]
-    assert set(DASHBOARD_QUERIES) <= set(names)
+    assert set(DASHBOARD_ENTRIES) <= set(names)
     empty = [n for n in names if not duck.execute(oracles[n]).fetchall()]
     assert not empty, (
         f"vacuously-green oracle queries (0 rows at {SF_CORRECT}): {empty}"
