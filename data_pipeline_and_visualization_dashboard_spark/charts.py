@@ -17,8 +17,8 @@ documented traps (SURVEY §7.4 #3/#4): the date upper bound is MIDNIGHT
 of the end day (later rows excluded), and unmapped type codes get a
 null label which an IN-filter silently drops. `sidebar_filter` applies
 it in Spark, to raw events after `derive_event_columns`
-(`filtered_events`) or to the dashboard's cached frame; `_cube_mask`
-spells the same predicate on the cube's keys.
+(`filtered_events`, registry entries q7-q11); `_cube_mask` spells the
+same predicate on the cube's keys, and it alone serves the dashboard.
 
 The dashboard serves a render in two tiers (dashboard.DashboardSession):
 
@@ -31,11 +31,16 @@ The dashboard serves a render in two tiers (dashboard.DashboardSession):
   0, five labels and null, 50 bins and null). So it grows linearly
   with the date span, and so does the fold of it that each render
   runs on the driver (dashboard.py gives measured sizes and costs).
-- Tier 2, per render: `collect_user_ranking`, the one Spark aggregate,
-  over the sidebar-filtered cache. The (user_id) set has about as many
-  groups as the data has users, so it stays in the cluster and is
-  ranked in-plan: only its top k rows reach the driver, with `n_users`
-  observed on the way.
+  `number_cells` numbers the cube's sidebar cells (its distinct
+  CELL_KEYS), and `user_cells` gives each event its cell, for the
+  (user_id, cell) cache.
+- Tier 2, per render: `keep_cells` keeps the cached rows whose cell
+  passes `_cube_mask`, by one binary literal, a byte per cell, so the
+  generated code is the same for every sidebar state; then
+  `collect_user_ranking`, the one Spark aggregate. The (user_id) set
+  has about as many groups as the data has users, so it stays in the
+  cluster and is ranked in-plan: only its top k rows reach the
+  driver, with `n_users` observed on the way.
 
 `chart_payload` then folds the cube cells that pass the sidebar into
 the metrics tile, avg-by-hour, histogram, donut and heatmap in pandas,
@@ -57,9 +62,11 @@ import math
 from dataclasses import dataclass
 from decimal import ROUND_HALF_UP, Context, Decimal
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType
 
 from .derive import WEEKDAYS, derive_event_columns, weekday_num_expr
 from .io import read_table
@@ -67,9 +74,9 @@ from .io import read_table
 HIST_LO, HIST_HI, HIST_BIN = 0.0, 500.0, 10.0
 TOP_K = 10
 
-# what a render reads of the cached frame: the sidebar's columns and
-# the user, nothing else
-USER_COLUMNS = ["ts", "user_id", "event_hour", "event_type_label"]
+# the cube's keys that the sidebar predicate reads: a render keeps or
+# drops each distinct combination of them, a cell, whole
+CELL_KEYS = ["event_date", "at_midnight", "event_hour", "event_type_label"]
 
 
 def sidebar_filter(
@@ -174,18 +181,23 @@ def _spark_order(chart: Chart) -> list[Column]:
 
 # --- Spark side: tier 1, tier 2 and the producers -----------------------
 
+def _with_day(df: DataFrame) -> DataFrame:
+    """event_date, the day's midnight, a timestamp (so it reaches pandas
+    as datetime64 and not as Python objects), and at_midnight, whether
+    ts is that midnight (false for a null ts)."""
+    ts, day = F.col("ts"), F.date_trunc("day", "ts")
+    return df.select("*", day.alias("event_date"),
+                     F.coalesce(ts == day, F.lit(False)).alias("at_midnight"))
+
+
 def chart_cube(df: DataFrame) -> DataFrame:
     """Tier 1: a derived-events frame summed into cube cells, one row
     per (event_date, at_midnight, event_hour, event_dow,
     event_type_label, bin), with cnt, sum_value, n_value (the count of
-    non-null values), min_ts and max_ts. event_date is the day's
-    midnight, a timestamp, so it reaches pandas as datetime64 and not as
-    Python objects; at_midnight is false for a null ts."""
-    ts, day = F.col("ts"), F.date_trunc("day", "ts")
-    return _binned(df).groupBy(
-        day.alias("event_date"),
-        F.coalesce(ts == day, F.lit(False)).alias("at_midnight"),
-        "event_hour", "event_dow", "event_type_label", "bin",
+    non-null values), min_ts and max_ts."""
+    return _binned(_with_day(df)).groupBy(
+        "event_date", "at_midnight", "event_hour", "event_dow",
+        "event_type_label", "bin",
     ).agg(
         F.count(F.lit(1)).alias("cnt"),
         F.sum("value").alias("sum_value"),
@@ -193,6 +205,41 @@ def chart_cube(df: DataFrame) -> DataFrame:
         F.min("ts").alias("min_ts"),
         F.max("ts").alias("max_ts"),
     )
+
+
+def number_cells(cube: pd.DataFrame) -> pd.DataFrame:
+    """Tier 1: the collected cube with `cell`, its CELL_KEYS
+    combination numbered 0..n-1 (a null key is one value among the
+    others)."""
+    return cube.assign(
+        cell=cube.groupby(CELL_KEYS, dropna=False, sort=False).ngroup())
+
+
+def user_cells(events: DataFrame, cube: pd.DataFrame) -> DataFrame:
+    """Tier 1: (user_id, cell) per derived event, its cell found by one
+    broadcast null-safe join with the cells of the numbered `cube`. An
+    event whose keys the cube lacks finds no cell and has no row."""
+    keyed = _with_day(events)
+    schema = keyed.select(*CELL_KEYS).schema.add("cell", IntegerType(), False)
+    cells = events.sparkSession.createDataFrame(
+        cube[CELL_KEYS + ["cell"]].drop_duplicates("cell"), schema)
+    on = [keyed[k].eqNullSafe(cells[k]) for k in CELL_KEYS]
+    return keyed.join(F.broadcast(cells), on).select("user_id", "cell")
+
+
+def keep_cells(
+    df: DataFrame, cube: pd.DataFrame, keep: pd.Series
+) -> DataFrame:
+    """Tier 2: the rows of a (user_id, cell) frame whose cell is that of
+    a row `keep` marks in the numbered `cube`. The kept cells reach
+    Spark as one binary literal, a byte per cell, and codegen hands a
+    binary literal to the generated code by reference: every sidebar
+    state runs the code compiled for the first. (Bytes, not a '0'/'1'
+    string: a string's substr walks it from its start, once per row.)"""
+    mask = np.zeros(cube["cell"].nunique(), np.uint8)
+    mask[cube["cell"][keep].to_numpy()] = 1
+    byte = F.lit(bytearray(mask)).substr(F.col("cell") + 1, F.lit(1))
+    return df.filter(byte == F.lit(bytearray(b"\x01")))
 
 
 def collect_user_ranking(df: DataFrame, k: int = TOP_K) -> pd.DataFrame:
@@ -348,18 +395,14 @@ def _pandas_key(s: pd.Series) -> pd.Series:
 
 
 def chart_payload(
-    cube: pd.DataFrame,
-    users: pd.DataFrame,
-    date_range: tuple[str, str] | None = None,
-    hour_range: tuple[int, int] | None = None,
-    type_labels: list[str] | None = None,
+    cells: pd.DataFrame, users: pd.DataFrame
 ) -> dict[str, pd.DataFrame]:
     """The six chart frames of one sidebar state, each with the columns,
     dtypes and row order its Spark-side producer's toPandas() gives:
     the top users and `n_users` from `users` (`collect_user_ranking` of
-    the filtered frame), the other charts folded from the `cube` cells
-    (`chart_cube`, collected) that pass the sidebar."""
-    cells = cube[_cube_mask(cube, date_range, hour_range, type_labels)]
+    the filtered frame), the other charts folded from `cells`, the cube
+    cells (`chart_cube`, collected) that pass the sidebar
+    (`_cube_mask`)."""
     n_users = users["n_users"].iloc[0] if len(users) else 0
     out = {}
     for name, chart in CHARTS.items():

@@ -6,22 +6,31 @@ engine-side equivalent serves each interaction in two tiers
 (charts.py):
 
 - Tier 1, once per input version (the `@st.cache_data` analogue, S7):
-  derive the events, cache them projected to the four columns the
-  user ranking reads (`charts.USER_COLUMNS`; `value`, the `props` regex
-  and the other derived columns never reach the cache), and collect
-  `charts.chart_cube`, the derived events summed into cells bounded by
-  the chart domains (at most days × 25 × 6 × 51 rows, whatever the row
-  count). Both are rebuilt together when the input's file listing
-  changes, and a build is kept only if that listing is unchanged
-  after both scans.
-- Tier 2, per render: ONE Spark aggregate, the sidebar filter and the
-  in-plan (user_id) ranking over the cache
-  (`charts.collect_user_ranking`): at most three short Spark jobs, and
-  at most 10 user rows plus `n_users` reach the driver, whatever the
-  number of users. The metrics tile,
-  avg-by-hour, histogram, donut and heatmap are folded from the cube
-  cells the sidebar keeps, in pandas, with no Spark work
-  (`charts.chart_payload`, S6).
+  derive the events and collect `charts.chart_cube`, the derived
+  events summed into cells bounded by the chart domains (at most
+  days × 25 × 6 × 51 rows, whatever the row count). Number the cube's
+  sidebar cells, its distinct (event_date, at_midnight, event_hour,
+  event_type_label), 0..n-1 (`charts.number_cells`), and cache each
+  event as (user_id, cell) (`charts.user_cells`, one broadcast
+  null-safe join with the numbered cells; `value`, the `props` regex
+  and the other derived columns never reach the cache). A build whose
+  cache does not hold every row the cube counts is refused, since a
+  row without a cell would silently leave the ranking. Both are
+  rebuilt together when the input's file listing changes, and a build
+  is kept only if that listing is unchanged after both scans.
+- Tier 2, per render: the sidebar predicate is evaluated once, on the
+  cube's cells (`charts._cube_mask`). The kept cells reach Spark as
+  one binary literal, a byte per cell (`charts.keep_cells`), which
+  codegen hands to the generated code by reference, so every render
+  runs the code compiled for the first (dates and hours written into
+  the plan as literals cost three Janino compiles per touch, and the
+  JIT's work on each new class). Then ONE Spark aggregate, the
+  in-plan (user_id) ranking over the kept rows
+  (`charts.collect_user_ranking`): at most three short Spark jobs,
+  and at most 10 user rows plus `n_users` reach the driver, whatever
+  the number of users. The metrics tile, avg-by-hour, histogram,
+  donut and heatmap are folded from the same kept cube cells, in
+  pandas, with no Spark work (`charts.chart_payload`, S6).
 
 What reaches the driver: per render, at most 10 user rows plus
 `n_users`, at any scale. Per input version, the cube, whose size is
@@ -60,17 +69,19 @@ from pyspark.sql import DataFrame, SparkSession
 # registry entries q7-q11 serve them, and they give the frames a render
 # folds on the driver.
 from .charts import (  # noqa: F401
-    USER_COLUMNS,
+    _cube_mask,
     avg_value_by_hour,
     chart_cube,
     chart_payload,
     collect_user_ranking,
     day_hour_heatmap,
     filtered_events,
+    keep_cells,
     metrics_summary,
-    sidebar_filter,
+    number_cells,
     top_users,
     type_donut,
+    user_cells,
     value_histogram,
 )
 from .derive import derive_event_columns
@@ -91,7 +102,7 @@ class DashboardSession:
     _version: str = field(default="", repr=False)
 
     def base(self) -> DataFrame:
-        # the cache and the cube are two scans of the input: a build is
+        # the cube and the cache are two scans of the input: a build is
         # kept only if the listing is the same after both as before, so
         # one render never mixes two versions of the input
         version = table_version(self.spark, self.sf_dir, "events")
@@ -100,8 +111,14 @@ class DashboardSession:
             events = derive_event_columns(
                 read_table(self.spark, self.sf_dir, "events")
             )
-            self._base = cache_materialized(events.select(*USER_COLUMNS))
-            self._cube = chart_cube(events).toPandas()
+            self._cube = number_cells(chart_cube(events).toPandas())
+            self._base = cache_materialized(user_cells(events, self._cube))
+            # a row that found no cell would silently leave the ranking
+            rows, want = self._base.count(), int(self._cube["cnt"].sum())
+            if rows != want:
+                self.close()
+                raise RuntimeError(
+                    f"the events cache holds {rows} rows, the cube {want}")
             self._version = version
             version = table_version(self.spark, self.sf_dir, "events")
         return self._base
@@ -117,13 +134,10 @@ class DashboardSession:
         top users) and a driver-side fold of the cube (the rest).
         Each date_range bound must fall on a midnight (a date, or a
         date-time at 00:00)."""
-        base = self.base()
-        users = collect_user_ranking(
-            sidebar_filter(base, date_range, hour_range, type_labels)
-        )
-        return chart_payload(
-            self._cube, users, date_range, hour_range, type_labels
-        )
+        base, cube = self.base(), self._cube
+        keep = _cube_mask(cube, date_range, hour_range, type_labels)
+        users = collect_user_ranking(keep_cells(base, cube, keep))
+        return chart_payload(cube[keep], users)
 
     def close(self) -> None:
         if self._base is not None:

@@ -1186,9 +1186,12 @@ def contamination_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _funnel_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doc-grain stage flags (kept / pe / pn) shared by corpus_funnel
     (accounting) and corpus_survivors (output ids). The flags frame is
-    cached: it is consumed twice (keeper derivation + final), and
-    without the cache the quality-gate text scan and md5 rank would
-    run twice — at 100 TB that is a second full-corpus pass."""
+    localCheckpointed: it is consumed twice (keeper derivation + final),
+    and without it the quality-gate text scan and md5 rank would run
+    twice — at 100 TB that is a second full-corpus pass. Not cache: the
+    plan embeds this call's fresh near-dup checkpoint, so no later call
+    could hit the entry, and the CacheManager would keep one per call;
+    the checkpoint's blocks go when the returned frame does."""
     docs = read_table(spark, sf_dir, "documents", ["doc_id", "text"])
     qv = quality_verdicts(docs).select("doc_id", "kept")
     hashed = docs.select("doc_id", F.md5("text").alias("h"))
@@ -1204,7 +1207,7 @@ def _funnel_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pe",
             F.coalesce(F.col("kept") & (F.col("rn") == 1), F.lit(False)),
         )
-        .cache()
+        .localCheckpoint()
     )
     keepers = (
         flags.filter(F.col("pe") & F.col("group_id").isNotNull())

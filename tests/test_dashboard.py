@@ -110,6 +110,21 @@ def test_dashboard_rebuilds_when_input_moves_during_build(spark, monkeypatch):
         sess.close()
 
 
+def test_dashboard_refuses_a_cache_that_lost_rows(spark, monkeypatch):
+    """A cached row that found no cube cell would silently leave the
+    user ranking, so a build whose cache holds fewer rows than the cube
+    counts is refused, and nothing of it is kept."""
+    from data_pipeline_and_visualization_dashboard_spark import dashboard
+
+    cells = dashboard.user_cells
+    monkeypatch.setattr(dashboard, "user_cells",
+                        lambda events, cube: cells(events, cube).limit(10))
+    sess = DashboardSession(spark, SF_SMOKE)
+    with pytest.raises(RuntimeError, match="cache holds 10 rows"):
+        sess.base()
+    assert sess._base is None and sess._cube is None
+
+
 # --- parity with DuckDB on crafted trap rows -----------------------------
 
 _TYPES = ["click", "view", "purchase", "signup", "error"]
@@ -238,6 +253,10 @@ _TRAP_STATES = [
     (("2024-01-02", _END_DAY), (0, 23), _ALL_LABELS),
     (("2024-01-01", _END_DAY), (6, 18), ["Click", "Purchase"]),
     (None, (0, 5), None),
+    # only the null-ts row has no date and no hour to fail
+    (None, None, ["View"]),
+    # exactly the end day's midnight row
+    ((_END_DAY, _END_DAY), (0, 0), ["Click"]),
 ]
 
 
@@ -332,6 +351,29 @@ def test_render_runs_at_most_three_spark_jobs(spark):
         sess.close()
 
 
+def test_render_reuses_generated_code(spark):
+    """The sidebar state reaches Spark as one binary literal, which the
+    generated code takes by reference: once two renders have run, a
+    touch of the dates, the hours and the labels compiles no new code."""
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+    sess = DashboardSession(spark, SF_SMOKE)
+    try:
+        sess.render_payload(("2024-01-05", "2024-01-20"), (6, 18),
+                            ["Click", "Purchase"])
+        sess.render_payload(("2024-01-05", "2024-01-20"), (6, 18), ["Click"])
+        before = compiles.getCount()
+        for state in [(("2024-01-02", "2024-01-25"), (3, 21),
+                       ["View", "Error"]),
+                      (("2024-01-08", "2024-01-16"), (0, 11),
+                       ["Sign Up", "Click", "Purchase"])]:
+            assert sess.render_payload(*state)["metrics"][
+                "total_events"][0] > 0
+        assert compiles.getCount() == before
+    finally:
+        sess.close()
+
+
 # --- the driver fold, without Spark ---------------------------------------
 
 def _cube_rows():
@@ -376,14 +418,19 @@ def test_chart_payload_folds_cube_rows():
     trap, the null-ts and null-label cells, an empty selection, and
     Spark's HALF_UP rounding where numpy and Python round half-even."""
     from data_pipeline_and_visualization_dashboard_spark.charts import (
-        chart_payload,
+        _cube_mask, chart_payload,
     )
+
+    def payload(cube, users, date_range=None, hour_range=None,
+                type_labels=None):
+        keep = _cube_mask(cube, date_range, hour_range, type_labels)
+        return chart_payload(cube[keep], users)
 
     cube = _cube_rows()
     labels = ["Click", "View", "Purchase", "Sign Up", "Error"]
 
     # the end day's midnight cell counts, its 00:30 cell does not
-    p = chart_payload(cube, _users(), ("2024-01-07", "2024-01-08"))
+    p = payload(cube, _users(), ("2024-01-07", "2024-01-08"))
     m = p["metrics"]
     assert m["total_events"][0] == 1 and m["avg_value"][0] == 12.5
     assert m["n_users"][0] == 2
@@ -399,13 +446,13 @@ def test_chart_payload_folds_cube_rows():
     for bounds in [(dt.date(2024, 1, 7), dt.date(2024, 1, 8)),
                    ("2024-01-07 00:00:00", pd.Timestamp("2024-01-08")),
                    (dt.datetime(2024, 1, 7), dt.datetime(2024, 1, 8))]:
-        assert chart_payload(cube, _users(), bounds)["metrics"].equals(m)
+        assert payload(cube, _users(), bounds)["metrics"].equals(m)
     with pytest.raises(ValueError, match="midnight"):
-        chart_payload(cube, _users(), ("2024-01-07", "2024-01-08 00:30"))
+        payload(cube, _users(), ("2024-01-07", "2024-01-08 00:30"))
 
     # the null-ts cell survives only with no date and no hour filter,
     # and then forms the null-hour row and the (null, null) heatmap cell
-    p = chart_payload(cube, _users(), None, None, ["View"])
+    p = payload(cube, _users(), None, None, ["View"])
     hours = p["avg_value_by_hour"]
     assert hours["event_hour"].isna().all() and len(hours) == 1
     assert str(hours["event_hour"].dtype) == "float64"
@@ -414,19 +461,19 @@ def test_chart_payload_folds_cube_rows():
     assert heat["event_hour"].isna().all() and heat["event_cnt"][0] == 1
     for state in [(("2024-01-01", "2024-01-31"), None, ["View"]),
                   (None, (0, 23), ["View"])]:
-        assert chart_payload(cube, _users(), *state)[
+        assert payload(cube, _users(), *state)[
             "metrics"]["total_events"][0] == 0
 
     # the null label is dropped by any IN list and by the donut
-    p = chart_payload(cube, _users(), None, None, labels)
+    p = payload(cube, _users(), None, None, labels)
     assert p["metrics"]["total_events"][0] == 131
-    donut = chart_payload(cube, _users())["type_donut"]
+    donut = payload(cube, _users())["type_donut"]
     assert donut["event_type_label"].tolist() == ["Purchase", "Click", "View"]
     assert donut["cnt"].tolist() == [128, 2, 1]
 
     # Spark's round(): HALF_UP, where half-even gives 0.007812
     assert round(1 / 128, 6) == 0.007812
-    p = chart_payload(cube, _users(), None, (5, 5), None)
+    p = payload(cube, _users(), None, (5, 5), None)
     assert p["avg_value_by_hour"]["avg_value"].tolist() == [0.007813]
     assert p["metrics"]["avg_value"][0] == 0.007813
     assert p["metrics"]["total_value"][0] == 1.0
@@ -434,7 +481,7 @@ def test_chart_payload_folds_cube_rows():
 
     # an empty selection: one metrics row, zero counts, null aggregates,
     # and the dtypes test_dashboard_empty_selection pins
-    p = chart_payload(cube, _users(()), ("2030-01-01", "2030-01-31"))
+    p = payload(cube, _users(()), ("2030-01-01", "2030-01-31"))
     m = p["metrics"]
     assert len(m) == 1
     assert m["total_events"][0] == 0 and m["n_users"][0] == 0

@@ -410,6 +410,21 @@ def test_corpus_funnel_accounting_sums(spark):
     assert row.docs_out > 0
 
 
+def test_corpus_funnel_leaves_no_cache_entry(spark):
+    """Each funnel call builds its stage flags over a fresh near-dup
+    checkpoint, so a cache entry of them could never be hit again:
+    repeated calls must not grow the session's CacheManager."""
+    from data_pipeline_and_visualization_dashboard_spark.extras.dedup import (
+        corpus_funnel,
+    )
+
+    cached = spark._jsparkSession.sharedState().cacheManager().cachedData
+    before = cached().size()
+    for _ in range(3):
+        corpus_funnel(spark, SF_SMOKE).collect()
+    assert cached().size() <= before
+
+
 def test_chunking_reconstructs_documents(spark):
     """Chunking invariant: taking the first STRIDE tokens of every
     chunk except the last, plus the whole last chunk, reconstructs the

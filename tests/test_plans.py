@@ -1518,8 +1518,9 @@ FACT_FANOUT_OK = {
     "dedup_split_leakage", "dedup_semantic", "dedup_threshold_curve",
     # staged curation funnels — one pass per quality/exact/near stage
     # (corpus_shard_manifest left r16: it reads the survivors_table
-    # artifact now, zero fact scans in its own plan):
-    "corpus_funnel", "corpus_survivors",
+    # artifact now, zero fact scans in its own plan; corpus_funnel and
+    # corpus_survivors left when their stage flags became a
+    # checkpoint, which their plans read instead of the documents):
     "corpus_forget_impact",
     # ANN index + query + (for guards) brute-force oracle over the
     # same embeddings; MMR re-ranks against the candidate pool:
@@ -1557,17 +1558,15 @@ FACT_FANOUT_OK = {
 # multi-consumer subtree that would otherwise re-plan (the q92 lesson
 # applied in the other direction), so the carve-out is explicit and
 # annotated rather than silent.
-SELF_CACHE_OK = {
-    # (the MinHash signature, verified-pair and SimHash fingerprint
-    # frames, q51's edge matrix and kmv_overlap's hash frame are
-    # localCheckpointed, not cached: their entries plan an
-    # existing-RDD scan, not an InMemoryTableScan)
-    # funnel flags cached: stage verdicts feed survivor + accounting
-    # branches (and the LSH pairs frame inside is checkpointed);
-    # corpus_shard_manifest left r16 — the artifact scan caches
-    # nothing:
-    "corpus_funnel", "corpus_survivors",
-}
+#
+# None today: the MinHash signature, verified-pair and SimHash
+# fingerprint frames, q51's edge matrix, kmv_overlap's hash frame and
+# the funnel's stage flags are localCheckpointed, not cached, so their
+# entries plan an existing-RDD scan, not an InMemoryTableScan (a cache
+# over a fresh checkpoint could never be hit again; corpus_funnel and
+# corpus_survivors left on that ground, corpus_shard_manifest in r16:
+# the artifact scan caches nothing).
+SELF_CACHE_OK: set[str] = set()
 
 
 # weakref-keyed (ADVICE r12 #3, hardened by the r13 self-review): a
