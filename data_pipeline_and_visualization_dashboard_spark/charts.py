@@ -34,10 +34,11 @@ The dashboard serves a render in two tiers (dashboard.DashboardSession):
   `number_cells` numbers the cube's sidebar cells (its distinct
   CELL_KEYS), and `user_cells` gives each event its cell, for the
   (user_id, cell) cache.
-- Tier 2, per render: `keep_cells` keeps the cached rows whose cell
-  passes `_cube_mask`, by one binary literal, a byte per cell, so the
-  generated code is the same for every sidebar state; then
-  `collect_user_ranking`, the one Spark aggregate. The (user_id) set
+- Tier 2, per render: `select_cells` evaluates the sidebar once, on
+  the cube (`_cube_mask`), and keeps the cached rows whose cell passes
+  by one binary literal, a byte per cell, so the generated code is the
+  same for every sidebar state; then `collect_user_ranking`, the one
+  Spark aggregate. The (user_id) set
   has about as many groups as the data has users, so it stays in the
   cluster and is ranked in-plan: only its top k rows reach the
   driver, with `n_users` observed on the way.
@@ -227,19 +228,26 @@ def user_cells(events: DataFrame, cube: pd.DataFrame) -> DataFrame:
     return keyed.join(F.broadcast(cells), on).select("user_id", "cell")
 
 
-def keep_cells(
-    df: DataFrame, cube: pd.DataFrame, keep: pd.Series
-) -> DataFrame:
-    """Tier 2: the rows of a (user_id, cell) frame whose cell is that of
-    a row `keep` marks in the numbered `cube`. The kept cells reach
-    Spark as one binary literal, a byte per cell, and codegen hands a
-    binary literal to the generated code by reference: every sidebar
-    state runs the code compiled for the first. (Bytes, not a '0'/'1'
-    string: a string's substr walks it from its start, once per row.)"""
+def select_cells(
+    df: DataFrame,
+    cube: pd.DataFrame,
+    date_range: tuple[str, str] | None = None,
+    hour_range: tuple[int, int] | None = None,
+    type_labels: list[str] | None = None,
+) -> tuple[pd.DataFrame, DataFrame]:
+    """Tier 2: one sidebar state, evaluated once on the numbered `cube`
+    (`_cube_mask`): the cube rows that pass it, for `chart_payload`,
+    and the rows of the (user_id, cell) frame `df` whose cell is one of
+    theirs, for `collect_user_ranking`. The kept cells reach Spark as
+    one binary literal, a byte per cell, and codegen hands a binary
+    literal to the generated code by reference: every sidebar state
+    runs the code compiled for the first. (Bytes, not a '0'/'1' string:
+    a string's substr walks it from its start, once per row.)"""
+    keep = _cube_mask(cube, date_range, hour_range, type_labels)
     mask = np.zeros(cube["cell"].nunique(), np.uint8)
     mask[cube["cell"][keep].to_numpy()] = 1
     byte = F.lit(bytearray(mask)).substr(F.col("cell") + 1, F.lit(1))
-    return df.filter(byte == F.lit(bytearray(b"\x01")))
+    return cube[keep], df.filter(byte == F.lit(bytearray(b"\x01")))
 
 
 def collect_user_ranking(df: DataFrame, k: int = TOP_K) -> pd.DataFrame:
@@ -402,7 +410,7 @@ def chart_payload(
     the top users and `n_users` from `users` (`collect_user_ranking` of
     the filtered frame), the other charts folded from `cells`, the cube
     cells (`chart_cube`, collected) that pass the sidebar
-    (`_cube_mask`)."""
+    (`select_cells`)."""
     n_users = users["n_users"].iloc[0] if len(users) else 0
     out = {}
     for name, chart in CHARTS.items():

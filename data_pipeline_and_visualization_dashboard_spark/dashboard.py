@@ -13,16 +13,17 @@ engine-side equivalent serves each interaction in two tiers
   event_type_label), 0..n-1 (`charts.number_cells`), and cache each
   event as (user_id, cell) (`charts.user_cells`, one broadcast
   null-safe join with the numbered cells; `value`, the `props` regex
-  and the other derived columns never reach the cache). A build whose
-  cache does not hold every row the cube counts is refused, since a
-  row without a cell would silently leave the ranking. Both are
+  and the other derived columns never reach the cache). Both are
   rebuilt together when the input's file listing changes, and a build
-  is kept only if that listing is unchanged after both scans.
+  is kept only if that listing is unchanged after both scans; if it
+  moved, the build is done again. A build over an unchanged listing
+  whose cache does not hold every row the cube counts is refused,
+  since a row without a cell would silently leave the ranking.
 - Tier 2, per render: the sidebar predicate is evaluated once, on the
-  cube's cells (`charts._cube_mask`). The kept cells reach Spark as
-  one binary literal, a byte per cell (`charts.keep_cells`), which
-  codegen hands to the generated code by reference, so every render
-  runs the code compiled for the first (dates and hours written into
+  cube's cells, and the kept cells reach Spark as one binary literal,
+  a byte per cell (`charts.select_cells`), which codegen hands to the
+  generated code by reference, so every render runs the code
+  compiled for the first (dates and hours written into
   the plan as literals cost three Janino compiles per touch, and the
   JIT's work on each new class). Then ONE Spark aggregate, the
   in-plan (user_id) ranking over the kept rows
@@ -69,16 +70,15 @@ from pyspark.sql import DataFrame, SparkSession
 # registry entries q7-q11 serve them, and they give the frames a render
 # folds on the driver.
 from .charts import (  # noqa: F401
-    _cube_mask,
     avg_value_by_hour,
     chart_cube,
     chart_payload,
     collect_user_ranking,
     day_hour_heatmap,
     filtered_events,
-    keep_cells,
     metrics_summary,
     number_cells,
+    select_cells,
     top_users,
     type_donut,
     user_cells,
@@ -111,16 +111,20 @@ class DashboardSession:
             events = derive_event_columns(
                 read_table(self.spark, self.sf_dir, "events")
             )
-            self._cube = number_cells(chart_cube(events).toPandas())
-            self._base = cache_materialized(user_cells(events, self._cube))
+            cube = number_cells(chart_cube(events).toPandas())
+            base, rows = cache_materialized(user_cells(events, cube))
+            built, version = version, table_version(
+                self.spark, self.sf_dir, "events")
+            if version != built:
+                base.unpersist()
+                continue
             # a row that found no cell would silently leave the ranking
-            rows, want = self._base.count(), int(self._cube["cnt"].sum())
+            want = int(cube["cnt"].sum())
             if rows != want:
-                self.close()
+                base.unpersist()
                 raise RuntimeError(
                     f"the events cache holds {rows} rows, the cube {want}")
-            self._version = version
-            version = table_version(self.spark, self.sf_dir, "events")
+            self._base, self._cube, self._version = base, cube, built
         return self._base
 
     def render_payload(
@@ -134,10 +138,9 @@ class DashboardSession:
         top users) and a driver-side fold of the cube (the rest).
         Each date_range bound must fall on a midnight (a date, or a
         date-time at 00:00)."""
-        base, cube = self.base(), self._cube
-        keep = _cube_mask(cube, date_range, hour_range, type_labels)
-        users = collect_user_ranking(keep_cells(base, cube, keep))
-        return chart_payload(cube[keep], users)
+        cells, kept = select_cells(self.base(), self._cube, date_range,
+                                   hour_range, type_labels)
+        return chart_payload(cells, collect_user_ranking(kept))
 
     def close(self) -> None:
         if self._base is not None:

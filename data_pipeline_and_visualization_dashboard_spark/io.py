@@ -762,10 +762,9 @@ def to_pandas(df: DataFrame):
     return df.toPandas()
 
 
-def cache_materialized(df: DataFrame) -> DataFrame:
+def cache_materialized(df: DataFrame) -> tuple[DataFrame, int]:
     """S7: result cache — the `@st.cache_data` analogue (app.py:82).
     Materializes eagerly via count() so the first dashboard interaction
-    doesn't pay the load."""
+    doesn't pay the load; returns the cached frame and that count."""
     df = df.cache()
-    df.count()
-    return df
+    return df, df.count()

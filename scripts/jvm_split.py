@@ -1,15 +1,15 @@
 """Split each perfbench op's CPU time by where it was spent.
 
-    python3 scripts/jvm_split.py --workload dashboard [--seed 1] [--seconds 24]
+    python3 scripts/jvm_split.py --workload dashboard [--seed 1]
 
 Runs one workload of ``perfbench/workloads.py`` the way
-``perfbench/run.py`` does (same inputs from the seed, same session
-settings, same set-up, the same fixed number of ops), without its
+``perfbench/run.py`` does (same inputs from the seed, same set-up, the
+fixed number of ops of BENCHMARK.json's ``run_seconds``), without its
 checks, and prints one row for the set-up after the session starts
 (``prepare``) and one per op:
 
 - ``total``: the CPU time of the Python driver plus the whole JVM, read
-  from ``/proc/<pid>/stat``, as ``op_cpu_ms`` is;
+  by ``run.cpu_seconds``, as ``op_cpu_ms`` is;
 - ``python``: the Python driver process;
 - the JVM's threads by name, from ``/proc/<pid>/task/*/stat``: ``jit``
   (the C1/C2 compiler threads), ``executor`` (the task threads),
@@ -30,6 +30,7 @@ adds a little ``python`` and ``driver`` time of its own.
 from __future__ import annotations
 
 import argparse
+import json
 import os
 import sys
 import tempfile
@@ -42,15 +43,16 @@ import run as perfbench  # noqa: E402
 import spans  # noqa: E402
 import workloads  # noqa: E402
 
-TICK = os.sysconf("SC_CLK_TCK")
 COLUMNS = ["total", "python", "jit", "executor", "gc", "driver", "exited",
            "janino", "jit_ms"]
 
 
-def _ticks(stat_path: str) -> int:
+def _thread_seconds(stat_path: str) -> float:
+    """User plus system CPU time of one thread so far. run.cpu_seconds
+    reads whole processes: /proc/<tid>/stat sums the thread group."""
     with open(stat_path) as f:
         fields = f.read().rsplit(")", 1)[1].split()
-    return int(fields[11]) + int(fields[12])  # utime, stime
+    return (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
 
 
 def _kind(name: str) -> str:
@@ -63,15 +65,16 @@ def _kind(name: str) -> str:
     return "driver"
 
 
-def _threads(pid: int) -> dict[int, tuple[str, int]]:
-    """tid -> (kind, CPU ticks so far) of the process's live threads."""
+def _threads(pid: int) -> dict[int, tuple[str, float]]:
+    """tid -> (kind, CPU seconds so far) of the process's live threads."""
     out = {}
     task = f"/proc/{pid}/task"
     for tid in os.listdir(task):
         try:
             with open(f"{task}/{tid}/comm") as f:
                 name = f.read().strip()
-            out[int(tid)] = (_kind(name), _ticks(f"{task}/{tid}/stat"))
+            out[int(tid)] = (_kind(name),
+                             _thread_seconds(f"{task}/{tid}/stat"))
         except OSError:  # the thread ended while being read
             pass
     return out
@@ -93,8 +96,8 @@ class Probe:
     def read(self) -> dict:
         python, jvm = self.pids
         return {
-            "python": _ticks(f"/proc/{python}/stat"),
-            "jvm": _ticks(f"/proc/{jvm}/stat"),
+            "python": perfbench.cpu_seconds((python,)),
+            "jvm": perfbench.cpu_seconds((jvm,)),
             "threads": _threads(jvm),
             "janino": self.codegen.getCount(),
             "jit_ms": self.jit.getTotalCompilationTime(),
@@ -103,17 +106,16 @@ class Probe:
 
 def split(before: dict, after: dict) -> dict[str, float]:
     """One row: CPU ms per kind between two reads, and the counters."""
-    ms = 1e3 / TICK
     row = dict.fromkeys(["jit", "executor", "gc", "driver"], 0.0)
-    live = 0
-    for tid, (kind, ticks) in after["threads"].items():
-        delta = ticks - before["threads"].get(tid, (kind, 0))[1]
-        row[kind] += delta * ms
+    live = 0.0
+    for tid, (kind, seconds) in after["threads"].items():
+        delta = seconds - before["threads"].get(tid, (kind, 0.0))[1]
+        row[kind] += 1e3 * delta
         live += delta
     jvm = after["jvm"] - before["jvm"]
-    row["exited"] = (jvm - live) * ms
-    row["python"] = (after["python"] - before["python"]) * ms
-    row["total"] = row["python"] + jvm * ms
+    row["exited"] = 1e3 * (jvm - live)
+    row["python"] = 1e3 * (after["python"] - before["python"])
+    row["total"] = row["python"] + 1e3 * jvm
     row["janino"] = after["janino"] - before["janino"]
     row["jit_ms"] = after["jit_ms"] - before["jit_ms"]
     return row
@@ -129,8 +131,9 @@ def main() -> None:
     ap.add_argument("--workload", choices=sorted(workloads.WORKLOADS),
                     required=True)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=float, default=24.0)
     args = ap.parse_args()
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        seconds = json.load(f)["run_seconds"]
 
     from data_pipeline_and_visualization_dashboard_spark import session
 
@@ -142,6 +145,8 @@ def main() -> None:
         tempfile.tempdir = tmp
         wl = workloads.WORKLOADS[args.workload](args.seed, work, spans.Tracer())
         wl.generate()
+        # run.run's session settings, copied: run.py has no function
+        # that returns them (ROADMAP direction 4)
         cores = len(os.sched_getaffinity(0))
         spark = session.get_spark(
             app_name="jvm_split", master=f"local[{cores}]",
@@ -163,7 +168,7 @@ def main() -> None:
             wl.prepare(spark)
             after = probe.read()
             _print("prepare", split(before, after))
-            n = wl.n_ops(args.seconds)
+            n = wl.n_ops(seconds)
             for i, (label, call) in zip(range(n), wl.ops()):
                 before = probe.read()
                 call()

@@ -110,6 +110,42 @@ def test_dashboard_rebuilds_when_input_moves_during_build(spark, monkeypatch):
         sess.close()
 
 
+def test_dashboard_rebuilds_when_input_is_rewritten_during_build(
+        spark, tmp_path, monkeypatch):
+    """The same-named input file rewritten between the cube's scan and
+    the cache's: that cache holds other rows than the cube counts, and
+    the build is done again over the new input instead of refused."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from data_pipeline_and_visualization_dashboard_spark import dashboard
+
+    path = os.path.join(tmp_path, "events.parquet")
+    shutil.copy(os.path.join(SF_SMOKE, "events.parquet"), path)
+    table = pq.read_table(path)
+    kept = table.num_rows // 3
+    cells, builds = dashboard.user_cells, []
+
+    def rewrite_first(events, cube):
+        if not builds:
+            os.chmod(path, 0o644)
+            pq.write_table(table.slice(0, kept), path)
+        builds.append(int(cube["cnt"].sum()))
+        return cells(events, cube)
+
+    monkeypatch.setattr(dashboard, "user_cells", rewrite_first)
+    sess = DashboardSession(spark, str(tmp_path))
+    try:
+        p = sess.render_payload()
+        assert builds == [table.num_rows, kept]
+        assert p["metrics"]["total_events"][0] == kept
+        assert sess.base().count() == kept and len(builds) == 2
+    finally:
+        sess.close()
+
+
 def test_dashboard_refuses_a_cache_that_lost_rows(spark, monkeypatch):
     """A cached row that found no cube cell would silently leave the
     user ranking, so a build whose cache holds fewer rows than the cube
@@ -421,6 +457,8 @@ def test_chart_payload_folds_cube_rows():
         _cube_mask, chart_payload,
     )
 
+    # the cube half of charts.select_cells, which also filters a Spark
+    # frame by the kept cells
     def payload(cube, users, date_range=None, hour_range=None,
                 type_labels=None):
         keep = _cube_mask(cube, date_range, hour_range, type_labels)
